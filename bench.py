@@ -667,6 +667,7 @@ def main() -> None:
         "master": spark.sparkContext.master,
         "default_parallelism": spark.sparkContext.defaultParallelism,
         "cpus_env": os.environ.get("SPARK_GRAFT_CPUS"),
+        "driver_memory": spark.sparkContext.getConf().get("spark.driver.memory", None),
     }
     out = {
         "metric": "headline_queries_total",

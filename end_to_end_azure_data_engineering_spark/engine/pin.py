@@ -25,13 +25,23 @@ EVERY pin site in this package to the fault-tolerant tier, with no
 operator code change. Without a dir (the local test/bench default)
 behavior is byte-identical to the previous direct localCheckpoint
 calls.
+
+``collect_if_bounded`` is the one "bounded → driver, else distributed"
+route choice for iterative operators over a pinned frame (connected
+components, PageRank); ``release_checkpoints`` frees exactly the pins a
+caller made.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 
-__all__ = ["pin"]
+__all__ = ["pin", "collect_if_bounded", "collect_budget_bytes", "release_checkpoints"]
+
+#: per-row overhead charged on top of the column payload: the pickled
+#: Row/tuple framing each collected row costs on the driver beyond its
+#: field bytes.
+ROW_OVERHEAD_BYTES = 32
 
 
 def pin(df: DataFrame, *, reliable: bool | None = None) -> DataFrame:
@@ -46,3 +56,68 @@ def pin(df: DataFrame, *, reliable: bool | None = None) -> DataFrame:
             df.sparkSession.sparkContext.getCheckpointDir() is not None
         )
     return df.checkpoint() if reliable else df.localCheckpoint()
+
+
+def release_checkpoints(df: DataFrame) -> None:
+    """Explicitly release the block-manager storage behind the eagerly
+    checkpointed frames in ``df``'s plan (near_dup_pairs /
+    containment_pairs pair blocks, connected_components' final labels).
+
+    Checkpointed blocks otherwise live until the driver garbage-collects
+    the Python object AND the ContextCleaner runs — in a long-lived
+    session making repeated calls (the streaming dedup sink checkpoints
+    per micro-batch; curate_corpus per run) the lag re-creates the
+    block-manager pressure the eager-release design exists to avoid.
+    Walks the analyzed plan's leaves and unpersists
+    every LogicalRDD (a localCheckpoint's backing node); lazy scans are
+    untouched. Best-effort: after release the frame must not be used
+    again."""
+    try:
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.getClass().getName().endswith("LogicalRDD"):
+                leaf.rdd().unpersist(False)
+    except Exception:  # noqa: BLE001 — GC/ContextCleaner is the fallback
+        pass
+
+
+def collect_budget_bytes(spark) -> int:
+    """Driver-collect budget: ⅛ of ``spark.driver.maxResultSize`` — 128 MB
+    at Spark's 1g default (an unlimited ``0`` is read as that default).
+    The one place the driver-local routes are sized; tests force a route
+    by patching this function."""
+    sc = spark.sparkContext
+    conf = sc.getConf().get("spark.driver.maxResultSize", "1g")
+    limit = sc._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(conf)
+    return (limit or 1 << 30) // 8
+
+
+def collect_if_bounded(pinned: DataFrame) -> list[Row] | None:
+    """Collect an already-pinned frame to the driver when it fits the
+    budget, else leave it for the distributed route.
+
+    One probe job over the pinned blocks yields the row count and the
+    payload estimate: ``octet_length`` of every string/binary column,
+    the type's ``defaultSize`` for every other column, plus
+    ``ROW_OVERHEAD_BYTES`` (32 B) per row. At or under
+    ``collect_budget_bytes`` (⅛ of ``spark.driver.maxResultSize``) the
+    rows are collected and the pin is released; otherwise returns
+    ``None`` and the pin stays for the caller's distributed route."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import BinaryType, StringType
+
+    jschema = pinned._jdf.schema()
+    var, fixed = [], ROW_OVERHEAD_BYTES
+    for i, f in enumerate(pinned.schema.fields):
+        if isinstance(f.dataType, (StringType, BinaryType)):
+            var.append(F.coalesce(F.octet_length(F.col(f.name)), F.lit(0)))
+        else:
+            fixed += jschema.apply(i).dataType().defaultSize()
+    n, var_bytes = pinned.agg(F.count(F.lit(1)), F.sum(sum(var, F.lit(0)))).first()
+    payload = n * fixed + (var_bytes or 0)
+    if payload > collect_budget_bytes(pinned.sparkSession):
+        return None
+    rows = pinned.collect()
+    release_checkpoints(pinned)
+    return rows

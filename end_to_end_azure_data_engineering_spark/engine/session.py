@@ -17,6 +17,15 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _host_driver_memory() -> str:
+    """60% of physical memory, in MB: local[N] is one JVM, and a heap
+    sized past the host's RAM ends in the OOM killer on a swapless host
+    rather than in a clean Spark error."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{total * 6 // 10 // (1024 * 1024)}m"
+
+
 _DEFAULTS: dict[str, str] = {
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
     "spark.sql.adaptive.enabled": "true",
@@ -26,7 +35,8 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.parquet.compression.codec": "snappy",
     # local[N] = single JVM; driver memory is the only pool that matters.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    # Sized from the host; SPARK_GRAFT_DRIVER_MEM overrides per deployment.
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_memory(),
     "spark.ui.enabled": "false",
     # broadcast threshold: dims in both the banking star schema and TPC-H-ish
     # testdata are tiny; AQE also converts to broadcast at runtime.

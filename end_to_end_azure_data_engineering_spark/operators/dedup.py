@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
-from ..engine.pin import pin as _pin
+from ..engine.pin import collect_if_bounded, pin as _pin, release_checkpoints
 
 
 def keep_latest(df: DataFrame, keys: list[str], order_by: list[Column]) -> DataFrame:
@@ -38,25 +38,6 @@ def latest_by_recency(df: DataFrame, keys: list[str], recency_cols: list[str]) -
 
 def distinct_by_key(df: DataFrame, keys: list[str]) -> DataFrame:
     return df.dropDuplicates(keys)
-
-
-#: default edge-count ceiling for the driver-local union-find fast path
-#: (overridable per call or via SPARK_GRAFT_CC_LOCAL_EDGES). 1M edges is
-#: ~16 MB of task results — far under any driver's maxResultSize — and
-#: union-find over it runs in well under a second; past it, the collect
-#: itself (and the Python dict) would become the bottleneck the
-#: distributed loop exists to avoid.
-CC_LOCAL_EDGES_DEFAULT = 1_000_000
-
-#: byte-aware companion cap (r14, r13 VERDICT "what's wrong" item 3): the
-#: edge-COUNT gate assumed narrow ids, but 2M bidirectional tuples of
-#: UUID-sized string ids materialize ~100-300 MB on the driver — legal
-#: under the default 1g maxResultSize yet far past what the fast path
-#: should pull. The routing probe therefore also estimates the id payload
-#: (sum of both endpoints' string widths over the pinned blocks — one agg
-#: in the SAME probe job) and refuses the local route past this budget.
-#: Overridable via SPARK_GRAFT_CC_LOCAL_BYTES or per call.
-CC_LOCAL_BYTES_DEFAULT = 64 * 1024 * 1024
 
 
 def _cc_local(pairs: list, node_type) -> list:
@@ -94,35 +75,24 @@ def _cc_local(pairs: list, node_type) -> list:
     return [(v, comp_min[find(v)]) for v in parent]
 
 
-def connected_components(
-    edges,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 20,
-    local_edges: int | None = None,
-    local_bytes: int | None = None,
-):
+def connected_components(edges, src: str = "src", dst: str = "dst", max_iter: int = 20):
     """Connected components by min-label propagation with pointer doubling.
 
-    ADAPTIVE (r13 optimization round, guide §1.2/§5): the edge frame is
-    materialized once (the loop needed that anyway), then COUNTED. At or
-    below ``local_edges`` (default ``SPARK_GRAFT_CC_LOCAL_EDGES`` or
-    1M) the components are solved by a driver-side union-find over one
-    bounded collect — near-dup pair sets are collision-bound, so at any
-    corpus size the CLUSTER graph is tiny relative to the corpus, and
-    the iterative loop's ~4 driver-coordinated jobs per round (join,
-    union, agg, convergence probe) were pure scheduling overhead on it
-    (measured: 34 jobs / 1.65 s for a 256-edge graph at sf0.1 vs 0.1 s
-    local — same labels, asserted equal). Above the threshold the
-    distributed loop below runs unchanged — the 100 TB path, where the
-    probe costs one aggregate over the already-materialized edge blocks
-    and no extra pass over anything. ``local_edges=0`` pins the
-    distributed path (tests use this to exercise the loop's own
-    invariants). r14: the probe also estimates the id payload (both
-    endpoints' string widths) and refuses the local route past
-    ``local_bytes`` (default SPARK_GRAFT_CC_LOCAL_BYTES or 64 MB) — the
-    count gate alone under-estimated UUID-sized string ids by ~10×;
-    ``local_bytes<=0`` disables only the byte gate.
+    ADAPTIVE, one budget rule: the bidirectional edge frame is pinned
+    (the loop needs that anyway) and handed to
+    ``engine.pin.collect_if_bounded``. When its estimated driver payload
+    (UTF-8 bytes of string ids, fixed width otherwise, plus per-row
+    overhead) fits ⅛ of ``spark.driver.maxResultSize``, the components
+    are solved by a driver-side union-find over that one collect —
+    near-dup pair sets are collision-bound, so at any corpus size the
+    CLUSTER graph is tiny relative to the corpus, and the loop's ~4
+    driver-coordinated jobs per round were pure scheduling overhead on
+    it (measured: 34 jobs / 1.65 s for a 256-edge graph at sf0.1 vs
+    0.1 s local — same labels, asserted equal). Otherwise the
+    distributed loop below runs over the pinned edges — the 100 TB
+    path, where the probe is one aggregate over blocks already
+    materialized. Both routes drop null-endpoint edges and return the
+    same (node, label) rows.
 
     Every node starts labeled with itself; each round adopts the minimum of
     (its label, its neighbors' labels, its label's label). The
@@ -134,8 +104,15 @@ def connected_components(
 
     The dedup-clustering step after near-dup pair generation: pairs →
     components → canonical doc = component min. Each round is two shuffles
-    on the node key; `localCheckpoint` truncates lineage so plans stay O(1)
-    per round (at cluster scale, use reliable checkpointing instead).
+    on the node key; each round's labels are pinned so plans stay O(1)
+    per round, and the superseded labels are released as soon as the
+    next round's are materialized.
+
+    Pins: the local route releases the edge pin and returns a
+    driver-built frame (no pins); the distributed route releases the
+    edge pin and every superseded labels frame and keeps only the final
+    labels, which back the returned frame (free them with
+    ``release_checkpoints``). Pins made by anyone else are never touched.
 
     Convergence is detected by an unchanged sum of xxhash64(label) — one
     cheap aggregation per round, correct for ANY node id type (the previous
@@ -147,95 +124,34 @@ def connected_components(
     """
     from pyspark.sql import functions as F
 
-    # Every localCheckpoint pins blocks in the executor block manager for
-    # the session's lifetime; an iterative operator that never frees them
-    # degrades every LATER query in a long-lived session (GC pressure +
-    # storage eviction). Snapshot the persistent-RDD set on entry and free
-    # everything this call created — except the final labels, which back
-    # the returned DataFrame — before returning.
-    sc = edges.sparkSession.sparkContext
-
-    def _persistent_ids() -> set:
-        try:
-            return set(sc._jsc.getPersistentRDDs().keys())
-        except Exception:  # noqa: BLE001 — cleanup is best-effort
-            return set()
-
-    before_ids = _persistent_ids()
-
     # materialize the edge list once — the upstream pair generation (minhash
     # banding or any near-dup join) must not be recomputed every round.
-    # Null-endpoint edges are dropped up front (r13 ADVICE): they connect
-    # nothing under min-label semantics, the local union-find would raise
-    # on None comparisons, and the distributed join path half-dropped them
-    # — one explicit rule keeps both routes identical on dirty input
-    # (pinned by test_connected_components_null_edges_both_paths).
+    # Null-endpoint edges are dropped up front: they connect nothing under
+    # min-label semantics, the local union-find would raise on None
+    # comparisons, and the distributed join path half-dropped them — one
+    # explicit rule keeps both routes identical on dirty input (pinned by
+    # test_connected_components_null_edges_both_paths).
     clean = edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
     bidir = (
         clean.select(F.col(src).alias("_n"), F.col(dst).alias("_m"))
         .unionByName(clean.select(F.col(dst).alias("_n"), F.col(src).alias("_m")))
         .transform(_pin)
     )
-    if local_edges is None:
-        import os
-
-        local_edges = int(
-            os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", CC_LOCAL_EDGES_DEFAULT)
-        )
-    if local_bytes is None:
-        import os
-
-        local_bytes = int(
-            os.environ.get("SPARK_GRAFT_CC_LOCAL_BYTES", CC_LOCAL_BYTES_DEFAULT)
-        )
-    # the probe aggregates the PINNED frame: one cheap job over blocks the
-    # loop materialized anyway, never an extra pass over the mine. It
-    # yields BOTH gates: row count and the estimated id payload (string
-    # width of both endpoints — r14 byte-aware cap; see
-    # CC_LOCAL_BYTES_DEFAULT).
-    n_bidir, id_bytes = 0, 0
-    if local_edges > 0:
-        probe = bidir.agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(
-                    F.length(F.col("_n").cast("string"))
-                    + F.length(F.col("_m").cast("string"))
-                ),
-                F.lit(0),
-            ).alias("w"),
-        ).first()
-        n_bidir, id_bytes = probe[0], int(probe[1])
-    if local_edges > 0 and n_bidir <= 2 * local_edges and (
-        local_bytes <= 0 or id_bytes <= local_bytes
-    ):
-        node_type = edges.schema[src].dataType
-        rows = _cc_local(
-            [(r[0], r[1]) for r in bidir.collect()], node_type
-        )
-        # free every checkpoint this call created — the returned frame is
-        # driver-local and references none of them
-        try:
-            jmap = sc._jsc.getPersistentRDDs()
-            for rid in sorted(_persistent_ids() - before_ids):
-                rdd = jmap.get(rid)
-                if rdd is not None:
-                    rdd.unpersist()
-        except Exception:  # noqa: BLE001 — cleanup is best-effort
-            pass
+    pairs = collect_if_bounded(bidir)
+    if pairs is not None:
         from pyspark.sql.types import StructField, StructType
 
+        node_type = edges.schema[src].dataType
+        rows = _cc_local([(r[0], r[1]) for r in pairs], node_type)
         schema = StructType(
             [
                 StructField("node", node_type, True),
                 StructField("label", node_type, True),
             ]
         )
-        n_slices = max(1, len(rows) // 500_000 + (1 if len(rows) % 500_000 else 0))
-        return edges.sparkSession.createDataFrame(
-            sc.parallelize(rows, n_slices) if rows else sc.parallelize([], 1),
-            schema,
-        )
+        sc = edges.sparkSession.sparkContext
+        n_slices = max(1, -(-len(rows) // 500_000))
+        return edges.sparkSession.createDataFrame(sc.parallelize(rows, n_slices), schema)
     labels = (
         bidir.select(F.col("_n").alias("node")).distinct()
         .withColumn("label", F.col("node"))
@@ -260,29 +176,21 @@ def connected_components(
                 "label",
             ).select("node", F.col("_lol").alias("label"))
             parts = parts.unionByName(hop)
+        superseded = labels
         labels = (
             parts.groupBy("node")
             .agg(F.min("label").alias("label"))
             .transform(_pin)
         )
+        release_checkpoints(superseded)
         new_sum = labels.agg(F.sum(F.xxhash64("label").cast("decimal(38,0)"))).first()[0]
         if new_sum == hash_sum:
             converged = True
             break
         hash_sum = new_sum
-    # free every checkpoint this call created except the newest (the final
-    # labels — lineage is truncated, so its blocks must survive until the
-    # caller consumes the result)
-    try:
-        ours = sorted(_persistent_ids() - before_ids)
-        jmap = sc._jsc.getPersistentRDDs()
-        for rid in ours[:-1]:
-            rdd = jmap.get(rid)
-            if rdd is not None:
-                rdd.unpersist()
-    except Exception:  # noqa: BLE001 — cleanup is best-effort
-        pass
+    release_checkpoints(bidir)
     if not converged:
+        release_checkpoints(labels)
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds; "
             "labels would be partially propagated — raise max_iter"

@@ -119,114 +119,6 @@ def spread(df: DataFrame) -> DataFrame:
     return df
 
 
-# Explicit registration order for the driver-facing dict. The driver's
-# correctness gate checks the first 50 registered queries per round, so the
-# surface rotates: queries with no green CORRECTNESS row yet (round 1
-# checked only the first 50 — the SCD2/append macro-ops, the whole
-# dedup/ANN/text/multimodal/streaming suite, and TPC-H wave 2 fell outside
-# the window) register first, followed by queries changed this round, then
-# a re-confirmation slice of float-bearing queries. Everything not listed
-# keeps its module registration order after these.
-PRIORITY: tuple[str, ...] = (
-    # Macro-ops (reference's signature MERGE/append patterns)
-    "scd2_final_state",
-    "idempotent_append",
-    # LLM-pipeline suite: dedup
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "dedup_ngram_jaccard",
-    "dedup_connected_components",
-    # similarity / ANN
-    "ann_bruteforce_topk",
-    "ann_lsh_topk",
-    "embedding_near_dup",
-    "ann_ivf_topk",
-    # text analysis
-    "text_token_stats",
-    "text_quality_score",
-    "text_lang_id",
-    "text_fingerprint",
-    "hash_split_stratified",
-    "text_winnow_fingerprint",
-    "tfidf_top_terms",
-    # multimodal plumbing
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "multimodal_resize_plan",
-    # streaming batch-parity shapes
-    "tumbling_window_counts",
-    "session_window_rollup",
-    # fixed/restructured this round (flip round-1 hash failures green)
-    "grouped_agg_rich",
-    "sessionize_events",
-    "json_typed_agg",
-    "approx_distinct_users",
-    # TPC-H wave 2 (driver-unchecked in round 1)
-    "returned_item_revenue",
-    "priority_linestatus_counts",
-    "customer_order_distribution",
-    "promo_revenue_pct",
-    "top_supplier_revenue",
-    "part_supplier_diversity",
-    "disjunctive_predicate_revenue",
-    "significant_part_suppliers",
-    "min_cost_supplier",
-    # re-confirmation slice: float-bearing queries that passed round 1 —
-    # keep them inside the checked window while their aggregates move to
-    # order-independent decimal math
-    "pricing_summary",
-    "price_discount_stats",
-    "percentile_group_stats",
-    "moving_avg_time_range",
-    "anomaly_zscore",
-    "window_running_and_lead",
-    "forecast_revenue_change",
-    "asof_join_last_click",
-    "salted_skew_join",
-    "array_hof_vector_stats",
-    "rollup_agg",
-    "important_part_value",
-    "sole_returning_supplier",
-)
-
-
-#: Queries whose PLAN changed this round. A recent green round describes
-#: the OLD plan, so entries here are forced to the front of the driver's
-#: 50-query window for re-verification. r14 (optimization round 2): the
-#: kmeans/IVF family gained (a) the FUSED Lloyd Arrow kernel (bit-exact
-#: assignment + decimal(28,12) partial means in one map — K×d partial
-#: rows per partition instead of n×d posexploded element rows), (b) SQL-
-#: parsed codebook literals (bit-identical to F.lit, ~0.58 s of driver
-#: plan-build time removed per IVF query), (c) one shared staged pin
-#: across ann_ivf_refined_topk's Lloyd passes and index build, and (d)
-#: bounded-result pinning with in-query release of the corpus-scale
-#: staged pin — all re-verified green with tools/check_oracle.py at
-#: sf0.01 AND sf0.1 (kernel-swapped ones also sf0.001) before commit.
-RECHECK_THIS_ROUND: frozenset = frozenset(
-    {
-        "kmeans_lloyd_3iter",
-        "ann_ivf_topk",
-        "ann_ivf_refined_topk",
-        # nearest_cell literal now SQL-parsed (same bit-exact codebook)
-        "kmeans_refine_cells",
-        # SCD2 batch dedup fused to one (user_id, slice) window pass /
-        # batch frames pinned against Catalyst tree duplication (the
-        # unpinned plans executed 24-28 scan+window nodes)
-        "scd2_as_of_snapshot",
-        "scd2_final_state",
-        # adaptive driver-local PageRank iterations (support-bound graph)
-        "pagerank_copurchase",
-        # pinned shared subtrees (executed plans ran 5-6 duplicated scans)
-        "copurchase_degree_histogram",
-        "copurchase_jaccard",
-        # dimension-bound power iterations moved to exact driver math
-        "embedding_top_eigen_power",
-    }
-)
-
-
 def _verification_order(names: list[str], root=None) -> list[str]:
     """Self-rotating registration order from the driver's own record.
 
@@ -267,20 +159,18 @@ def _verification_order(names: list[str], root=None) -> list[str]:
             tgt[name] = max(rnd, tgt.get(name, 0))
 
     def key(name: str) -> tuple[int, int]:
-        if name in RECHECK_THIS_ROUND:
-            return (0, 0)  # plan changed this round — green row is stale
         green = green_round.get(name)
         if green is None or bad_round.get(name, -1) >= green:
             return (0, 0)  # needs (re-)verification
         return (1, green)  # green: oldest verification first
 
-    return sorted(names, key=key)  # stable: preserves PRIORITY within ties
+    return sorted(names, key=key)  # stable: preserves input order within ties
 
 
 def load_all_queries() -> None:
-    """Import every query module, then order registration for the driver:
-    explicit PRIORITY first, refined by the self-rotating verification
-    order (see ``_verification_order``)."""
+    """Import every query module, then order registration for the driver
+    by the self-rotating verification order (see ``_verification_order``);
+    ties keep module registration order."""
     from . import relational  # noqa: F401
     from . import relational_ext  # noqa: F401
     from . import relational_tpch2  # noqa: F401
@@ -294,9 +184,7 @@ def load_all_queries() -> None:
 
     # Reorder in place (QUERIES/ORACLES are imported by reference elsewhere).
     registered = dict(QUERIES)
-    ordered = [n for n in PRIORITY if n in registered]
-    ordered += [n for n in registered if n not in PRIORITY]
-    ordered = _verification_order(ordered)
+    ordered = _verification_order(list(registered))
     QUERIES.clear()
     QUERIES.update({n: registered[n] for n in ordered})
     oracles = dict(ORACLES)

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from . import epoch_us, load, register, spread
-from ..engine.pin import pin as _pin
+from ..engine.pin import collect_if_bounded, pin as _pin, release_checkpoints
 
 # ---------------------------------------------------------------------------
 # As-of join — for each purchase event, the latest strictly-earlier click of
@@ -2126,20 +2126,21 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     mass). Ranks are exact bigint millionths; contributions floor-divide
     by degree, damping is (85*sum) div 100.
 
-    ADAPTIVE (r14, the r13-sanctioned CC pattern): the ≥2-support edge
-    frame is pinned (the iterations required that anyway) and COUNTED —
-    one cheap job over the pinned blocks. At or below
-    ``SPARK_GRAFT_PR_LOCAL_EDGES`` (default 1M directed edges ≈ 24 MB of
-    long-id tuples) the three iterations run as exact driver-side int
-    math over one bounded collect: the distributed chain is 3 join+agg
-    stage pairs plus a final join over a graph that is support-bound —
-    tiny relative to the corpus at any scale — so its cost here was pure
-    stage scheduling (measured ~0.8 s of the 2.3 s query at sf0.1).
-    Above the threshold the distributed chain runs unchanged (the 100 TB
-    path; node ids are fixed-width longs, so the count gate is also a
-    byte gate). 0 pins the distributed path; equality of the two routes
-    is pinned by tests/test_functions.py::test_pagerank_local_route."""
-    import os
+    ADAPTIVE, one budget rule (``engine.pin.collect_if_bounded``): the
+    ≥2-support edge frame is pinned (the iterations require that anyway)
+    and probed once. When its driver payload (three fixed-width longs
+    plus per-row overhead per directed edge) fits ⅛ of
+    ``spark.driver.maxResultSize`` the three iterations run as exact
+    driver-side int math over that one collect: the distributed chain is
+    3 join+agg stage pairs plus a final join over a graph that is
+    support-bound — tiny relative to the corpus at any scale — so its
+    cost here was pure stage scheduling (measured ~0.8 s of the 2.3 s
+    query at sf0.1). Otherwise the distributed chain runs over the
+    pinned edges (the 100 TB path). Either way the ≤100 result rows are
+    returned as a driver-built frame and the edge pin is released, so a
+    call leaves no pins behind; route equality is pinned by
+    tests/test_functions.py::test_pagerank_local_route."""
+    from pyspark.sql.types import LongType, StructField, StructType
 
     # spread() on the projected scan (r13 opt): same single-task-scan
     # fan-out as copurchase_pairs — no-op at production split counts
@@ -2147,29 +2148,20 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the (bounded: >=2-support pairs) edge+degree frame once —
     # three iterations reuse it instead of re-mining the self-join 3x
     ew = copurchase_edge_frame_lazy(li).transform(_pin)
-    local_edges = int(os.environ.get("SPARK_GRAFT_PR_LOCAL_EDGES", 1_000_000))
-    if local_edges > 0 and ew.count() <= local_edges:
-        rows = _pagerank_local(
-            [(r[0], r[1], r[2]) for r in ew.select("src", "dst", "d").collect()]
-        )
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        schema = StructType(
-            [
-                StructField("part", ew.schema["src"].dataType, True),
-                StructField("rank_millionths", LongType(), True),
-                StructField("degree", LongType(), True),
-            ]
-        )
-        from ..operators.neardup import release_checkpoints
-
-        sc = spark.sparkContext
-        out = spark.createDataFrame(
-            sc.parallelize(rows, 1) if rows else sc.parallelize([], 1), schema
-        )
+    schema = StructType(
+        [
+            StructField("part", ew.schema["src"].dataType, True),
+            StructField("rank_millionths", LongType(), True),
+            StructField("degree", LongType(), True),
+        ]
+    )
+    edges = collect_if_bounded(ew)
+    if edges is not None:
+        rows = _pagerank_local([(r.src, r.dst, r.d) for r in edges])
+    else:
+        rows = pagerank_iterations_plan(ew).collect()
         release_checkpoints(ew)
-        return out
-    return pagerank_iterations_plan(ew)
+    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,8 @@
 """Unit tests for the extension function library: sketches, similarity,
 text, multimodal plumbing."""
 
+import importlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -8,6 +10,20 @@ from end_to_end_azure_data_engineering_spark.functions import multimodal as MM
 from end_to_end_azure_data_engineering_spark.functions import sketches as S
 from end_to_end_azure_data_engineering_spark.functions import similarity as V
 from end_to_end_azure_data_engineering_spark.functions import text as X
+
+# the module, not the ``pin`` function the engine package re-exports
+P = importlib.import_module("end_to_end_azure_data_engineering_spark.engine.pin")
+
+
+def _force_route(monkeypatch, local: bool) -> None:
+    """Force the driver-local (or distributed) route of every
+    collect_if_bounded caller through its one budget function."""
+    budget = (1 << 62) if local else 0
+    monkeypatch.setattr(P, "collect_budget_bytes", lambda spark: budget)
+
+
+def _persistent_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
 def test_minhash_identical_docs_share_signature(spark):
@@ -124,7 +140,7 @@ def test_connected_components_string_ids(spark):
     assert got == {"a": "a", "b": "a", "c": "a", "d": "a", "x": "x", "y": "x"}
 
 
-def test_connected_components_long_chain_converges_fast(spark):
+def test_connected_components_long_chain_converges_fast(spark, monkeypatch):
     """Pointer doubling: a 200-node path needs O(log d) rounds, so
     max_iter=10 must suffice where plain propagation would need ~200."""
     from end_to_end_azure_data_engineering_spark.operators.dedup import connected_components
@@ -133,14 +149,15 @@ def test_connected_components_long_chain_converges_fast(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "src long, dst long"
     ).coalesce(4)
-    # local_edges=0 pins the distributed loop — the pointer-doubling
+    # a zero budget forces the distributed loop — the pointer-doubling
     # round count is exactly what this test exists to exercise
-    labels = connected_components(edges, max_iter=10, local_edges=0)
+    _force_route(monkeypatch, local=False)
+    labels = connected_components(edges, max_iter=10)
     assert labels.select("label").distinct().count() == 1
     assert labels.count() == n + 1
 
 
-def test_connected_components_nonconvergence_raises(spark):
+def test_connected_components_nonconvergence_raises(spark, monkeypatch):
     """Partially-propagated labels must never be returned silently."""
     import pytest
 
@@ -149,13 +166,14 @@ def test_connected_components_nonconvergence_raises(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "src long, dst long"
     ).coalesce(2)
+    # zero budget: the guard lives in the distributed loop (the
+    # union-find fast path has no rounds to run out of)
+    _force_route(monkeypatch, local=False)
     with pytest.raises(RuntimeError, match="did not converge"):
-        # local_edges=0: the guard lives in the distributed loop (the
-        # union-find fast path has no rounds to run out of)
-        connected_components(edges, max_iter=2, local_edges=0)
+        connected_components(edges, max_iter=2)
 
 
-def test_connected_components_local_matches_distributed(spark):
+def test_connected_components_local_matches_distributed(spark, monkeypatch):
     """r13 optimization: the small-graph union-find fast path must be
     label-for-label identical to the distributed min-label loop on the
     same edges — long ids and string ids, chains, self-loops, and a
@@ -174,14 +192,10 @@ def test_connected_components_local_matches_distributed(spark):
     ]
     for rows, schema in cases:
         edges = spark.createDataFrame(rows, schema)
-        local = {
-            r.node: r.label
-            for r in connected_components(edges, local_edges=10**6).collect()
-        }
-        dist = {
-            r.node: r.label
-            for r in connected_components(edges, local_edges=0).collect()
-        }
+        _force_route(monkeypatch, local=True)
+        local = {r.node: r.label for r in connected_components(edges).collect()}
+        _force_route(monkeypatch, local=False)
+        dist = {r.node: r.label for r in connected_components(edges).collect()}
         assert local == dist, (rows, local, dist)
 
 
@@ -200,14 +214,16 @@ def test_connected_components_local_path_leaves_no_checkpoints(spark):
     assert after - before == set(), "local path leaked pinned blocks"
 
 
-def test_connected_components_local_schema_matches_distributed(spark):
+def test_connected_components_local_schema_matches_distributed(spark, monkeypatch):
     """Column names and dtypes of the fast-path frame must equal the
     distributed loop's, so downstream joins/aggs are path-agnostic."""
     from end_to_end_azure_data_engineering_spark.operators.dedup import connected_components
 
     edges = spark.createDataFrame([(1, 2)], "src long, dst long")
-    local = connected_components(edges, local_edges=10)
-    dist = connected_components(edges, local_edges=0)
+    _force_route(monkeypatch, local=True)
+    local = connected_components(edges)
+    _force_route(monkeypatch, local=False)
+    dist = connected_components(edges)
     assert local.columns == dist.columns == ["node", "label"]
     assert [f.dataType for f in local.schema.fields] == [
         f.dataType for f in dist.schema.fields
@@ -312,12 +328,12 @@ def test_cms_sketch_merge_and_overestimate(spark):
     assert all(est[k] >= exact[k] for k in exact)
 
 
-def test_connected_components_byte_cap_refuses_wide_string_ids(spark):
-    """r14 (r13 VERDICT item 3): the local-route probe gates on estimated
-    id payload, not just edge count — UUID-or-wider string ids must fall
-    back to the distributed loop even when the edge COUNT is tiny. The
-    distributed route is observable: it leaves exactly one persistent RDD
-    (the final labels) where the local route leaves none."""
+def test_connected_components_byte_cap_refuses_wide_string_ids(spark, monkeypatch):
+    """The local-route probe gates on estimated id payload, not just edge
+    count — UUID-or-wider string ids must fall back to the distributed
+    loop even when the edge COUNT is tiny. The distributed route is
+    observable: it leaves exactly one persistent RDD (the final labels)
+    where the local route leaves none."""
     from end_to_end_azure_data_engineering_spark.operators.dedup import (
         connected_components,
     )
@@ -327,7 +343,11 @@ def test_connected_components_byte_cap_refuses_wide_string_ids(spark):
     edges = spark.createDataFrame(wide, "src string, dst string")
 
     before = set(sc._jsc.getPersistentRDDs().keys())
-    out = connected_components(edges, local_bytes=64)  # 4 edges, >64 B of ids
+    # 8 directed rows: their overhead fits, their >120 B ids do not
+    monkeypatch.setattr(
+        P, "collect_budget_bytes", lambda spark: 8 * P.ROW_OVERHEAD_BYTES + 64
+    )
+    out = connected_components(edges)
     rows = {r.node: r.label for r in out.collect()}
     after = set(sc._jsc.getPersistentRDDs().keys())
     assert len(after - before) == 1, "byte cap did not route to the distributed loop"
@@ -338,13 +358,14 @@ def test_connected_components_byte_cap_refuses_wide_string_ids(spark):
         if rdd is not None:
             rdd.unpersist()
     # same graph under the default budget takes the local route (no pins)
+    monkeypatch.undo()
     before = set(sc._jsc.getPersistentRDDs().keys())
     out2 = connected_components(edges)
     assert {r.node: r.label for r in out2.collect()} == rows
     assert set(sc._jsc.getPersistentRDDs().keys()) - before == set()
 
 
-def test_connected_components_null_edges_both_paths(spark):
+def test_connected_components_null_edges_both_paths(spark, monkeypatch):
     """r13 ADVICE: null-endpoint edges previously crashed the local path
     (None comparison) while the distributed path half-dropped them. Both
     routes now drop them up front and agree exactly."""
@@ -356,44 +377,101 @@ def test_connected_components_null_edges_both_paths(spark):
         [(1, 2), (None, 5), (7, None), (None, None), (2, 3)],
         "src long, dst long",
     )
-    local = {
-        (r.node, r.label)
-        for r in connected_components(edges, local_edges=100).collect()
-    }
-    dist = {
-        (r.node, r.label)
-        for r in connected_components(edges, local_edges=0).collect()
-    }
+    _force_route(monkeypatch, local=True)
+    local = {(r.node, r.label) for r in connected_components(edges).collect()}
+    _force_route(monkeypatch, local=False)
+    dist = {(r.node, r.label) for r in connected_components(edges).collect()}
     assert local == dist == {(1, 1), (2, 1), (3, 1)}
 
 
+def test_connected_components_byte_cap_counts_utf8_bytes(spark, monkeypatch):
+    """The payload probe counts UTF-8 bytes, not characters: 3-byte CJK
+    ids whose CHARACTER total fits the budget but whose byte total does
+    not must take the distributed loop, with the local route's labels."""
+    from end_to_end_azure_data_engineering_spark.operators.dedup import (
+        connected_components,
+    )
+
+    ids = ["\u4e2d\u6587" * 5 + str(i) for i in range(5)]
+    edges = spark.createDataFrame(
+        [(ids[i], ids[i + 1]) for i in range(4)], "src string, dst string"
+    )
+    directed = 2 * 4
+    chars = sum(2 * (len(ids[i]) + len(ids[i + 1])) for i in range(4))
+    utf8 = sum(
+        2 * (len(ids[i].encode()) + len(ids[i + 1].encode())) for i in range(4)
+    )
+    budget = directed * P.ROW_OVERHEAD_BYTES + chars
+    assert chars < utf8 and budget < directed * P.ROW_OVERHEAD_BYTES + utf8
+
+    _force_route(monkeypatch, local=True)
+    local = {r.node: r.label for r in connected_components(edges).collect()}
+
+    monkeypatch.setattr(P, "collect_budget_bytes", lambda spark: budget)
+    before = _persistent_ids(spark)
+    out = connected_components(edges)
+    dist = {r.node: r.label for r in out.collect()}
+    assert len(_persistent_ids(spark) - before) == 1, (
+        "multibyte ids were sized by characters and routed to the driver"
+    )
+    assert dist == local and set(dist.values()) == {min(ids)}
+    P.release_checkpoints(out)
+
+
+@pytest.mark.parametrize("local", [True, False])
+def test_connected_components_keeps_foreign_pins(spark, monkeypatch, local):
+    """A connected_components call releases only the frames it pinned: a
+    frame some other code pinned while the call ran (the streaming dedup
+    sink's micro-batch thread shares the session) must stay readable on
+    either route."""
+    from end_to_end_azure_data_engineering_spark.operators import dedup
+
+    foreign = []
+    real_pin = dedup._pin
+
+    def pin_with_foreign(df):
+        foreign.append(real_pin(spark.range(5)))
+        return real_pin(df)
+
+    monkeypatch.setattr(dedup, "_pin", pin_with_foreign)
+    _force_route(monkeypatch, local=local)
+    edges = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "src long, dst long")
+    before = _persistent_ids(spark)
+    out = dedup.connected_components(edges)
+    assert {r.node: r.label for r in out.collect()} == {
+        1: 1, 2: 1, 3: 1, 7: 7, 8: 7,
+    }
+    assert foreign
+    for f in foreign:
+        assert sorted(r.id for r in f.collect()) == [0, 1, 2, 3, 4]
+    # the call's own pins: none on the local route, the final labels on
+    # the distributed one
+    assert len(_persistent_ids(spark) - before) == len(foreign) + (0 if local else 1)
+    P.release_checkpoints(out)
+    for f in foreign:
+        P.release_checkpoints(f)
+
+
 def test_pagerank_local_route(spark, monkeypatch):
-    """r14: pagerank_copurchase's adaptive driver-local iteration route
-    must return EXACTLY the distributed chain's rows (same exact bigint
-    math, same top-100 selection), and the routing knob must pin either
-    path. The local path must leave no pinned blocks behind."""
+    """pagerank_copurchase's driver-local iteration route must return
+    EXACTLY the distributed chain's rows (same exact bigint math, same
+    top-100 selection), with either route forced through the one budget
+    function, and neither route may leave a pinned block behind."""
     from end_to_end_azure_data_engineering_spark.queries.relational_ext import (
         pagerank_copurchase,
     )
 
     sf = "/root/testdata/sf0.01"
-    sc = spark.sparkContext
-    before = set(sc._jsc.getPersistentRDDs().keys())
-    monkeypatch.setenv("SPARK_GRAFT_PR_LOCAL_EDGES", "1000000")
-    local = [
-        (r.part, r.rank_millionths, r.degree)
-        for r in pagerank_copurchase(spark, sf).collect()
-    ]
-    assert set(sc._jsc.getPersistentRDDs().keys()) - before == set(), (
-        "local route leaked the edge pin"
-    )
-    monkeypatch.setenv("SPARK_GRAFT_PR_LOCAL_EDGES", "0")
-    df = pagerank_copurchase(spark, sf)
-    dist = [(r.part, r.rank_millionths, r.degree) for r in df.collect()]
-    from end_to_end_azure_data_engineering_spark.operators.neardup import (
-        release_checkpoints,
-    )
-
-    release_checkpoints(df)
-    assert local == dist
-    assert 0 < len(local) <= 100
+    got = {}
+    for local in (True, False):
+        _force_route(monkeypatch, local=local)
+        before = _persistent_ids(spark)
+        got[local] = [
+            (r.part, r.rank_millionths, r.degree)
+            for r in pagerank_copurchase(spark, sf).collect()
+        ]
+        assert _persistent_ids(spark) - before == set(), (
+            f"{'local' if local else 'distributed'} route leaked a pin"
+        )
+    assert got[True] == got[False]
+    assert 0 < len(got[True]) <= 100

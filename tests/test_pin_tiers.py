@@ -134,10 +134,14 @@ def test_iterative_operator_reliable_checkpoints_cleaned(tmp_path):
             + [(999, 999)],
             ["src", "dst"],
         )
-        # local_edges=0 pins the DISTRIBUTED loop: this test exercises the
-        # reliable-checkpoint tier of the iterative rounds, which the
-        # small-graph union-find fast path (r13) would otherwise skip
-        labels = connected_components(edges, local_edges=0)
+        # a zero collect budget forces the DISTRIBUTED loop: this test
+        # exercises the reliable-checkpoint tier of the iterative rounds,
+        # which the small-graph union-find fast path would otherwise skip
+        import importlib
+        importlib.import_module(
+            "end_to_end_azure_data_engineering_spark.engine.pin"
+        ).collect_budget_bytes = lambda spark: 0
+        labels = connected_components(edges)
         got = {{r["node"]: r["label"] for r in labels.collect()}}
         assert got[49] == 0 and got[149] == 100 and got[999] == 999, got
         assert glob.glob("{tmp_path}/ckpt/*/rdd-*"), (
