@@ -19,7 +19,7 @@ is cheaper than the sharded construction's three passes — and is safe
 sharded construction engages, with a skew guard (below) enforcing the
 tie contract the r8 version only documented. Passing ``num_buckets``
 explicitly pins the sharded path unconditionally (no probe, no guard) —
-the unit-test and plan-audit hook.
+the unit-test hook.
 
 ``sharded_row_number`` computes the SAME exact global row_number per
 group with every shuffle and sort keyed on ``(group, range-bucket)``:
@@ -545,7 +545,7 @@ _LEVEL_MAX = 128
 # NULL-safe grouping/join key (r8 ADVICE, mechanism revised in-round):
 # a plain name join drops NULL keys, and an eqNullSafe condition join —
 # the first fix attempted — wraps the hash-partitioning keys so no child
-# partitioning aligns: measured on the deciles twin, 6→12 exchanges and
+# partitioning aligns: measured on the deciles' sharded plan, 6→12 exchanges and
 # the broadcast-able bounds join degraded to SortMergeJoin. Wrapping the
 # group columns in ONE struct column instead keeps every groupBy and
 # join a plain equi-join on a real column (exchanges align and reuse,
@@ -671,10 +671,11 @@ def sharded_row_number(
     ``num_buckets`` to the value resolution with a warning; raise on a
     boolean-like bucketing value — see the module docstring). BOTH paths
     produce byte-identical output, hash-verified by the same oracles.
-    ``small_group_rows=0`` skips the probe and forces the sharded path
-    (the lazy_stages twins use this so the plan audit always fences the
-    100 TB shape). An EXPLICIT ``num_buckets`` also pins the sharded
-    path with no probe — the unit-test hook.
+    ``small_group_rows=0`` skips the probe and forces the sharded path.
+    An EXPLICIT ``num_buckets`` also pins the sharded path with no probe
+    — the unit-test hook. The plan audit's forced pass reaches the
+    sharded path by patching ``SMALL_INPUT_BYTES``/``SMALL_GROUP_ROWS``,
+    which are read at call time (tools/plan_audit.FORCED).
 
     The sharded construction evaluates ``df`` three times (boundary
     aggregate, bucket counts, final rank; the two-level path above
@@ -685,9 +686,8 @@ def sharded_row_number(
     pass ``materialize=True`` to localCheckpoint the input once
     (profiled at synthetic sf10: the customer_spend_deciles spend
     aggregate alone is ~8.5 s warm, so recomputing it 3× dwarfs the
-    ~5.7 s of rank stages — the lazy twin in queries/lazy_stages.py
-    keeps the checkpointed upstream visible to the plan audit, the same
-    discipline as the mining stages)."""
+    ~5.7 s of rank stages). The pin runs as its own SQL execution, so
+    the plan audit still sees the checkpointed upstream."""
     if num_buckets is None and small_group_rows is None:
         # zero-job tier: a provably-small frame (plan proof walker, see
         # _proven_small — Generate/Expand-safe, unique-dim joins bounded
@@ -916,7 +916,6 @@ def with_tie_ranks(
     rank: str = "rank",
     dense_rank: str = "dense_rank",
     materialize: bool = False,
-    small_group_rows: int | None = None,
 ) -> DataFrame:
     """Tie-aware ``rank()`` / ``dense_rank()`` on top of a
     ``sharded_row_number`` result — completing the SQL rank-function
@@ -938,8 +937,7 @@ def with_tie_ranks(
     data-sized (mostly-unique orderings ⇒ one class per row), so its
     dense-rank numbering recurses through ``sharded_row_number`` on the
     class min-rn (a unique numeric total order by construction) rather
-    than a per-group window; ``small_group_rows`` passes through, so the
-    recursion is adaptive too.
+    than a per-group window; the recursion is adaptive too.
 
     ``ranked`` is referenced twice (class aggregate + final join) and
     the class frame three more times inside the recursion — Catalyst
@@ -947,8 +945,8 @@ def with_tie_ranks(
     construction re-derives the upstream rank pipeline ~40× (measured:
     40 parquet scans, 58 exchanges, zero exchange reuse on a parts
     frame). Pass ``materialize=True`` on any non-trivial input to pin
-    ``ranked`` once and the class frame once (same lazy-twin audit
-    discipline as ``sharded_row_number``'s own flag)."""
+    ``ranked`` once and the class frame once (same discipline as
+    ``sharded_row_number``'s own flag)."""
     if materialize:
         ranked = ranked.transform(_pin)
     # one struct key = the tie class identity; NULL group/tie values
@@ -969,7 +967,6 @@ def with_tie_ranks(
         rn=dense_rank,
         n="_n_classes",
         materialize=materialize,
-        small_group_rows=small_group_rows,
     ).drop("_n_classes")
     return ranked.join(
         classes.select(_TSK, rank, dense_rank), _TSK

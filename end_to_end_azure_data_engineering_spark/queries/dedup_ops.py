@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from ..functions import sketches as S
 from ..functions import text as X
 from . import load, register, spread
-from ..engine.pin import pin as _pin
+from ..engine.pin import pin as _pin, release_checkpoints
 
 # Hard ceiling for the deliberately-bounded all-pairs ground-truth evals
 # below. 50k rows is the outer limit of a sane exact-eval slice: the pair
@@ -367,6 +367,7 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     comp = connected_components(pairs, "doc_a", "doc_b")
+    release_checkpoints(pairs)
     return comp.select(
         F.col("node").alias("doc_id"), F.col("label").alias("component_id")
     )
@@ -533,6 +534,7 @@ def dedup_cluster_size_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     comp = connected_components(pairs, "doc_a", "doc_b")
+    release_checkpoints(pairs)
     sizes = comp.groupBy("label").agg(F.count("*").alias("cluster_size"))
     return (
         sizes.groupBy("cluster_size")
@@ -642,12 +644,18 @@ def incremental_components_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_pairs = pairs_from_signatures(
         sig, threshold=0.2, batch_ids=sig.select("_id").filter(F.col("_id") % 3 == 0)
     ).select("id_a", "id_b").transform(_pin)
-    old_state = connected_components(old_pairs.transform(_pin), "id_a", "id_b")
+    old_pairs = old_pairs.transform(_pin)
+    old_state = connected_components(old_pairs, "id_a", "id_b")
     sig.unpersist()
+    release_checkpoints(old_pairs)
     merged_edges = old_state.select(
         F.col("node").alias("id_a"), F.col("label").alias("id_b")
     ).unionByName(new_pairs)
-    return connected_components(merged_edges, "id_a", "id_b")
+    comp = connected_components(merged_edges, "id_a", "id_b")
+    # the new pairs and the old state's labels (distributed route) are
+    # pins the result no longer reads
+    release_checkpoints(merged_edges)
+    return comp
 
 
 @register(
@@ -694,9 +702,9 @@ def dedup_best_quality_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W2
 
     d = spread(load(spark, sf_dir, "documents"))
-    comp = connected_components(
-        near_dup_pairs(d, "doc_id", "text", threshold=0.2), "id_a", "id_b"
-    ).withColumnRenamed("node", "doc_id")
+    pairs = near_dup_pairs(d, "doc_id", "text", threshold=0.2)
+    comp = connected_components(pairs, "id_a", "id_b").withColumnRenamed("node", "doc_id")
+    release_checkpoints(pairs)
     ranked = comp.join(d.select("doc_id", "n_chars"), "doc_id")
     w = W2.partitionBy("label").orderBy(F.desc("n_chars"), F.asc("doc_id"))
     return (

@@ -1172,16 +1172,28 @@ def order_date_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def order_value_distribution_plan(
-    spark: SparkSession,
-    sf_dir: str,
-    materialize: bool = True,
-    small_group_rows: int | None = None,
-) -> DataFrame:
-    """Shared plan builder (registered query materializes the filtered
-    join before the rank, which adapts plain-window/sharded by probed
-    size — r9; the lazy_stages twin passes small_group_rows=0 to force
-    the sharded 100 TB shape for the plan audit)."""
+@register(
+    "order_value_distribution",
+    oracle="""
+    SELECT o_orderkey, c_mktsegment,
+           ntile(4) OVER w AS value_quartile,
+           percent_rank() OVER w AS pct_rank,
+           cume_dist() OVER w AS cume
+    FROM orders JOIN customer ON c_custkey = o_custkey
+    WHERE o_totalprice > 400000
+    WINDOW w AS (PARTITION BY c_mktsegment
+                 ORDER BY o_totalprice ASC, o_orderkey ASC)
+    """,
+)
+def order_value_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quartile bucketing + exact distribution ranks per segment. The
+    deterministic (price, orderkey) ordering makes ntile assignment
+    unique. The >400000 filter trims a constant FRACTION of orders, so a
+    `PARTITION BY c_mktsegment` window still sorts O(N) rows on each of
+    5 tasks — rewritten on sharded_row_number + the closed-form rank
+    family (r8), hash-verified by the unchanged SQL window oracle. The
+    filtered join is pinned before the rank, which adapts plain-window/
+    sharded by probed size (r9)."""
     from ..operators.ranks import (
         cume_dist_expr,
         ntile_expr,
@@ -1204,8 +1216,7 @@ def order_value_distribution_plan(
         base,
         ["c_mktsegment"],
         ["o_totalprice", "o_orderkey"],
-        materialize=materialize,
-        small_group_rows=small_group_rows,
+        materialize=True,
     )
     return ranked.select(
         "o_orderkey",
@@ -1214,29 +1225,6 @@ def order_value_distribution_plan(
         percent_rank_expr("rn", "n_g").alias("pct_rank"),
         cume_dist_expr("rn", "n_g").alias("cume"),
     )
-
-
-@register(
-    "order_value_distribution",
-    oracle="""
-    SELECT o_orderkey, c_mktsegment,
-           ntile(4) OVER w AS value_quartile,
-           percent_rank() OVER w AS pct_rank,
-           cume_dist() OVER w AS cume
-    FROM orders JOIN customer ON c_custkey = o_custkey
-    WHERE o_totalprice > 400000
-    WINDOW w AS (PARTITION BY c_mktsegment
-                 ORDER BY o_totalprice ASC, o_orderkey ASC)
-    """,
-)
-def order_value_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quartile bucketing + exact distribution ranks per segment. The
-    deterministic (price, orderkey) ordering makes ntile assignment
-    unique. The >400000 filter trims a constant FRACTION of orders, so a
-    `PARTITION BY c_mktsegment` window still sorts O(N) rows on each of
-    5 tasks — rewritten on sharded_row_number + the closed-form rank
-    family (r8), hash-verified by the unchanged SQL window oracle."""
-    return order_value_distribution_plan(spark, sf_dir, materialize=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1994,33 +1982,9 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def copurchase_edge_frame_lazy(li: DataFrame) -> DataFrame:
-    """LAZY >=2-support co-purchase edge+degree frame (src, dst, d) —
-    the mining stage pagerank_copurchase materializes once via
-    localCheckpoint. Exposed separately so the plan audit can see the
-    per-order self-join + support aggregation shuffles that execute
-    eagerly at query-build time (r4 verdict item 2)."""
-    a = li.select("l_orderkey", F.col("l_partkey").alias("pa"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("pb"))
-    pairs = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("pa") < F.col("pb"))
-        .groupBy("pa", "pb")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= 2)
-        .select("pa", "pb")
-    )
-    edges = pairs.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).unionByName(
-        pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-    )
-    deg = edges.groupBy("src").agg(F.count("*").alias("d"))
-    return edges.join(deg, "src")
-
-
 def pagerank_iterations_plan(ew: DataFrame, iterations: int = 3) -> DataFrame:
     """The DISTRIBUTED 3-iteration PageRank chain over a pinned
-    (src, dst, d) edge+degree frame — the 100 TB path, and the plan the
-    ``pagerank_copurchase:iter`` lazy twin audits. Exact bigint math:
+    (src, dst, d) edge+degree frame — the 100 TB path. Exact bigint math:
     contributions floor-divide by degree, damping is (85*sum) div 100."""
     ranks = ew.select(F.col("src").alias("node")).distinct().withColumn(
         "r", F.lit(1_000_000).cast("long")
@@ -2145,9 +2109,25 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread() on the projected scan (r13 opt): same single-task-scan
     # fan-out as copurchase_pairs — no-op at production split counts
     li = spread(load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey"))
-    # materialize the (bounded: >=2-support pairs) edge+degree frame once —
-    # three iterations reuse it instead of re-mining the self-join 3x
-    ew = copurchase_edge_frame_lazy(li).transform(_pin)
+    # >=2-support co-purchase edges with source degree: a per-order
+    # self-join plus support aggregation, pinned once (the bounded
+    # edge+degree frame) — three iterations reuse it instead of
+    # re-mining the self-join 3x
+    a = li.select("l_orderkey", F.col("l_partkey").alias("pa"))
+    b = li.select("l_orderkey", F.col("l_partkey").alias("pb"))
+    pairs = (
+        a.join(b, "l_orderkey")
+        .filter(F.col("pa") < F.col("pb"))
+        .groupBy("pa", "pb")
+        .agg(F.count("*").alias("n"))
+        .filter(F.col("n") >= 2)
+        .select("pa", "pb")
+    )
+    directed = pairs.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).unionByName(
+        pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
+    )
+    deg = directed.groupBy("src").agg(F.count("*").alias("d"))
+    ew = directed.join(deg, "src").transform(_pin)
     schema = StructType(
         [
             StructField("part", ew.schema["src"].dataType, True),
@@ -2691,12 +2671,7 @@ def interevent_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM r
     """,
 )
-def user_activity_gini_plan(
-    spark: SparkSession,
-    sf_dir: str,
-    materialize: bool = True,
-    small_group_rows: int | None = None,
-) -> DataFrame:
+def user_activity_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranks import sharded_row_number
 
     ev = load(spark, sf_dir, "events")
@@ -2705,15 +2680,14 @@ def user_activity_gini_plan(
     # through sharded_row_number (empty group = global total order) —
     # sorted on num_buckets tasks, never the one-task W.orderBy sort the
     # r8 window fence bans for data-sized frames; the events aggregate is
-    # materialized once (lazy twin: user_activity_gini:rank)
+    # pinned once
     r = sharded_row_number(
         c,
         [],
         ["n", "user_id"],
         rn="i",
         n="_n_all",
-        materialize=materialize,
-        small_group_rows=small_group_rows,
+        materialize=True,
     ).drop("_n_all")
     n_users = F.count("*").cast("double")
     total = F.sum("n").cast("double")
@@ -2786,50 +2760,6 @@ def orders_backlog_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def customer_spend_deciles_plan(
-    spark: SparkSession,
-    sf_dir: str,
-    materialize: bool = True,
-    small_group_rows: int | None = None,
-) -> DataFrame:
-    """Shared plan builder: the registered query materializes the spend
-    aggregate before the adaptive rank; the lazy_stages twin passes
-    materialize=False + small_group_rows=0 so the audit sees the
-    upstream join+agg AND the sharded 100 TB shape."""
-    from ..operators.ranks import ntile_expr, sharded_row_number
-
-    cust = load(spark, sf_dir, "customer")
-    orders = load(spark, sf_dir, "orders")
-    # aggregate BELOW the join: orders collapse to one row per customer
-    # (map-side partial agg) before picking up the segment, so the join
-    # and every downstream shuffle move |customers| rows, not |orders| —
-    # at 100 TB that is the ~10× orders-per-customer factor off the wire.
-    # segment is functionally dependent on c_custkey, so the result is
-    # identical to grouping after the join (oracle unchanged).
-    ospend = orders.groupBy(F.col("o_custkey").alias("ck")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("sp")
-    )
-    spend = cust.join(ospend, ospend.ck == cust.c_custkey).select(
-        F.col("c_mktsegment").alias("segment"), "ck", "sp"
-    )
-    ranked = sharded_row_number(
-        spend,
-        ["segment"],
-        ["sp", "ck"],
-        materialize=materialize,
-        small_group_rows=small_group_rows,
-    )
-    t = ranked.select(
-        "segment", "sp", ntile_expr("rn", "n_g", 10).alias("decile")
-    )
-    return t.groupBy("segment", "decile").agg(
-        F.count("*").alias("n_customers"),
-        F.round(F.sum("sp").cast("double"), 2).alias("total_spend"),
-        F.round(F.min("sp").cast("double"), 2).alias("min_spend"),
-        F.round(F.max("sp").cast("double"), 2).alias("max_spend"),
-    )
-
-
 @register(
     "customer_spend_deciles",
     oracle="""
@@ -2860,8 +2790,39 @@ def customer_spend_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear in the corpus, the low-cardinality window class the r8 plan
     fence bans. Rewritten on sharded_row_number (range-bucketed exact
     rank, sorts on segments×buckets tasks) + the closed-form ntile; the
-    unchanged DuckDB ntile() oracle hash-verifies equivalence."""
-    return customer_spend_deciles_plan(spark, sf_dir, materialize=True)
+    unchanged DuckDB ntile() oracle hash-verifies equivalence. The spend
+    aggregate is pinned before the adaptive rank."""
+    from ..operators.ranks import ntile_expr, sharded_row_number
+
+    cust = load(spark, sf_dir, "customer")
+    orders = load(spark, sf_dir, "orders")
+    # aggregate BELOW the join: orders collapse to one row per customer
+    # (map-side partial agg) before picking up the segment, so the join
+    # and every downstream shuffle move |customers| rows, not |orders| —
+    # at 100 TB that is the ~10× orders-per-customer factor off the wire.
+    # segment is functionally dependent on c_custkey, so the result is
+    # identical to grouping after the join (oracle unchanged).
+    ospend = orders.groupBy(F.col("o_custkey").alias("ck")).agg(
+        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("sp")
+    )
+    spend = cust.join(ospend, ospend.ck == cust.c_custkey).select(
+        F.col("c_mktsegment").alias("segment"), "ck", "sp"
+    )
+    ranked = sharded_row_number(
+        spend,
+        ["segment"],
+        ["sp", "ck"],
+        materialize=True,
+    )
+    t = ranked.select(
+        "segment", "sp", ntile_expr("rn", "n_g", 10).alias("decile")
+    )
+    return t.groupBy("segment", "decile").agg(
+        F.count("*").alias("n_customers"),
+        F.round(F.sum("sp").cast("double"), 2).alias("total_spend"),
+        F.round(F.min("sp").cast("double"), 2).alias("min_spend"),
+        F.round(F.max("sp").cast("double"), 2).alias("max_spend"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2891,17 +2852,7 @@ def supplier_percentile_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier list on one task (supplier count grows with the corpus; 25
     nations ⇒ 25 tasks forever). Under the (s_acctbal, s_suppkey) total
     order, percent_rank/cume_dist/ntile are closed forms of (rn, n) —
-    hash-verified by the unchanged SQL-rank-function oracle. The lazy
-    twin `supplier_percentile_ranks:rank` pins the sharded 100 TB shape
-    for the plan audit (r10, verdict item 4)."""
-    return supplier_percentile_ranks_plan(spark, sf_dir)
-
-
-def supplier_percentile_ranks_plan(
-    spark: SparkSession,
-    sf_dir: str,
-    small_group_rows: int | None = None,
-) -> DataFrame:
+    hash-verified by the unchanged SQL-rank-function oracle."""
     from ..operators.ranks import (
         cume_dist_expr,
         ntile_expr,
@@ -2911,19 +2862,14 @@ def supplier_percentile_ranks_plan(
 
     s = load(spark, sf_dir, "supplier")
     n = load(spark, sf_dir, "nation")
-    # Dim uniqueness via declared PK (see order_value_distribution_plan):
+    # Dim uniqueness via declared PK (see order_value_distribution):
     # the proof walker trusts nation's registered n_nationkey scan, so
     # the r10 groupBy(n_nationkey).agg(first(...)) pre-aggregate — one
     # 25-row but plan-widening exchange — is gone; zero probe jobs.
     base = s.join(F.broadcast(n), n.n_nationkey == s.s_nationkey).select(
         F.col("n_name").alias("nation"), "s_suppkey", "s_acctbal"
     )
-    ranked = sharded_row_number(
-        base,
-        ["nation"],
-        ["s_acctbal", "s_suppkey"],
-        small_group_rows=small_group_rows,
-    )
+    ranked = sharded_row_number(base, ["nation"], ["s_acctbal", "s_suppkey"])
     return ranked.select(
         "nation",
         "s_suppkey",
@@ -2954,35 +2900,18 @@ def part_size_tie_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense_rank — no shuffle coarser than (brand, size), never the
     |brands|-partition window the rank fence bans. materialize=True pins
     the ranked frame and the tie-class frame once (left lazy, the DAG
-    reuse plans as ~40 duplicated part scans); the lazy twin
-    `part_size_tie_ranks:rank` keeps the full pipeline audit-visible."""
-    return part_size_tie_ranks_plan(spark, sf_dir, materialize=True)
-
-
-def part_size_tie_ranks_plan(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    materialize: bool,
-    small_group_rows: int | None = None,
-) -> DataFrame:
+    reuse plans as ~40 duplicated part scans)."""
     from ..operators.ranks import sharded_row_number, with_tie_ranks
 
     p = load(spark, sf_dir, "part").select("p_brand", "p_partkey", "p_size")
-    ranked = sharded_row_number(
-        p,
-        ["p_brand"],
-        ["p_size", "p_partkey"],
-        small_group_rows=small_group_rows,
-    )
+    ranked = sharded_row_number(p, ["p_brand"], ["p_size", "p_partkey"])
     return with_tie_ranks(
         ranked,
         ["p_brand"],
         ["p_size"],
         rank="rnk",
         dense_rank="drnk",
-        materialize=materialize,
-        small_group_rows=small_group_rows,
+        materialize=True,
     ).select("p_brand", "p_partkey", "p_size", "rnk", "drnk")
 
 
@@ -3379,23 +3308,16 @@ def weekly_active_users_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY decile, t2.total
     """,
 )
-def revenue_pareto_curve_plan(
-    spark: SparkSession,
-    sf_dir: str,
-    materialize: bool = True,
-    small_group_rows: int | None = None,
-) -> DataFrame:
+def revenue_pareto_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranks import ntile_expr, sharded_row_number
 
     li = load(spark, sf_dir, "lineitem")
     rev = F.col("l_extendedprice").cast("decimal(18,2)") * (
         F.lit(1) - F.col("l_discount").cast("decimal(4,2)")
     )
-    pr = li.groupBy("l_partkey").agg(F.sum(rev).alias("rev"))
-    if materialize:
-        # the lineitem reduction feeds the rank passes AND the grand
-        # total: checkpoint it once (lazy twin: revenue_pareto_curve:rank)
-        pr = pr.transform(_pin)
+    # the lineitem reduction feeds the rank passes AND the grand total:
+    # checkpoint it once
+    pr = li.groupBy("l_partkey").agg(F.sum(rev).alias("rev")).transform(_pin)
     # rev DESC == -rev ASC (decimal negation is exact); l_partkey breaks
     # ties, so the sharded global rank reproduces the SQL ntile order
     ranked = sharded_row_number(
@@ -3404,7 +3326,6 @@ def revenue_pareto_curve_plan(
         ["_negrev", "l_partkey"],
         rn="rn",
         n="n_g",
-        small_group_rows=small_group_rows,
     ).drop("_negrev")
     t = ranked.select(
         "l_partkey", "rev", ntile_expr("rn", "n_g", 10).alias("decile")

@@ -1401,11 +1401,10 @@ def label_balance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def eigen_gram_lazy(e: DataFrame) -> DataFrame:
-    """embedding_top_eigen_power's LAZY d²-moment (Gram) matrix plan,
-    pre-checkpoint — exposed so the plan-audit fence sees the Arrow
-    partial-Gram stage the query pins away (lazy_stages
-    ``embedding_top_eigen_power:gram``). Output: (i, j, m) with the same
-    quantization/floor semantics as the r12 exploded-self-join form."""
+    """embedding_top_eigen_power's d²-moment (Gram) matrix plan: the
+    Arrow partial-Gram map feeding an (i, j)-keyed sum, collected by the
+    query. Output: (i, j, m) with the same quantization/floor semantics
+    as the r12 exploded-self-join form."""
     from ..functions.similarity_arrow import int_gram_partials_arrow
 
     q = e.select(

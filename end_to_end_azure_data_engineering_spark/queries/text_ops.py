@@ -73,20 +73,10 @@ def token_length_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     no rank call site had an explode upstream). At scale the sharded
     path folds the (doc_id, pos) tiebreakers below the ~15-distinct
     token-length key, keeping full sharding where the r9 clamp would
-    have surrendered shards; that shape is pinned by the
-    ``token_length_quartiles:rank`` lazy twin in lazy_stages.py.
-    Position is 1-based to match DuckDB's generate_subscripts; Spark's
-    split and DuckDB's str_split both keep empty tokens from
-    consecutive delimiters."""
-    return token_length_quartiles_plan(spark, sf_dir)
-
-
-def token_length_quartiles_plan(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    small_group_rows: int | None = None,
-) -> DataFrame:
+    have surrendered shards; the plan audit's forced pass runs that
+    shape (tools/plan_audit.FORCED). Position is 1-based to match
+    DuckDB's generate_subscripts; Spark's split and DuckDB's str_split
+    both keep empty tokens from consecutive delimiters."""
     from ..operators.ranks import ntile_expr, sharded_row_number
 
     d = spread(load(spark, sf_dir, "documents"))
@@ -105,7 +95,6 @@ def token_length_quartiles_plan(
         base,
         ["source"],
         ["tok_len", "doc_id", "pos"],
-        small_group_rows=small_group_rows,
     )
     q = ranked.select(
         "source", "tok_len", ntile_expr("rn", "n_g", 4).alias("quartile")

@@ -704,17 +704,7 @@ def quality_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     division of exact integers — hash-stable cross-engine. r8: the former
     `PARTITION BY source` window sorted each source's whole document set
     on one task (sources are O(10), docs O(corpus)); now an exact sharded
-    rank sorts on sources×buckets tasks, same oracle, same hash. The
-    lazy twin `quality_quantile_normalize:rank` pins the sharded 100 TB
-    shape for the plan audit (r10, verdict item 4)."""
-    return quality_quantile_normalize_plan(spark, sf_dir)
-
-
-def quality_quantile_normalize_plan(
-    spark: SparkSession,
-    sf_dir: str,
-    small_group_rows: int | None = None,
-) -> DataFrame:
+    rank sorts on sources×buckets tasks, same oracle, same hash."""
     from ..operators.ranks import percent_rank_expr, sharded_row_number
 
     d = spread(load(spark, sf_dir, "documents"))
@@ -722,7 +712,6 @@ def quality_quantile_normalize_plan(
         d.select("doc_id", "source", "n_chars"),
         ["source"],
         ["n_chars", "doc_id"],
-        small_group_rows=small_group_rows,
     )
     return ranked.select(
         "doc_id",

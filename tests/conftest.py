@@ -1,5 +1,7 @@
 import sys
+from dataclasses import dataclass, field
 from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 
@@ -15,3 +17,53 @@ SF_DIR = "/root/testdata/sf0.001"
 def spark():
     s = get_spark("tests")
     yield s
+
+
+@dataclass
+class Run:
+    """One full run of a query: the plans it executed, its columns, the
+    persisted RDD ids it left behind, or the error it raised."""
+
+    plans: list[str] = field(default_factory=list)
+    columns: list[str] = field(default_factory=list)
+    leaked: set[int] = field(default_factory=set)
+    error: str | None = None
+
+
+def _run(spark, name: str, fn) -> Run:
+    from tools.plan_audit import executed_plans
+
+    run = Run()
+
+    def build(s, sf_dir):
+        df = fn(s, sf_dir)
+        run.columns = df.columns
+        return df
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs())
+    try:
+        run.plans = executed_plans(spark, build, SF_DIR)
+    except Exception as e:  # noqa: BLE001 — reported per query by the tests
+        run.error = f"{type(e).__name__}: {str(e).splitlines()[0] if str(e) else ''}"
+        return run
+    run.leaked = set(jsc.getPersistentRDDs()) - before
+    return run
+
+
+@pytest.fixture(scope="session")
+def executed(spark):
+    """Every registered query run once to completion at sf0.001
+    (``default``), plus the size-gated queries run again with their scale
+    route forced (``forced``, see tools/plan_audit.FORCED). The driver
+    smoke test, the plan fences and the pin fence all read this one pass."""
+    import __spark_entry__ as ent
+    from tools.plan_audit import FORCED, forced_route
+
+    qs = ent.queries()
+    default = {name: _run(spark, name, fn) for name, fn in qs.items()}
+    forced = {}
+    for name in FORCED:
+        with forced_route(name):
+            forced[name] = _run(spark, name, qs[name])
+    return SimpleNamespace(default=default, forced=forced)

@@ -1,7 +1,10 @@
 """Plan-regression guards — the PLANS.md design rules as executable tests.
 
-Builds the physical plan of EVERY registered query at sf0.001 and asserts
-the scale invariants hold:
+Reads the physical plan of every SQL execution that EVERY registered
+query ran at sf0.001 (the shared executed pass in conftest: pins, probes
+and driver-route collects are executions of their own, and the size-gated
+queries run a second time with their scale route forced) and asserts the
+scale invariants hold:
 
   1. no CartesianProduct anywhere;
   2. BroadcastNestedLoopJoin only where a bounded build side justifies it
@@ -23,6 +26,7 @@ import re
 import pytest
 
 import __spark_entry__ as ent
+from tools.plan_audit import CC_CALLERS, RANK_QUERIES
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -79,8 +83,8 @@ GLOBAL_WINDOW_ALLOWED = {
     # plain global window runs (the probe proves the frame fits one
     # task); above it the sharded construction engages, whose only
     # global window is the offsets cumsum over the ≤num_buckets-row
-    # bucket-counts frame — the sharded shape is force-pinned and
-    # audited via the :rank twins (operators/ranks.py)
+    # bucket-counts frame — the sharded shape runs and is audited on
+    # the forced pass (tools/plan_audit.FORCED)
     "user_activity_gini",
     "revenue_pareto_curve",
     "peak_concurrent_sessions",  # running sum over one row per minute
@@ -88,41 +92,77 @@ GLOBAL_WINDOW_ALLOWED = {
 
 
 @pytest.fixture(scope="module")
-def plans(spark):
-    from end_to_end_azure_data_engineering_spark.queries.lazy_stages import (
-        lazy_stages,
-    )
+def plans(executed):
+    """{query: the plans of every SQL execution it ran} — pins, probes and
+    driver-route collects included — from the shared executed pass
+    (conftest) and, for the size-gated queries, its forced pass."""
+    failed = {
+        f"{p}:{n}": r.error
+        for p, runs in (("default", executed.default), ("forced", executed.forced))
+        for n, r in runs.items()
+        if r.error
+    }
+    assert not failed, "; ".join(f"{k}: {v}" for k, v in sorted(failed.items()))
+    return {
+        n: r.plans + (executed.forced[n].plans if n in executed.forced else [])
+        for n, r in executed.default.items()
+    }
 
-    out = {}
-    # the lazy twins of eagerly-checkpointed mining stages run through the
-    # SAME rule set: without them the audited plan of e.g.
-    # minhash_containment_pairs is just a checkpoint scan and the banding
-    # hot path sits outside this fence (r4 verdict item 2)
-    for name, fn in {**ent.queries(), **lazy_stages()}.items():
-        # executedPlan (unexecuted: the AQE initial plan) — NOT sparkPlan,
-        # which is pre-EnsureRequirements and contains no Exchange nodes,
-        # silently blinding the single-partition-window guard
-        out[name] = fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
-    return out
+
+def _cartesian(plans):
+    return [n for n, ps in plans.items() if any("CartesianProduct" in p for p in ps)]
 
 
 def test_no_cartesian_products(plans):
-    offenders = [n for n, p in plans.items() if "CartesianProduct" in p]
+    offenders = _cartesian(plans)
     assert not offenders, offenders
 
 
 def test_bnlj_only_where_bounded(plans):
     offenders = [
-        n for n, p in plans.items()
-        # lazy twins (name:stage) inherit the query's allowance
-        if "BroadcastNestedLoopJoin" in p and n.split(":")[0] not in BNLJ_ALLOWED
+        n for n, ps in plans.items()
+        if n not in BNLJ_ALLOWED and any("BroadcastNestedLoopJoin" in p for p in ps)
     ]
     assert not offenders, offenders
 
 
 def test_no_row_python_udfs(plans):
-    offenders = [n for n, p in plans.items() if "BatchEvalPython" in p]
+    offenders = [n for n, ps in plans.items() if any("BatchEvalPython" in p for p in ps)]
     assert not offenders, offenders
+
+
+def test_fence_sees_inside_pinned_stages(spark):
+    """A regression planted inside a pinned stage: the pin's own execution
+    holds a CartesianProduct, while the unexecuted plan of the returned
+    frame is a scan of the pin and shows nothing."""
+    from pyspark.sql import functions as F
+
+    from end_to_end_azure_data_engineering_spark.engine.pin import pin, release_checkpoints
+    from end_to_end_azure_data_engineering_spark.queries import load
+    from tools.plan_audit import executed_plans
+
+    def planted(spark, sf_dir):
+        n = load(spark, sf_dir, "nation").select("n_nationkey")
+        other = n.select(F.col("n_nationkey").alias("k")).hint("shuffle_replicate_nl")
+        return n.crossJoin(other).transform(pin).select("k")
+
+    df = planted(spark, SF_DIR)
+    unexecuted = df._jdf.queryExecution().executedPlan().toString()
+    release_checkpoints(df)
+    assert _cartesian({"planted": [unexecuted]}) == []
+    assert _cartesian({"planted": executed_plans(spark, planted, SF_DIR)}) == ["planted"]
+
+
+def test_queries_release_every_pin(executed):
+    """No query — on its default or its forced route — leaves a persisted
+    RDD behind once ``release_checkpoints`` ran on its result."""
+    leaks = {
+        f"{p}:{n}": len(r.leaked)
+        for p, runs in (("default", executed.default), ("forced", executed.forced))
+        for n, r in runs.items()
+        if r.leaked
+    }
+    assert not leaks, ", ".join(f"{k}: {v}" for k, v in sorted(leaks.items()))
 
 
 # ---------------------------------------------------------------------------
@@ -136,8 +176,7 @@ def test_no_row_python_udfs(plans):
 # incremental batch / funnel stage / n-gram pass (production runs of those
 # macro-ops materialize between merges — plans/pipeline.py goes through
 # the warehouse, so each merge branch scans a stored table, not a
-# re-derived lineage). Lazy twins (name:stage) are exempt: they exist to
-# expose the deliberately un-pinned pipeline to the other fences.
+# re-derived lineage).
 SCAN_FANOUT_MAX = 4
 SCAN_FANOUT_ALLOWED = {
     "scd2_as_of_snapshot": 12,  # three chained plan-form merges simulated from one table
@@ -209,20 +248,19 @@ SCALING_WINDOW_KEYS = {
 # SMALL_GROUP_ROWS and the queries below plan a PLAIN per-group window
 # (provably one bounded task per group). Their 100 TB shape — the sharded
 # construction whose only group-keyed window is the bounded offsets
-# cumsum — is force-pinned and audited via the lazy twins
-# (small_group_rows=0), which this fence also walks — since r10 EVERY
-# distribution query below has its own :rank twin;
+# cumsum — runs on the forced pass (tools/plan_audit.FORCED), which this
+# fence also walks;
 # tests/test_ranks.py::test_adaptive_switch_is_size_gated and
 # ::test_zero_job_tier_bounds_unique_dim_join pin the tier behavior.
 WINDOW_LOWCARD_ALLOWED: dict[str, str] = {
-    "customer_spend_deciles": "adaptive: plain window on provably-small frames; sharded shape audited via :rank twin",
-    "order_value_distribution": "adaptive: zero-job unique-dim proof at small SF; sharded shape audited via :rank twin",
-    "quality_quantile_normalize": "adaptive: plain window on provably-small frames; sharded shape audited via :rank twin (r10)",
-    "supplier_percentile_ranks": "adaptive: zero-job unique-dim proof at small SF; sharded shape audited via :rank twin (r10)",
-    "part_size_tie_ranks": "adaptive: plain windows below probed SMALL_GROUP_ROWS; sharded shape audited via :rank twin",
+    "customer_spend_deciles": "adaptive: plain window on provably-small frames; sharded shape audited on the forced pass",
+    "order_value_distribution": "adaptive: zero-job unique-dim proof at small SF; sharded shape audited on the forced pass",
+    "quality_quantile_normalize": "adaptive: plain window on provably-small frames; sharded shape audited on the forced pass",
+    "supplier_percentile_ranks": "adaptive: zero-job unique-dim proof at small SF; sharded shape audited on the forced pass",
+    "part_size_tie_ranks": "adaptive: plain windows below probed SMALL_GROUP_ROWS; sharded shape audited on the forced pass",
     "dedup_token_audit": "partition key is md5(text) (prints as _w0): distinct-document cardinality, scales with corpus",
     "lang_confidence_quantiles": "sharded path pinned (small_group_rows=0): the lang_grp window is the offsets cumsum over the ≤num_buckets-row-per-language counts frame; the data sort shards on (lang_grp, _rbucket)",
-    "token_length_quartiles": "adaptive: Generate upstream forces the row probe (zero-job proof declines), plain window only below SMALL_GROUP_ROWS; sharded shape (tiebreaker fold on the ~15-distinct tok_len key) audited via :rank twin (r10)",
+    "token_length_quartiles": "adaptive: Generate upstream forces the row probe (zero-job proof declines), plain window only below SMALL_GROUP_ROWS; sharded shape (tiebreaker fold on the ~15-distinct tok_len key) audited on the forced pass",
 }
 
 _WIN_RE = re.compile(r"Window \[.*\], \[([^\[\]]*)\], \[[^\[\]]*\]\s*$")
@@ -235,23 +273,23 @@ def _norm_spec(spec: str) -> tuple:
 
 def test_window_partition_keys_scale(plans):
     offenders = []
-    for n, p in plans.items():
-        limited = {_norm_spec(m) for m in _GROUPLIMIT_RE.findall(p)}
-        for line in p.splitlines():
-            m = _WIN_RE.search(line)
-            if not m:
-                continue
-            cols = _norm_spec(m.group(1))
-            if not cols:
-                continue  # SinglePartition — fenced by the global-window test
-            if cols in limited:
-                continue  # rank<=k pushed down: k rows per group survive
-            if set(cols) & SCALING_WINDOW_KEYS:
-                continue
-            # lazy twins (name:stage) inherit the query's allowance
-            if n.split(":")[0] in WINDOW_LOWCARD_ALLOWED:
-                continue
-            offenders.append(f"{n}: Window partitioned by {cols}")
+    for n, ps in plans.items():
+        if n in WINDOW_LOWCARD_ALLOWED:
+            continue
+        for p in ps:
+            limited = {_norm_spec(m) for m in _GROUPLIMIT_RE.findall(p)}
+            for line in p.splitlines():
+                m = _WIN_RE.search(line)
+                if not m:
+                    continue
+                cols = _norm_spec(m.group(1))
+                if not cols:
+                    continue  # SinglePartition — fenced by the global-window test
+                if cols in limited:
+                    continue  # rank<=k pushed down: k rows per group survive
+                if set(cols) & SCALING_WINDOW_KEYS:
+                    continue
+                offenders.append(f"{n}: Window partitioned by {cols}")
     assert not offenders, (
         "window partitions on bounded-cardinality keys (per-task frames "
         f"grow with the corpus) — reshard or document: {sorted(set(offenders))}"
@@ -260,11 +298,9 @@ def test_window_partition_keys_scale(plans):
 
 def test_global_windows_only_documented(plans):
     offenders = [
-        n for n, p in plans.items()
-        if re.search(r"Exchange SinglePartition", p)
-        and "Window" in p
-        # lazy twins (name:stage) inherit the query's allowance
-        and n.split(":")[0] not in GLOBAL_WINDOW_ALLOWED
+        n for n, ps in plans.items()
+        if n not in GLOBAL_WINDOW_ALLOWED
+        and any(re.search(r"Exchange SinglePartition", p) and "Window" in p for p in ps)
     ]
     assert not offenders, offenders
 
@@ -277,52 +313,88 @@ def test_no_inferred_hof_generate_filters(plans):
     those to explode_outer). Guard: no Filter condition may both call a
     lambda and test size(...) > 0."""
     offenders = [
-        n for n, p in plans.items()
-        if re.search(r"Filter .*size\([^\n]*lambdafunction[^\n]*> 0", p)
+        n for n, ps in plans.items()
+        if any(re.search(r"Filter .*size\([^\n]*lambdafunction[^\n]*> 0", p) for p in ps)
     ]
     assert not offenders, offenders
 
 
+_JOIN_RE = re.compile(r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)")
+
+# Queries that pin their heavy stage before the result: the stage's real
+# work must show in one of the query's own executions, or the fence has
+# gone blind again. The eigen Gram (r13) and the fused Lloyd iteration
+# (r14) are MAP-SIDE COMBINES — an Arrow map feeding a keyed aggregate,
+# with no join (a join or a posexplode'd per-element shuffle reappearing
+# there would be the regression); every other pinned stage is a join.
+MAP_COMBINE_STAGES = ("embedding_top_eigen_power", "kmeans_lloyd_3iter")
+JOIN_STAGES = (
+    "dedup_minhash_lsh",
+    "dedup_minhash_lsh_capped",
+    "minhash_containment_pairs",
+    "incremental_components_merge",
+    "pagerank_copurchase",
+    "dedup_connected_components",
+    "ann_ivf_refined_topk",
+    *RANK_QUERIES,
+)
+#: minhash miners: the LSH band exchange (or its broadcast form at tiny SF)
+BAND_MINES = (
+    "dedup_minhash_lsh",
+    "minhash_containment_pairs",
+    "incremental_components_merge",
+)
+
+
 def test_eager_stage_plans_expose_real_mining_work(plans):
-    """The lazy twins must show the actual mining joins/exchanges that the
-    eager localCheckpoint hides from the query's own plan — if a stage
-    plan collapses to a scan (0 joins), the fence has gone blind again."""
-    stage_names = [n for n in plans if ":" in n]
-    assert stage_names, "lazy_stages registry is empty"
-    # twins whose real work is a MAP-SIDE COMBINE, not a join (r13: the
-    # eigen Gram twin replaced its exploded self-join with an Arrow
-    # partial-matmul + keyed sum — the required shape is the Arrow map
-    # feeding an aggregate over an exchange, and a join reappearing here
-    # would be the regression)
-    # r14: the fused Lloyd iteration is the same class — Arrow
-    # assignment+decimal-partials map feeding the K×d keyed aggregate;
-    # a join (or a posexplode'd per-element shuffle) reappearing here
-    # would be the regression
-    MAP_COMBINE_STAGES = {
-        "embedding_top_eigen_power:gram",
-        "kmeans_lloyd_3iter:step",
-    }
-    for n in stage_names:
-        p = plans[n]
-        if n in MAP_COMBINE_STAGES:
-            assert re.search(r"(MapInPandas|ArrowEvalPython)", p) and re.search(
-                r"HashAggregate", p
-            ), f"{n}: Arrow partial-Gram + keyed sum not visible — audit is blind"
-            assert not re.search(
-                r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)", p
-            ), f"{n}: a join crept back into the map-side-combine stage"
-            continue
-        assert re.search(r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)", p), (
-            f"{n}: no join in the stage plan — audit is blind"
-        )
-    # the LSH band exchange (or its broadcast form at tiny SF) must appear
-    # in every minhash-banding stage
-    for n in (
-        "dedup_minhash_lsh:mine",
-        "minhash_containment_pairs:mine",
-        "incremental_components_merge:mine",
+    missing = []
+    for n in MAP_COMBINE_STAGES:
+        if not any(
+            re.search(r"(MapInPandas|ArrowEvalPython)", p)
+            and "HashAggregate" in p
+            and not _JOIN_RE.search(p)
+            for p in plans[n]
+        ):
+            missing.append(f"{n}: no execution is an Arrow map + keyed sum without a join")
+    missing += [
+        f"{n}: no join in any execution"
+        for n in JOIN_STAGES
+        if not any(_JOIN_RE.search(p) for p in plans[n])
+    ]
+    missing += [
+        f"{n}: band join not visible"
+        for n in BAND_MINES
+        if not any("band" in p for p in plans[n])
+    ]
+    assert not missing, missing
+
+
+def test_forced_pass_takes_the_scale_routes(executed):
+    """The forced pass must audit the distributed/sharded route, not
+    silently the local one again."""
+    forced = {n: r.plans for n, r in executed.forced.items()}
+    missing = [
+        f"{n}: no _rbucket (sharded rank did not run)"
+        for n in RANK_QUERIES
+        if not any("_rbucket" in p for p in forced[n])
+    ]
+    # the tiebreaker fold: the bucketing value floors the scaled doc_id
+    if not any(
+        re.search(r"FLOOR\(\(+cast\(doc_id#", p) for p in forced["token_length_quartiles"]
     ):
-        assert "band" in plans[n], f"{n}: band join not visible"
+        missing.append("token_length_quartiles: tiebreaker fold not engaged")
+    # a PageRank iteration joins the pinned edges to the ranks (src = node)
+    if not any(
+        re.search(r"Join \[src#\d+L?\], \[node#", p) for p in forced["pagerank_copurchase"]
+    ):
+        missing.append("pagerank_copurchase: no distributed iteration ran")
+    # a CC round joins the pinned bidirectional edges to the labels on _m
+    missing += [
+        f"{n}: no distributed components round ran"
+        for n in CC_CALLERS
+        if not any(re.search(r"Join \[_m#\d+L?\], \[_m#", p) for p in forced[n])
+    ]
+    assert not missing, missing
 
 
 # ---------------------------------------------------------------------------

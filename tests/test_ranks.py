@@ -612,9 +612,9 @@ def test_zero_job_tier_distrusts_row_multipliers(spark, tmp_path):
 
 
 def test_forced_sharded_path_skips_probe(spark):
-    """small_group_rows=0 (the lazy-twin pin) must build the sharded plan
-    WITHOUT running the probe action — the twins are plan-audit objects
-    and must stay lazy end-to-end. Explicit num_buckets likewise."""
+    """small_group_rows=0 (the sharded pin lang_confidence_quantiles uses)
+    must build the sharded plan WITHOUT running the probe action — no
+    construction job. Explicit num_buckets likewise."""
     df = _frame(spark, 32, 50, 2, 100)
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup() or [])
