@@ -28,15 +28,22 @@ calls.
 
 ``collect_if_bounded`` is the one "bounded → driver, else distributed"
 route choice for iterative operators over a pinned frame (connected
-components, PageRank); ``release_checkpoints`` frees exactly the pins a
-caller made.
+components, PageRank): the gate sizes the payload of the frame the
+caller pinned — the bidirectional edges for components, the undirected
+support-≥2 pairs for PageRank — and nothing derived from it.
+``driver_frame`` hands the rows a driver-local route computed back to
+Spark as an Arrow local relation (a ``LocalTableScan``: no Spark job, no
+Python worker). ``release_checkpoints`` frees exactly the pins a caller
+made.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Row
 
-__all__ = ["pin", "collect_if_bounded", "collect_budget_bytes", "release_checkpoints"]
+__all__ = [
+    "pin", "collect_if_bounded", "collect_budget_bytes", "driver_frame", "release_checkpoints",
+]
 
 #: per-row overhead charged on top of the column payload: the pickled
 #: Row/tuple framing each collected row costs on the driver beyond its
@@ -121,3 +128,20 @@ def collect_if_bounded(pinned: DataFrame) -> list[Row] | None:
     rows = pinned.collect()
     release_checkpoints(pinned)
     return rows
+
+
+def driver_frame(spark, rows, schema) -> DataFrame:
+    """A frame over rows computed on the driver, as an Arrow local
+    relation: the rows (tuples in ``schema`` field order) become one
+    ``pyarrow.Table`` and the plan is a ``LocalTableScan`` — collecting it
+    runs no Spark job and starts no Python worker, unlike a
+    ``parallelize``-built frame. Zero rows keep the schema."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [() for _ in arrow]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

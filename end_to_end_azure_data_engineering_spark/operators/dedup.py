@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
-from ..engine.pin import collect_if_bounded, pin as _pin, release_checkpoints
+from ..engine.pin import collect_if_bounded, driver_frame, pin as _pin, release_checkpoints
 
 
 def keep_latest(df: DataFrame, keys: list[str], order_by: list[Column]) -> DataFrame:
@@ -108,11 +108,13 @@ def connected_components(edges, src: str = "src", dst: str = "dst", max_iter: in
     per round, and the superseded labels are released as soon as the
     next round's are materialized.
 
-    Pins: the local route releases the edge pin and returns a
-    driver-built frame (no pins); the distributed route releases the
-    edge pin and every superseded labels frame and keeps only the final
-    labels, which back the returned frame (free them with
-    ``release_checkpoints``). Pins made by anyone else are never touched.
+    Pins: the local route releases the edge pin and returns its labels
+    as an Arrow local relation (``engine.pin.driver_frame``: a
+    ``LocalTableScan``, no pins, no job, no Python worker); the
+    distributed route releases the edge pin and every superseded labels
+    frame and keeps only the final labels, which back the returned frame
+    (free them with ``release_checkpoints``). Pins made by anyone else
+    are never touched.
 
     Convergence is detected by an unchanged sum of xxhash64(label) — one
     cheap aggregation per round, correct for ANY node id type (the previous
@@ -149,9 +151,7 @@ def connected_components(edges, src: str = "src", dst: str = "dst", max_iter: in
                 StructField("label", node_type, True),
             ]
         )
-        sc = edges.sparkSession.sparkContext
-        n_slices = max(1, -(-len(rows) // 500_000))
-        return edges.sparkSession.createDataFrame(sc.parallelize(rows, n_slices), schema)
+        return driver_frame(edges.sparkSession, rows, schema)
     labels = (
         bidir.select(F.col("_n").alias("node")).distinct()
         .withColumn("label", F.col("node"))

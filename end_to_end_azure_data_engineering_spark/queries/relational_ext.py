@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from . import epoch_us, load, register, spread
-from ..engine.pin import collect_if_bounded, pin as _pin, release_checkpoints
+from ..engine.pin import collect_if_bounded, driver_frame, pin as _pin, release_checkpoints
 
 # ---------------------------------------------------------------------------
 # As-of join — for each purchase event, the latest strictly-earlier click of
@@ -2016,25 +2016,27 @@ def pagerank_iterations_plan(ew: DataFrame, iterations: int = 3) -> DataFrame:
     )
 
 
-def _pagerank_local(rows, iterations: int = 3) -> list[tuple]:
+def _pagerank_local(pairs, iterations: int = 3) -> list[tuple]:
     """Driver-side replica of pagerank_iterations_plan over collected
-    (src, dst, d) tuples — EXACT integer math: every quantity is a
-    positive int, Spark's ``div`` truncates toward zero which equals
-    Python's ``//`` for non-negative operands, and bigint sums are exact
-    in Python. Returns the top-100 (part, rank_millionths, degree) rows
-    in the same (rank desc, part asc) order."""
+    undirected (pa, pb) pairs: degrees are counted here and each pair is
+    walked in both directions, so no directed edge list is built. EXACT
+    integer math: every quantity is a positive int, Spark's ``div``
+    truncates toward zero which equals Python's ``//`` for non-negative
+    operands, and bigint sums are exact in Python. Returns the top-100
+    (part, rank_millionths, degree) rows in the same (rank desc, part
+    asc) order."""
     deg: dict = {}
-    for s, _d, w in rows:
-        deg[s] = w
-    ranks = {n: 1_000_000 for n in deg}
+    for a, b in pairs:
+        deg[a] = deg.get(a, 0) + 1
+        deg[b] = deg.get(b, 0) + 1
+    ranks = dict.fromkeys(deg, 1_000_000)
     for _ in range(iterations):
-        acc: dict = {}
-        for s, t, w in rows:
-            r = ranks.get(s)
-            if r is not None:
-                acc[t] = acc.get(t, 0) + r // w
-        ranks = {t: 150_000 + (85 * v) // 100 for t, v in acc.items()}
-    out = [(n, r, deg[n]) for n, r in ranks.items() if n in deg]
+        acc = dict.fromkeys(deg, 0)
+        for a, b in pairs:
+            acc[b] += ranks[a] // deg[a]
+            acc[a] += ranks[b] // deg[b]
+        ranks = {n: 150_000 + (85 * v) // 100 for n, v in acc.items()}
+    out = [(n, r, deg[n]) for n, r in ranks.items()]
     out.sort(key=lambda x: (-x[1], x[0]))
     return out[:100]
 
@@ -2091,28 +2093,27 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     by degree, damping is (85*sum) div 100.
 
     ADAPTIVE, one budget rule (``engine.pin.collect_if_bounded``): the
-    ≥2-support edge frame is pinned (the iterations require that anyway)
-    and probed once. When its driver payload (three fixed-width longs
-    plus per-row overhead per directed edge) fits ⅛ of
-    ``spark.driver.maxResultSize`` the three iterations run as exact
-    driver-side int math over that one collect: the distributed chain is
-    3 join+agg stage pairs plus a final join over a graph that is
-    support-bound — tiny relative to the corpus at any scale — so its
-    cost here was pure stage scheduling (measured ~0.8 s of the 2.3 s
-    query at sf0.1). Otherwise the distributed chain runs over the
-    pinned edges (the 100 TB path). Either way the ≤100 result rows are
-    returned as a driver-built frame and the edge pin is released, so a
-    call leaves no pins behind; route equality is pinned by
-    tests/test_functions.py::test_pagerank_local_route."""
+    undirected ≥2-support (pa, pb) pairs are pinned (either route needs
+    them materialized once) and probed once. When their driver payload
+    (two fixed-width longs plus per-row overhead, 48 B per pair) fits ⅛
+    of ``spark.driver.maxResultSize``, degrees and the three iterations
+    run as exact driver-side int math over that one collect: the graph
+    is support-bound — tiny relative to the corpus at any scale — so the
+    distributed chain's 3 join+agg stage pairs were pure stage
+    scheduling here. Otherwise the directed edge+degree frame is derived
+    from the pinned pairs, pinned itself, and the distributed chain runs
+    over it (the 100 TB path); both pins are released even if an
+    iteration fails. Either way the ≤100 result rows come back as an
+    Arrow local relation (``engine.pin.driver_frame``: no job, no Python
+    worker) and the call leaves no pins behind; route equality is pinned
+    by tests/test_functions.py::test_pagerank_local_route."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     # spread() on the projected scan (r13 opt): same single-task-scan
     # fan-out as copurchase_pairs — no-op at production split counts
     li = spread(load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey"))
-    # >=2-support co-purchase edges with source degree: a per-order
-    # self-join plus support aggregation, pinned once (the bounded
-    # edge+degree frame) — three iterations reuse it instead of
-    # re-mining the self-join 3x
+    # >=2-support co-purchase pairs: a per-order self-join plus support
+    # aggregation, pinned once — the only shuffles the local route pays
     a = li.select("l_orderkey", F.col("l_partkey").alias("pa"))
     b = li.select("l_orderkey", F.col("l_partkey").alias("pb"))
     pairs = (
@@ -2122,26 +2123,31 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .filter(F.col("n") >= 2)
         .select("pa", "pb")
+        .transform(_pin)
     )
-    directed = pairs.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).unionByName(
-        pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-    )
-    deg = directed.groupBy("src").agg(F.count("*").alias("d"))
-    ew = directed.join(deg, "src").transform(_pin)
     schema = StructType(
         [
-            StructField("part", ew.schema["src"].dataType, True),
+            StructField("part", pairs.schema["pa"].dataType, True),
             StructField("rank_millionths", LongType(), True),
             StructField("degree", LongType(), True),
         ]
     )
-    edges = collect_if_bounded(ew)
-    if edges is not None:
-        rows = _pagerank_local([(r.src, r.dst, r.d) for r in edges])
-    else:
-        rows = pagerank_iterations_plan(ew).collect()
-        release_checkpoints(ew)
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    local = collect_if_bounded(pairs)
+    if local is not None:
+        return driver_frame(spark, _pagerank_local(local), schema)
+    try:
+        directed = pairs.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).unionByName(
+            pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
+        )
+        deg = directed.groupBy("src").agg(F.count("*").alias("d"))
+        ew = directed.join(deg, "src").transform(_pin)
+        try:
+            rows = pagerank_iterations_plan(ew).collect()
+        finally:
+            release_checkpoints(ew)
+    finally:
+        release_checkpoints(pairs)
+    return driver_frame(spark, rows, schema)
 
 
 # ---------------------------------------------------------------------------

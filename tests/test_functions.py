@@ -26,6 +26,11 @@ def _persistent_ids(spark) -> set:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
+def _is_local_relation(df) -> bool:
+    """The frame executes as a bare ``LocalTableScan`` (driver-held rows)."""
+    return df._jdf.queryExecution().executedPlan().toString().startswith("LocalTableScan")
+
+
 def test_minhash_identical_docs_share_signature(spark):
     df = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the lazy dog"),
@@ -193,7 +198,9 @@ def test_connected_components_local_matches_distributed(spark, monkeypatch):
     for rows, schema in cases:
         edges = spark.createDataFrame(rows, schema)
         _force_route(monkeypatch, local=True)
-        local = {r.node: r.label for r in connected_components(edges).collect()}
+        out = connected_components(edges)
+        assert _is_local_relation(out)
+        local = {r.node: r.label for r in out.collect()}
         _force_route(monkeypatch, local=False)
         dist = {r.node: r.label for r in connected_components(edges).collect()}
         assert local == dist, (rows, local, dist)
@@ -209,6 +216,7 @@ def test_connected_components_local_path_leaves_no_checkpoints(spark):
     edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
     before = set(sc._jsc.getPersistentRDDs().keys())
     out = connected_components(edges)  # default routing → local
+    assert _is_local_relation(out)
     assert {r.node: r.label for r in out.collect()} == {1: 1, 2: 1, 3: 1}
     after = set(sc._jsc.getPersistentRDDs().keys())
     assert after - before == set(), "local path leaked pinned blocks"
@@ -224,6 +232,7 @@ def test_connected_components_local_schema_matches_distributed(spark, monkeypatc
     local = connected_components(edges)
     _force_route(monkeypatch, local=False)
     dist = connected_components(edges)
+    assert _is_local_relation(local) and not _is_local_relation(dist)
     assert local.columns == dist.columns == ["node", "label"]
     assert [f.dataType for f in local.schema.fields] == [
         f.dataType for f in dist.schema.fields
@@ -438,6 +447,7 @@ def test_connected_components_keeps_foreign_pins(spark, monkeypatch, local):
     edges = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "src long, dst long")
     before = _persistent_ids(spark)
     out = dedup.connected_components(edges)
+    assert _is_local_relation(out) == local
     assert {r.node: r.label for r in out.collect()} == {
         1: 1, 2: 1, 3: 1, 7: 7, 8: 7,
     }
@@ -466,12 +476,63 @@ def test_pagerank_local_route(spark, monkeypatch):
     for local in (True, False):
         _force_route(monkeypatch, local=local)
         before = _persistent_ids(spark)
-        got[local] = [
-            (r.part, r.rank_millionths, r.degree)
-            for r in pagerank_copurchase(spark, sf).collect()
-        ]
+        out = pagerank_copurchase(spark, sf)
+        if local:
+            assert _is_local_relation(out)
+        got[local] = [(r.part, r.rank_millionths, r.degree) for r in out.collect()]
         assert _persistent_ids(spark) - before == set(), (
             f"{'local' if local else 'distributed'} route leaked a pin"
         )
     assert got[True] == got[False]
     assert 0 < len(got[True]) <= 100
+
+
+def test_pagerank_distributed_route_releases_pins_on_failure(spark, monkeypatch):
+    """An iteration that raises must not leave the distributed route's
+    pins (the pairs and the edge+degree frame) behind."""
+    from end_to_end_azure_data_engineering_spark.queries import relational_ext as R
+    from tests.conftest import SF_DIR
+
+    def failing(ew, iterations=3):
+        raise RuntimeError("iteration failed")
+
+    monkeypatch.setattr(R, "pagerank_iterations_plan", failing)
+    _force_route(monkeypatch, local=False)
+    before = _persistent_ids(spark)
+    with pytest.raises(RuntimeError, match="iteration failed"):
+        R.pagerank_copurchase(spark, SF_DIR)
+    assert _persistent_ids(spark) - before == set()
+
+
+def test_pagerank_local_matches_iterations_plan(spark):
+    """_pagerank_local over undirected pairs equals the distributed
+    iteration chain over the same graph's directed edge+degree frame: a
+    triangle 1-2-3 plus a pendant edge 3-4 (unequal degrees, so the
+    floor-divisions differ per node)."""
+    from end_to_end_azure_data_engineering_spark.queries.relational_ext import (
+        _pagerank_local,
+        pagerank_iterations_plan,
+    )
+
+    pairs = [(1, 2), (1, 3), (2, 3), (3, 4)]
+    deg = {1: 2, 2: 2, 3: 3, 4: 1}
+    ew = spark.createDataFrame(
+        [(s, t, deg[s]) for a, b in pairs for s, t in ((a, b), (b, a))],
+        "src long, dst long, d long",
+    )
+    dist = [tuple(r) for r in pagerank_iterations_plan(ew).collect()]
+    assert _pagerank_local(pairs) == dist
+    assert sorted(n for n, _r, _d in dist) == [1, 2, 3, 4]
+
+
+def test_driver_frame_empty_keeps_schema(spark):
+    """Zero driver rows still make a typed, empty local relation."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    schema = StructType(
+        [StructField("node", StringType(), True), StructField("label", LongType(), True)]
+    )
+    df = P.driver_frame(spark, [], schema)
+    assert df.schema == schema
+    assert df.count() == 0
+    assert _is_local_relation(df)

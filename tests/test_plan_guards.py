@@ -369,6 +369,16 @@ def test_eager_stage_plans_expose_real_mining_work(plans):
     assert not missing, missing
 
 
+def test_pagerank_pin_holds_only_the_pair_mining(executed):
+    """PageRank's default route pins the undirected support-≥2 pairs and
+    nothing derived from them: a Union in its pin execution (the one
+    running the self-join) means the directed edge list and its degree
+    aggregate moved back into the pinned mining."""
+    pins = [p for p in executed.default["pagerank_copurchase"].plans if _JOIN_RE.search(p)]
+    assert pins, "pagerank_copurchase: no pair-mining execution"
+    assert not any("Union" in p for p in pins), "pagerank_copurchase: directed edges pinned"
+
+
 def test_forced_pass_takes_the_scale_routes(executed):
     """The forced pass must audit the distributed/sharded route, not
     silently the local one again."""
