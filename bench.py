@@ -341,7 +341,8 @@ def scoped_names(only: str, registry: list[str]) -> list[str]:
     registry (registry order preserved). Unknown names raise SystemExit
     (r12 ADVICE): a typo'd selection must fail loudly, not produce an
     empty zero-query 'successful' smoke run — the same silent-empty-run
-    pathology the ivf_nprobe_probe --scales fix closed."""
+    pathology the nprobe sweep's --scales fix closed (script removed;
+    measurements kept in SCALING.md)."""
     sel = {s for s in only.split(",") if s}
     unknown = sorted(sel - set(registry))
     if unknown:

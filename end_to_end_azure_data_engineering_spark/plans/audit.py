@@ -44,6 +44,15 @@ AUDIT_SCHEMA = T.StructType(
 
 NAMESPACE, TABLE = "audit", "audit_logs"
 
+_EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
+
+
+def _epoch_us(t: _dt.datetime) -> int:
+    # a naive clock reading is UTC, as the Arrow insert stores it
+    if t.tzinfo is None:
+        t = t.replace(tzinfo=_dt.timezone.utc)
+    return (t - _EPOCH) // _dt.timedelta(microseconds=1)
+
 
 @dataclass
 class AuditLog:
@@ -163,6 +172,29 @@ class AuditLog:
 
     def read(self) -> DataFrame:
         return self.wh.read(NAMESPACE, TABLE)
+
+    def stage_walls(
+        self, since: _dt.datetime, until: _dt.datetime
+    ) -> dict[tuple[str, str], float]:
+        """Seconds per ``(source_system, source_object)`` for one run: the
+        last SUCCESS row of each stage whose ``start_time`` lies in
+        ``[since, until]``. A reused warehouse keeps every earlier run's
+        rows in the same table, so a reader of stage walls windows first."""
+        start, end = F.unix_micros("start_time"), F.unix_micros("end_time")
+        rows = (
+            self.read()
+            .filter(
+                (F.col("status") == "SUCCESS")
+                & end.isNotNull()
+                & start.between(_epoch_us(since), _epoch_us(until))
+            )
+            .select("source_system", "source_object", end.alias("_end"), (end - start).alias("_us"))
+            .collect()  # bounded: one row per stage attempt of one run (~40)
+        )
+        return {
+            (r.source_system, r.source_object): r._us / 1e6
+            for r in sorted(rows, key=lambda r: r._end)
+        }
 
     def compact(self, target_files: int = 8) -> int:
         """Fold the accumulated one-file-per-insert audit rows into

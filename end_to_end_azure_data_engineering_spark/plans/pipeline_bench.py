@@ -25,7 +25,6 @@ from __future__ import annotations
 import time
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from ..engine.tableio import Warehouse
 from .audit import AuditLog
@@ -61,36 +60,12 @@ def _ingestion_config(bronze) -> tuple[list[SourceRow], dict]:
     return rows, frames
 
 
-def _stage_durations(audit: AuditLog, phase: str) -> dict[str, float]:
-    rows = (
-        audit.read()
-        .filter(F.col("status") == "SUCCESS")
-        .filter(F.col("source_system") == phase if phase in ("silver", "gold") else F.lit(True))
-        .select(
-            "source_system",
-            "source_object",
-            (F.unix_millis(F.col("end_time")) - F.unix_millis(F.col("start_time"))).alias("_ms"),
-        )
-        .collect()  # bounded: one row per pipeline stage (~40)
-    )
-    out: dict[str, float] = {}
-    for r in rows:
-        if phase in ("silver", "gold"):
-            if r.source_system != phase:
-                continue
-            key = r.source_object
-        else:  # ingestion rows carry the source system (bank_a/bank_b/...)
-            if r.source_system in ("silver", "gold"):
-                continue
-            key = r.source_object
-        out[key] = max(out.get(key, 0.0), r._ms / 1000.0)
-    return out
-
-
 def run_pipeline_benchmark(spark: SparkSession, sf_dir: str, wh_root: str) -> dict:
-    """Run ingestion → silver → gold once against a fresh warehouse at
+    """Run ingestion → silver → gold once against the warehouse at
     ``wh_root``; return phase walls, per-stage breakdown, and overlap
-    ratios. Raises on any stage failure (the DagRunner propagates)."""
+    ratios. The stage walls are this run's audit rows only, so a reused
+    warehouse does not mix in earlier runs. Raises on any stage failure
+    (the DagRunner propagates)."""
     wh = Warehouse(spark, wh_root)
     audit = AuditLog(wh)
 
@@ -98,6 +73,7 @@ def run_pipeline_benchmark(spark: SparkSession, sf_dir: str, wh_root: str) -> di
     config, frames = _ingestion_config(bronze_frames)
     resolvers = {"frame": lambda row, wm: frames[row.target_file_name]}
 
+    since = audit.clock.now()
     t0 = time.perf_counter()
     run_ingestion(audit, config, resolvers, max_parallel=10)
     t_ingest = time.perf_counter() - t0
@@ -122,28 +98,18 @@ def run_pipeline_benchmark(spark: SparkSession, sf_dir: str, wh_root: str) -> di
     run_gold(wh, audit=audit, max_parallel=10)
     t_gold = time.perf_counter() - t2
 
-    ingest_stages = _stage_durations(audit, "ingestion")
-    silver_stages = _stage_durations(audit, "silver")
-    gold_stages = _stage_durations(audit, "gold")
+    # ingestion rows carry the source system (bank_a/bank_b/...)
+    stages: dict[str, dict[str, float]] = {"ingestion": {}, "silver": {}, "gold": {}}
+    for (system, obj), wall in audit.stage_walls(since, audit.clock.now()).items():
+        stages[system if system in stages else "ingestion"][obj] = wall
 
-    def ratio(stages: dict[str, float], wall: float) -> float:
-        return round(sum(stages.values()) / wall, 2) if wall > 0 else 0.0
-
+    phases = {"ingestion": t_ingest, "silver": t_silver, "gold": t_gold}
     return {
-        "pipeline_total": round(t_ingest + t_silver + t_gold, 3),
-        "phases": {
-            "ingestion": round(t_ingest, 3),
-            "silver": round(t_silver, 3),
-            "gold": round(t_gold, 3),
-        },
+        "pipeline_total": round(sum(phases.values()), 3),
+        "phases": {p: round(wall, 3) for p, wall in phases.items()},
         "parallel_speedup": {
-            "ingestion": ratio(ingest_stages, t_ingest),
-            "silver": ratio(silver_stages, t_silver),
-            "gold": ratio(gold_stages, t_gold),
+            p: round(sum(stages[p].values()) / wall, 2) if wall > 0 else 0.0
+            for p, wall in phases.items()
         },
-        "stages": {
-            "ingestion": {k: round(v, 3) for k, v in sorted(ingest_stages.items())},
-            "silver": {k: round(v, 3) for k, v in sorted(silver_stages.items())},
-            "gold": {k: round(v, 3) for k, v in sorted(gold_stages.items())},
-        },
+        "stages": {p: {k: round(v, 3) for k, v in sorted(stages[p].items())} for p in phases},
     }

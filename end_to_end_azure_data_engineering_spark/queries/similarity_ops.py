@@ -239,9 +239,9 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     MLlib pattern: centers live on the driver. 100 TB layout: `assign` is the
     cell-partitioned vector table on disk; a probe touches nprobe cells
     (~nprobe/K of the corpus) and the only wide exchange is the per-probe
-    top-k. `tools/ivf_nprobe_probe.py` sweeps the nprobe knob at the sf10
-    fixture (r10, verdict item 6) — candidates and time scale with
-    nprobe/K, recall with the cells covered."""
+    top-k. The nprobe sweep at the sf10 fixture (r10, verdict item 6;
+    script removed; measurements kept in SCALING.md): candidates and time
+    scale with nprobe/K, recall with the cells covered."""
     return ivf_topk_plan(spark, sf_dir)
 
 
@@ -258,7 +258,8 @@ def ivf_topk_plan(
     shape are unchanged by this refactor). nprobe is the accuracy/cost
     dial: a probe scans ~nprobe/K of the corpus. k_cells sizes the
     codebook (r11, verdict item 4: the 100 TB claim is exercised at a
-    production-shaped K=1024 by tools/ivf_nprobe_probe.py --kcells)."""
+    production-shaped K=1024; script removed; measurements kept in
+    SCALING.md)."""
     assign, probe_cells = ivf_index_frames(
         spark, sf_dir, nprobe=nprobe, k_cells=k_cells
     )
@@ -271,9 +272,9 @@ def ivf_probe_topk(
     """The probe-side read path over an IVF index: candidate join on the
     cell id, cosine from the staged (vector, norm) columns, per-probe
     top-k. At 100 TB ``assign`` is the cell-partitioned vector table on
-    disk and this — not the assignment map — is the per-query cost;
-    `tools/ivf_nprobe_probe.py` times exactly this function over a
-    pre-materialized index."""
+    disk and this — not the assignment map — is the per-query cost; the
+    nprobe sweep timed exactly this function over a pre-materialized
+    index (script removed; measurements kept in SCALING.md)."""
     scored = (
         assign.join(F.broadcast(probe_cells), "cid")
         .filter(F.col("vec_id") != F.col("probe_id"))
@@ -800,8 +801,9 @@ def ann_ivf_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     topk=3, probes vec_id<20); the ONLY change from the seed-codebook
     query is which centroids partition the corpus — exactly the swap the
     ann_ivf_topk docstring promises, now hash-verified rather than
-    probe-measured only (tools/ivf_nprobe_probe.py [E] measured it at
-    recall 1.000 with 8× less coverage than the seed plateau).
+    probe-measured only (the nprobe sweep's [E] measured it at recall
+    1.000 with 8× less coverage than the seed plateau; script removed;
+    measurements kept in SCALING.md).
 
     Scale shape: 3 bounded Lloyd scans build the codebook once, then the
     IVF plan is unchanged — 0-shuffle literal-codebook cell assignment,

@@ -1,3 +1,4 @@
+import functools
 import sys
 from dataclasses import dataclass, field
 from pathlib import Path
@@ -22,15 +23,17 @@ def spark():
 @dataclass
 class Run:
     """One full run of a query: the plans it executed, its columns, the
-    persisted RDD ids it left behind, or the error it raised."""
+    persisted RDD ids it left behind, whether it left a CacheManager entry
+    behind, or the error it raised."""
 
     plans: list[str] = field(default_factory=list)
     columns: list[str] = field(default_factory=list)
     leaked: set[int] = field(default_factory=set)
+    cached: bool = False
     error: str | None = None
 
 
-def _run(spark, name: str, fn) -> Run:
+def _run(spark, fn) -> Run:
     from tools.plan_audit import executed_plans
 
     run = Run()
@@ -41,6 +44,7 @@ def _run(spark, name: str, fn) -> Run:
         return df
 
     jsc = spark.sparkContext._jsc
+    spark.catalog.clearCache()
     before = set(jsc.getPersistentRDDs())
     try:
         run.plans = executed_plans(spark, build, SF_DIR)
@@ -48,7 +52,15 @@ def _run(spark, name: str, fn) -> Run:
         run.error = f"{type(e).__name__}: {str(e).splitlines()[0] if str(e) else ''}"
         return run
     run.leaked = set(jsc.getPersistentRDDs()) - before
+    run.cached = not spark._jsparkSession.sharedState().cacheManager().isEmpty()
     return run
+
+
+@pytest.fixture(scope="session")
+def run_query(spark):
+    """``run_query(fn)`` -> the ``Run`` of one query, as the shared
+    executed pass records it."""
+    return functools.partial(_run, spark)
 
 
 @pytest.fixture(scope="session")
@@ -61,9 +73,9 @@ def executed(spark):
     from tools.plan_audit import FORCED, forced_route
 
     qs = ent.queries()
-    default = {name: _run(spark, name, fn) for name, fn in qs.items()}
+    default = {name: _run(spark, fn) for name, fn in qs.items()}
     forced = {}
     for name in FORCED:
         with forced_route(name):
-            forced[name] = _run(spark, name, qs[name])
+            forced[name] = _run(spark, qs[name])
     return SimpleNamespace(default=default, forced=forced)

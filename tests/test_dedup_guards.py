@@ -263,8 +263,8 @@ def test_hot_bucket_star_keeps_hub_verified_members_loses_only_chains(spark):
     J(Y,T) < 0.8, (c) every band Y shares with X is also T's band — so
     each shared bucket's hub is a template copy Y fails to verify
     against, while the exact mine still connects Y through the in-bucket
-    (X, Y) pair. tools/bucket_cap_recall_probe.py measures the same
-    structure at corpus scale."""
+    (X, Y) pair. The bucket-cap recall probe measured the same structure
+    at corpus scale (script removed; measurements kept in SCALING.md)."""
     from end_to_end_azure_data_engineering_spark.operators.dedup import (
         connected_components,
     )

@@ -6,14 +6,19 @@ asserts (a) every stage lands, (b) the audit-derived per-stage breakdown is
 complete, and (c) the scheduler measurably overlapped the 22 independent
 ingestion stages (parallel_speedup > 1), which is the evidence the DAG
 runner's 10-wide ForEach actually runs stages concurrently rather than
-serializing them.
+serializing them. The warehouse is reused: it already holds an earlier
+run's audit row, which the stage walls must not pick up.
 """
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
 
+from end_to_end_azure_data_engineering_spark.engine.clock import FixedClock
 from end_to_end_azure_data_engineering_spark.engine.tableio import Warehouse
+from end_to_end_azure_data_engineering_spark.plans.audit import AuditLog
 from end_to_end_azure_data_engineering_spark.plans.pipeline_bench import (
     run_pipeline_benchmark,
 )
@@ -24,6 +29,10 @@ SF_DIR = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def bench_result(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("bench_wh"))
+    # an earlier run's stage: one hour long, ended a day ago
+    ended = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None) - dt.timedelta(days=1)
+    stale = AuditLog(Warehouse(spark, root), FixedClock(ended))
+    stale.success("silver", "customers", ended - dt.timedelta(hours=1), 0, None)
     result = run_pipeline_benchmark(spark, SF_DIR, root)
     return result, Warehouse(spark, root)
 
@@ -38,6 +47,19 @@ def test_all_stages_complete(bench_result):
     assert result["pipeline_total"] == pytest.approx(
         sum(result["phases"].values()), abs=0.01
     )
+
+
+def test_stage_walls_fit_their_phase(bench_result):
+    """Stage walls come from this run's audit rows only: the reused
+    warehouse's hour-long silver/customers row must not leak in."""
+    result, _ = bench_result
+    over = {
+        f"{phase}/{stage}": wall
+        for phase, walls in result["stages"].items()
+        for stage, wall in walls.items()
+        if wall > result["phases"][phase]
+    }
+    assert not over, over
 
 
 def test_ingestion_parallelism_overlaps(bench_result):

@@ -25,8 +25,7 @@ import re
 
 import pytest
 
-import __spark_entry__ as ent
-from tools.plan_audit import CC_CALLERS, RANK_QUERIES
+from tools.plan_audit import CC_CALLERS, RANK_QUERIES, table_scans
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -153,16 +152,55 @@ def test_fence_sees_inside_pinned_stages(spark):
     assert _cartesian({"planted": executed_plans(spark, planted, SF_DIR)}) == ["planted"]
 
 
+def _unreleased(passes: dict) -> dict[str, str]:
+    """``pass:query`` -> what its run left behind: persisted RDDs, or a
+    CacheManager entry (keyed by logical plan, these survive object GC)."""
+    out = {}
+    for p, runs in passes.items():
+        for n, r in runs.items():
+            left = [f"{len(r.leaked)} persisted RDDs"] if r.leaked else []
+            left += ["a cache entry"] if r.cached else []
+            if left:
+                out[f"{p}:{n}"] = " and ".join(left)
+    return out
+
+
 def test_queries_release_every_pin(executed):
     """No query — on its default or its forced route — leaves a persisted
-    RDD behind once ``release_checkpoints`` ran on its result."""
-    leaks = {
-        f"{p}:{n}": len(r.leaked)
-        for p, runs in (("default", executed.default), ("forced", executed.forced))
-        for n, r in runs.items()
-        if r.leaked
-    }
+    RDD or a CacheManager entry behind once ``release_checkpoints`` ran on
+    its result (bigram_lift (r8) and embedding_top_eigen_power (r9) each
+    once leaked a persisted frame per call)."""
+    leaks = _unreleased({"default": executed.default, "forced": executed.forced})
     assert not leaks, ", ".join(f"{k}: {v}" for k, v in sorted(leaks.items()))
+
+
+def test_bigram_lift_leaves_no_cache_entries(executed):
+    """r8 ADVICE: bigram_lift persisted its two vocabulary-sized frames
+    and never unpersisted them — CacheManager entries are keyed by
+    logical plan and survive object GC, so every invocation in a
+    long-lived session leaked two cached frames. The frames are pinned
+    (checkpointed) now; its full run in the shared executed pass (cache
+    cleared first) must leave the cache empty."""
+    run = executed.default["bigram_lift"]
+    assert run.error is None, run.error
+    assert not run.cached
+
+
+def test_eigen_power_leaves_no_cache_entries(executed):
+    """Runtime twin of the static persist/unpersist fence for the second
+    leak instance (embedding_top_eigen_power, r9)."""
+    run = executed.default["embedding_top_eigen_power"]
+    assert run.error is None, run.error
+    assert not run.cached
+
+
+def test_pin_fence_names_a_persisted_result(spark, run_query):
+    """A leak planted in a query: it returns a ``persist()``ed frame."""
+    from end_to_end_azure_data_engineering_spark.queries import load
+
+    run = run_query(lambda spark, sf_dir: load(spark, sf_dir, "nation").persist())
+    spark.catalog.clearCache()
+    assert "a cache entry" in _unreleased({"default": {"planted": run}})["default:planted"]
 
 
 # ---------------------------------------------------------------------------
@@ -171,7 +209,7 @@ def test_queries_release_every_pin(executed):
 # times, scanning the table underneath k times (with_tie_ranks was caught
 # at 40 part scans / 58 exchanges / zero exchange reuse before its
 # materialize fix). Rule: no registered query may scan one table more than
-# SCAN_FANOUT_MAX times, except the documented batch-simulation demos
+# SCAN_FANOUT_MAX times in any one of its executions, except the documented batch-simulation demos
 # where each re-read is a pushdown-pruned SLICE standing in for a separate
 # incremental batch / funnel stage / n-gram pass (production runs of those
 # macro-ops materialize between merges — plans/pipeline.py goes through
@@ -185,34 +223,53 @@ SCAN_FANOUT_ALLOWED = {
     "funnel_conversion": 6,     # one filtered scan per funnel stage (disjoint event-type slices)
 }
 
-_TABLE_RE = re.compile(r"(\w+)\.parquet")
 
-
-def test_table_scan_fanout(spark):
-    # NOT the shared toString fixture: executedPlan().toString() reprints
-    # a persisted frame's full child lineage at EVERY InMemoryRelation
-    # reference (embedding_top_eigen_power shows 22 embeddings "scans"
-    # that execute as one cache fill), so raw counts over it false-flag
-    # every persist() user. The formatted explain prints each scan
-    # operator once, so its per-table counts are the real fan-out.
-    from collections import Counter
-
+def _fanout_offenders(scans: dict) -> list[str]:
     offenders = []
-    for n, fn in ent.queries().items():
-        df = fn(spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        counts = Counter(_TABLE_RE.findall(plan))
+    for n, counts in scans.items():
         cap = SCAN_FANOUT_ALLOWED.get(n, SCAN_FANOUT_MAX)
         worst = [(t, c) for t, c in sorted(counts.items()) if c > cap]
         if worst:
             offenders.append(f"{n}: {worst} (cap {cap})")
+    return offenders
+
+
+def test_table_scan_fanout(plans):
+    """Counted over every execution a query ran, pins and probes included
+    (tools/plan_audit.table_scans)."""
+    offenders = _fanout_offenders({n: table_scans(ps) for n, ps in plans.items()})
     assert not offenders, (
         "table scanned more times than the fan-out cap — a lazy frame is "
         "referenced repeatedly and re-derives its lineage per reference; "
         f"pin it (materialize) or document the slice semantics: {offenders}"
     )
+
+
+def test_fanout_fence_sees_inside_pinned_stages(spark):
+    """A re-scan planted inside a pinned stage: the pin's execution reads
+    one table five times, while the formatted explain of the returned
+    frame shows only the pin's ``Scan ExistingRDD``."""
+    from collections import Counter
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
+    from end_to_end_azure_data_engineering_spark.engine.pin import pin, release_checkpoints
+    from end_to_end_azure_data_engineering_spark.queries import load
+    from tools.plan_audit import TABLE_RE, executed_plans
+
+    def planted(spark, sf_dir):
+        n = load(spark, sf_dir, "nation")
+        reads = [n.filter(F.col("n_regionkey") == r) for r in range(5)]
+        return reduce(DataFrame.unionByName, reads).transform(pin)
+
+    df = planted(spark, SF_DIR)
+    formatted = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    release_checkpoints(df)
+    assert _fanout_offenders({"planted": Counter(TABLE_RE.findall(formatted))}) == []
+    scans = table_scans(executed_plans(spark, planted, SF_DIR))
+    assert _fanout_offenders({"planted": scans}) == ["planted: [('nation', 5)] (cap 4)"]
 
 
 # ---------------------------------------------------------------------------
@@ -519,17 +576,6 @@ def test_every_explicit_broadcast_is_provably_bounded():
     assert not stale, f"stale allowlist entries (hint removed/renamed): {stale}"
 
 
-def test_bigram_lift_leaves_no_cache_entries(spark):
-    """r8 ADVICE: bigram_lift persisted its two vocabulary-sized frames
-    and never unpersisted them — CacheManager entries are keyed by
-    logical plan and survive object GC, so every invocation in a
-    long-lived session leaked two cached frames. The frames are pinned
-    (checkpointed) now; a full run must leave the cache empty."""
-    spark.catalog.clearCache()
-    ent.queries()["bigram_lift"](spark, SF_DIR).collect()
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-
 def test_persist_sites_balance_unpersist():
     """Static fence for the bigram_lift leak class (r8 ADVICE, second
     instance found in embedding_top_eigen_power r9): a .persist() whose
@@ -557,10 +603,3 @@ def test_persist_sites_balance_unpersist():
         "persist() without a matching release — use engine.pin or "
         f"unpersist after the final action: {offenders}"
     )
-
-
-def test_eigen_power_leaves_no_cache_entries(spark):
-    """Runtime twin of the static fence for the second leak instance."""
-    spark.catalog.clearCache()
-    ent.queries()["embedding_top_eigen_power"](spark, SF_DIR).collect()
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -6,7 +6,8 @@ every SQL execution it made, read back from Spark's status store: each
 execution, so the audit sees inside pinned stages. ``FORCED`` names the
 queries whose size-gated route does not run at test scale and the module
 values that force it; ``forced_route`` patches them for one run. The
-plan fences in ``tests/test_plan_guards.py`` read both passes.
+plan fences in ``tests/test_plan_guards.py`` read both passes;
+``table_scans`` counts a query's parquet scans for the fan-out fence.
 
 As a script, prints the join strategies, exchange (shuffle) count,
 parquet pushdown evidence and window count per query, summed over its
@@ -138,6 +139,63 @@ def _executed_nodes(plan: str) -> Counter:
         if m:
             nodes[m.group(1)] += 1
     return nodes
+
+
+_SECTION_RE = re.compile(r"== (Final|Current|Initial) Plan ==")
+_PLAN_IDS_RE = re.compile(r"#\d+L?|plan_id=\d+|QueryStage \d+|\*\(\d+\) ")
+TABLE_RE = re.compile(r"(\w+)\.parquet")
+
+
+def _col(line: str) -> int:
+    return len(line) - len(line.lstrip(" :+-"))
+
+
+def _scans(plan: str, seen: set) -> Counter:
+    lines = plan.splitlines()
+    cols = [_col(line) for line in lines]
+    scans: Counter = Counter()
+    i = 0
+    while i < len(lines):
+        c = cols[i]
+        m = _SECTION_RE.match(lines[i], c)
+        if m and m.group(1) != "Initial":
+            # skip to the sibling section header or the end of the plan
+            i += 1
+            while i < len(lines) and cols[i] >= c and not (
+                cols[i] == c and _SECTION_RE.match(lines[i], c)
+            ):
+                i += 1
+            continue
+        if lines[i].startswith("InMemoryRelation", c):
+            end = next((j for j in range(i + 1, len(lines)) if cols[j] <= c), len(lines))
+            body = tuple(
+                (cols[j] - c, _PLAN_IDS_RE.sub("", lines[j][cols[j]:]))
+                for j in range(i + 1, end)
+            )
+            if body in seen:
+                i = end
+                continue
+            seen.add(body)
+        elif lines[i].startswith("FileScan", c):
+            scans.update(TABLE_RE.findall(lines[i]))
+        i += 1
+    return scans
+
+
+def table_scans(plans: list[str]) -> Counter:
+    """Parquet scans per table of one query's executions: the largest
+    count in any one execution. AQE plans count in their ``== Initial
+    Plan ==`` sections, the plan as asked for: the final and current
+    sections show runtime rewrites (an empty join side becomes an
+    ``EmptyRelation``) that hide scans the query still asks for at scale.
+    A cached body is printed under every ``InMemoryRelation`` that reads
+    it but fills once, so each distinct body (ids and stage numbers
+    stripped) counts in the first execution that shows it."""
+    seen: set = set()
+    worst: Counter = Counter()
+    for plan in plans:
+        worst |= _scans(plan, seen)
+    return worst
 
 
 def features(plans: list[str]) -> dict:
