@@ -11,6 +11,7 @@ Namespaces mirror the medallion: bronze/silver/gold/audit.
 
 from __future__ import annotations
 
+import fcntl
 import os
 import shutil
 import threading
@@ -277,10 +278,10 @@ class Warehouse:
 
 
 class VersionedWarehouse(Warehouse):
-    """Single-writer MVCC on top of the parquet warehouse — the closest
-    parquet-only reproduction of the Delta semantics the reference relies
-    on (4_silver/silver_transactions.py:50-51: ACID overwrite, readers
-    never see partial writes, history retained).
+    """MVCC on top of the parquet warehouse — the closest parquet-only
+    reproduction of the Delta semantics the reference relies on
+    (4_silver/silver_transactions.py:50-51: ACID overwrite, readers never
+    see partial writes, history retained).
 
     Layout: `<ns>/<table>/_v<N>/` immutable version directories plus a
     `_CURRENT` pointer file. A commit writes the new version directory
@@ -290,9 +291,16 @@ class VersionedWarehouse(Warehouse):
     the resolved directory (old versions are immutable until `vacuum`).
     Time travel = reading an explicit version. On Delta/Iceberg the same
     API maps to commit-log append / snapshot ids; on object storage the
-    pointer is a conditional-PUT marker object. Multi-writer coordination
-    (optimistic retry on a CAS'd pointer) is out of scope here, exactly as
-    it is in the single-pipeline reference.
+    pointer is a conditional-PUT marker object.
+
+    Concurrent writers on one root — threads or processes — are
+    coordinated: ``mkdir`` claims each version number, link-forward
+    appends and compactions serialize on a per-table append lock, and the
+    pointer publish is a monotonic read-compare-replace under a per-table
+    pointer lock. Both locks are kernel ``flock``s on persistent lock files
+    (``.append.flock``, ``.ptr.flock``), so a crashed holder's lock is
+    released when its process dies; a root whose filesystem refuses flock
+    fails its first write instead of running unlocked.
 
     ``autovacuum_keep=N`` prunes to the newest N versions after every
     publish (Delta's log/file retention, applied inline) — the right mode
@@ -300,19 +308,15 @@ class VersionedWarehouse(Warehouse):
     row insert is its own APPEND version. Off (None) by default: keep
     full history for time travel."""
 
-    # Crashed-holder steal horizon for the append lock, and the live
-    # holder's heartbeat interval (must be well inside the horizon).
-    # Class attributes so tests can shrink them without patching code.
-    LOCK_STEAL_AFTER = 600.0
+    # Waiter patience for the append lock (held across a whole Spark
+    # write) and the pointer lock (microseconds of driver-side work). A
+    # crashed holder's flock is released by the kernel, so patience only
+    # bounds the wait on a LIVE holder; a draining queue resets it (see
+    # _flock_lock). Class attributes so tests can shrink them.
+    APPEND_LOCK_PATIENCE = 660.0
+    PTR_LOCK_PATIENCE = 70.0
+    # _claim_keepalive's refresh interval (well inside PHANTOM_SWEEP_AFTER).
     LOCK_HEARTBEAT = 60.0
-    # Steal horizon for the short-lived pointer lock in _publish. The lock
-    # protects microseconds of driver-side work, so any holder older than
-    # this crashed mid-publish; waiters steal rather than error (the wait
-    # deadline is sized PAST the horizon — a fixed 10 s deadline under a
-    # 60 s horizon turned one crashed publisher into TimeoutErrors for
-    # every publisher arriving in the next minute; found by the r8
-    # SIGKILL fault-injection test).
-    PTR_STEAL_AFTER = 60.0
 
     def __init__(self, spark, root, autovacuum_keep: int | None = None):
         super().__init__(spark, root)
@@ -402,273 +406,30 @@ class VersionedWarehouse(Warehouse):
             )
         return self.path(namespace, table) / f"_v{v}"
 
-    @classmethod
-    def _steal_stale_lock(cls, lock: Path, horizon: float) -> bool:
-        """Retire a crashed holder's lock by RENAME-then-unlink: rename of
-        one source path succeeds for exactly ONE caller (the filesystem
-        arbitrates), so two waiters can never both "steal" and then one
-        remove the other's freshly re-created lock — the two-waiter race
-        a bare stat+unlink steal leaves open (r8 ADVICE). Returns True if
-        THIS caller retired the lock; on any miss (not stale yet, already
-        stolen, vanished) returns False and the caller just retries its
-        O_EXCL create.
-
-        Residual TOCTOU (r9 ADVICE, low — documented, narrowed, not fully
-        closable without fd-based locking): between our staleness stat
-        and the rename, the stale holder can release AND a fresh holder
-        recreate the lock at the same path — the rename then displaces
-        the FRESH lock. Mitigations, in order: (1) both lock families
-        heartbeat their mtime (the append lock since r4, the ptr lock
-        since r10), so a LIVE holder is never stale-looking to the
-        initial stat unless its whole process is suspended; (2) after
-        the rename we re-stat the renamed file and, if its mtime is
-        fresh — we displaced a live lock — put it back atomically with
-        os.link, which preserves the inode, so the displaced holder's
-        st_ino-checked heartbeat and release keep working as if nothing
-        happened (heartbeats treat a transient stat failure during the
-        rename-away window as retryable for exactly this reason).
-
-        HONESTY (r10 review): the put-back is best-effort, not a mutual-
-        exclusion proof. If yet another waiter O_EXCL-creates the path in
-        the rename→link gap, os.link fails and the displaced live holder
-        runs on WITHOUT a lock alongside the new one — exclusion is
-        broken for that overlap. Reaching it takes two independent
-        microsecond-window coincidences on top of a stale-looking lock
-        (release+recreate inside one stat→rename gap, then a third
-        party's create inside the rename→link gap); the damage is
-        bounded by the publish monotonicity check (pointer never goes
-        backwards; worst case a skipped publish) and, for the append
-        family, by the horizon itself (both overlapping appends publish,
-        one lost update — the pre-lock failure mode, now behind a
-        ~10⁻¹²-scale interleaving instead of every concurrent append).
-        fd-based flock closes it entirely — and is now the DEFAULT where
-        the filesystem supports it (r11: see _use_flock; this rename
-        scheme remains the fallback for filesystems that reject flock,
-        and everything documented here applies only to that fallback).
-
-        Either way the renamed file is removed, and sibling debris from
-        stealers that crashed between their rename and unlink is swept
-        opportunistically (r9 ADVICE: nothing else ever removed those)."""
-        try:
-            if time.time() - lock.stat().st_mtime <= horizon:
-                return False
-            stale = lock.with_name(f"{lock.name}.stale.{uuid.uuid4().hex[:8]}")
-            os.rename(lock, stale)
-        except OSError:
-            return False
-        stole = True
-        try:
-            if time.time() - stale.stat().st_mtime <= horizon:
-                # fresh mtime ⇒ we displaced a LIVE holder's lock that was
-                # re-created in the stat→rename gap: put it back atomically
-                # (no-op if a waiter already claimed the path — O_EXCL and
-                # the displaced holder's st_ino checks arbitrate from here)
-                try:
-                    os.link(stale, lock)
-                except OSError:
-                    pass
-                stole = False
-        except OSError:
-            pass
-        stale.unlink(missing_ok=True)
-        cls._sweep_stale_debris(lock.parent, horizon, family=lock.name)
-        return stole
-
-    @staticmethod
-    def _sweep_stale_debris(
-        base: Path, horizon: float, family: str | None = None
-    ) -> int:
-        """Unlink ``*.stale.*`` rename leftovers older than the steal
-        horizon (a stealer that crashed between os.rename and unlink
-        leaves one behind — harmless to locking but permanent debris,
-        r9 ADVICE). Age-gated so an in-flight steal's just-renamed file
-        is never swept from under its freshness re-check — which is why
-        ``family`` matters (r10 review): the ptr and append locks share
-        a directory but have different horizons (60 s vs 600 s), and a
-        ptr-horizon sweep of APPEND debris could unlink a just-displaced
-        append lock (heartbeat mtime up to ~60 s old) before its
-        stealer's re-stat, turning the put-back into a silent miss.
-        Steals sweep only their own family at their own horizon; vacuum
-        sweeps each family at its horizon. Returns the number removed."""
-        removed = 0
-        try:
-            entries = list(base.iterdir())
-        except OSError:
-            return 0
-        now = time.time()
-        prefix = f"{family}.stale." if family else None
-        for p in entries:
-            if ".stale." not in p.name:
-                continue
-            if prefix is not None and not p.name.startswith(prefix):
-                continue
-            try:
-                if now - p.stat().st_mtime > horizon:
-                    p.unlink(missing_ok=True)
-                    removed += 1
-            except OSError:
-                continue
-        return removed
-
-    @contextmanager
-    def _lock_heartbeat(self, lock: Path, my_ino: int | None, interval: float):
-        """Daemon-thread mtime refresh for a HELD lock file — the one
-        copy of the beat loop both lock families use (r10 review: three
-        hand-rolled copies meant the rename-away retry fix had to land
-        twice). Semantics: verify the path still resolves to OUR inode
-        before each utime (a zombie must never refresh a successor's
-        lock, r5); treat a transient stat failure as retryable — the
-        path may be renamed away by a prowling stealer mid-freshness-
-        check and put back via os.link, which preserves the inode; a
-        real steal surfaces as an inode mismatch on the next tick and
-        exits the thread. Daemon thread: a crashed driver kills it, the
-        lock ages normally, and a waiter's steal is legitimate."""
-        stop = threading.Event()
-
-        def _beat() -> None:
-            while not stop.wait(interval):
-                # fd-pinned refresh (r10 ADVICE: a path-based stat→utime
-                # pair had a gap — a steal completing between them let the
-                # zombie refresh the successor's lock mtime once). The
-                # descriptor pins the inode across check and utime, so a
-                # mid-tick steal means we refresh OUR (renamed-away) file,
-                # which is harmless, never the successor's.
-                try:
-                    fd = os.open(lock, os.O_RDONLY)
-                except OSError:
-                    continue  # transient rename-away window — retry
-                try:
-                    if my_ino is None or os.fstat(fd).st_ino != my_ino:
-                        return  # stolen — the file is the new holder's
-                    os.utime(fd)
-                except OSError:
-                    continue
-                finally:
-                    os.close(fd)
-
-        threading.Thread(target=_beat, daemon=True).start()
-        try:
-            yield
-        finally:
-            stop.set()
-
-    def _use_flock(self) -> bool:
-        """Lock-mode capability probe (r10 verdict item 6). fd-based
-        ``flock`` retires the rename→link TOCTOU class entirely: the
-        kernel releases a crashed holder's lock the instant its last
-        descriptor closes, so there is no staleness horizon, no
-        heartbeat, no steal — and therefore no stat/rename/link windows
-        to coincide in. Not every filesystem honours it (some NFS mounts
-        fake or reject it), so the mode is probed ONCE per warehouse
-        instance by taking and releasing a real flock on a probe file
-        under the root; any failure falls back to the proven
-        rename-steal scheme. ``SPARK_GRAFT_LOCK_MODE=flock|rename``
-        overrides everything (the test matrix pins each mode; an
-        operator on a known-bad NFS export can force rename) — the pin
-        is per-process and bypasses the marker below, so pin fleet-wide
-        or not at all.
-
-        Root coherence (r12, verdict item 5 + r11 ADVICE): the two
-        modes use DIFFERENT lock file names (``.append.flock`` vs
-        ``.append.lock``), so two processes probing differently on one
-        root (flaky NFS, transient error) would land in two independent
-        lock domains — no mutual exclusion at all, the exact lost-update
-        failure the locks exist to prevent. The FIRST probe's verdict is
-        therefore persisted as a ``.lock_mode`` marker under the root
-        (O_EXCL create; a create race's loser adopts the winner's
-        verdict) and every later opener ADOPTS the marker instead of
-        probing. A process whose own flock would genuinely fail under an
-        adopted ``flock`` marker fails LOUDLY (its acquire attempts
-        raise/time out) rather than silently splitting the domain;
-        unreadable or corrupt marker content degrades every reader to
-        ``rename`` — the mode that works everywhere — so all readers of
-        the same bytes still make the same choice."""
-        env = os.environ.get("SPARK_GRAFT_LOCK_MODE", "").lower()
-        if env == "flock":
-            return True
-        if env == "rename":
-            return False
-        cached = getattr(self, "_flock_ok", None)
-        if cached is not None:
-            return cached
-        marker = self.root / ".lock_mode"
-        mode = self._read_lock_mode_marker(marker)
-        if mode is None:
-            probed = False
-            try:
-                import fcntl
-
-                probe = self.root / ".flock_probe"
-                fd = os.open(probe, os.O_CREAT | os.O_RDWR)
-                try:
-                    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-                    fcntl.flock(fd, fcntl.LOCK_UN)
-                    probed = True
-                finally:
-                    os.close(fd)
-                    try:
-                        os.unlink(probe)  # r11 verdict: don't leave debris
-                    except OSError:
-                        pass
-            except OSError:
-                probed = False
-            mode = self._write_lock_mode_marker(
-                marker, "flock" if probed else "rename"
-            )
-        self._flock_ok = mode == "flock"
-        return self._flock_ok
-
-    @staticmethod
-    def _read_lock_mode_marker(marker: Path) -> str | None:
-        """The root's pinned lock mode, or None when no marker exists
-        yet. Corrupt content reads as 'rename' (see _use_flock) — never
-        None, so a half-written marker can't trigger a second probe
-        that disagrees with a third reader's."""
-        try:
-            content = marker.read_text().strip()
-        except OSError:
-            return None
-        return content if content in ("flock", "rename") else "rename"
-
-    @staticmethod
-    def _write_lock_mode_marker(marker: Path, mode: str) -> str:
-        """Persist this probe's verdict; first writer wins. The loser of
-        a concurrent create race adopts the winner's verdict (re-read),
-        so two simultaneous first-openers still converge on one mode."""
-        try:
-            fd = os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            try:
-                os.write(fd, mode.encode())
-            finally:
-                os.close(fd)
-            return mode
-        except FileExistsError:
-            existing = VersionedWarehouse._read_lock_mode_marker(marker)
-            return existing if existing is not None else mode
-        except OSError:
-            return mode  # unwritable root: per-instance verdict only
-
     @contextmanager
     def _flock_lock(self, lock: Path, what: str, patience: float):
         """Exclusive fd lock on a PERSISTENT lock file (never unlinked —
         unlinking a flock file reopens the classic race where a late
         opener locks the unlinked inode while a fresh opener locks the
         new one, and both 'hold the lock'). Crash release is the
-        kernel's job; a LIVE holder past ``patience`` surfaces as the
-        waiter's TimeoutError, mirroring the rename scheme's deadline —
-        flock never steals from a merely-slow holder, which is strictly
-        safer than the horizon heuristic. flock excludes per open file
-        description, so two threads of one process exclude each other
-        exactly like two processes.
+        kernel's job: a holder's lock dies with its last descriptor, so
+        there is no staleness horizon, no heartbeat and no steal. A LIVE
+        holder past ``patience`` surfaces as the waiter's TimeoutError —
+        flock never breaks in on a merely-slow holder. flock excludes per
+        open file description, so two threads of one process exclude
+        each other exactly like two processes.
 
-        Healthy queueing never times out (parity with the rename
-        scheme's inode-change deadline reset): every holder touches the
+        Healthy queueing never times out: every holder touches the
         file's mtime at acquire, and a waiter that observes the mtime
         move — the lock changed hands, the queue is draining — resets
         its patience. Only a single holder sitting on the lock past
-        ``patience`` without crashing fires the TimeoutError."""
-        import fcntl
+        ``patience`` fires the TimeoutError.
 
+        Only ``BlockingIOError`` (EAGAIN/EWOULDBLOCK) is contention. Any
+        other error means the filesystem refuses flock (some NFS mounts
+        answer ENOLCK): it re-raises at once, naming the table, instead
+        of being retried as contention until the patience runs out —
+        writing unlocked would lose updates."""
         fd = os.open(lock, os.O_CREAT | os.O_RDWR)
         try:
             deadline = time.monotonic() + patience
@@ -677,17 +438,22 @@ class VersionedWarehouse(Warehouse):
                 try:
                     fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
                     break
+                except BlockingIOError:
+                    pass
+                except OSError as exc:
+                    raise OSError(
+                        exc.errno, f"{what}: flock refused on {lock}: {exc.strerror}"
+                    ) from exc
+                try:
+                    m = os.fstat(fd).st_mtime_ns
+                    if m != last_mtime:
+                        last_mtime = m
+                        deadline = time.monotonic() + patience
                 except OSError:
-                    try:
-                        m = os.fstat(fd).st_mtime_ns
-                        if m != last_mtime:
-                            last_mtime = m
-                            deadline = time.monotonic() + patience
-                    except OSError:
-                        pass
-                    if time.monotonic() > deadline:
-                        raise TimeoutError(f"{what} held too long")
-                    time.sleep(0.01)
+                    pass
+                if time.monotonic() > deadline:
+                    raise TimeoutError(f"{what} held too long")
+                time.sleep(0.01)
             try:
                 os.utime(fd)  # hand-off beacon for queued waiters
             except OSError:
@@ -707,94 +473,18 @@ class VersionedWarehouse(Warehouse):
         """Serialize link-forward appends per table: two concurrent appends
         that both link from the same base version would each publish a
         snapshot missing the other's rows (lost update) — the parallel
-        silver loads + audit inserts hit exactly this. Same lock-file
-        discipline as _publish (crashed holders stolen after 60 s); held
-        across claim + link + write + publish, with _publish's own
-        short-lived lock (a different file) nesting inside.
-
-        The HOLDER heartbeats the lock (a daemon thread os.utime's it every
-        60 s) so a legitimate big append whose Spark write exceeds the
-        600 s steal horizon keeps its mtime fresh and is never stolen
-        mid-write (r4 advice: without the heartbeat, the steal re-admitted
-        exactly the lost-update race the lock exists to prevent — only
-        a CRASHED holder, whose heartbeat has stopped, ages past the
-        horizon)."""
+        silver loads + audit inserts hit exactly this. Held across claim
+        + link + write + publish, with _publish's short-lived pointer
+        lock (a different file) nesting inside. A big append may hold it
+        for as long as its Spark write runs; waiters queue behind it."""
         base = self.path(namespace, table)
         base.mkdir(parents=True, exist_ok=True)
-        # flock mode (r10 verdict item 6): kernel-released on crash — no
-        # horizon, no heartbeat, no steal windows. Same waiter patience
-        # as the rename scheme's deadline.
-        if self._use_flock():
-            with self._flock_lock(
-                base / ".append.flock",
-                f"append lock for {namespace}.{table}",
-                self.LOCK_STEAL_AFTER + 60.0,
-            ):
-                yield
-            return
-        lock = base / ".append.lock"
-        # Steal threshold sized for a CRASHED holder: live holders
-        # heartbeat (below) so even a multi-hour write never ages past it.
-        # The waiter's patience RESETS
-        # whenever the lock visibly changes hands (new inode), so healthy
-        # queueing never times out; the deadline only fires when one holder
-        # sits on the lock past the steal horizon without crashing.
-        STEAL_AFTER = self.LOCK_STEAL_AFTER
-        last_ino = None
-        deadline = time.monotonic() + STEAL_AFTER + 60.0
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                # Ownership token: the inode of OUR lock file. A holder
-                # whose whole process was suspended past the steal horizon
-                # (heartbeat thread frozen with it) resumes believing it
-                # still owns the lock — but a waiter has stolen it and
-                # created a NEW lock file at the same path. Every later
-                # touch (heartbeat utime, release unlink) verifies the path
-                # still resolves to this inode before acting, so the zombie
-                # neither refreshes nor deletes the new holder's lock
-                # (r5 advice). fstat on the just-created fd cannot race:
-                # the descriptor pins our file.
-                my_ino = os.fstat(fd).st_ino
-                os.close(fd)
-                break
-            except FileExistsError:
-                try:
-                    st = lock.stat()
-                except OSError:
-                    continue  # released between open and stat — retry
-                if st.st_ino != last_ino:
-                    last_ino = st.st_ino
-                    deadline = time.monotonic() + STEAL_AFTER + 60.0
-                if time.time() - st.st_mtime > STEAL_AFTER:
-                    # rename-then-unlink steal (r9): exactly one waiter's
-                    # rename succeeds, closing the former stat+unlink
-                    # residual where two waiters both observed staleness
-                    # and the loser removed the winner's fresh lock
-                    self._steal_stale_lock(lock, STEAL_AFTER)
-                    continue
-                if time.monotonic() > deadline:
-                    raise TimeoutError(
-                        f"append lock for {namespace}.{table} held too long"
-                    )
-                time.sleep(0.01)
-        # Holder heartbeat: refresh the lock's mtime well inside the steal
-        # horizon for as long as the protected write runs (see
-        # _lock_heartbeat for the retry/ownership semantics).
-        try:
-            with self._lock_heartbeat(lock, my_ino, self.LOCK_HEARTBEAT):
-                yield
-        finally:
-            try:
-                # unlink only OUR lock: after a suspend+steal the path
-                # holds the new holder's file, and removing it would
-                # re-open the lost-update window (r5 advice). The
-                # stat→unlink gap is the same documented residual as the
-                # steal path's re-stat.
-                if lock.stat().st_ino == my_ino:
-                    lock.unlink(missing_ok=True)
-            except OSError:
-                pass
+        with self._flock_lock(
+            base / ".append.flock",
+            f"append lock for {namespace}.{table}",
+            self.APPEND_LOCK_PATIENCE,
+        ):
+            yield
 
     @contextmanager
     def _claim_keepalive(self, vdir: Path):
@@ -805,9 +495,8 @@ class VersionedWarehouse(Warehouse):
         stall minutes between file materializations) would age past that
         horizon too, and commit()/overwrite() writers don't hold the append
         lock, so a concurrent vacuum (autovacuum runs on every publish)
-        could rmtree the claim mid-write and corrupt the commit (r5 advice:
-        the append-lock heartbeat fixed the LOCK's aging but not the claim
-        directory's). A daemon thread os.utime's the claim every
+        could rmtree the claim mid-write and corrupt the commit (r5
+        advice). A daemon thread os.utime's the claim every
         LOCK_HEARTBEAT seconds; a crashed driver kills the thread with it,
         the directory ages normally, and the sweep is legitimate."""
         stop = threading.Event()
@@ -825,18 +514,21 @@ class VersionedWarehouse(Warehouse):
         finally:
             stop.set()
 
-    def _link_forward(self, namespace: str, table: str, vdir: Path) -> None:
-        """Hard-link the published snapshot's files into a claimed new
-        version directory (Delta's append commit re-adds prior files to
-        the log; here links make that O(#files), zero bytes copied)."""
-        cur = self.current_version(namespace, table)
-        if cur is None:
-            return
-        src = self.path(namespace, table) / f"_v{cur}"
+    @staticmethod
+    def _link_files(src: Path, vdir: Path, skip: str | None = None) -> None:
+        """Hard-link every file of version directory ``src`` into the
+        claimed ``vdir``, keeping the tree (O(#files), zero bytes copied;
+        copies where the filesystem refuses links). Never links the
+        ``.op`` stamp: writing the new version's label through a shared
+        inode would rewrite the SOURCE version's history entry. ``skip``
+        is a relative partition path left out (compaction rewrites it)."""
         for f in sorted(src.rglob("*")):
             if f.name == ".op":
                 continue
             rel = f.relative_to(src)
+            rp = str(rel)
+            if skip is not None and (rp == skip or rp.startswith(skip + "/")):
+                continue
             dst = vdir / rel
             if f.is_dir():
                 dst.mkdir(parents=True, exist_ok=True)
@@ -846,6 +538,14 @@ class VersionedWarehouse(Warehouse):
                     os.link(f, dst)
                 except OSError:
                     shutil.copy2(f, dst)
+
+    def _link_forward(self, namespace: str, table: str, vdir: Path) -> None:
+        """Hard-link the published snapshot's files into a claimed new
+        version directory (Delta's append commit re-adds prior files to
+        the log)."""
+        cur = self.current_version(namespace, table)
+        if cur is not None:
+            self._link_files(self.path(namespace, table) / f"_v{cur}", vdir)
 
     def append(
         self,
@@ -990,28 +690,10 @@ class VersionedWarehouse(Warehouse):
             )
         nxt, vdir = self._claim_next(namespace, table)
         with self._claim_keepalive(vdir):
-            self._restore_files(src, vdir)
+            self._link_files(src, vdir)
         self._stamp(vdir, f"RESTORE v{version}")
         self._publish(namespace, table, nxt)
         return nxt
-
-    @staticmethod
-    def _restore_files(src: Path, vdir: Path) -> None:
-        for f in sorted(src.rglob("*")):
-            if f.name == ".op":
-                continue  # never hard-link the stamp: writing the new
-                # version's label through a shared inode would rewrite the
-                # SOURCE version's history entry
-            rel = f.relative_to(src)
-            dst = vdir / rel
-            if f.is_dir():
-                dst.mkdir(parents=True, exist_ok=True)
-            else:
-                dst.parent.mkdir(parents=True, exist_ok=True)
-                try:
-                    os.link(f, dst)
-                except OSError:
-                    shutil.copy2(f, dst)
 
     def _is_committed(self, namespace: str, table: str, version: int) -> bool:
         """A version directory is a real commit iff it carries the .op
@@ -1057,113 +739,36 @@ class VersionedWarehouse(Warehouse):
         return out
 
     def _publish(self, namespace: str, table: str, nxt: int) -> None:
-        """Monotonic pointer publish under a short-lived lock file.
+        """Monotonic pointer publish under the table's pointer lock.
 
         Without the monotonicity check, a SLOW writer holding a lower
         claimed version could overwrite a faster writer's already-published
         higher pointer — silently un-publishing an acknowledged commit
         (reported in round-4 review). The lock serializes the
         read-compare-replace; it protects microseconds of driver-side work,
-        so contention is bounded, and a lock older than 60 s is treated as
-        a crashed holder and stolen. A skipped publish is still a durable
+        so contention is bounded. A skipped publish is still a durable
         commit: the version directory exists and time-travel reads it."""
         base = self.path(namespace, table)
-        # flock mode (r10 verdict item 6): see _use_flock — the kernel
-        # arbitrates the read-compare-replace, no steal protocol needed.
-        if self._use_flock():
-            with self._flock_lock(
-                base / ".ptr.flock",
-                f"pointer lock for {namespace}.{table}",
-                self.PTR_STEAL_AFTER + 10.0,
-            ):
-                published = self._replace_pointer(base, namespace, table, nxt)
-            if not published:
-                return
-            keep = self._retention(namespace, table)
-            if keep is not None:
-                self.vacuum(namespace, table, keep=keep)
-            return
-        lock = base / ".ptr.lock"
-        deadline = time.monotonic() + self.PTR_STEAL_AFTER + 10.0
-        my_ino: int | None = None
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.close(fd)
-                # ownership token (same discipline as _append_lock): the
-                # inode of OUR lock file — release only unlinks while the
-                # path still carries it, so a post-steal successor's lock
-                # is never removed by a zombie holder
-                try:
-                    my_ino = lock.stat().st_ino
-                except OSError:
-                    my_ino = None
-                break
-            except FileExistsError:
-                # rename-then-unlink steal (r8 ADVICE): a bare
-                # stat+unlink let TWO waiters both observe a stale mtime,
-                # A unlink+recreate, then B unlink A's FRESH lock and
-                # also acquire — mutual exclusion of the
-                # read-compare-replace was not guaranteed after a steal.
-                # os.rename of one source path succeeds for exactly ONE
-                # caller; only the renamer retires the stale lock, every
-                # other waiter loops back to the O_EXCL create.
-                self._steal_stale_lock(lock, self.PTR_STEAL_AFTER)
-                if time.monotonic() > deadline:
-                    raise TimeoutError(
-                        f"pointer lock for {namespace}.{table} held too long"
-                    )
-                time.sleep(0.01)
-        # Holder heartbeat (r9 ADVICE: _publish holders never heartbeated,
-        # so a publisher suspended/stalled past PTR_STEAL_AFTER was stolen
-        # and two publishers ran the read-compare-replace concurrently —
-        # the monotonicity check bounds the damage to a skipped publish,
-        # but the steal was avoidable). Shared beat loop — see
-        # _lock_heartbeat. The critical section is microseconds when
-        # healthy; the thread exists purely for the stalled-holder case.
-        try:
-            # `with` drives the heartbeat CM (r10 ADVICE: the manual
-            # __enter__/__exit__(None, None, None) pair discarded real
-            # exception info at exit — harmless while the CM has no
-            # exception handling, fragile the day it grows any)
-            with self._lock_heartbeat(
-                lock, my_ino, min(self.LOCK_HEARTBEAT, self.PTR_STEAL_AFTER / 4)
-            ):
-                published = self._replace_pointer(base, namespace, table, nxt)
-        finally:
-            # unlink only OUR lock: an unconditional unlink here could
-            # remove the lock a stealer re-created after deciding ours
-            # was stale (the second half of the r8 ADVICE race)
-            try:
-                if my_ino is not None and lock.stat().st_ino == my_ino:
-                    lock.unlink(missing_ok=True)
-            except OSError:
-                pass
-        if not published:
-            return  # a newer commit already published — never go backwards
+        with self._flock_lock(
+            base / ".ptr.flock",
+            f"pointer lock for {namespace}.{table}",
+            self.PTR_LOCK_PATIENCE,
+        ):
+            cur = self.current_version(namespace, table)
+            if cur is not None and cur >= nxt:
+                return  # a newer commit already published — never go backwards
+            tmp = base / f".ptr.{uuid.uuid4().hex[:8]}"
+            # fsync before the rename: os.replace is atomic in the
+            # namespace, but without flushing the data blocks first a crash
+            # can publish a pointer file whose CONTENT never reached disk.
+            with open(tmp, "w") as f:
+                f.write(str(nxt))
+                f.flush()
+                os.fsync(f.fileno())
+            os.replace(tmp, self._pointer(namespace, table))
         keep = self._retention(namespace, table)
         if keep is not None:
             self.vacuum(namespace, table, keep=keep)
-
-    def _replace_pointer(
-        self, base: Path, namespace: str, table: str, nxt: int
-    ) -> bool:
-        """The pointer read-compare-replace — callers hold the pointer
-        lock (either mode). False = skipped because a newer commit is
-        already published (the pointer never goes backwards)."""
-        cur = self.current_version(namespace, table)
-        if cur is not None and cur >= nxt:
-            return False
-        tmp = base / f".ptr.{uuid.uuid4().hex[:8]}"
-        # fsync before the rename: os.replace is atomic in the
-        # namespace, but without flushing the data blocks first a crash
-        # can publish a pointer file whose CONTENT never reached disk.
-        with open(tmp, "w") as f:
-            f.write(str(nxt))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._pointer(namespace, table))
-        return True
 
     def read(
         self,
@@ -1269,23 +874,7 @@ class VersionedWarehouse(Warehouse):
             df = df.drop(part.split("=", 1)[0])
         nxt, vdir = self._claim_next(namespace, table)
         with self._claim_keepalive(vdir):
-            prefix = partition + "/"
-            for f in sorted(src.rglob("*")):
-                if f.name == ".op":
-                    continue
-                rel = f.relative_to(src)
-                rp = str(rel)
-                if rp == partition or rp.startswith(prefix):
-                    continue  # the partition being rewritten
-                dst = vdir / rel
-                if f.is_dir():
-                    dst.mkdir(parents=True, exist_ok=True)
-                else:
-                    dst.parent.mkdir(parents=True, exist_ok=True)
-                    try:
-                        os.link(f, dst)
-                    except OSError:
-                        shutil.copy2(f, dst)
+            self._link_files(src, vdir, skip=partition)
             df.write.mode("append").parquet(str(vdir / partition))
             self._stamp(vdir, f"OPTIMIZE {partition}")
         self._publish(namespace, table, nxt)
@@ -1294,10 +883,9 @@ class VersionedWarehouse(Warehouse):
     # A claim directory younger than this is treated as a possibly-in-flight
     # write and never swept. LIVE writers keep their claim's mtime fresh for
     # the whole write via _claim_keepalive (every LOCK_HEARTBEAT seconds), so
-    # a claim that HAS aged past this horizon belongs to a dead process — the
-    # append-lock steal horizon alone was not enough, because the lock
-    # heartbeat legitimizes >600 s appends while commit()/overwrite() writers
-    # hold no append lock at all (r5 advice).
+    # a claim that HAS aged past this horizon belongs to a dead process. The
+    # append lock cannot stand in for this: commit()/overwrite() writers hold
+    # no append lock at all (r5 advice).
     PHANTOM_SWEEP_AFTER = 600.0
 
     def vacuum(self, namespace: str, table: str, keep: int = 2) -> list[int]:
@@ -1332,18 +920,4 @@ class VersionedWarehouse(Warehouse):
             removable.append(v)
         for v in removable:
             shutil.rmtree(self.path(namespace, table) / f"_v{v}")
-        # rename leftovers from stealers that crashed between os.rename
-        # and unlink (r9 ADVICE): harmless to locking, but nothing else
-        # ever removed them — vacuum is the natural janitor. Each lock
-        # family is swept at ITS OWN horizon (r10 review: a ptr-horizon
-        # sweep of append debris could race an in-flight append steal's
-        # freshness re-check).
-        self._sweep_stale_debris(
-            self.path(namespace, table), self.PTR_STEAL_AFTER,
-            family=".ptr.lock",
-        )
-        self._sweep_stale_debris(
-            self.path(namespace, table), self.LOCK_STEAL_AFTER,
-            family=".append.lock",
-        )
         return removable

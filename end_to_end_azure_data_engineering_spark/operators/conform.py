@@ -1,50 +1,14 @@
-"""Conform (typed projection) operator — SURVEY §2.2 P1-P3.
+"""Multi-source union — SURVEY §2.2 U1.
 
-The reference's silver notebooks each open with a fixed-order ``select`` of
-per-column cast+alias (reference: 4_silver/silver_transactions.py:73-87,
-incl. the deliberate decimal→double downcast), a literal ``source_system``
-tag injected at read time (:59,64), and deterministic surrogate keys
-``concat_ws('-', natural_id, source_system)`` that preserve NULL
-(:88-93). Here that is one declarative spec applied as a single Project —
-Catalyst prunes the scan to exactly the referenced columns.
+The typed projection that the reference's silver notebooks open with
+(4_silver/silver_transactions.py:73-87) lives in
+``plans/silver.py::conform_entity``; this module keeps the schema
+harmonization step it runs first.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-
-@dataclass(frozen=True)
-class ConformSpec:
-    """Declarative conform step for one entity.
-
-    columns: output name -> (source column, spark type name). Order fixed.
-    surrogate_keys: output name -> natural-id column (already conformed name);
-        key = concat_ws('-', natural_id, source_system), NULL-preserving.
-    """
-
-    columns: dict[str, tuple[str, str]]
-    surrogate_keys: dict[str, str] = field(default_factory=dict)
-
-
-def conform(df: DataFrame, spec: ConformSpec, source_system: str) -> DataFrame:
-    """Apply typed projection + source tag + surrogate keys in one pass."""
-    cols: list[Column] = [
-        F.col(src).cast(typ).alias(out) for out, (src, typ) in spec.columns.items()
-    ]
-    cols.append(F.lit(source_system).alias("source_system"))
-    out = df.select(*cols)
-    for key_name, natural in spec.surrogate_keys.items():
-        out = out.withColumn(
-            key_name,
-            F.when(F.col(natural).isNull(), F.lit(None).cast("string")).otherwise(
-                F.concat_ws("-", F.col(natural), F.col("source_system"))
-            ),
-        )
-    return out
+from pyspark.sql import DataFrame
 
 
 def harmonize_union(dfs: list[DataFrame]) -> DataFrame:

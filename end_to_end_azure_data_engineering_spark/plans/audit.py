@@ -18,6 +18,8 @@ from __future__ import annotations
 import datetime as _dt
 import os
 import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,6 +54,14 @@ def _epoch_us(t: _dt.datetime) -> int:
     if t.tzinfo is None:
         t = t.replace(tzinfo=_dt.timezone.utc)
     return (t - _EPOCH) // _dt.timedelta(microseconds=1)
+
+
+@dataclass
+class AuditRun:
+    """What a bracketed stage reports for its SUCCESS row."""
+
+    rows_processed: int | None = None
+    watermark_value: str | None = None
 
 
 @dataclass
@@ -169,6 +179,24 @@ class AuditLog:
             status="FAILED", start_time=start_time, end_time=self.clock.now(),
             error_message=error[:4000],
         )
+
+    @contextmanager
+    def bracket(self, source_system: str, source_object: str) -> Iterator[AuditRun]:
+        """M5 bracket around one stage: a STARTED row on entry; on exit a
+        SUCCESS row carrying what the body set on the yielded ``AuditRun``,
+        or a FAILED row with the error, after which the error re-raises.
+        A failure writing the SUCCESS row is audited as FAILED too."""
+        t0 = self.start(source_system, source_object)
+        run = AuditRun()
+        try:
+            yield run
+            self.success(
+                source_system, source_object, t0,
+                run.rows_processed, run.watermark_value,
+            )
+        except Exception as exc:
+            self.failed(source_system, source_object, t0, str(exc))
+            raise
 
     def read(self) -> DataFrame:
         return self.wh.read(NAMESPACE, TABLE)

@@ -91,12 +91,8 @@ def run_ingestion(
         def _run():
             src = row.db_name or "landing"
             if row.source_type not in resolvers:
-                t0 = audit.start(src, row.target_file_name)
-                audit.failed(
-                    src, row.target_file_name, t0,
-                    f"unknown source_type '{row.source_type}'",
-                )
-                raise ValueError(f"unknown source_type '{row.source_type}'")
+                with audit.bracket(src, row.target_file_name):
+                    raise ValueError(f"unknown source_type '{row.source_type}'")
             resolver = resolvers[row.source_type]
             if row.load_mode == "incremental" and row.watermark_column:
                 return incremental_ingest(
@@ -107,16 +103,13 @@ def run_ingestion(
             # full / snapshot: rotate the prior landing into the archive
             # namespace (S14, pl_sql_copy_bronze.json:148-277), then land
             # the whole frame, audited
-            t0 = audit.start(src, row.target_file_name)
-            try:
+            with audit.bracket(src, row.target_file_name) as run:
                 stamp = audit.clock.now().strftime("%Y%m%d%H%M%S")
                 wh.archive("bronze", row.target_file_name, stamp)
-                n = wh.overwrite(resolver(row, ""), "bronze", row.target_file_name)
-                audit.success(src, row.target_file_name, t0, n, None)
-                return row.target_file_name
-            except Exception as exc:
-                audit.failed(src, row.target_file_name, t0, str(exc))
-                raise
+                run.rows_processed = wh.overwrite(
+                    resolver(row, ""), "bronze", row.target_file_name
+                )
+            return row.target_file_name
 
         return _run
 

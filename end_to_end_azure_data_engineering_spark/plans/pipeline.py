@@ -50,15 +50,10 @@ def run_silver(
     def make_stage(name: str) -> Callable[[], object]:
         def _run():
             spec = SILVER_SPECS[name]
-            t0 = audit.start("silver", name)
-            try:
+            with audit.bracket("silver", name) as run:
                 staged = conform_entity(spec, bronze[name])
-                n = load_entity(wh, spec, staged, clock)
-                audit.success("silver", name, t0, n, None)
-                return n
-            except Exception as exc:
-                audit.failed("silver", name, t0, str(exc))
-                raise
+                run.rows_processed = load_entity(wh, spec, staged, clock)
+            return run.rows_processed
         return _run
 
     runner = DagRunner(max_parallel=max_parallel)
@@ -82,14 +77,11 @@ def run_gold(
 
     def make_stage(name: str) -> Callable[[], object]:
         def _run():
-            t0 = audit.start("gold", name)
-            try:
-                n = wh.overwrite(GOLD_BUILDERS[name](wh, now), "gold", name)
-                audit.success("gold", name, t0, n, None)
-                return n
-            except Exception as exc:
-                audit.failed("gold", name, t0, str(exc))
-                raise
+            with audit.bracket("gold", name) as run:
+                run.rows_processed = wh.overwrite(
+                    GOLD_BUILDERS[name](wh, now), "gold", name
+                )
+            return run.rows_processed
         return _run
 
     runner = DagRunner(max_parallel=max_parallel)

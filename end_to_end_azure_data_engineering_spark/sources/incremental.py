@@ -45,8 +45,7 @@ def incremental_ingest(
       unmatched directories never listed) instead of name matching.
     """
     wh = audit.wh
-    t0 = audit.start(source_system, source_object)
-    try:
+    with audit.bracket(source_system, source_object) as run:
         last_wm = audit.fetch_last_watermark(source_system, source_object)
         df = read_fn(last_wm)
         stamp = audit.clock.now().strftime("%Y%m%d%H%M%S") + "_" + uuid.uuid4().hex[:6]
@@ -57,19 +56,16 @@ def incremental_ingest(
             landed_batch = wh.read(bronze_namespace, table).filter(
                 F.col("_ingest_stamp") == stamp
             )
-            rows = landed_batch.count()
+            run.rows_processed = landed_batch.count()
             landed = landed_batch
         else:
             table = f"{source_object}_{stamp}"
-            rows = wh.overwrite(df, bronze_namespace, table)
+            run.rows_processed = wh.overwrite(df, bronze_namespace, table)
             # A1 — max-watermark capture on the landed file
             # (1_audit/catch_new_watermark_value.py:21-44)
             landed = wh.read(bronze_namespace, table)
         new_wm_row = landed.agg(F.max(wm_col).cast("string").alias("wm")).collect()
         new_wm = new_wm_row[0][0] if new_wm_row else None
         # P13 — coalesce new→old (pl_sql_copy_bronze.json:758)
-        audit.success(source_system, source_object, t0, rows, new_wm or last_wm)
-        return table
-    except Exception as exc:
-        audit.failed(source_system, source_object, t0, str(exc))
-        raise
+        run.watermark_value = new_wm or last_wm
+    return table

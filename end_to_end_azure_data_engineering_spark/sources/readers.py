@@ -9,14 +9,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def read_parquet_glob(spark: SparkSession, pattern: str) -> DataFrame:
-    """S1/S2/S3 — incremental drops by glob, single files, folders
-    (reference: 4_silver/silver_transactions.py:10-11,57-65). At scale the
-    stamped-file glob becomes an ingest_date-partitioned layout so name
-    pruning turns into partition pruning (SURVEY §4)."""
-    return spark.read.parquet(pattern)
-
-
 def read_csv(
     spark: SparkSession,
     path: str,

@@ -142,11 +142,6 @@ def _stamp_watermarks(df: DataFrame, wms: dict[str, int]) -> DataFrame:
     return df.withColumn("_wm", F.lit(json.dumps(wms, sort_keys=True)))
 
 
-def _is_replay(existing: DataFrame, qid: str, epoch: int) -> bool:
-    """True iff (qid, epoch) was already folded into the standing table."""
-    return _load_watermarks(existing).get(qid, -1) >= epoch
-
-
 def stream_files(
     spark: SparkSession, path: str, schema: T.StructType, fmt: str = "parquet"
 ) -> DataFrame:

@@ -1,7 +1,7 @@
 """SIGKILL fault injection for the versioned warehouse (r8).
 
-The cross-process lock tests prove mutual exclusion and crashed-HOLDER
-steal in isolation; this test kills whole writer processes at random
+The cross-process lock tests prove mutual exclusion and crashed-holder
+release in isolation; this test kills whole writer processes at random
 points inside real commit loops and asserts the durability contract the
 MVCC design claims (engine/tableio.py::VersionedWarehouse docstring):
 
@@ -14,10 +14,10 @@ MVCC design claims (engine/tableio.py::VersionedWarehouse docstring):
 3. crashed claims (unstamped ``_vN`` directories, possibly half-filled
    by ``_link_forward`` or holding a partial ``.tmp``) are invisible to
    ``history`` and swept by ``vacuum`` once past the phantom horizon;
-4. a successor writer recovers unaided: it steals the dead writer's
-   append lock (and, if the kill landed inside ``_publish``'s
-   microsecond window, its pointer lock — the PTR_STEAL_AFTER horizon)
-   and commits normally.
+4. a successor writer recovers unaided: the kernel released the dead
+   writer's append lock (and, if the kill landed inside ``_publish``'s
+   microsecond window, its pointer lock) with its process, so the
+   successor commits normally at the default lock patience.
 
 No SparkSession: ``insert_file`` is the driver-side commit path
 (claim → link-forward → write → stamp → publish), pure filesystem, so
@@ -33,6 +33,8 @@ import sys
 import time
 from pathlib import Path
 
+import pytest
+
 REPO = str(Path(__file__).resolve().parents[1])
 
 _WRITER = """
@@ -40,10 +42,6 @@ import sys
 from pathlib import Path
 sys.path.insert(0, sys.argv[1])
 from end_to_end_azure_data_engineering_spark.engine.tableio import VersionedWarehouse
-
-VersionedWarehouse.LOCK_STEAL_AFTER = 2.0
-VersionedWarehouse.LOCK_HEARTBEAT = 0.5
-VersionedWarehouse.PTR_STEAL_AFTER = 1.0
 
 root, tag, n = sys.argv[2], sys.argv[3], int(sys.argv[4])
 wh = VersionedWarehouse(None, root, autovacuum_keep=3)
@@ -55,6 +53,19 @@ for i in range(n):
         lambda p, payload=payload: Path(p).write_text(payload),
     )
     print("ACK", tag, i, flush=True)
+"""
+
+
+_PTR_HOLDER = """
+import sys, time
+sys.path.insert(0, sys.argv[1])
+from end_to_end_azure_data_engineering_spark.engine.tableio import VersionedWarehouse
+
+wh = VersionedWarehouse(None, sys.argv[2])
+lk = wh._flock_lock(wh.path("silver", "t") / ".ptr.flock", "pointer lock", 5.0)
+lk.__enter__()
+print("HELD", flush=True)
+time.sleep(600)  # killed here, lock held
 """
 
 
@@ -94,7 +105,7 @@ def test_sigkill_mid_commit_preserves_acknowledged_inserts(tmp_path):
         out, _ = p.communicate(timeout=60)
         acked.extend(_acks(out))
 
-    # a recovery writer runs to completion, stealing any stale locks
+    # a recovery writer runs to completion on the locks the kills released
     p = _spawn(root, "rec", 5)
     out, err = p.communicate(timeout=120)
     assert p.returncode == 0, err[-2000:]
@@ -143,40 +154,45 @@ def test_sigkill_mid_commit_preserves_acknowledged_inserts(tmp_path):
         VersionedWarehouse.PHANTOM_SWEEP_AFTER = orig
 
 
-def test_sigkill_while_holding_pointer_lock_recovers(tmp_path, monkeypatch):
-    """A writer killed while HOLDING .ptr.lock must not wedge successors:
-    the next publisher waits out PTR_STEAL_AFTER, steals, and publishes
-    (the r8 fix — with the old fixed 10 s deadline under a 60 s horizon
-    this raised TimeoutError instead). (rename-mode internals — pinned;
-    in flock mode the kernel releases a killed holder's lock itself,
-    covered by test_cross_process_locks.)"""
-    monkeypatch.setenv("SPARK_GRAFT_LOCK_MODE", "rename")
+def test_sigkill_while_holding_pointer_lock_recovers(tmp_path):
+    """A writer SIGKILLed while HOLDING the pointer lock must not wedge
+    successors: the kernel releases its flock with the process, so the
+    next publisher publishes within seconds at the DEFAULT patience (the
+    r8 bug this guards: one crashed publisher turned into TimeoutErrors
+    for every publisher arriving after it)."""
     from end_to_end_azure_data_engineering_spark.engine.tableio import (
         VersionedWarehouse,
     )
 
     root = tmp_path / "ptr_wh"
-    orig = VersionedWarehouse.PTR_STEAL_AFTER
-    VersionedWarehouse.PTR_STEAL_AFTER = 1.0
+    wh = VersionedWarehouse(None, str(root))
+    assert wh.PTR_LOCK_PATIENCE == 70.0  # default patience, not shrunk
+    wh.insert_file("silver", "t", "seed.txt", lambda p: Path(p).write_text("x"))
+    holder = subprocess.Popen(
+        [sys.executable, "-c", _PTR_HOLDER, REPO, str(root)],
+        stdout=subprocess.PIPE,
+        stderr=subprocess.PIPE,
+        text=True,
+    )
     try:
-        wh = VersionedWarehouse(None, str(root))
-        wh.insert_file(
-            "silver", "t", "seed.txt", lambda p: Path(p).write_text("x")
-        )
-        # simulate the crashed publisher: a stale ptr.lock nobody releases
-        lock = root / "silver" / "t" / ".ptr.lock"
-        lock.write_text("")
-        t0 = time.monotonic()
-        wh.insert_file(
-            "silver", "t", "after.txt", lambda p: Path(p).write_text("y")
-        )
-        elapsed = time.monotonic() - t0
-        assert elapsed < 30, f"publish took {elapsed:.1f}s — steal failed"
-        cur = wh.current_version("silver", "t")
-        vdir = root / "silver" / "t" / f"_v{cur}"
-        assert (vdir / "after.txt").exists()
+        assert holder.stdout.readline().strip() == "HELD", holder.stderr.read()
+        # the lock is really held: a short-patience waiter times out
+        lock = root / "silver" / "t" / ".ptr.flock"
+        with pytest.raises(TimeoutError):
+            with wh._flock_lock(lock, "pointer lock", 0.3):
+                pass
     finally:
-        VersionedWarehouse.PTR_STEAL_AFTER = orig
+        holder.send_signal(signal.SIGKILL)
+        holder.communicate(timeout=60)
+    assert holder.returncode == -signal.SIGKILL
+    t0 = time.monotonic()
+    wh.insert_file("silver", "t", "after.txt", lambda p: Path(p).write_text("y"))
+    elapsed = time.monotonic() - t0
+    assert elapsed < 5, f"publish took {elapsed:.1f}s after the holder died"
+    cur = wh.current_version("silver", "t")
+    vdir = root / "silver" / "t" / f"_v{cur}"
+    assert (vdir / "after.txt").exists()
+    assert (vdir / "seed.txt").exists()
 
 
 def test_concurrent_writers_no_lost_appends(tmp_path):

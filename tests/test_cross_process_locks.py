@@ -1,28 +1,35 @@
-"""Cross-PROCESS evidence for the warehouse append lock.
+"""Cross-PROCESS evidence for the warehouse locks.
 
-Every existing lock test exercises threads inside one interpreter; the
-lock's design claims (O_CREAT|O_EXCL file + inode ownership + heartbeat
-+ crashed-holder steal) are about separate OS processes — two drivers,
-or a driver and a maintenance job, sharing one warehouse root. These
-tests spawn real child interpreters (no Spark session needed: the lock
-protocol is pure filesystem, and ``VersionedWarehouse(None, root)``
-constructs without touching Spark).
+The lock's design claims (kernel ``flock`` on a persistent lock file,
+released when the holder's last descriptor closes) are about separate OS
+processes — two drivers, or a driver and a maintenance job, sharing one
+warehouse root. These tests spawn real child interpreters (no Spark
+session needed: the lock protocol is pure filesystem, and
+``VersionedWarehouse(None, root)`` constructs without touching Spark).
 
 1. Mutual exclusion: K children × R read-sleep-increment critical
    sections on a shared counter — any interleaving loses updates, so
    counter == K*R proves exclusion across processes.
 2. Crashed holder: a child takes the lock and ``os._exit``s while
-   holding it (heartbeat thread dies with the process); a parent with a
-   shrunk steal horizon must acquire by stealing the stale lock.
+   holding it; a successor with the default patience acquires at once.
+3. Waiters: a live holder past the patience times the waiter out, a
+   draining queue resets it, and a filesystem that refuses flock fails
+   the write at once.
 """
 
 from __future__ import annotations
 
-import os
+import errno
+import fcntl
 import subprocess
 import sys
+import threading
 import time
 from pathlib import Path
+
+import pytest
+
+from end_to_end_azure_data_engineering_spark.engine.tableio import VersionedWarehouse
 
 REPO = str(Path(__file__).resolve().parents[1])
 
@@ -51,27 +58,11 @@ wh = VersionedWarehouse(None, sys.argv[2])
 lk = wh._append_lock("silver", "t")
 lk.__enter__()
 print("HELD", flush=True)
-os._exit(1)  # crash while holding: no release, heartbeat thread dies too
+os._exit(1)  # crash while holding: no release
 """
 
 
-import pytest
-
-#: the r11 lock-mode matrix (verdict item 6): every cross-process claim
-#: must hold under BOTH the rename-steal scheme and the fd-flock scheme
-MODES = ("rename", "flock")
-
-
-def _env(mode: str) -> dict:
-    return {**os.environ, "SPARK_GRAFT_LOCK_MODE": mode}
-
-
-@pytest.mark.parametrize("mode", MODES)
-def test_append_lock_mutual_exclusion_across_processes(tmp_path, mode):
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
-
+def test_append_lock_mutual_exclusion_across_processes(tmp_path):
     root = tmp_path / "xproc_wh"
     VersionedWarehouse(None, str(root))  # creates the root
     (root / "counter.txt").write_text("0")
@@ -81,7 +72,6 @@ def test_append_lock_mutual_exclusion_across_processes(tmp_path, mode):
             [sys.executable, "-c", _INCR_CHILD, REPO, str(root), str(r)],
             stdout=subprocess.PIPE,
             stderr=subprocess.PIPE,
-            env=_env(mode),
         )
         for _ in range(k)
     ]
@@ -91,53 +81,16 @@ def test_append_lock_mutual_exclusion_across_processes(tmp_path, mode):
     assert int((root / "counter.txt").read_text()) == k * r
 
 
-def test_append_lock_crashed_process_holder_is_stolen(tmp_path, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_LOCK_MODE", "rename")
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
-
+def test_append_lock_crashed_flock_holder_releases_instantly(tmp_path):
+    """A crashed holder's lock dies with its last descriptor — no
+    staleness horizon, no heartbeat, no steal. A successor acquires
+    immediately, with the DEFAULT (660 s) patience untouched."""
     root = tmp_path / "crash_wh"
     child = subprocess.Popen(
         [sys.executable, "-c", _CRASH_CHILD, REPO, str(root)],
         stdout=subprocess.PIPE,
         stderr=subprocess.PIPE,
         text=True,
-        env=_env("rename"),
-    )
-    out, err = child.communicate(timeout=60)
-    assert "HELD" in out, err[-2000:]
-    assert child.returncode == 1  # crashed while holding
-
-    lock = root / "silver" / "t" / ".append.lock"
-    assert lock.exists()  # the orphaned lock file
-
-    wh = VersionedWarehouse(None, str(root))
-    wh.LOCK_STEAL_AFTER = 1.0  # instance shrink: the child cannot heartbeat
-    time.sleep(1.1)  # age the orphan past the horizon
-    t0 = time.monotonic()
-    with wh._append_lock("silver", "t"):
-        took = time.monotonic() - t0
-    assert took < 30.0, took  # acquired by steal, not the 600s default
-    assert not lock.exists()  # released cleanly by the new holder
-
-
-def test_append_lock_crashed_flock_holder_releases_instantly(tmp_path, monkeypatch):
-    """The flock mode's headline property (r10 verdict item 6): a crashed
-    holder's lock dies with its last descriptor — no staleness horizon,
-    no heartbeat, no steal. A successor acquires immediately, with the
-    DEFAULT (600 s) patience untouched."""
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
-
-    root = tmp_path / "crash_wh"
-    child = subprocess.Popen(
-        [sys.executable, "-c", _CRASH_CHILD, REPO, str(root)],
-        stdout=subprocess.PIPE,
-        stderr=subprocess.PIPE,
-        text=True,
-        env=_env("flock"),
     )
     out, err = child.communicate(timeout=60)
     assert "HELD" in out, err[-2000:]
@@ -146,7 +99,6 @@ def test_append_lock_crashed_flock_holder_releases_instantly(tmp_path, monkeypat
     lockfile = root / "silver" / "t" / ".append.flock"
     assert lockfile.exists(), "flock lock file is persistent by design"
 
-    monkeypatch.setenv("SPARK_GRAFT_LOCK_MODE", "flock")
     wh = VersionedWarehouse(None, str(root))
     t0 = time.monotonic()
     with wh._append_lock("silver", "t"):
@@ -155,22 +107,10 @@ def test_append_lock_crashed_flock_holder_releases_instantly(tmp_path, monkeypat
     assert lockfile.exists(), "flock file must never be unlinked"
 
 
-def test_flock_live_holder_times_out_waiter(tmp_path, monkeypatch):
-    """flock never steals from a LIVE holder (strictly safer than the
-    horizon heuristic) — a waiter outlasting its patience raises, it
-    does not break in."""
-    import threading
-
-    monkeypatch.setenv("SPARK_GRAFT_LOCK_MODE", "flock")
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
-
-    class W(VersionedWarehouse):
-        LOCK_STEAL_AFTER = 0.2  # waiter patience = this + 60 is too slow
-        PTR_STEAL_AFTER = 0.2
-
-    wh = W(None, str(tmp_path))
+def test_flock_live_holder_times_out_waiter(tmp_path):
+    """flock never breaks in on a LIVE holder — a waiter outlasting its
+    patience raises, it does not acquire."""
+    wh = VersionedWarehouse(None, str(tmp_path))
     entered, release = threading.Event(), threading.Event()
 
     def hold() -> None:
@@ -193,20 +133,12 @@ def test_flock_live_holder_times_out_waiter(tmp_path, monkeypatch):
     th.join(5.0)
 
 
-def test_flock_queue_drain_resets_patience(tmp_path, monkeypatch):
-    """Parity with the rename scheme's inode-change deadline reset: a
-    waiter behind a DRAINING queue of holders must never time out, even
-    when the queue's total duration exceeds its per-holder patience —
-    each hand-off touches the lock mtime and the waiter resets. Three
+def test_flock_queue_drain_resets_patience(tmp_path):
+    """A waiter behind a DRAINING queue of holders must never time out,
+    even when the queue's total duration exceeds its per-holder patience
+    — each hand-off touches the lock mtime and the waiter resets. Four
     0.3 s holders against a 0.5 s patience: the last waiter waits ~0.9 s
     total and must still acquire."""
-    import threading
-
-    monkeypatch.setenv("SPARK_GRAFT_LOCK_MODE", "flock")
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
-
     wh = VersionedWarehouse(None, str(tmp_path))
     lock = wh.path("silver", "t")
     lock.mkdir(parents=True, exist_ok=True)
@@ -235,390 +167,23 @@ def test_flock_queue_drain_resets_patience(tmp_path, monkeypatch):
     assert len(order) == 4
 
 
-def test_lock_mode_probe_and_override(tmp_path, monkeypatch):
-    """The capability probe takes a real flock on a probe file under the
-    root (True on any POSIX-local fs, like this one) and caches per
-    instance; SPARK_GRAFT_LOCK_MODE overrides it in both directions."""
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
+def test_refused_flock_fails_fast_and_writes_nothing(tmp_path, monkeypatch):
+    """A filesystem that refuses flock (ENOLCK on some NFS mounts) is not
+    contention: the write fails at once, naming the table, instead of
+    retrying for the 660 s patience or downgrading to another lock. No
+    lock-mode marker or rename-scheme lock file is left behind, and no
+    version is claimed."""
 
-    monkeypatch.delenv("SPARK_GRAFT_LOCK_MODE", raising=False)
+    def refuse(*a, **k):
+        raise OSError(errno.ENOLCK, "No locks available")
+
+    monkeypatch.setattr(fcntl, "flock", refuse)
     wh = VersionedWarehouse(None, str(tmp_path))
-    assert wh._use_flock() is True  # local fs supports flock
-    monkeypatch.setenv("SPARK_GRAFT_LOCK_MODE", "rename")
-    assert wh._use_flock() is False
-    monkeypatch.setenv("SPARK_GRAFT_LOCK_MODE", "flock")
-    assert wh._use_flock() is True
-
-
-def test_stale_lock_steal_is_single_winner(tmp_path):
-    """r8 ADVICE: the bare stat+unlink steal let two waiters both observe
-    a stale mtime and the loser remove the winner's freshly re-created
-    lock. The rename-then-unlink steal is arbitrated by the filesystem:
-    for one stale lock, exactly one caller's steal returns True, and a
-    fresh lock is never stealable."""
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
-
-    lock = tmp_path / ".ptr.lock"
-    lock.touch()
-    # fresh lock: nobody may steal it
-    assert not VersionedWarehouse._steal_stale_lock(lock, horizon=60.0)
-    # age it past the horizon: first caller wins, second finds it gone
-    old = time.time() - 120.0
-    os.utime(lock, (old, old))
-    results = [
-        VersionedWarehouse._steal_stale_lock(lock, horizon=60.0)
-        for _ in range(2)
-    ]
-    assert results == [True, False]
-    assert not lock.exists()
-    assert not list(tmp_path.glob(".ptr.lock.stale.*")), "debris left behind"
-
-
-def test_publish_release_spares_successor_lock(tmp_path):
-    """The unconditional ``finally: lock.unlink`` could remove a lock a
-    stealer re-created (r8 ADVICE, second half). After a steal swaps the
-    lock file under a suspended publisher, the zombie's release must
-    leave the successor's lock in place (inode token mismatch)."""
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
-
-    wh = VersionedWarehouse(None, str(tmp_path))
-    base = wh.path("silver", "t")
-    base.mkdir(parents=True)
-    lock = base / ".ptr.lock"
-    lock.touch()
-    my_ino = lock.stat().st_ino
-    # pin the zombie's inode so the filesystem cannot hand the SAME inode
-    # number to the successor's lock (ext4 reuses freed inodes eagerly,
-    # which would make this test vacuously pass/fail on fs behavior)
-    os.link(lock, base / ".ino_keeper")
-    # a waiter steals (zombie suspended past the horizon) and re-creates
-    old = time.time() - 120.0
-    os.utime(lock, (old, old))
-    assert VersionedWarehouse._steal_stale_lock(lock, horizon=60.0)
-    lock.touch()  # successor's fresh lock, new inode
-    successor_ino = lock.stat().st_ino
-    assert successor_ino != my_ino
-    # the zombie's conditional release (the _publish finally clause)
-    try:
-        if lock.stat().st_ino == my_ino:
-            lock.unlink(missing_ok=True)
-    except OSError:
-        pass
-    assert lock.exists(), "zombie release removed the successor's lock"
-
-
-def test_steal_puts_back_displaced_fresh_lock(tmp_path, monkeypatch):
-    """r9 ADVICE (low): between the staleness stat and the rename, the
-    stale holder can release and a FRESH holder recreate the lock — the
-    rename then displaces the fresh lock. The post-rename freshness
-    re-check must detect the displacement (the renamed file's mtime is
-    recent), atomically put the lock back with os.link, and report the
-    steal as a miss. Emulated by making the rename land on a
-    just-refreshed file — exactly what the race interleaving produces."""
-    from end_to_end_azure_data_engineering_spark.engine import tableio
-
-    lock = tmp_path / ".ptr.lock"
-    lock.touch()
-    old = time.time() - 120.0
-    os.utime(lock, (old, old))
-    real_rename = os.rename
-
-    def racy_rename(src, dst):
-        real_rename(src, dst)
-        os.utime(dst)  # the file we renamed was really a fresh holder's
-
-    monkeypatch.setattr(tableio.os, "rename", racy_rename)
-    assert not tableio.VersionedWarehouse._steal_stale_lock(lock, horizon=60.0)
-    assert lock.exists(), "displaced fresh lock must be put back"
-    assert not list(tmp_path.glob(".ptr.lock.stale.*")), "debris left behind"
-
-
-def test_stale_lock_debris_is_swept_by_vacuum(tmp_path):
-    """r9 ADVICE (low): a stealer that crashes between os.rename and
-    unlink leaves a '.lock.stale.<uuid>' file forever — vacuum now
-    sweeps debris older than the steal horizon, and ONLY that old (an
-    in-flight steal's just-renamed file must survive its freshness
-    re-check)."""
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
-
-    wh = VersionedWarehouse(None, str(tmp_path))
-    base = wh.path("silver", "t")
-    base.mkdir(parents=True)
-    crashed = base / ".ptr.lock.stale.dead01"
-    crashed.touch()
-    os.utime(crashed, (time.time() - 7200, time.time() - 7200))
-    inflight = base / ".append.lock.stale.live01"
-    inflight.touch()
-    # r10 review: the two lock families share the directory but have
-    # different horizons (ptr 60 s, append 600 s) — an append-family
-    # renamed file whose heartbeat mtime is minutes old may still be
-    # inside an in-flight steal's freshness re-check, so only the PTR
-    # horizon may not be applied to it
-    mid_append = base / ".append.lock.stale.mid01"
-    mid_append.touch()
-    os.utime(mid_append, (time.time() - 120, time.time() - 120))
-    mid_ptr = base / ".ptr.lock.stale.mid02"
-    mid_ptr.touch()
-    os.utime(mid_ptr, (time.time() - 120, time.time() - 120))
-    wh.vacuum("silver", "t", keep=2)
-    assert not crashed.exists(), "old debris must be swept"
-    assert inflight.exists(), "fresh (possibly in-flight) file must survive"
-    assert mid_append.exists(), "append debris under ITS horizon must survive"
-    assert not mid_ptr.exists(), "ptr debris past its horizon must be swept"
-
-
-def test_steal_sweeps_only_its_own_lock_family(tmp_path):
-    """r10 review: _steal_stale_lock used the CALLER's horizon on every
-    family's debris, so a ptr-lock steal (60 s horizon) could unlink an
-    append-family renamed file (600 s family) from under a concurrent
-    append steal's freshness re-check. A steal must sweep only its own
-    family."""
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
-
-    other = tmp_path / ".append.lock.stale.live01"
-    other.touch()
-    os.utime(other, (time.time() - 120, time.time() - 120))
-    mine = tmp_path / ".ptr.lock.stale.dead01"
-    mine.touch()
-    os.utime(mine, (time.time() - 120, time.time() - 120))
-    lock = tmp_path / ".ptr.lock"
-    lock.touch()
-    os.utime(lock, (time.time() - 120, time.time() - 120))
-    assert VersionedWarehouse._steal_stale_lock(lock, horizon=60.0)
-    assert not mine.exists(), "own-family debris past the horizon is swept"
-    assert other.exists(), "other family's debris must be left alone"
-
-
-def test_heartbeat_survives_transient_rename_away(tmp_path, monkeypatch):
-    """r10 review: a holder's heartbeat that fired during a prowling
-    stealer's rename-away window saw the path missing and exited
-    permanently — the put-back lock (same inode: os.link) was then never
-    refreshed again and aged into a legitimate steal mid-write. The
-    heartbeat must treat a transient stat failure as retryable and
-    resume refreshing once the lock is back. (rename-mode internals —
-    pinned; flock mode has no heartbeat to test.)"""
-    import threading
-
-    monkeypatch.setenv("SPARK_GRAFT_LOCK_MODE", "rename")
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
-
-    class W(VersionedWarehouse):
-        LOCK_STEAL_AFTER = 30.0
-        LOCK_HEARTBEAT = 0.05
-
-    wh = W(None, str(tmp_path))
-    entered = threading.Event()
-    release = threading.Event()
-
-    def hold() -> None:
-        with wh._append_lock("silver", "t"):
-            entered.set()
-            release.wait(10.0)
-
-    th = threading.Thread(target=hold, daemon=True)
-    th.start()
-    assert entered.wait(5.0)
-    lock = wh.path("silver", "t") / ".append.lock"
-    # simulate the displacement window: rename away, hold it across
-    # several heartbeat intervals, then put back with os.link (preserving
-    # the inode, as _steal_stale_lock's put-back does)
-    stale = lock.with_name(".append.lock.stale.test")
-    os.rename(lock, stale)
-    time.sleep(0.5)  # heartbeat fires into the missing path repeatedly
-    os.link(stale, lock)
-    stale.unlink()
-    old = time.time() - 20.0
-    os.utime(lock, (old, old))  # age it; only a LIVE heartbeat refreshes
-    # poll for the refresh instead of a single post-sleep assertion (r10
-    # ADVICE: a loaded CI host can starve the 0.05 s daemon thread well
-    # past one interval — what matters is that it EVENTUALLY refreshes,
-    # anything fresher than the 20 s aging offset proves a live beat)
-    deadline = time.monotonic() + 8.0
-    while time.monotonic() < deadline:
-        if time.time() - lock.stat().st_mtime < 15.0:
-            break
-        time.sleep(0.05)
-    assert time.time() - lock.stat().st_mtime < 15.0, (
-        "heartbeat died during the rename-away window and never refreshed "
-        "the put-back lock"
-    )
-    release.set()
-    th.join(5.0)
-
-
-def test_publish_heartbeat_keeps_stalled_holder_alive(tmp_path, monkeypatch):
-    """r9 ADVICE (low): _publish holders never heartbeated, so a
-    publisher stalled past PTR_STEAL_AFTER was stolen and two publishers
-    ran the read-compare-replace concurrently. With the heartbeat, a
-    prowler running the steal protocol for the whole stall must never
-    succeed, and the stalled publish must still complete. (rename-mode
-    internals — pinned; flock mode has no steal protocol to prowl.)"""
-    import threading
-
-    monkeypatch.setenv("SPARK_GRAFT_LOCK_MODE", "rename")
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
-
-    class W(VersionedWarehouse):
-        PTR_STEAL_AFTER = 1.0
-        LOCK_HEARTBEAT = 0.2
-
-    wh = W(None, str(tmp_path))
-    base = wh.path("silver", "t")
-    base.mkdir(parents=True)
-    real_cv = VersionedWarehouse.current_version
-
-    def slow_cv(self, ns, t):
-        time.sleep(2.5)  # stall the critical section past the horizon
-        return real_cv(self, ns, t)
-
-    monkeypatch.setattr(W, "current_version", slow_cv)
-    stolen: list[int] = []
-
-    def prowler() -> None:
-        end = time.monotonic() + 2.2
-        while time.monotonic() < end:
-            if W._steal_stale_lock(base / ".ptr.lock", horizon=1.0):
-                stolen.append(1)
-                return
-            time.sleep(0.1)
-
-    th = threading.Thread(target=prowler)
-    th.start()
-    wh._publish("silver", "t", 1)
-    th.join()
-    assert not stolen, "heartbeating live publisher was stolen"
-    assert (base / "_CURRENT").read_text().strip() == "1"
-    assert not (base / ".ptr.lock").exists(), "lock not released"
-
-
-def test_lock_mode_marker_pins_root(tmp_path, monkeypatch):
-    """r12 (verdict item 5): the first probe persists its verdict as a
-    .lock_mode marker under the root, the probe file is cleaned up, and
-    later openers adopt the marker WITHOUT probing — a mixed-probe fleet
-    can no longer split into two lock domains."""
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
-
-    monkeypatch.delenv("SPARK_GRAFT_LOCK_MODE", raising=False)
-    wh1 = VersionedWarehouse(None, str(tmp_path))
-    assert wh1._use_flock() is True
-    marker = tmp_path / ".lock_mode"
-    assert marker.read_text() == "flock"
-    assert not (tmp_path / ".flock_probe").exists(), "probe debris left behind"
-    # a second opener adopts the marker without taking a probe flock:
-    # with fcntl.flock patched to fail, a probing opener would land in
-    # rename mode (a separate .append.lock domain) — adoption keeps it
-    # in the holder's domain
-    wh2 = VersionedWarehouse(None, str(tmp_path))
-    with monkeypatch.context() as mp:
-        import fcntl
-
-        def boom(*a, **k):
-            raise OSError("simulated flaky-NFS probe failure")
-
-        mp.setattr(fcntl, "flock", boom)
-        assert wh2._use_flock() is True, (
-            "marker must be adopted without probing (a probe here fails)"
-        )
-
-
-def test_failed_probe_process_still_excludes_against_marker_holder(
-    tmp_path, monkeypatch
-):
-    """r12 verdict item 5 Done criterion: a process whose OWN capability
-    probe fails (and would therefore have chosen rename mode, i.e. a
-    different lock file) adopts the root's flock marker and genuinely
-    EXCLUDES against the marker-pinned holder."""
-    import threading
-
-    monkeypatch.delenv("SPARK_GRAFT_LOCK_MODE", raising=False)
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
-
-    wh1 = VersionedWarehouse(None, str(tmp_path))
-    assert wh1._use_flock() is True  # writes the marker
-
-    wh2 = VersionedWarehouse(None, str(tmp_path))
-    with monkeypatch.context() as mp:
-        import fcntl
-
-        def boom(*a, **k):
-            raise OSError("simulated flaky-NFS probe failure")
-
-        mp.setattr(fcntl, "flock", boom)
-        assert wh2._use_flock() is True  # adopted, not probed
-
-    # wh1 holds the append lock; wh2 (the failed-probe process) must use
-    # the SAME lock file and time out rather than acquire a parallel
-    # rename-mode lock
-    lockdir = wh1.path("silver", "t")
-    lockdir.mkdir(parents=True, exist_ok=True)
-    lockfile = lockdir / ".append.flock"
-    entered, release = threading.Event(), threading.Event()
-
-    def hold() -> None:
-        with wh1._flock_lock(lockfile, "append lock", 10.0):
-            entered.set()
-            release.wait(10.0)
-
-    th = threading.Thread(target=hold, daemon=True)
-    th.start()
-    assert entered.wait(5.0)
-    assert wh2._use_flock() is True, "adopted mode must be cached"
-    with pytest.raises(TimeoutError):
-        with wh2._flock_lock(lockfile, "append lock", 0.3):
-            pass
-    release.set()
-    th.join(5.0)
-
-
-def test_corrupt_marker_degrades_all_readers_to_rename(tmp_path, monkeypatch):
-    """Corrupt marker content must degrade EVERY reader to the same mode
-    (rename — works everywhere) rather than re-probing, which could
-    disagree between processes."""
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
-
-    monkeypatch.delenv("SPARK_GRAFT_LOCK_MODE", raising=False)
-    (tmp_path / ".lock_mode").write_text("garbage\n")
-    wh = VersionedWarehouse(None, str(tmp_path))
-    assert wh._use_flock() is False
-
-
-def test_marker_create_race_loser_adopts_winner(tmp_path, monkeypatch):
-    """Two simultaneous first-openers: the O_EXCL create race's loser
-    must adopt the winner's verdict, not its own probe's."""
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
-
-    monkeypatch.delenv("SPARK_GRAFT_LOCK_MODE", raising=False)
-    # the "winner" pinned rename; the loser's own probe says flock
-    mode = VersionedWarehouse._write_lock_mode_marker(
-        tmp_path / ".lock_mode", "rename"
-    )
-    assert mode == "rename"
-    # second writer loses the O_EXCL race and must return the winner's mode
-    mode2 = VersionedWarehouse._write_lock_mode_marker(
-        tmp_path / ".lock_mode", "flock"
-    )
-    assert mode2 == "rename"
-    wh = VersionedWarehouse(None, str(tmp_path))
-    assert wh._use_flock() is False
+    t0 = time.monotonic()
+    with pytest.raises(OSError, match=r"silver\.t") as info:
+        wh.insert_file("silver", "t", "a.txt", lambda p: Path(p).write_text("x"))
+    assert time.monotonic() - t0 < 5.0
+    assert info.value.errno == errno.ENOLCK
+    left = {p.name for p in tmp_path.rglob("*")}
+    assert not left & {".lock_mode", ".append.lock", ".ptr.lock"}, left
+    assert wh.versions("silver", "t") == []

@@ -122,6 +122,30 @@ def test_audit_bracketing(wh):
     assert audit.read().count() == n_before
 
 
+def test_audit_bracket_rows(spark, tmp_path):
+    """One bracket writes every stage's audit rows: STARTED, then SUCCESS
+    with what the body reported, or FAILED with the error (truncated to
+    4000 characters) before the error re-raises."""
+    wh = Warehouse(spark, str(tmp_path / "bracket_wh"))
+    audit = AuditLog(wh, FixedClock(dt.datetime(2024, 3, 1)))
+    with audit.bracket("bank_a", "ok") as run:
+        run.rows_processed, run.watermark_value = 7, "2024-01-02"
+    with pytest.raises(RuntimeError, match="boom"):
+        with audit.bracket("bank_a", "bad"):
+            raise RuntimeError("boom" + "x" * 5000)
+    rows = sorted(
+        (r.source_object, r.status, r.rows_processed, r.watermark_value,
+         len(r.error_message or ""), r.end_time is not None)
+        for r in audit.read().collect()
+    )
+    assert rows == [
+        ("bad", "FAILED", None, None, 4000, True),
+        ("bad", "STARTED", None, None, 0, False),
+        ("ok", "STARTED", None, None, 0, False),
+        ("ok", "SUCCESS", 7, "2024-01-02", 0, True),
+    ]
+
+
 def test_idempotent_rerun_settlements_and_scd2(spark, wh):
     """M2: re-running the same batch adds no rows. M1: SCD2 history stable."""
     before_st = wh.read("silver", "settlements").count()

@@ -399,28 +399,6 @@ def test_corrupt_retention_marker_raises(spark, vwh):
         vwh.append(_df(spark, 2), "gold", "t")
 
 
-def test_append_lock_heartbeat_keeps_lock_fresh(spark, tmp_path, monkeypatch):
-    """r4 advice (medium): the append-lock holder heartbeats the lock so a
-    legitimate long write is never stolen mid-write; only a CRASHED
-    holder's lock ages past the steal horizon. (rename-mode internals —
-    pinned; flock mode has no heartbeat.)"""
-    monkeypatch.setenv("SPARK_GRAFT_LOCK_MODE", "rename")
-    vw = VersionedWarehouse(spark, str(tmp_path / "hb"))
-    monkeypatch.setattr(VersionedWarehouse, "LOCK_HEARTBEAT", 0.05)
-    lock = vw.path("gold", "t")
-    with vw._append_lock("gold", "t"):
-        lf = lock / ".append.lock"
-        # age the lock past a (shrunk) steal horizon, then wait for the
-        # heartbeat to refresh it
-        ts = time.time() - 100
-        os.utime(lf, (ts, ts))
-        deadline = time.time() + 2
-        while time.time() < deadline and time.time() - lf.stat().st_mtime > 5:
-            time.sleep(0.02)
-        assert time.time() - lf.stat().st_mtime <= 5, "heartbeat never fired"
-    assert not (lock / ".append.lock").exists()
-
-
 def test_claim_keepalive_protects_inflight_write_from_sweep(spark, tmp_path):
     """r5 advice (medium): vacuum's phantom sweep must never rmtree a LIVE
     writer's claimed-but-unstamped version directory, even when the write
