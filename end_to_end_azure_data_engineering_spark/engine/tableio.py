@@ -12,6 +12,7 @@ Namespaces mirror the medallion: bronze/silver/gold/audit.
 from __future__ import annotations
 
 import fcntl
+import json
 import os
 import shutil
 import threading
@@ -21,6 +22,43 @@ from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# Spark's parquet writer stores the written frame's schema in every
+# file's footer under this key; schema inference prefers it over the
+# parquet types.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(root: Path) -> StructType | None:
+    """The schema Spark's non-merging inference would return for the table
+    at ``root``, read on the driver from one footer, or None where only
+    Spark can tell. Inference touches one file, the first data file in
+    path order, and takes the schema stored under ``_SPARK_SCHEMA_KEY``
+    when the file has it. None for a table without data files, one whose
+    first file lacks the key (pyarrow-written audit rows), and one with
+    parquet summary files, which inference would read first."""
+    import pyarrow.parquet as pq
+
+    names = [f for f in root.rglob("*") if f.is_file()]
+    if any(f.name in ("_metadata", "_common_metadata") for f in names):
+        return None
+    # Spark's listing drops every path component starting with "." or
+    # with "_" (unless it is a k=v partition directory)
+    data = sorted(
+        str(f)
+        for f in names
+        if not any(
+            p.startswith(".") or (p.startswith("_") and "=" not in p)
+            for p in f.relative_to(root).parts
+        )
+    )
+    if not data:
+        return None
+    raw = (pq.read_metadata(data[0]).metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if raw is None:
+        return None
+    return StructType.fromJson(json.loads(raw))
 
 
 class Warehouse:
@@ -71,11 +109,25 @@ class Warehouse:
         """``merge_schema=True`` unions the schemas of every file (columns
         added by later evolving appends surface as NULL on older rows) —
         the read half of Delta's mergeSchema. Off by default: schema
-        merging lists every footer, which costs on very wide tables."""
+        merging lists every footer, which costs on very wide tables.
+
+        Without ``merge_schema`` the read runs no Spark job: the schema
+        Spark's inference would return comes from one parquet footer on
+        the driver (see ``_footer_schema``), as Delta takes it from its
+        log. Hive partition columns are still appended from the directory
+        names. A table whose footer holds no Spark schema falls back to
+        Spark's one-task inference job."""
+        return self._read_parquet(self.path(namespace, table), merge_schema)
+
+    def _read_parquet(self, root: Path, merge_schema: bool) -> DataFrame:
         r = self.spark.read
         if merge_schema:
             r = r.option("mergeSchema", "true")
-        return r.parquet(str(self.path(namespace, table)))
+        else:
+            schema = _footer_schema(root)
+            if schema is not None:
+                r = r.schema(schema)
+        return r.parquet(str(root))
 
     def overwrite(
         self,
@@ -258,7 +310,9 @@ class Warehouse:
         bronze file into an archive folder, then deletes it, before landing
         the fresh full copy). Returns the archived table name, or None if
         there was nothing to rotate. On object storage this is a cheap
-        server-side copy/rename; here it is a directory move."""
+        server-side copy/rename; here it is one atomic directory rename, so
+        no file is copied (a VersionedWarehouse's hard-linked version files
+        stay shared)."""
         if not self.exists(namespace, table):
             return None
         src = self.path(namespace, table)
@@ -267,8 +321,7 @@ class Warehouse:
         dst.parent.mkdir(parents=True, exist_ok=True)
         if dst.exists():
             shutil.rmtree(dst)
-        shutil.copytree(src, dst)
-        shutil.rmtree(src)
+        os.replace(src, dst)
         return archived
 
     def drop(self, namespace: str, table: str) -> None:
@@ -790,10 +843,7 @@ class VersionedWarehouse(Warehouse):
             raise FileNotFoundError(
                 f"{namespace}.{table} version {v} not found (vacuumed?)"
             )
-        r = self.spark.read
-        if merge_schema:
-            r = r.option("mergeSchema", "true")
-        return r.parquet(str(vdir))
+        return self._read_parquet(vdir, merge_schema)
 
     def compact_partition(
         self,

@@ -17,11 +17,17 @@ insert. History rows (`is_current = false`) are untouched.
 
 This build has no Delta jar, so the merge is expressed as a declarative
 plan producing the *new table state* (history ∪ expire-updated current ∪
-inserts) which the caller overwrites atomically. On a Delta-enabled
-cluster, `scd2_merge_sql` emits the identical two MERGE statements and the
-operator becomes two Delta commands touching only matched files — at
-100 TB that, plus hash-partitioning both sides on the key, is the scale
-path; the join below is the same shuffle MERGE itself would run.
+inserts) which the caller overwrites atomically. Both MERGE passes come out
+of ONE full-outer equi-join of the current slice with the batch: each
+joined row yields the kept or expired current row, plus the batch row when
+its key is new or changed. The batch is referenced once, so its lineage
+(conform, quarantine, keep-latest window) is planned and run once, and
+history rows bypass the join. A full-outer join cannot be broadcast, so it
+is always the key-hash shuffle on both sides — the same shuffle MERGE
+itself runs. On a Delta-enabled cluster, `scd2_merge_sql` emits the
+identical two MERGE statements and the operator becomes two Delta commands
+touching only matched files; at 100 TB that, plus hash-partitioning both
+sides on the key, is the scale path.
 
 The source must be pre-deduped per key (keep_latest), matching the
 reference's mandatory pre-MERGE compaction.
@@ -57,44 +63,59 @@ def scd2_merge(
             audit_modifieddate). source: conformed batch, unique per key,
             payload columns only.
     """
-    payload = [c for c in source.columns]
     ts = F.lit(now).cast("timestamp")
 
     hist = target.filter(~F.col("is_current"))
     cur = target.filter(F.col("is_current"))
 
+    # _src_hit marks the batch side of the join (a NULL key cannot)
     src = source.select(
         F.col(key).alias("_src_key"),
-        *[F.col(c).alias(f"_src_{c}") for c in payload if c != key],
+        *[F.col(c).alias(f"_src_{c}") for c in source.columns if c != key],
+        F.lit(True).alias("_src_hit"),
     )
 
-    # one equi-join on the key serves both MERGE passes
-    j = cur.join(src, cur[key] == src["_src_key"], "left")
-    changed = F.col("_src_key").isNotNull() & _any_changed(
-        [c for c in compare_cols if c != key]
-    )
+    # one full-outer equi-join on the key serves both MERGE passes;
+    # is_current is NULL exactly on the batch rows with no current row, and
+    # _any_changed is false wherever either side is missing
+    j = cur.join(src, cur[key] == src["_src_key"], "full_outer")
+    has_cur = F.col("is_current").isNotNull()
+    has_src = F.col("_src_hit").isNotNull()
+    changed = _any_changed([c for c in compare_cols if c != key])
 
-    expired = (
-        j.filter(changed)
-        .select(*[F.col(c) for c in target.columns])
-        .withColumn("is_current", F.lit(False))
-        .withColumn("audit_modifieddate", ts)
+    # MERGE 1: the current row, kept or expired
+    expire = {"is_current": F.lit(False), "audit_modifieddate": ts}
+    standing = F.when(
+        has_cur,
+        F.struct(
+            *[
+                F.when(changed, expire[c]).otherwise(F.col(c)).alias(c)
+                if c in expire
+                else F.col(c)
+                for c in target.columns
+            ]
+        ),
     )
-    kept_current = j.filter(~changed).select(*[F.col(c) for c in target.columns])
-
-    # keys still holding a current row after the expire pass don't re-insert
-    surviving = j.filter(~changed & F.col("_src_key").isNotNull()).select(
-        F.col(key).alias("_kept_key")
+    # MERGE 2: the batch row, for a new key or one just expired
+    insert = {
+        key: F.col("_src_key"),
+        "is_current": F.lit(True),
+        "audit_insertdate": ts,
+        "audit_modifieddate": ts,
+    }
+    inserted = F.when(
+        has_src & (~has_cur | changed),
+        F.struct(
+            *[
+                (insert[c] if c in insert else F.col(f"_src_{c}")).alias(c)
+                for c in target.columns
+            ]
+        ),
     )
-    inserts = (
-        source.join(surviving, F.col(key) == F.col("_kept_key"), "left_anti")
-        .withColumn("is_current", F.lit(True))
-        .withColumn("audit_insertdate", ts)
-        .withColumn("audit_modifieddate", ts)
-        .select(*[F.col(c) for c in target.columns])
+    rows = j.select(
+        F.inline(F.filter(F.array(standing, inserted), lambda r: r.isNotNull()))
     )
-
-    return hist.unionByName(expired).unionByName(kept_current).unionByName(inserts)
+    return hist.unionByName(rows)
 
 
 def scd2_init(source: DataFrame, now: _dt.datetime) -> DataFrame:

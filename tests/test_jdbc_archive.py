@@ -100,6 +100,36 @@ def test_archive_rotation(spark, tmp_path):
     assert wh.archive("bronze", "never_landed", "20240202") is None
 
 
+def test_archive_is_a_rename(spark, tmp_path):
+    """The rotation moves the table directory: every archived file keeps
+    its inode (no byte is copied) and the source is gone. On a versioned
+    root the hard links between version directories stay shared."""
+    from end_to_end_azure_data_engineering_spark.engine.tableio import (
+        VersionedWarehouse,
+    )
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.overwrite(spark.createDataFrame([(1, "old")], "id INT, v STRING"), "bronze", "c")
+    src = wh.path("bronze", "c")
+    inodes = {f.relative_to(src): f.stat().st_ino for f in src.rglob("*") if f.is_file()}
+    wh.archive("bronze", "c", "20240201")
+    dst = wh.path("archive", "c_20240201")
+    assert not src.exists()
+    assert {f.relative_to(dst): f.stat().st_ino for f in dst.rglob("*") if f.is_file()} == inodes
+
+    vwh = VersionedWarehouse(spark, str(tmp_path / "vwh"))
+    vwh.commit(spark.createDataFrame([(1,)], "id INT"), "bronze", "c")
+    vwh.append(spark.createDataFrame([(2,)], "id INT"), "bronze", "c")
+    vwh.archive("bronze", "c", "20240201")
+    linked = [
+        f for f in vwh.path("archive", "c_20240201").rglob("*.parquet")
+        if f.stat().st_nlink > 1
+    ]
+    assert linked, "the appended version's forward links were copied apart"
+    assert not vwh.exists("bronze", "c")
+    assert sorted(r.id for r in vwh.read("archive", "c_20240201").collect()) == [1, 2]
+
+
 def test_full_load_ingestion_archives_prior(spark, tmp_path):
     """run_ingestion full-load branch rotates the previous landing
     (pl_sql_copy_bronze.json:148-277) before overwriting."""

@@ -217,8 +217,6 @@ def test_pin_fence_names_a_persisted_result(spark, run_query):
 # re-derived lineage).
 SCAN_FANOUT_MAX = 4
 SCAN_FANOUT_ALLOWED = {
-    "scd2_as_of_snapshot": 12,  # three chained plan-form merges simulated from one table
-    "scd2_final_state": 7,      # two window-dedup batches + merge branches from one table
     "idempotent_append": 7,     # two overlapping batch slices + replay, anti-join branches
     "funnel_conversion": 6,     # one filtered scan per funnel stage (disjoint event-type slices)
 }

@@ -58,31 +58,61 @@ def test_merge_sql_golden_shape():
     assert "WHEN MATCHED" not in insert.replace("WHEN NOT MATCHED", "")
 
 
+def _duck_merge(con, batch, ts) -> None:
+    """The two MERGE statements' exact UPDATE/INSERT equivalents."""
+    con.execute("DELETE FROM s")
+    con.executemany(
+        "INSERT INTO s VALUES (?, ?, ?)",
+        [(r.txn_id, r.amount, r.status) for r in batch.collect()],
+    )
+    # MERGE 1 equivalent: matched-and-changed current rows expire
+    con.execute(
+        f"""
+        UPDATE t SET is_current = false, audit_modifieddate = TIMESTAMP '{ts}'
+        FROM s WHERE t.txn_id = s.txn_id AND t.is_current
+          AND (t.amount <> s.amount OR t.status <> s.status)
+        """
+    )
+    # MERGE 2 equivalent: source keys with no current row insert as current
+    con.execute(
+        f"""
+        INSERT INTO t
+        SELECT s.txn_id, s.amount, s.status, true,
+               TIMESTAMP '{ts}', TIMESTAMP '{ts}'
+        FROM s LEFT JOIN (SELECT txn_id FROM t WHERE is_current) c
+          USING (txn_id)
+        WHERE c.txn_id IS NULL
+        """
+    )
+
+
 def test_merge_sql_semantics_match_plan_form(spark):
     """Execute the MERGE statements' exact UPDATE/INSERT equivalents on
-    DuckDB; final state must equal the plan-form scd2_merge (row multiset)."""
+    DuckDB; after each of two merges the final state must equal the
+    plan-form scd2_merge (row multiset)."""
     t0 = dt.datetime(2024, 1, 1)
     t1 = dt.datetime(2024, 2, 1)
+    t2 = dt.datetime(2024, 3, 1)
+    schema = "txn_id INT, amount DOUBLE, status STRING"
 
     base = spark.createDataFrame(
-        [(1, 100.0, "OPEN"), (2, 200.0, "OPEN"), (3, None, "OPEN")],
-        "txn_id INT, amount DOUBLE, status STRING",
+        # 5: a target key no batch sends — its current row stays as is
+        [(1, 100.0, "OPEN"), (2, 200.0, "OPEN"), (3, None, "OPEN"), (5, 500.0, "OPEN")],
+        schema,
     )
-    batch = spark.createDataFrame(
+    batch1 = spark.createDataFrame(
         # 1: changed → expire + insert; 2: unchanged → keep;
         # 3: NULL→value on amount only → null-unsafe <> must NOT expire;
         # 4: brand new → insert
         [(1, 150.0, "OPEN"), (2, 200.0, "OPEN"), (3, 300.0, "OPEN"), (4, 50.0, "NEW")],
-        "txn_id INT, amount DOUBLE, status STRING",
+        schema,
     )
-
-    target = scd2_init(base, t0)
-    plan_rows = {
-        tuple(r)
-        for r in scd2_merge(target, batch, KEY, COMPARE, t1)
-        .select(*PAYLOAD, "is_current", "audit_insertdate", "audit_modifieddate")
-        .collect()
-    }
+    batch2 = spark.createDataFrame(
+        # 1: changed again while its first version is already history;
+        # 4: unchanged; 6: brand new; 2, 3, 5 absent
+        [(1, 175.0, "CLOSED"), (4, 50.0, "NEW"), (6, 60.0, "NEW")],
+        schema,
+    )
 
     con = duckdb.connect()
     con.execute(
@@ -94,37 +124,72 @@ def test_merge_sql_semantics_match_plan_form(spark):
         [(r.txn_id, r.amount, r.status, t0, t0) for r in base.collect()],
     )
     con.execute("CREATE TABLE s (txn_id INT, amount DOUBLE, status VARCHAR)")
-    con.executemany(
-        "INSERT INTO s VALUES (?, ?, ?)",
-        [(r.txn_id, r.amount, r.status) for r in batch.collect()],
-    )
 
-    # MERGE 1 equivalent: matched-and-changed current rows expire
-    con.execute(
-        f"""
-        UPDATE t SET is_current = false, audit_modifieddate = TIMESTAMP '{t1}'
-        FROM s WHERE t.txn_id = s.txn_id AND t.is_current
-          AND (t.amount <> s.amount OR t.status <> s.status)
-        """
-    )
-    # MERGE 2 equivalent: source keys with no current row insert as current
-    con.execute(
-        f"""
-        INSERT INTO t
-        SELECT s.txn_id, s.amount, s.status, true,
-               TIMESTAMP '{t1}', TIMESTAMP '{t1}'
-        FROM s LEFT JOIN (SELECT txn_id FROM t WHERE is_current) c
-          USING (txn_id)
-        WHERE c.txn_id IS NULL
-        """
-    )
-    duck_rows = set(map(tuple, con.execute("SELECT * FROM t").fetchall()))
+    state = scd2_init(base, t0)
+    for batch, ts in ((batch1, t1), (batch2, t2)):
+        state = scd2_merge(state, batch, KEY, COMPARE, ts)
+        plan_rows = sorted(
+            tuple(r)
+            for r in state.select(
+                *PAYLOAD, "is_current", "audit_insertdate", "audit_modifieddate"
+            ).collect()
+        )
+        _duck_merge(con, batch, ts)
+        duck_rows = sorted(con.execute("SELECT * FROM t").fetchall())
+        assert plan_rows == duck_rows, ts
 
-    assert plan_rows == duck_rows
+    by_key = {}
+    for r in duck_rows:
+        by_key.setdefault(r[0], []).append(r)
     # the latent semantics explicitly: key 3 (NULL→300.0) kept its original
     # current row — no expire, no second version
-    k3 = [r for r in duck_rows if r[0] == 3]
-    assert k3 == [(3, None, "OPEN", True, t0, t0)]
+    assert by_key[3] == [(3, None, "OPEN", True, t0, t0)]
+    # key 5 was in no batch; key 1 went through two versions into history
+    assert by_key[5] == [(5, 500.0, "OPEN", True, t0, t0)]
+    assert sorted(by_key[1]) == [
+        (1, 100.0, "OPEN", False, t0, t1),
+        (1, 150.0, "OPEN", False, t1, t2),
+        (1, 175.0, "CLOSED", True, t2, t2),
+    ]
+
+
+def test_merge_plans_one_join_over_one_batch_scan(spark, tmp_path):
+    """The merge is one full-outer join of the current slice with the
+    batch, which is scanned once: both MERGE passes come out of that one
+    join, so the batch's lineage is planned and run once."""
+    from tools.plan_audit import executed_plans, features
+
+    t0 = dt.datetime(2024, 1, 1)
+    t1 = dt.datetime(2024, 2, 1)
+    schema = "txn_id INT, amount DOUBLE, status STRING"
+    target = str(tmp_path / "target.parquet")
+    source = str(tmp_path / "batch.parquet")
+    scd2_init(
+        spark.createDataFrame([(i, float(i), "OPEN") for i in range(50)], schema), t0
+    ).write.parquet(target)
+    spark.createDataFrame(
+        [(i, float(i % 7), "OPEN") for i in range(25, 75)], schema
+    ).write.parquet(source)
+
+    plans = executed_plans(
+        spark,
+        lambda s, _: scd2_merge(
+            s.read.parquet(target), s.read.parquet(source), KEY, COMPARE, t1
+        ),
+        "",
+    )
+    joins = features(plans)["joins"]
+    assert sum(joins.values()) == 1, joins
+    # the scan's Location is cut short in plan strings; the batch is the
+    # scan without the SCD2 flag columns
+    executed = [p.split("== Initial Plan ==")[0] for p in plans]
+    batch_scans = [
+        line
+        for p in executed
+        for line in p.splitlines()
+        if "FileScan parquet" in line and "is_current" not in line
+    ]
+    assert len(batch_scans) == 1, executed
 
 
 def test_snapshot_asof_null_unsafe_and_expiry(spark):

@@ -5,6 +5,7 @@ the same evidence surface as tools/plan_audit.py.
 """
 
 import re
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -226,3 +227,129 @@ def test_schema_evolution_ignores_nested_nullability(spark, tmp_path):
     )
     wh.append_evolve(v2, "silver", "t")  # must not raise
     assert wh.read("silver", "t", merge_schema=True).count() == 2
+
+
+# ---------------------------------------------------------------------------
+# Read fence: a warehouse read returns exactly the schema Spark's own
+# inference gives (nullability included), and a Spark-written table's
+# schema comes from its parquet footer on the driver with no Spark job.
+# ---------------------------------------------------------------------------
+
+
+def _assert_read_fence(spark, read, path, job_free=True):
+    """``read()`` returns Spark's own inferred schema for ``path`` and,
+    when ``job_free``, submits no Spark job."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup() or [])
+    df = read()
+    jobs = len(set(tracker.getJobIdsForGroup() or []) - before)
+    assert df.schema == spark.read.parquet(str(path)).schema
+    if job_free:
+        assert jobs == 0, f"{jobs} Spark job(s) to read {path}"
+    return df
+
+
+def test_read_takes_schema_from_footer(spark, tmp_path):
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    df = spark.createDataFrame(
+        [(1, "a", Decimal("1.50"), [1, 2], {"k": 1}, (7, "x"))],
+        "id long not null, name string, amt decimal(12,2), tags array<int>, "
+        "m map<string,int>, s struct<a:int not null,b:string>",
+    ).withColumn("ts", F.current_timestamp())
+    wh.overwrite(df, "silver", "plain")
+    got = _assert_read_fence(
+        spark, lambda: wh.read("silver", "plain"), wh.path("silver", "plain")
+    )
+    assert got.count() == 1
+
+
+def test_read_partitioned_table_keeps_partition_columns(spark, tmp_path):
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    ev = spark.createDataFrame(
+        [(i, ["click", "view"][i % 2], i % 3, float(i)) for i in range(12)],
+        "event_id long, event_type string, day int, value double",
+    )
+    wh.overwrite(ev, "bronze", "events", partition_by=["event_type", "day"])
+    got = _assert_read_fence(
+        spark, lambda: wh.read("bronze", "events"), wh.path("bronze", "events")
+    )
+    assert got.columns[-2:] == ["event_type", "day"]
+    assert got.filter(F.col("day") == 1).count() == 4
+
+
+def test_read_empty_table(spark, tmp_path):
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    empty = spark.createDataFrame([], "id long, name string")
+    assert wh.overwrite(empty, "silver", "empty") == 0
+    got = _assert_read_fence(
+        spark, lambda: wh.read("silver", "empty"), wh.path("silver", "empty")
+    )
+    assert got.count() == 0
+
+
+def test_read_audit_rows_written_by_arrow(spark, tmp_path):
+    """The audit table is created by a Spark-written empty file, which
+    sorts before the pyarrow-written rows, so its read is job-free. A
+    table whose first file is pyarrow-written carries no Spark schema in
+    that footer: its read falls back to Spark's inference, with the same
+    schema either way."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from end_to_end_azure_data_engineering_spark.engine.clock import FixedClock
+    from end_to_end_azure_data_engineering_spark.plans.audit import (
+        NAMESPACE, TABLE, AuditLog,
+    )
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    audit = AuditLog(wh, FixedClock(dt.datetime(2024, 3, 1)))
+    audit.start("erp", "orders")
+    audit.start("erp", "customers")
+    got = _assert_read_fence(
+        spark, lambda: wh.read(NAMESPACE, TABLE), wh.path(NAMESPACE, TABLE)
+    )
+    assert got.count() == 2
+
+    rows = pa.table(
+        {"id": [1, 2], "at": pa.array([dt.datetime(2024, 3, 1)] * 2, pa.timestamp("us", tz="UTC"))}
+    )
+    for name in ("part-a.parquet", "part-b.parquet"):
+        wh.insert_file(NAMESPACE, "arrow_only", name, lambda tmp: pq.write_table(rows, tmp))
+    got = _assert_read_fence(
+        spark,
+        lambda: wh.read(NAMESPACE, "arrow_only"),
+        wh.path(NAMESPACE, "arrow_only"),
+        job_free=False,
+    )
+    assert got.count() == 4
+
+
+def test_versioned_read_and_time_travel(spark, tmp_path):
+    from end_to_end_azure_data_engineering_spark.engine.tableio import (
+        VersionedWarehouse,
+    )
+
+    vwh = VersionedWarehouse(spark, str(tmp_path / "vwh"))
+    v0 = vwh.commit(
+        spark.createDataFrame([(1, "a")], "id int not null, name string"),
+        "silver", "t",
+    )
+    v1 = vwh.commit(
+        spark.createDataFrame([(2, "b", 2.5)], "id int, name string, amt double"),
+        "silver", "t",
+    )
+    vwh.append(
+        spark.createDataFrame([(3, "c", 3.5)], "id int, name string, amt double"),
+        "silver", "t",
+    )
+    v2 = vwh.current_version("silver", "t")
+    root = vwh.path("silver", "t")
+    cur = _assert_read_fence(spark, lambda: vwh.read("silver", "t"), root / f"_v{v2}")
+    assert cur.count() == 2
+    for v in (v0, v1):
+        _assert_read_fence(
+            spark, lambda v=v: vwh.read("silver", "t", version=v), root / f"_v{v}"
+        )
+    assert vwh.read("silver", "t", version=v0).columns == ["id", "name"]
