@@ -61,6 +61,24 @@ def _footer_schema(root: Path) -> StructType | None:
     return StructType.fromJson(json.loads(raw))
 
 
+def _write_parquet(
+    df: DataFrame, path: Path, mode: str, partition_by: list[str] | None = None
+) -> None:
+    w = df.write.mode(mode)
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    w.parquet(str(path))
+
+
+def _stage_file(directory: Path, name: str, write_fn) -> None:
+    """``write_fn(tmp)`` under a hidden dot-name, then an atomic rename to
+    ``name``: an interrupted write never leaves a footerless partial
+    visible."""
+    tmp = directory / f".{name}.tmp"
+    write_fn(tmp)
+    os.replace(tmp, directory / name)
+
+
 class Warehouse:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -94,16 +112,13 @@ class Warehouse:
         return self.path(namespace, table)
 
     def insert_file(self, namespace: str, table: str, name: str, write_fn) -> None:
-        """Driver-side single-file insert (the audit fast path): stage via
-        ``write_fn(tmp_path)`` under a hidden dot-name, then atomically
-        rename into the live table — an interrupted write never leaves a
-        footerless partial visible. VersionedWarehouse overrides this to
-        publish the file as a proper APPEND version instead."""
+        """Driver-side single-file insert (the audit row write): stage via
+        ``write_fn(tmp_path)`` and rename into the live table (see
+        ``_stage_file``). VersionedWarehouse overrides this to publish the
+        file as a proper APPEND version instead."""
         path = self.path(namespace, table)
         path.mkdir(parents=True, exist_ok=True)
-        tmp = path / f".{name}.tmp"
-        write_fn(tmp)
-        os.replace(tmp, path / name)
+        _stage_file(path, name, write_fn)
 
     def read(self, namespace: str, table: str, merge_schema: bool = False) -> DataFrame:
         """``merge_schema=True`` unions the schemas of every file (columns
@@ -149,10 +164,7 @@ class Warehouse:
         """
         final = self.path(namespace, table)
         tmp = final.parent / f".{table}.tmp.{uuid.uuid4().hex[:8]}"
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(str(tmp))
+        _write_parquet(df, tmp, "overwrite", partition_by)
         n = self._count_files(tmp)
         if final.exists():
             shutil.rmtree(final)
@@ -261,10 +273,7 @@ class Warehouse:
         """Plain append (Delta: ACID append commit). ``partition_by`` appends
         into hive-partition directories (new partition values create new
         dirs; existing ones gain files)."""
-        w = df.write.mode("append")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(str(self.path(namespace, table)))
+        _write_parquet(df, self.path(namespace, table), "append", partition_by)
 
     def append_evolve(self, df: DataFrame, namespace: str, table: str) -> None:
         """Schema-evolving append — the Delta ``mergeSchema`` write twin
@@ -346,12 +355,29 @@ class VersionedWarehouse(Warehouse):
     API maps to commit-log append / snapshot ids; on object storage the
     pointer is a conditional-PUT marker object.
 
-    Concurrent writers on one root — threads or processes — are
-    coordinated: ``mkdir`` claims each version number, link-forward
-    appends and compactions serialize on a per-table append lock, and the
-    pointer publish is a monotonic read-compare-replace under a per-table
-    pointer lock. Both locks are kernel ``flock``s on persistent lock files
-    (``.append.flock``, ``.ptr.flock``), so a crashed holder's lock is
+    Every write is one version commit, ``_commit_version``:
+
+    1. claim — ``mkdir`` of the next ``_vN`` (atomic; a loser re-lists
+       and takes the next number);
+    2. keepalive — a heartbeat keeps the claim's mtime fresh, so vacuum's
+       phantom sweep never takes a live writer's claim;
+    3. link — hard-link the files of a source version forward (the
+       published snapshot for an append, an old version for a restore,
+       all but one partition for a partition compaction);
+    4. write — the new files land inside the claim;
+    5. stamp — the ``.op`` label, which marks the directory as a commit;
+    6. publish — a monotonic read-compare-replace of ``_CURRENT`` under
+       the per-table pointer lock (``.ptr.flock``), then autovacuum.
+
+    The primitive takes no lock of its own besides the pointer lock in
+    step 6. ``append``, ``insert_file``, ``compact`` and
+    ``compact_partition`` hold the per-table append lock
+    (``.append.flock``) across all six steps, because they read the
+    snapshot they build on: two of them linking from one base would
+    each publish a version missing the other's rows. ``commit``,
+    ``overwrite`` and ``restore`` write whole snapshots and hold no append
+    lock; their publish is last-writer-wins. Both locks are kernel
+    ``flock``s on persistent lock files, so a crashed holder's lock is
     released when its process dies; a root whose filesystem refuses flock
     fails its first write instead of running unlocked.
 
@@ -574,7 +600,7 @@ class VersionedWarehouse(Warehouse):
         copies where the filesystem refuses links). Never links the
         ``.op`` stamp: writing the new version's label through a shared
         inode would rewrite the SOURCE version's history entry. ``skip``
-        is a relative partition path left out (compaction rewrites it)."""
+        is a relative partition path left out (the caller rewrites it)."""
         for f in sorted(src.rglob("*")):
             if f.name == ".op":
                 continue
@@ -592,13 +618,35 @@ class VersionedWarehouse(Warehouse):
                 except OSError:
                     shutil.copy2(f, dst)
 
-    def _link_forward(self, namespace: str, table: str, vdir: Path) -> None:
-        """Hard-link the published snapshot's files into a claimed new
-        version directory (Delta's append commit re-adds prior files to
-        the log)."""
+    def _commit_version(
+        self,
+        namespace: str,
+        table: str,
+        op: str,
+        write,
+        link_from: Path | None = None,
+        skip: str | None = None,
+    ) -> int:
+        """The one version commit (steps in the class docstring): claim
+        the next version, link ``link_from``'s files forward (minus the
+        relative path ``skip``), ``write(vdir)`` the new files into the
+        claim, stamp ``op``, publish. Returns the committed version. The
+        stamp lands before the publish, so a published version always
+        carries its label, and an unstamped directory is never a commit.
+        Callers that read the snapshot they build on hold the append
+        lock around this call."""
+        nxt, vdir = self._claim_next(namespace, table)
+        with self._claim_keepalive(vdir):
+            if link_from is not None:
+                self._link_files(link_from, vdir, skip=skip)
+            write(vdir)
+            self._stamp(vdir, op)
+        self._publish(namespace, table, nxt)
+        return nxt
+
+    def _published_dir(self, namespace: str, table: str) -> Path | None:
         cur = self.current_version(namespace, table)
-        if cur is not None:
-            self._link_files(self.path(namespace, table) / f"_v{cur}", vdir)
+        return None if cur is None else self.path(namespace, table) / f"_v{cur}"
 
     def append(
         self,
@@ -612,30 +660,23 @@ class VersionedWarehouse(Warehouse):
         the old version are untouched; the base swap-in-place append would
         have written files read() can never see."""
         with self._append_lock(namespace, table):
-            nxt, vdir = self._claim_next(namespace, table)
-            with self._claim_keepalive(vdir):
-                self._link_forward(namespace, table, vdir)
-                w = df.write.mode("append")
-                if partition_by:
-                    w = w.partitionBy(*partition_by)
-                w.parquet(str(vdir))
-                self._stamp(vdir, "APPEND")
-            self._publish(namespace, table, nxt)
+            self._commit_version(
+                namespace, table, "APPEND",
+                lambda vdir: _write_parquet(df, vdir, "append", partition_by),
+                link_from=self._published_dir(namespace, table),
+            )
 
     def insert_file(self, namespace: str, table: str, name: str, write_fn) -> None:
         """Driver-side single-file insert as a versioned APPEND commit:
-        claim, link the snapshot forward, write the new file, publish.
-        Keeps the audit fast path's no-Spark-job property while every row
-        lands in a readable published version."""
+        the snapshot linked forward plus the one staged file. Keeps the
+        audit row write free of Spark jobs while every row lands in a
+        readable published version."""
         with self._append_lock(namespace, table):
-            nxt, vdir = self._claim_next(namespace, table)
-            with self._claim_keepalive(vdir):
-                self._link_forward(namespace, table, vdir)
-                tmp = vdir / f".{name}.tmp"
-                write_fn(tmp)
-                os.replace(tmp, vdir / name)
-                self._stamp(vdir, "APPEND")
-            self._publish(namespace, table, nxt)
+            self._commit_version(
+                namespace, table, "APPEND",
+                lambda vdir: _stage_file(vdir, name, write_fn),
+                link_from=self._published_dir(namespace, table),
+            )
 
     def current_version(self, namespace: str, table: str) -> int | None:
         ptr = self._pointer(namespace, table)
@@ -685,15 +726,10 @@ class VersionedWarehouse(Warehouse):
         and is swept by ``vacuum``. The write APPENDS into the claimed
         empty directory (an overwrite would delete-and-recreate it, opening
         a window where a competitor could re-claim the same number)."""
-        nxt, vdir = self._claim_next(namespace, table)
-        with self._claim_keepalive(vdir):
-            w = df.write.mode("append")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(str(vdir))
-            self._stamp(vdir, op)
-        self._publish(namespace, table, nxt)
-        return nxt
+        return self._commit_version(
+            namespace, table, op,
+            lambda vdir: _write_parquet(df, vdir, "append", partition_by),
+        )
 
     def _claim_next(self, namespace: str, table: str) -> tuple[int, Path]:
         """Atomically claim the next version number (mkdir is the claim)."""
@@ -741,18 +777,16 @@ class VersionedWarehouse(Warehouse):
                 f"{namespace}.{table} version {version} is an unpublished "
                 "crashed claim — not restorable"
             )
-        nxt, vdir = self._claim_next(namespace, table)
-        with self._claim_keepalive(vdir):
-            self._link_files(src, vdir)
-        self._stamp(vdir, f"RESTORE v{version}")
-        self._publish(namespace, table, nxt)
-        return nxt
+        return self._commit_version(
+            namespace, table, f"RESTORE v{version}", lambda vdir: None,
+            link_from=src,
+        )
 
     def _is_committed(self, namespace: str, table: str, version: int) -> bool:
         """A version directory is a real commit iff it carries the .op
         stamp (written only after its data write succeeded) or is the
         published pointer target. A claim abandoned mid-write — including
-        one already half-filled by _link_forward — fails this test."""
+        one already half-filled by its link step — fails this test."""
         vdir = self.path(namespace, table) / f"_v{version}"
         return (vdir / ".op").exists() or self.current_version(
             namespace, table
@@ -871,8 +905,27 @@ class VersionedWarehouse(Warehouse):
         store that means duplicate signatures defeat the anti-join replay
         guard and near-dup candidates vanish."""
         with self._append_lock(namespace, table):
-            return self._compact_partition_locked(
-                namespace, table, partition, target_files
+            src = self.data_dir(namespace, table)
+            pdir = src / partition
+            if not pdir.is_dir():
+                raise FileNotFoundError(
+                    f"{namespace}.{table} {src.name[1:]} has no partition "
+                    f"{partition!r}"
+                )
+            # basePath keeps the partition columns during the read; they are
+            # dropped before writing back INTO the partition directory (the
+            # directory name is the value)
+            df = (
+                self.spark.read.option("basePath", str(src))
+                .parquet(str(pdir))
+                .repartition(target_files)
+            )
+            for part in partition.split("/"):
+                df = df.drop(part.split("=", 1)[0])
+            return self._commit_version(
+                namespace, table, f"OPTIMIZE {partition}",
+                lambda vdir: _write_parquet(df, vdir / partition, "append"),
+                link_from=src, skip=partition,
             )
 
     def compact(
@@ -893,42 +946,6 @@ class VersionedWarehouse(Warehouse):
         number); read ``current_version`` for the published version."""
         with self._append_lock(namespace, table):
             return super().compact(namespace, table, target_files, cluster_by)
-
-    def _compact_partition_locked(
-        self,
-        namespace: str,
-        table: str,
-        partition: str,
-        target_files: int,
-    ) -> int:
-        cur = self.current_version(namespace, table)
-        if cur is None:
-            raise FileNotFoundError(
-                f"{namespace}.{table} has no committed version"
-            )
-        src = self.path(namespace, table) / f"_v{cur}"
-        pdir = src / partition
-        if not pdir.is_dir():
-            raise FileNotFoundError(
-                f"{namespace}.{table} v{cur} has no partition {partition!r}"
-            )
-        # basePath keeps the partition columns during the read; they are
-        # dropped before writing back INTO the partition directory (the
-        # directory name is the value)
-        df = (
-            self.spark.read.option("basePath", str(src))
-            .parquet(str(pdir))
-            .repartition(target_files)
-        )
-        for part in partition.split("/"):
-            df = df.drop(part.split("=", 1)[0])
-        nxt, vdir = self._claim_next(namespace, table)
-        with self._claim_keepalive(vdir):
-            self._link_files(src, vdir, skip=partition)
-            df.write.mode("append").parquet(str(vdir / partition))
-            self._stamp(vdir, f"OPTIMIZE {partition}")
-        self._publish(namespace, table, nxt)
-        return nxt
 
     # A claim directory younger than this is treated as a possibly-in-flight
     # write and never swept. LIVE writers keep their claim's mtime fresh for

@@ -7,7 +7,8 @@ same batch is a no-op — the idempotence guarantee the reference relies on
 for replayed file drops.
 
 M3 (reference: 4_silver/silver_products.py:75-82 et al.): TRUNCATE +
-INSERT SELECT ⇒ ``mode("overwrite")`` of the conformed batch.
+INSERT SELECT ⇒ ``Warehouse.overwrite`` of the conformed batch; the new
+table state is exactly the batch, so M3 needs no operator here.
 """
 
 from __future__ import annotations
@@ -24,11 +25,6 @@ def append_if_absent(target: DataFrame, batch: DataFrame, key: str) -> DataFrame
     """
     new_rows = batch.join(target.select(key), on=key, how="left_anti")
     return target.unionByName(new_rows)
-
-
-def full_refresh(batch: DataFrame) -> DataFrame:
-    """M3 — the new table state is exactly the conformed batch."""
-    return batch
 
 
 def table_diff(

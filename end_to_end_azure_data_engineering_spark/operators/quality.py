@@ -52,16 +52,16 @@ def inverted_range(start_col: str, end_col: str) -> Column:
     return F.col(end_col).isNotNull() & (F.col(end_col) < F.col(start_col))
 
 
-def apply_quarantine(df: DataFrame, rules: list[Column], flag: str = "is_quarantined") -> DataFrame:
-    """OR all rule predicates into the quarantine flag. NULL predicate results
-    (e.g. comparisons on NULL) are treated as not-violating, matching the
-    reference's boolean OR-chain under coalesce-to-false semantics."""
-    if not rules:
-        return df.withColumn(flag, F.lit(False))
+def apply_quarantine(df: DataFrame, rules: list[Column]) -> DataFrame:
+    """OR all rule predicates into ``is_quarantined`` (the flag
+    ``current_valid`` and the gold builders filter on). NULL predicate
+    results (e.g. comparisons on NULL) are treated as not-violating,
+    matching the reference's boolean OR-chain under coalesce-to-false
+    semantics."""
     combined = F.lit(False)
     for r in rules:
         combined = combined | F.coalesce(r, F.lit(False))
-    return df.withColumn(flag, combined)
+    return df.withColumn("is_quarantined", combined)
 
 
 def current_valid(df: DataFrame) -> DataFrame:

@@ -29,6 +29,9 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: the stored type of every ``sum_<c>`` column
+SUM_DECIMAL = "decimal(28,6)"
+
 
 def rollup_batch(
     df: DataFrame,
@@ -36,7 +39,6 @@ def rollup_batch(
     sum_cols: Sequence[str] = (),
     minmax_cols: Sequence[str] = (),
     distinct_cols: Sequence[str] = (),
-    sum_decimal: str = "decimal(28,6)",
 ) -> DataFrame:
     """Aggregate one batch into mergeable partial-aggregate form.
 
@@ -46,7 +48,7 @@ def rollup_batch(
     """
     aggs = [F.count("*").alias("n_rows")]
     for c in sum_cols:
-        aggs.append(F.sum(F.col(c).cast(sum_decimal)).alias(f"sum_{c}"))
+        aggs.append(F.sum(F.col(c).cast(SUM_DECIMAL)).alias(f"sum_{c}"))
     for c in minmax_cols:
         aggs.append(F.min(c).alias(f"min_{c}"))
         aggs.append(F.max(c).alias(f"max_{c}"))

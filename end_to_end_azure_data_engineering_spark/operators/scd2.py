@@ -41,12 +41,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _any_changed(compare_cols: list[str], src_prefix: str = "_src_") -> Column:
+def _any_changed(compare_cols: list[str]) -> Column:
     """Null-unsafe `<>` OR-chain: fires only when both sides non-null and
     different — literal reference semantics (silver_transactions.py:127-143)."""
     cond = F.lit(False)
     for c in compare_cols:
-        cond = cond | (F.col(c) != F.col(f"{src_prefix}{c}"))
+        cond = cond | (F.col(c) != F.col(f"_src_{c}"))
     return F.coalesce(cond, F.lit(False))
 
 

@@ -9,25 +9,24 @@ only sanctioned driver-side collect in the engine.
 Audit bracketing (M5): a STARTED row before work, SUCCESS/FAILED after,
 with rows_processed and error_message (1_audit/audit_start.py:76-105,
 audit_end.py:53-101). The reference builds INSERT strings by hand with
-manual quote-escaping; we write typed rows through the DataFrame API, which
-removes its SQL-injection surface entirely.
+manual quote-escaping; we write typed rows (an Arrow table under
+``AUDIT_SCHEMA``), which removes its SQL-injection surface entirely.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 import os
-import threading
 from collections.abc import Iterator
 from contextlib import contextmanager
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..engine.clock import Clock, SystemClock
-from ..engine.tableio import Warehouse
+from ..engine.tableio import VersionedWarehouse, Warehouse
 
 AUDIT_SCHEMA = T.StructType(
     [
@@ -68,13 +67,6 @@ class AuditRun:
 class AuditLog:
     wh: Warehouse
     clock: Clock = None  # type: ignore[assignment]
-    # Parallel stages bracket concurrently, but parquet appends to one path
-    # are NOT safe concurrently: every job stages under <path>/_temporary/0,
-    # and the first commit's cleanup deletes the other jobs' staging files
-    # (transient FAILED rows observed in the DAG tests). Raw-parquet audit
-    # therefore serializes inserts; on Delta the append is an ACID commit and
-    # the lock is unnecessary.
-    _write_lock: threading.Lock = field(default_factory=threading.Lock, repr=False)
 
     def __post_init__(self):
         if self.clock is None:
@@ -91,6 +83,18 @@ class AuditLog:
             self.wh.set_retention(NAMESPACE, TABLE, 8)
 
     def _insert(self, **kw) -> None:
+        """Write one audit row as a one-row parquet file on the driver
+        (Arrow), through the warehouse's file-insert hook: no Spark job,
+        and a unique file name per row, so parallel stages insert without
+        a lock. The plain warehouse stages the file under a dot-name and
+        renames it into the table; a VersionedWarehouse publishes it as
+        an APPEND version. A failed write raises."""
+        import uuid
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         now = self.clock.now()
         row = {
             "source_system": kw.get("source_system"),
@@ -104,49 +108,9 @@ class AuditLog:
             "error_message": kw.get("error_message"),
             "inserted_at": now,
         }
-        # Fast path: write the one-row parquet file driver-side (Arrow) —
-        # a full Spark job per audit row cost ~0.3s × 2 rows × every
-        # pipeline stage, which dominated the ingestion phase wall in the
-        # end-to-end benchmark. Unique file names make concurrent inserts
-        # safe without the lock; logical types match Spark's writer
-        # exactly (verified mixed-file reads + watermark fetch in
-        # tests/test_audit_bracketing + the pipeline bench suite).
-        try:
-            self._insert_arrow(row)
-        except Exception:
-            df = self.wh.spark.createDataFrame(
-                [tuple(row[f.name] for f in AUDIT_SCHEMA)], AUDIT_SCHEMA
-            )
-            with self._write_lock:
-                self.wh.append(df, NAMESPACE, TABLE)
-
-    def _insert_arrow(self, row: dict) -> None:
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        schema = pa.schema(
-            [
-                pa.field("source_system", pa.string()),
-                pa.field("source_object", pa.string()),
-                pa.field("run_date", pa.date32()),
-                pa.field("status", pa.string()),
-                pa.field("rows_processed", pa.int64()),
-                pa.field("watermark_value", pa.string()),
-                pa.field("start_time", pa.timestamp("us", tz="UTC")),
-                pa.field("end_time", pa.timestamp("us", tz="UTC")),
-                pa.field("error_message", pa.string()),
-                pa.field("inserted_at", pa.timestamp("us", tz="UTC")),
-            ]
+        tbl = pa.table(
+            {k: [v] for k, v in row.items()}, schema=to_arrow_schema(AUDIT_SCHEMA)
         )
-        tbl = pa.table({k: [v] for k, v in row.items()}, schema=schema)
-        # insert through the warehouse's file-insert hook: the plain
-        # warehouse stages under a dot-name and atomically renames into the
-        # table root (an interrupted write never leaves a footerless
-        # partial visible); a VersionedWarehouse publishes the file as a
-        # proper APPEND version, so audit rows stay visible to its
-        # version-pointer reads
         name = f"part-audit-{uuid.uuid4().hex}.parquet"
         self.wh.insert_file(
             NAMESPACE, TABLE, name, lambda tmp: pq.write_table(tbl, tmp)
@@ -239,30 +203,19 @@ class AuditLog:
         Crash window: after output lands, before sources are deleted ⇒
         duplicate audit rows, which the readers tolerate (watermark fetch
         takes the latest row; duplicated telemetry rows are benign) — rows
-        are never lost. Returns the file count after the sweep."""
-        if hasattr(self.wh, "_append_lock"):
-            # MVCC warehouse: versions are immutable, so in-place file
-            # surgery is wrong AND unnecessary — compaction is simply a new
-            # OVERWRITE version. The append lock serializes against racing
-            # row inserts (an insert publishing between our read and our
-            # publish would otherwise be superseded and lost).
-            with self.wh._append_lock(NAMESPACE, TABLE):
-                sources = sorted(
-                    str(f) for f in self.wh.data_dir(NAMESPACE, TABLE).glob("*.parquet")
-                )
-                if len(sources) <= target_files:
-                    return len(sources)
-                compacted = (
-                    self.wh.spark.read.parquet(*sources)
-                    .repartitionByRange(target_files, "inserted_at")
-                    .sortWithinPartitions("inserted_at")
-                )
-                self.wh.overwrite(compacted, NAMESPACE, TABLE)
-            return len(list(self.wh.data_dir(NAMESPACE, TABLE).glob("*.parquet")))
+        are never lost. Returns the file count after the sweep.
+
+        On a VersionedWarehouse versions are immutable, so the sweep is
+        its ``compact``: one OVERWRITE version under the table's append
+        lock, which row inserts also hold, so none is lost."""
         path = self.wh.data_dir(NAMESPACE, TABLE)
         sources = sorted(str(f) for f in path.glob("*.parquet"))
         if len(sources) <= target_files:
             return len(sources)
+        if isinstance(self.wh, VersionedWarehouse):
+            return self.wh.compact(
+                NAMESPACE, TABLE, target_files, cluster_by=["inserted_at"]
+            )
         compacted = (
             self.wh.spark.read.parquet(*sources)
             .repartitionByRange(target_files, "inserted_at")
@@ -273,14 +226,13 @@ class AuditLog:
 
         tmp = path.parent / f".{TABLE}.compact.{_uuid.uuid4().hex[:8]}"
         compacted.write.mode("overwrite").parquet(str(tmp))
-        with self._write_lock:
-            for f in tmp.glob("*.parquet"):
-                os.replace(f, path / f"part-compacted-{_uuid.uuid4().hex}.parquet")
-            for s in sources:
-                try:
-                    os.remove(s)
-                except FileNotFoundError:
-                    pass
+        for f in tmp.glob("*.parquet"):
+            os.replace(f, path / f"part-compacted-{_uuid.uuid4().hex}.parquet")
+        for s in sources:
+            try:
+                os.remove(s)
+            except FileNotFoundError:
+                pass
         shutil.rmtree(tmp, ignore_errors=True)
         return len(list(path.glob("*.parquet")))
 

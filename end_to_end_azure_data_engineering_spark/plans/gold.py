@@ -18,7 +18,6 @@ import datetime as _dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..engine.clock import Clock
 from ..engine.tableio import Warehouse
 from ..operators.quality import current_valid
 
@@ -170,9 +169,3 @@ GOLD_DEPS = {
     "fact_dispute": ["dim_customer", "dim_account"],
 }
 
-
-def refresh_gold(wh: Warehouse, clock: Clock, tables: list[str] | None = None) -> None:
-    """M3 full refresh of the star schema (truncate+insert ⇒ overwrite)."""
-    now = clock.now()
-    for name in tables or list(GOLD_BUILDERS):
-        wh.overwrite(GOLD_BUILDERS[name](wh, now), "gold", name)

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from ..engine.clock import Clock, SystemClock
 from ..engine.tableio import Warehouse
 from .audit import AuditLog
-from .gold import GOLD_BUILDERS, GOLD_DEPS, refresh_gold
+from .gold import GOLD_BUILDERS, GOLD_DEPS
 from .runner import DagRunner, Stage
 from .silver import SILVER_SPECS, conform_entity, load_entity
 
@@ -95,7 +95,8 @@ def run_pipeline(
     bronze: dict[str, list[tuple[DataFrame, str | None]]],
     clock: Clock | None = None,
 ) -> None:
-    """pl_master.json:5-60 — ingestion → silver → gold, sequential phases."""
+    """pl_master.json:5-60 without its ingestion phase: silver → gold,
+    sequential phases, over already-landed ``bronze`` frames."""
     clock = clock or SystemClock()
     audit = AuditLog(wh, clock)
     run_silver(wh, bronze, clock, audit)

@@ -28,13 +28,13 @@ def incremental_ingest(
     source_object: str,
     read_fn: Callable[[str], DataFrame],
     wm_col: str,
-    bronze_namespace: str = "bronze",
     layout: str = "stamped",
 ) -> str:
     """Run one audited incremental load; returns the landed table name.
 
     ``read_fn(last_wm)`` performs the pushdown-filtered read (JDBC or
     parquet stand-in) — empty watermark means full scan (S6 semantics).
+    The batch lands in the ``bronze`` namespace.
 
     ``layout``:
     - ``"stamped"`` (reference parity): each batch lands as its own
@@ -52,18 +52,18 @@ def incremental_ingest(
         if layout == "partitioned":
             table = source_object
             batch = df.withColumn("_ingest_stamp", F.lit(stamp))
-            wh.append(batch, bronze_namespace, table, partition_by=["_ingest_stamp"])
-            landed_batch = wh.read(bronze_namespace, table).filter(
+            wh.append(batch, "bronze", table, partition_by=["_ingest_stamp"])
+            landed_batch = wh.read("bronze", table).filter(
                 F.col("_ingest_stamp") == stamp
             )
             run.rows_processed = landed_batch.count()
             landed = landed_batch
         else:
             table = f"{source_object}_{stamp}"
-            run.rows_processed = wh.overwrite(df, bronze_namespace, table)
+            run.rows_processed = wh.overwrite(df, "bronze", table)
             # A1 — max-watermark capture on the landed file
             # (1_audit/catch_new_watermark_value.py:21-44)
-            landed = wh.read(bronze_namespace, table)
+            landed = wh.read("bronze", table)
         new_wm_row = landed.agg(F.max(wm_col).cast("string").alias("wm")).collect()
         new_wm = new_wm_row[0][0] if new_wm_row else None
         # P13 — coalesce new→old (pl_sql_copy_bronze.json:758)

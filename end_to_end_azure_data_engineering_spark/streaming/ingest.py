@@ -142,6 +142,39 @@ def _stamp_watermarks(df: DataFrame, wms: dict[str, int]) -> DataFrame:
     return df.withColumn("_wm", F.lit(json.dumps(wms, sort_keys=True)))
 
 
+def _standing_or_skip(
+    wh: Warehouse, namespace: str, table: str, batch: DataFrame, epoch: int
+) -> tuple[DataFrame | None, dict[str, int]] | None:
+    """Read half of the sinks' replay guard. foreachBatch is
+    at-least-once: a failure retry, a restart from checkpoint mid-epoch,
+    or a replay by an OLDER lineage after other streams have written can
+    re-deliver a batch. The per-lineage epoch marks ride IN the standing
+    table (see _load_watermarks), so a re-delivered batch sees its own
+    lineage's mark: None, and the caller skips it instead of folding it
+    in twice. A genuinely new lineage (fresh checkpoint, epochs reset to
+    0) has no mark. Otherwise ``(standing, marks)``: the standing table
+    without BOOKKEEPING_COLS (None before its first publish) and its
+    lineage→epoch marks, already advanced to ``epoch`` for
+    ``_publish_with_marks``."""
+    qid = _query_lineage_id(batch.sparkSession)
+    if not wh.exists(namespace, table):
+        return None, {qid: epoch}
+    existing = wh.read(namespace, table)
+    marks = _load_watermarks(existing)
+    if marks.get(qid, -1) >= epoch:
+        return None
+    marks[qid] = epoch
+    return existing.drop(*BOOKKEEPING_COLS), marks
+
+
+def _publish_with_marks(
+    wh: Warehouse, df: DataFrame, namespace: str, table: str, marks: dict[str, int]
+) -> None:
+    """Publish half of the replay guard: the folded data and the advanced
+    marks land in ONE overwrite, so a crash leaves both or neither."""
+    wh.overwrite(_stamp_watermarks(df, marks), namespace, table)
+
+
 def stream_files(
     spark: SparkSession, path: str, schema: T.StructType, fmt: str = "parquet"
 ) -> DataFrame:
@@ -301,20 +334,17 @@ def rollup_stream_sink(
     gold refresh, and the production home of the rollup operator. Consumers
     read through rollup.read_rollup for averages / distinct estimates.
 
-    Replay-safe under foreachBatch's at-least-once contract: the applied
-    per-lineage epoch high-water marks are stored IN the rollup table (the
-    ``_wm`` map column — see _load_watermarks), so data and high-water
-    marks publish in one atomic overwrite swap. A re-delivered micro-batch
-    (failure retry, restart from checkpoint mid-epoch, or a replay by an
-    OLDER lineage after other streams have written) sees its own lineage's
-    mark and is skipped instead of being double-counted; a genuinely new
-    lineage (fresh checkpoint, epochs reset to 0) has no mark and folds in
-    normally.
+    Replay-safe under foreachBatch's at-least-once contract through the
+    sinks' replay guard (_standing_or_skip / _publish_with_marks): data and
+    per-lineage epoch marks publish in one atomic overwrite.
     """
     from ..operators.rollup import merge_rollups, rollup_batch
 
     def sink(batch: DataFrame, epoch: int) -> None:
-        qid = _query_lineage_id(batch.sparkSession)
+        guard = _standing_or_skip(wh, namespace, table, batch, epoch)
+        if guard is None:
+            return  # at-least-once replay: already folded in
+        standing, marks = guard
         delta = rollup_batch(
             batch,
             keys=keys,
@@ -322,19 +352,10 @@ def rollup_stream_sink(
             minmax_cols=minmax_cols or [],
             distinct_cols=distinct_cols or [],
         )
-        if wh.exists(namespace, table):
-            existing = wh.read(namespace, table)
-            wms = _load_watermarks(existing)
-            if wms.get(qid, -1) >= epoch:
-                return  # at-least-once replay: already folded in
-            merged = merge_rollups(
-                existing.drop(*BOOKKEEPING_COLS), delta, keys=keys
-            )
-        else:
-            wms = {}
-            merged = delta
-        wms[qid] = epoch
-        wh.overwrite(_stamp_watermarks(merged, wms), namespace, table)
+        merged = (
+            delta if standing is None else merge_rollups(standing, delta, keys=keys)
+        )
+        _publish_with_marks(wh, merged, namespace, table, marks)
 
     return sink
 
@@ -352,15 +373,15 @@ def cms_stream_sink(
     sketch's defining property, so the continuously-maintained sketch is
     bit-identical to a one-shot batch build over the same events. Heavy-
     hitter queries probe it without touching history (cms_heavy_hitters'
-    probe side). Replay-safe exactly like rollup_stream_sink: per-lineage
-    epoch watermarks ride IN the table (``_wm`` map column), so an
-    at-least-once re-delivery — by the live lineage or an older one — is
-    skipped, and data + high-water marks publish in one atomic overwrite
-    swap."""
+    probe side). Replay-safe through the sinks' replay guard, like
+    rollup_stream_sink."""
     from ..functions import sketches as S
 
     def sink(batch: DataFrame, epoch: int) -> None:
-        qid = _query_lineage_id(batch.sparkSession)
+        guard = _standing_or_skip(wh, namespace, table, batch, epoch)
+        if guard is None:
+            return  # at-least-once replay: already folded in
+        standing, marks = guard
         delta = (
             batch.select(
                 F.explode(S.cms_entries(F.col(key_col).cast("string"))).alias("e")
@@ -369,22 +390,12 @@ def cms_stream_sink(
             .groupBy("j", "b")
             .agg(F.count("*").alias("c"))
         )
-        if wh.exists(namespace, table):
-            existing = wh.read(namespace, table)
-            wms = _load_watermarks(existing)
-            if wms.get(qid, -1) >= epoch:
-                return  # at-least-once replay: already folded in
-            merged = (
-                existing.drop(*BOOKKEEPING_COLS)
-                .unionByName(delta)
-                .groupBy("j", "b")
-                .agg(F.sum("c").alias("c"))
-            )
-        else:
-            wms = {}
-            merged = delta
-        wms[qid] = epoch
-        wh.overwrite(_stamp_watermarks(merged, wms), namespace, table)
+        merged = (
+            delta
+            if standing is None
+            else standing.unionByName(delta).groupBy("j", "b").agg(F.sum("c").alias("c"))
+        )
+        _publish_with_marks(wh, merged, namespace, table, marks)
 
     return sink
 
@@ -415,8 +426,7 @@ def topk_stream_sink(
       ``true_count > _off`` is guaranteed present — the MG deficiency
       bound, asserted by the batch-parity test.
 
-    Replay-safe like the other sinks: per-lineage ``_wm`` watermarks ride
-    in the table and publish atomically with the data. Because ``_wm`` and
+    Replay-safe through the sinks' replay guard. Because ``_wm`` and
     ``_off`` are literal columns on ROWS, a legitimately EMPTY summary —
     all top k+1 counts tie, so the MG subtraction zeroes every counter —
     would otherwise publish zero rows and silently drop every lineage's
@@ -426,31 +436,28 @@ def topk_stream_sink(
     the data rows with ``WHERE key IS NOT NULL``."""
 
     def sink(batch: DataFrame, epoch: int) -> None:
-        spark = batch.sparkSession
-        qid = _query_lineage_id(spark)
+        guard = _standing_or_skip(wh, namespace, table, batch, epoch)
+        if guard is None:
+            return  # at-least-once replay: already folded in
+        standing, marks = guard
         delta = (
             batch.select(F.col(key_col).cast("string").alias("key"))
             .groupBy("key")
             .agg(F.count("*").alias("c"))
         )
         off = 0
-        if wh.exists(namespace, table):
-            existing = wh.read(namespace, table)
-            wms = _load_watermarks(existing)
-            if wms.get(qid, -1) >= epoch:
-                return  # at-least-once replay: already folded in
-            row = existing.select("_off").first()
+        if standing is None:
+            combined = delta
+        else:
+            row = standing.select("_off").first()
             off = int(row["_off"]) if row is not None else 0
             combined = (
-                existing.where(F.col("key").isNotNull())
-                .drop(*BOOKKEEPING_COLS, "_off")
+                standing.where(F.col("key").isNotNull())
+                .drop("_off")
                 .unionByName(delta)
                 .groupBy("key")
                 .agg(F.sum("c").alias("c"))
             )
-        else:
-            wms = {}
-            combined = delta
         # (k+1)-th largest count = the subtraction threshold. The collect
         # is bounded at k+1 rows by construction — never corpus-sized.
         top = combined.orderBy(F.col("c").desc(), "key").limit(k + 1).collect()
@@ -463,17 +470,15 @@ def topk_stream_sink(
         else:
             summary = combined
         # bookkeeping sentinel: _wm/_off survive even a zero-data-row MG state
-        sentinel = spark.createDataFrame(
+        sentinel = batch.sparkSession.createDataFrame(
             [(None, None)], schema="key string, c bigint"
         )
-        wms[qid] = epoch
-        wh.overwrite(
-            _stamp_watermarks(
-                summary.unionByName(sentinel).withColumn("_off", F.lit(off)),
-                wms,
-            ),
+        _publish_with_marks(
+            wh,
+            summary.unionByName(sentinel).withColumn("_off", F.lit(off)),
             namespace,
             table,
+            marks,
         )
 
     return sink
@@ -586,17 +591,11 @@ def dedup_stream_sink(
                 wh.set_retention(namespace, t, 2)
 
     def sink(batch: DataFrame, epoch: int) -> None:
+        guard = _standing_or_skip(wh, namespace, state_table, batch, epoch)
+        if guard is None:
+            return  # at-least-once replay: already folded in
+        old_state, marks = guard
         spark = batch.sparkSession
-        qid = _query_lineage_id(spark)
-        if wh.exists(namespace, state_table):
-            st = wh.read(namespace, state_table)
-            wms = _load_watermarks(st)
-            if wms.get(qid, -1) >= epoch:
-                return  # at-least-once replay: already folded in
-            old_state = st.drop(*BOOKKEEPING_COLS)
-        else:
-            wms = {}
-            old_state = None
 
         sig_new = sign_corpus(
             batch.select(id_col, text_col).dropDuplicates([id_col]),
@@ -701,10 +700,7 @@ def dedup_stream_sink(
                     ),
                     cluster_by=["_id"],
                 )
-        wms[qid] = epoch
-        wh.overwrite(
-            _stamp_watermarks(new_state, wms), namespace, state_table
-        )
+        _publish_with_marks(wh, new_state, namespace, state_table, marks)
         corpus_sig.unpersist()
         sig_new.unpersist()
         # the state frame is a localCheckpoint: plain unpersist is a no-op

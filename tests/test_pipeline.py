@@ -146,6 +146,45 @@ def test_audit_bracket_rows(spark, tmp_path):
     ]
 
 
+def test_audit_insert_failure_raises(spark, tmp_path, monkeypatch):
+    """A failed audit row write raises to the caller instead of landing
+    the row through a second write path; no row is written."""
+    wh = Warehouse(spark, str(tmp_path / "insert_fail_wh"))
+    audit = AuditLog(wh, FixedClock(dt.datetime(2024, 3, 1)))
+
+    def refuse(*_args, **_kwargs):
+        raise OSError(28, "No space left on device")
+
+    monkeypatch.setattr(wh, "insert_file", refuse)
+    with pytest.raises(OSError, match="No space left"):
+        audit.start("bank_a", "x")
+    monkeypatch.undo()
+    assert audit.read().count() == 0
+
+
+def test_audit_compact_on_versioned_warehouse(spark, tmp_path):
+    """On an MVCC warehouse the audit sweep is one OVERWRITE version that
+    keeps every row; a table already at the target is left alone."""
+    from end_to_end_azure_data_engineering_spark.engine.tableio import (
+        VersionedWarehouse,
+    )
+
+    vwh = VersionedWarehouse(spark, str(tmp_path / "audit_vwh"))
+    audit = AuditLog(vwh, FixedClock(dt.datetime(2024, 3, 1)))
+    for obj in ("a", "b", "c"):
+        with audit.bracket("bank_a", obj) as run:
+            run.rows_processed = 1
+    n_rows = audit.read().count()
+    v_before = vwh.current_version("audit", "audit_logs")
+    assert audit.compact(target_files=1) == 1
+    assert vwh.history("audit", "audit_logs")[0]["operation"] == "OVERWRITE"
+    assert audit.read().count() == n_rows == 6
+    v_after = vwh.current_version("audit", "audit_logs")
+    assert v_after > v_before
+    assert audit.compact(target_files=1) == 1
+    assert vwh.current_version("audit", "audit_logs") == v_after
+
+
 def test_idempotent_rerun_settlements_and_scd2(spark, wh):
     """M2: re-running the same batch adds no rows. M1: SCD2 history stable."""
     before_st = wh.read("silver", "settlements").count()
