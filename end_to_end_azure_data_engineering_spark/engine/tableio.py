@@ -26,18 +26,18 @@ from pyspark.sql.types import StructType
 
 # Spark's parquet writer stores the written frame's schema in every
 # file's footer under this key; schema inference prefers it over the
-# parquet types.
-_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+# parquet types. Driver-side writers (the audit log) set it too.
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _footer_schema(root: Path) -> StructType | None:
     """The schema Spark's non-merging inference would return for the table
     at ``root``, read on the driver from one footer, or None where only
     Spark can tell. Inference touches one file, the first data file in
-    path order, and takes the schema stored under ``_SPARK_SCHEMA_KEY``
+    path order, and takes the schema stored under ``SPARK_SCHEMA_KEY``
     when the file has it. None for a table without data files, one whose
-    first file lacks the key (pyarrow-written audit rows), and one with
-    parquet summary files, which inference would read first."""
+    first file lacks the key (a file pyarrow wrote without it), and one
+    with parquet summary files, which inference would read first."""
     import pyarrow.parquet as pq
 
     names = [f for f in root.rglob("*") if f.is_file()]
@@ -55,7 +55,7 @@ def _footer_schema(root: Path) -> StructType | None:
     )
     if not data:
         return None
-    raw = (pq.read_metadata(data[0]).metadata or {}).get(_SPARK_SCHEMA_KEY)
+    raw = (pq.read_metadata(data[0]).metadata or {}).get(SPARK_SCHEMA_KEY)
     if raw is None:
         return None
     return StructType.fromJson(json.loads(raw))

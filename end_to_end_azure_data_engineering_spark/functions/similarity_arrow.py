@@ -4,34 +4,28 @@ The engine's default similarity kernels are JVM-side expressions
 (functions/similarity.py): zero serialization, oracle-exact, the right
 default. This module is the OTHER legitimate regime the brief's UDF policy
 allows: when a numeric kernel outgrows what codegen'd scalar expressions do
-well (huge probe batches, wide matrices, future GPU offload), a
-`mapInPandas` stage moves each partition across Arrow once and runs the
-whole batch as one BLAS matmul in numpy — batch-bounded memory, no per-row
-Python.
+well, a `mapInPandas` stage moves each partition across Arrow once and runs
+the whole batch in numpy — batch-bounded memory, no per-row Python.
 
-Numerics caveat, stated precisely: numpy accumulates dot products in a
-different order (pairwise/SIMD) than the expression fold, so scores can
-differ in the last ulp and equal-score ties may swap. That is why
-`cosine_topk_arrow` backs NO oracle query — `tests/test_similarity_arrow.py`
-asserts parity against the expression form with an explicit tolerance
-instead. Use the expression kernels wherever bit-reproducibility is part of
-the contract.
-
-EXCEPTION — the BIT-EXACT assignment kernels (r13 optimization round):
-`assign_sq_l2_arrow` and `assign_cosine_cid_arrow` accumulate dim-by-dim in
-an explicit Python loop over vectorized per-dim numpy ops, so every
-(row, cell) reduction performs IEEE-754 double adds in EXACTLY the order of
-the expression fold ``(((0+t1)+t2)+…)`` — multiplication, addition, division
-and sqrt are all correctly-rounded deterministic IEEE ops, so the scores are
-bit-identical to the interpreted zip_with/aggregate form, ties included
-(asserted over full fixtures in tests/test_similarity_arrow.py and by the
-unchanged oracle hashes of kmeans_lloyd_3iter / ann_ivf_topk /
-ann_ivf_refined_topk). These exist because the HOF lambdas evaluate
-INTERPRETED (~100 µs/row/dot at d=64, guide §4): the K-cell codebook ranking
-was the dominant executor cost of every kmeans/IVF query (measured 0.35 s
-per pass over 2 k rows at sf0.1 vs ~0.02 s here), while the unrolled codegen
-alternative blows up the optimizer (see ivf_index_frames' NOTE). The batch
-shape is exactly guide §4.2: Spark distributes, numpy does the K×d math.
+Every kernel here backs an oracle-hashed query, so each is BIT-EXACT
+against the expression form it replaces. The assignment folds
+(`assign_cosine_cid_arrow`, the assignment half of
+`lloyd_decimal_partials_arrow`) accumulate dim-by-dim in an explicit
+Python loop over vectorized per-dim numpy ops, so every (row, cell)
+reduction performs IEEE-754 double adds in EXACTLY the order of the
+expression fold ``(((0+t1)+t2)+…)`` — multiplication, addition, division
+and sqrt are all correctly-rounded deterministic IEEE ops, so the scores
+are bit-identical to the interpreted zip_with/aggregate form, ties
+included (asserted over full fixtures in tests/test_similarity_arrow.py
+and by the unchanged oracle hashes of the kmeans and IVF queries). numpy's
+own matmul accumulates in a different (pairwise/SIMD) order and is used
+only where the sums are exact integers (`int_gram_partials_arrow`). These
+exist because the HOF lambdas evaluate INTERPRETED (~100 µs/row/dot at
+d=64, guide §4): the K-cell codebook ranking was the dominant executor
+cost of every kmeans/IVF query (measured 0.35 s per pass over 2 k rows at
+sf0.1 vs ~0.02 s here), while the unrolled codegen alternative blows up
+the optimizer (see ivf_index_frames' NOTE). The batch shape is exactly
+guide §4.2: Spark distributes, numpy does the K×d math.
 """
 
 from __future__ import annotations
@@ -41,7 +35,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DecimalType,
     IntegerType,
@@ -49,52 +42,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-
-def assign_sq_l2_arrow(
-    df: DataFrame, vec_col: str, centroids: list[list[float]], out_col: str = "cell"
-) -> DataFrame:
-    """Append the 0-based argmin-squared-L2 centroid index — BIT-IDENTICAL
-    to operators/kmeans.nearest_cell (see module docstring): per-dim
-    ``acc += (x_d - c_d)²`` in ascending dim order reproduces the
-    aggregate/zip_with fold add-for-add; ``np.argmin`` returns the FIRST
-    minimum, matching the struct(dist, cell) ascending tie-break. All
-    other columns pass through the Arrow batch unchanged.
-
-    Clean-input precondition (r13 ADVICE): vectors must be non-null,
-    equal-length and NaN-free. ``np.stack`` raises on null/ragged input;
-    a NaN-bearing vector or centroid would silently diverge (np.argmin
-    selects the first NaN score, Spark's struct ordering sorts NaN last).
-    Every call site feeds staged, non-null fixed-dim embeddings."""
-    C = np.asarray(centroids, dtype=np.float64)
-    # a NEW StructType: DataFrame.schema is cached on the frame and
-    # StructType.add mutates in place — appending to it would corrupt
-    # the input frame's own schema
-    schema = StructType(
-        list(df.schema.fields) + [StructField(out_col, IntegerType())]
-    )
-    cols = df.columns
-
-    # the closure must be SELF-CONTAINED (numpy/pandas only): a reference
-    # to anything in this package would make cloudpickle serialize it by
-    # module path, and the driver harness's Python workers do not have the
-    # repo on their import path (the multimodal query's inline op set this
-    # pattern). float32 → float64 below is exact, so the stack equals
-    # Spark's as_double / per-element CAST for any stored element type.
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64, copy=False)
-            acc = np.zeros((X.shape[0], C.shape[0]))
-            for j in range(C.shape[1]):
-                diff = X[:, j : j + 1] - C[None, :, j]
-                acc += diff * diff
-            out = pdf[cols].copy()
-            out[out_col] = np.argmin(acc, axis=1).astype(np.int32)
-            yield out
-
-    return df.mapInPandas(run, schema)
 
 
 def assign_cosine_cid_arrow(
@@ -116,10 +63,11 @@ def assign_cosine_cid_arrow(
     forms (seed sample sorted by vec_id; refined = range(K)) — enforced
     with a ValueError at the call site (ivf_index_frames).
 
-    Clean-input precondition (r13 ADVICE): same as assign_sq_l2_arrow —
-    non-null, equal-length, NaN-free vectors and centroids; NaN would
-    silently diverge from the struct-ordering form (which sorts NaN
-    last), and null/ragged input fails in ``np.stack``."""
+    Clean-input precondition (r13 ADVICE): vectors and centroids must be
+    non-null, equal-length and NaN-free; NaN would silently diverge from
+    the struct-ordering form (which sorts NaN last), and null/ragged
+    input fails in ``np.stack``. Every call site feeds staged, non-null
+    fixed-dim embeddings."""
     C = np.asarray(cent_vecs, dtype=np.float64)
     cn = np.asarray(cent_norms, dtype=np.float64)
     ids = np.asarray(cent_ids, dtype=np.int32)
@@ -131,8 +79,12 @@ def assign_cosine_cid_arrow(
     )
     cols = df.columns
 
-    # self-contained closure — see assign_sq_l2_arrow on why no package
-    # reference may cross the pickle boundary
+    # the closure must be SELF-CONTAINED (numpy/pandas only): a reference
+    # to anything in this package would make cloudpickle serialize it by
+    # module path, and the driver harness's Python workers do not have the
+    # repo on their import path (the multimodal query's inline op set this
+    # pattern). float32 → float64 below is exact, so the stack equals
+    # Spark's as_double / per-element CAST for any stored element type.
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
@@ -175,7 +127,7 @@ def int_gram_partials_arrow(df: DataFrame, qarr_col: str) -> DataFrame:
         ]
     )
 
-    # self-contained closure (numpy/pandas only) — see assign_sq_l2_arrow
+    # self-contained closure (numpy/pandas only) — see assign_cosine_cid_arrow
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         gram = None
         for pdf in batches:
@@ -203,8 +155,10 @@ def lloyd_decimal_partials_arrow(
     df: DataFrame, vec_col: str, centroids: list[list[float]]
 ) -> DataFrame:
     """FUSED Lloyd iteration map stage (r14, VERDICT item 1): the
-    bit-exact squared-L2 assignment (assign_sq_l2_arrow's fold, inlined —
-    the closure must stay self-contained) PLUS the per-(cell, dim) member
+    bit-exact squared-L2 assignment (operators/kmeans.nearest_cell's fold:
+    per-dim ``acc += (x_d - c_d)²`` in ascending dim order; ``np.argmin``
+    returns the FIRST minimum, matching the struct(dist, cell) ascending
+    tie-break) PLUS the per-(cell, dim) member
     count and DECIMAL(28,12) partial sum, in ONE Arrow pass. Emits at most
     K x d rows per partition: (cell, dim, n_part, s_part) where ``s_part``
     is the EXACT sum of ``cast(x AS DECIMAL(28,12))`` over the partition's
@@ -231,7 +185,7 @@ def lloyd_decimal_partials_arrow(
     sums accumulate as exact Python ints (no overflow at any magnitude);
     a per-batch int64 fast path is used only when provably overflow-free.
 
-    Clean-input precondition (same as the r13 kernels, stated per r13
+    Clean-input precondition (same as assign_cosine_cid_arrow, stated per r13
     ADVICE): vectors must be non-null, equal-length and NaN-free —
     ``np.stack`` raises on ragged input and the NaN guard below raises
     loudly instead of silently diverging from the expression fold.
@@ -248,7 +202,7 @@ def lloyd_decimal_partials_arrow(
     )
 
     # self-contained closure — numpy/pandas/decimal only (see
-    # assign_sq_l2_arrow on why no package reference may cross pickle)
+    # assign_cosine_cid_arrow on why no package reference may cross pickle)
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from decimal import ROUND_HALF_UP, Decimal
 
@@ -272,7 +226,7 @@ def lloyd_decimal_partials_arrow(
                     "lloyd_decimal_partials_arrow: NaN in input vectors — "
                     "bit-parity with the expression fold is undefined"
                 )
-            # --- assignment: IDENTICAL fold to assign_sq_l2_arrow ---
+            # --- assignment: IDENTICAL fold to nearest_cell_struct ---
             acc = np.zeros((X.shape[0], K))
             for j in range(D):
                 diff = X[:, j : j + 1] - C[None, :, j]
@@ -337,64 +291,3 @@ def lloyd_decimal_partials_arrow(
 
     return df.mapInPandas(run, schema)
 
-
-def cosine_topk_arrow(
-    candidates: DataFrame,
-    vec_col: str,
-    id_col: str,
-    probes: list[tuple[int, list[float]]],
-    k: int = 5,
-) -> DataFrame:
-    """Top-k cosine neighbors per probe via one matmul per Arrow batch.
-
-    `probes` is a driver-side list of (probe_id, vector) — the bounded
-    query batch, closure-captured like a broadcast. Each partition emits
-    its LOCAL top-k per probe (k·|probes| rows, a combiner), and one
-    window pass reduces to the global top-k — identical reduce shape to
-    the expression form, so the shuffle stays proportional to
-    |probes|·k·partitions, never the corpus.
-    """
-    pids = [int(p) for p, _ in probes]
-    pmat = np.asarray([v for _, v in probes], dtype=np.float64)  # P×d
-    pnorm = np.linalg.norm(pmat, axis=1)
-    pnorm[pnorm == 0.0] = 1e-12
-
-    def score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy()
-            cmat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)  # N×d
-            cnorm = np.linalg.norm(cmat, axis=1)
-            cnorm[cnorm == 0.0] = 1e-12
-            cos = (cmat @ pmat.T) / np.outer(cnorm, pnorm)  # N×P
-            out_pid, out_id, out_cos = [], [], []
-            for j, pid in enumerate(pids):
-                col = cos[:, j]
-                mask = ids != pid  # exclude self
-                col, cids = col[mask], ids[mask]
-                if len(cids) == 0:
-                    continue
-                top = min(k, len(cids))
-                # partial select then exact order: O(N + k log k) per probe
-                idx = np.argpartition(-col, top - 1)[:top]
-                order = np.lexsort((cids[idx], -col[idx]))
-                sel = idx[order]
-                out_pid.extend([pid] * len(sel))
-                out_id.extend(cids[sel].tolist())
-                out_cos.extend(col[sel].tolist())
-            yield pd.DataFrame(
-                {"probe_id": out_pid, "cand_id": out_id, "cos": out_cos}
-            )
-
-    local = candidates.select(id_col, vec_col).mapInPandas(
-        score_batches, "probe_id long, cand_id long, cos double"
-    )
-    from pyspark.sql.window import Window as W
-
-    w = W.partitionBy("probe_id").orderBy(F.col("cos").desc(), F.col("cand_id").asc())
-    return (
-        local.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("probe_id", F.col("cand_id").alias("vec_id"), "cos", "rk")
-    )

@@ -1,21 +1,26 @@
-"""Lloyd's k-means refinement for ANN codebooks (engine extension).
+"""Lloyd's k-means over a driver-side codebook (engine extension).
 
-`queries/similarity_ops.ann_ivf_topk` seeds its IVF centroid codebook with
-a deterministic sample so the DuckDB oracle can replay cell assignment;
-this operator is the production upgrade: a few Lloyd iterations over the
-corpus tighten the cells before the inverted file is built. The MLlib
-pattern throughout — centroids live on the driver (K×d is bounded, like
-any codebook), each iteration is one corpus pass:
+The one Lloyd loop behind kmeans_refine_cells, kmeans_lloyd_3iter and
+ann_ivf_refined_topk's codebook. The MLlib pattern throughout — centroids
+live on the driver (K×d is bounded, like any codebook), each iteration is
+one corpus pass:
 
-  assign:  nearest centroid per row via a LITERAL codebook (squared-L2
-           over the d-dim vector) — a narrow map, no shuffle, no crossJoin;
-  update:  posexplode to (cell, dim, value) and average per (cell, dim) —
-           one partial+final agg whose shuffle carries K×d groups, then a
+  step:    one fused Arrow map (``lloyd_decimal_partials_arrow``) assigns
+           every row to its nearest centroid by squared L2 and emits the
+           partition's per-(cell, dim) member count and DECIMAL(28,12)
+           partial sum — at most K×d rows per partition cross the shuffle;
+  update:  one tiny-key agg turns the partials into round-6 means, and a
            bounded K×d collect refreshes the driver-side codebook.
 
-At 100 TB each iteration is a scan + one tiny-key agg; convergence work
-(mini-batching, sampling the update pass) changes the input frame, not
-this loop.
+The means are quantized (exact decimal sum, one rounding) so the DuckDB
+oracle replays the whole trajectory bit for bit. Empty cells keep their
+previous centroid. At 100 TB each iteration is a scan + one tiny-key agg;
+convergence work (mini-batching, sampling the update pass) changes the
+input frame, not this loop.
+
+``nearest_cell_struct``/``nearest_cell`` are the same assignment as an
+interpreted HOF expression: the reference the fused kernel is tested
+against.
 """
 
 from __future__ import annotations
@@ -35,11 +40,6 @@ def nearest_cell_struct(vec_dbl: Column, centroids: list[list[float]]) -> Column
     struct(dist, cell): default ascending struct ordering stays on the
     interpreted-but-flat fast path (a comparator lambda would not), and
     ties break to the lowest cell id deterministically.
-
-    Returning the whole struct lets callers that need BOTH the assignment
-    and its distance (sse) evaluate the K-way fold once — Spark does not
-    CSE repeated HOF subtrees, so deriving the distance separately from
-    the selected cell would double the dominant cost.
     """
     V.check_codebook_k(len(centroids))  # literal codebooks stay bounded
     # r14: one SQL parse instead of a py4j element walk (bit-identical;
@@ -68,47 +68,63 @@ def nearest_cell(vec_dbl: Column, centroids: list[list[float]]) -> Column:
     return nearest_cell_struct(vec_dbl, centroids)["cell"]
 
 
-def kmeans_refine(
-    vectors: DataFrame,
-    vec_col: str,
-    init_centroids: list[list[float]],
-    n_iter: int = 2,
+def seed_codebook(
+    e: DataFrame, k: int, vec_col: str = "embedding"
+) -> tuple[list[int], list[list[float]]]:
+    """The deterministic seed codebook: the rows ``vec_id < k`` in vec_id
+    order, as (ids, driver-side double vectors) — bounded at k rows, and
+    replayable by an oracle. ``vec_col`` lets a caller seed from a staged
+    frame's raw float vector column (float(float32) is exact)."""
+    rows = sorted(
+        e.filter(F.col("vec_id") < k).select("vec_id", vec_col).collect(),
+        key=lambda r: r.vec_id,
+    )
+    return [r.vec_id for r in rows], [[float(x) for x in r[vec_col]] for r in rows]
+
+
+def lloyd_step(
+    staged: DataFrame, cents: list[list[float]], vec_col: str = "_v"
+) -> DataFrame:
+    """One quantized Lloyd iteration over ``staged[vec_col]`` (any float
+    width — the kernel's widening to double is exact): columns (cell,
+    dim, n_members, mean_q), one row per non-empty cell and dimension.
+
+    Assignment and the per-(cell, dim) count + DECIMAL(28,12) partial sum
+    happen in ONE Arrow map (guide §2.3 "aggregate before you shuffle",
+    §4.2). The downstream agg is the hash-contract expression: decimal
+    sums are exact and order-free, so sum over the DECIMAL(38,12)
+    partials equals sum over per-element DECIMAL(28,12) casts, and
+    round(cast(sum as double)/count, 6) + 0.0 sees equal inputs —
+    bit-identical to a HOF assignment + posexplode + JVM decimal mean,
+    pinned by tests/test_similarity_arrow.py::
+    test_lloyd_fused_partials_bit_exact."""
+    from ..functions.similarity_arrow import lloyd_decimal_partials_arrow
+
+    parts = lloyd_decimal_partials_arrow(staged.select(vec_col), vec_col, cents)
+    return parts.groupBy("cell", "dim").agg(
+        F.sum("n_part").alias("n_members"),
+        (
+            F.round(F.sum("s_part").cast("double") / F.sum("n_part"), 6) + 0.0
+        ).alias("mean_q"),
+    )
+
+
+def _apply_means(cents: list[list[float]], rows) -> list[list[float]]:
+    """Refresh the driver-side codebook from a collected K×d means frame;
+    cells/dims with no row keep their previous coordinate (the empty-cell
+    guard, same as the oracle's coalesce)."""
+    nxt = [list(c) for c in cents]
+    for r in rows:
+        nxt[r.cell][r.dim] = float(r.mean_q)
+    return nxt
+
+
+def lloyd_codebook(
+    staged: DataFrame, cents: list[list[float]], n_iter: int, vec_col: str = "_v"
 ) -> list[list[float]]:
-    """Run `n_iter` Lloyd iterations; returns the refined codebook.
-
-    Empty cells keep their previous centroid (the standard guard — a cell
-    that captures no points would otherwise vanish and shrink K).
-    """
-    k = len(init_centroids)
-    dim = len(init_centroids[0])
-    staged = vectors.select(V.as_double(F.col(vec_col)).alias("_v"))
-    centroids = [list(map(float, c)) for c in init_centroids]
+    """The codebook after ``n_iter`` Lloyd iterations from ``cents``: one
+    pass over ``staged`` and one bounded K×d collect per iteration. Pin
+    ``staged`` when ``n_iter`` > 1, or every pass re-runs its plan."""
     for _ in range(n_iter):
-        assigned = staged.withColumn("_cell", nearest_cell(F.col("_v"), centroids))
-        means = (
-            # posexplode_outer, not posexplode: the inferred size(_v) > 0
-            # generate-filter would inline the as_double transform a second
-            # time per row (the explode-of-HOF pathology fixed in
-            # ngram_novelty); vectors are never empty, so outer == inner
-            assigned.select("_cell", F.posexplode_outer("_v").alias("_dim", "_x"))
-            .groupBy("_cell", "_dim")
-            .agg(F.avg("_x").alias("_m"))
-            .collect()  # bounded: K×d rows — the codebook refresh
-            # (empty cells simply produce no rows and keep their centroid)
-        )
-        nxt = [list(c) for c in centroids]
-        for r in means:
-            nxt[r._cell][r._dim] = float(r._m)
-        centroids = nxt
-    return centroids
-
-
-def sse(vectors: DataFrame, vec_col: str, centroids: list[list[float]]) -> float:
-    """Total within-cluster sum of squared distances (the Lloyd objective).
-
-    One K-way distance fold per row: the min struct's own dist field IS
-    the within-cluster distance, so no second fold re-derives it from the
-    selected cell."""
-    staged = vectors.select(V.as_double(F.col(vec_col)).alias("_v"))
-    d2 = nearest_cell_struct(F.col("_v"), centroids)["dist"]
-    return staged.select(F.sum(d2).alias("s")).first()["s"]
+        cents = _apply_means(cents, lloyd_step(staged, cents, vec_col).collect())
+    return cents

@@ -67,6 +67,25 @@ def sign_corpus(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return staged.withColumn("mh", S.minhash_signature(F.col("sh")))
 
 
+def _bands(sig: DataFrame) -> DataFrame:
+    """(_id, band) rows: one per LSH band of each signature. explode_outer
+    per the PLANS.md rule-5 guard: band arrays are always length BANDS,
+    and a plain explode's inferred size() filter would re-run the minhash
+    kernel per row."""
+    return sig.select(
+        "_id", F.explode_outer(S.band_signatures(F.col("mh"))).alias("band")
+    )
+
+
+def _with_shingles(cands: DataFrame, sh: DataFrame) -> DataFrame:
+    """The verify join: candidate pairs (id_a, id_b) joined to both
+    endpoints' shingle arrays (sh_a, sh_b) from an (_id, sh) frame, for
+    the caller to score and filter."""
+    return cands.join(
+        sh.select(F.col("_id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
+    ).join(sh.select(F.col("_id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
+
+
 def _split_hot_buckets(
     bands: DataFrame, bucket_cap: int | None
 ) -> tuple[DataFrame, DataFrame | None]:
@@ -104,9 +123,9 @@ def _star_edges(hot: DataFrame) -> DataFrame:
 def _self_join_candidates(bands: DataFrame, bucket_cap: int | None) -> DataFrame:
     """Distinct candidate pairs (id_a < id_b) from (_id, band) rows via
     the band self-join — the ONE implementation shared by the one-shot
-    miner (pairs_from_signatures) and the sharded miner
-    (near_dup_pairs_sharded), so their candidate semantics cannot
-    diverge. ``bucket_cap`` switches over-cap buckets to STAR candidates
+    miner (pairs_from_signatures), the sharded miner
+    (near_dup_pairs_sharded) and containment_pairs, so their candidate
+    semantics cannot diverge. ``bucket_cap`` switches over-cap buckets to STAR candidates
     (see pairs_from_signatures' docstring for the recall trade); band
     keys never cross sharded passes, so per-pass bucket occupancy equals
     whole-corpus occupancy and the cap behaves identically in both
@@ -136,9 +155,7 @@ def pairs_from_signatures(
     ``batch_ids`` (a 1-column ``_id`` frame), one join side is restricted
     to the batch: O(batch x collisions) candidates, old-old pairs never
     examined. Lazy — callers materialize (localCheckpoint) and release
-    their own signature persists. Band explodes are explode_outer per the
-    PLANS.md rule-5 guard (a plain explode's inferred size() filter would
-    re-run the minhash kernel per row).
+    their own signature persists.
 
     ``bucket_cap`` bounds hot-bucket blowup: a band bucket holding B docs
     yields B² candidates from the self-join (B x batch from the batch
@@ -151,9 +168,7 @@ def pairs_from_signatures(
     inside one hot bucket whose links other bands also miss — the
     standard recall trade every capped-LSH deployment makes. Default
     ``None`` = exact B² mining (the oracle-verified query form)."""
-    bands = sig.select(
-        "_id", F.explode_outer(S.band_signatures(F.col("mh"))).alias("band")
-    )
+    bands = _bands(sig)
     if batch_ids is None:
         cands = _self_join_candidates(bands, bucket_cap)
     else:
@@ -173,8 +188,7 @@ def pairs_from_signatures(
         cands = cands.distinct()
     jac = S.jaccard(F.col("sh_a"), F.col("sh_b"))
     return (
-        cands.join(sig.select(F.col("_id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-        .join(sig.select(F.col("_id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
+        _with_shingles(cands, sig)
         .filter(jac >= threshold)
         .select("id_a", "id_b", jac.alias("jaccard"))
     )
@@ -302,14 +316,7 @@ def near_dup_pairs_sharded(
         sh = S.staged_word_shingles(sub, "_text").drop("_text").persist()
         jac = S.jaccard(F.col("sh_a"), F.col("sh_b"))
         pairs = (
-            cand.join(
-                sh.select(F.col("_id").alias("id_a"), F.col("sh").alias("sh_a")),
-                "id_a",
-            )
-            .join(
-                sh.select(F.col("_id").alias("id_b"), F.col("sh").alias("sh_b")),
-                "id_b",
-            )
+            _with_shingles(cand, sh)
             .filter(jac >= threshold)
             .select("id_a", "id_b", jac.alias("jaccard"))
             .transform(_pin)
@@ -319,39 +326,6 @@ def near_dup_pairs_sharded(
     finally:
         if cleanup:
             shutil.rmtree(work, ignore_errors=True)
-
-
-def _candidate_pairs_with_shingles(docs, id_col, text_col):
-    """LSH candidate pairs joined back to both shingle arrays. Returns
-    (candidates with sh_a/sh_b, the persisted shingle frame) — the caller
-    scores/filters, then MUST unpersist the shingle frame after
-    materializing (see near_dup_pairs)."""
-    sh = (
-        S.staged_word_shingles(
-            docs.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text")),
-            "_text",
-        )
-        .drop("_text")
-        .persist()
-    )
-    mh = sh.select("_id", S.minhash_signature(F.col("sh")).alias("mh"))
-    # explode_outer: band arrays are always length BANDS, and a plain
-    # explode's inferred size() filter would inline the minhash kernel
-    # (PLANS.md rule 5)
-    bands = mh.select(
-        "_id", F.explode_outer(S.band_signatures(F.col("mh"))).alias("band")
-    )
-    cands = (
-        bands.select(F.col("_id").alias("id_a"), "band")
-        .join(bands.select(F.col("_id").alias("id_b"), "band"), "band")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    scored = cands.join(
-        sh.select(F.col("_id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
-    ).join(sh.select(F.col("_id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-    return scored, sh
 
 
 def containment_pairs(
@@ -369,17 +343,19 @@ def containment_pairs(
     pairs — a dedicated containment index (prefix filtering) is the
     specialist alternative at 100 TB. Same eager/unpersist contract as
     near_dup_pairs."""
-    scored, sh = _candidate_pairs_with_shingles(docs, id_col, text_col)
+    sig = sign_corpus(docs, id_col, text_col).persist()
+    cands = _self_join_candidates(_bands(sig), None)
     c_ab = S.containment(F.col("sh_a"), F.col("sh_b"))
     c_ba = S.containment(F.col("sh_b"), F.col("sh_a"))
     pairs = (
-        scored.withColumn("c_ab", c_ab)
+        _with_shingles(cands, sig)
+        .withColumn("c_ab", c_ab)
         .withColumn("c_ba", c_ba)
         .filter((F.col("c_ab") >= threshold) | (F.col("c_ba") >= threshold))
         .select("id_a", "id_b", "c_ab", "c_ba")
         .transform(_pin)
     )
-    sh.unpersist()
+    sig.unpersist()
     return pairs
 
 

@@ -17,16 +17,20 @@ from __future__ import annotations
 
 import datetime as _dt
 import os
+import uuid
 from collections.abc import Iterator
 from contextlib import contextmanager
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..engine.clock import Clock, SystemClock
-from ..engine.tableio import VersionedWarehouse, Warehouse
+from ..engine.tableio import SPARK_SCHEMA_KEY, VersionedWarehouse, Warehouse
 
 AUDIT_SCHEMA = T.StructType(
     [
@@ -41,6 +45,12 @@ AUDIT_SCHEMA = T.StructType(
         T.StructField("error_message", T.StringType()),
         T.StructField("inserted_at", T.TimestampType()),
     ]
+)
+
+#: AUDIT_SCHEMA as Arrow, for the driver-side writes; it carries Spark's
+#: schema footer key, so a read of any audit file needs no inference job
+_ARROW_SCHEMA = to_arrow_schema(AUDIT_SCHEMA).with_metadata(
+    {SPARK_SCHEMA_KEY: AUDIT_SCHEMA.json()}
 )
 
 NAMESPACE, TABLE = "audit", "audit_logs"
@@ -72,8 +82,9 @@ class AuditLog:
         if self.clock is None:
             self.clock = SystemClock()
         if not self.wh.exists(NAMESPACE, TABLE):
-            empty = self.wh.spark.createDataFrame([], AUDIT_SCHEMA)
-            self.wh.overwrite(empty, NAMESPACE, TABLE)
+            # the empty table is one zero-row file written on the driver:
+            # no Spark job before the pipeline's first stage
+            self._write(_ARROW_SCHEMA.empty_table())
         # On an MVCC warehouse every row insert is its own APPEND version;
         # bound the audit table's history inline (per-table retention, so
         # gold time travel is untouched) unless the operator already chose
@@ -82,19 +93,22 @@ class AuditLog:
         ).exists():
             self.wh.set_retention(NAMESPACE, TABLE, 8)
 
+    def _write(self, tbl: pa.Table) -> None:
+        """Write ``tbl`` as one parquet file on the driver (Arrow), through
+        the warehouse's file-insert hook: no Spark job, and a unique file
+        name per call, so parallel stages insert without a lock. The plain
+        warehouse stages the file under a dot-name and renames it into the
+        table; a VersionedWarehouse publishes it as an APPEND version. The
+        footer carries Spark's schema key, so a read takes its schema from
+        whichever file sorts first without a Spark job. A failed write
+        raises."""
+        name = f"part-audit-{uuid.uuid4().hex}.parquet"
+        self.wh.insert_file(
+            NAMESPACE, TABLE, name, lambda tmp: pq.write_table(tbl, tmp)
+        )
+
     def _insert(self, **kw) -> None:
-        """Write one audit row as a one-row parquet file on the driver
-        (Arrow), through the warehouse's file-insert hook: no Spark job,
-        and a unique file name per row, so parallel stages insert without
-        a lock. The plain warehouse stages the file under a dot-name and
-        renames it into the table; a VersionedWarehouse publishes it as
-        an APPEND version. A failed write raises."""
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
+        """Write one audit row (see ``_write``)."""
         now = self.clock.now()
         row = {
             "source_system": kw.get("source_system"),
@@ -108,13 +122,7 @@ class AuditLog:
             "error_message": kw.get("error_message"),
             "inserted_at": now,
         }
-        tbl = pa.table(
-            {k: [v] for k, v in row.items()}, schema=to_arrow_schema(AUDIT_SCHEMA)
-        )
-        name = f"part-audit-{uuid.uuid4().hex}.parquet"
-        self.wh.insert_file(
-            NAMESPACE, TABLE, name, lambda tmp: pq.write_table(tbl, tmp)
-        )
+        self._write(pa.table({k: [v] for k, v in row.items()}, schema=_ARROW_SCHEMA))
 
     def start(self, source_system: str, source_object: str) -> _dt.datetime:
         t0 = self.clock.now()
@@ -222,12 +230,11 @@ class AuditLog:
             .sortWithinPartitions("inserted_at")
         )
         import shutil
-        import uuid as _uuid
 
-        tmp = path.parent / f".{TABLE}.compact.{_uuid.uuid4().hex[:8]}"
+        tmp = path.parent / f".{TABLE}.compact.{uuid.uuid4().hex[:8]}"
         compacted.write.mode("overwrite").parquet(str(tmp))
         for f in tmp.glob("*.parquet"):
-            os.replace(f, path / f"part-compacted-{_uuid.uuid4().hex}.parquet")
+            os.replace(f, path / f"part-compacted-{uuid.uuid4().hex}.parquet")
         for s in sources:
             try:
                 os.remove(s)

@@ -15,7 +15,6 @@ notebook activities share one cluster.
 
 from __future__ import annotations
 
-import time
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from collections.abc import Callable
@@ -27,7 +26,6 @@ class Stage:
     fn: Callable[[], object]
     depends_on: list[str] = field(default_factory=list)
     retries: int = 0
-    retry_wait_sec: float = 0.0
 
 
 class DagRunner:
@@ -91,5 +89,3 @@ class DagRunner:
                 attempt += 1
                 if attempt > stage.retries:
                     raise
-                if stage.retry_wait_sec:
-                    time.sleep(stage.retry_wait_sec)

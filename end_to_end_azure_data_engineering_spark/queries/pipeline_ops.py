@@ -76,9 +76,9 @@ def scd2_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch from several branches (expire/keep/survive/insert), and
     # Catalyst plans that DAG reuse as TREE DUPLICATION: the unpinned
     # plan executed 28 scan+window nodes for two logical window passes
-    # (plans/r14/scd2_final_state_before.txt). The pins are user-count
-    # bounded (state-table sized — what a real SCD2 deployment
-    # materializes as its staging batch anyway).
+    # (`tools/plan_audit.py --plans` prints the executed plans). The pins
+    # are user-count bounded (state-table sized — what a real SCD2
+    # deployment materializes as its staging batch anyway).
     e = load(spark, sf_dir, "events")
     target = scd2_init(_earliest_per_user(e).transform(_pin), _T0)
     merged = scd2_merge(

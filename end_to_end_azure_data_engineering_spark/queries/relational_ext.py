@@ -14,9 +14,9 @@ common case, salting covers pathological keys).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
+from pyspark.sql.window import Window as W, WindowSpec
 
 from . import epoch_us, load, register, spread
 from ..engine.pin import collect_if_bounded, driver_frame, pin as _pin, release_checkpoints
@@ -433,6 +433,37 @@ def full_outer_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
 _GAP_US = 30 * 60 * 1_000_000
 
 
+def _user_events() -> WindowSpec:
+    """Each user's events in (ts, event_id) order — the order every
+    per-user gap and session in this module is defined over."""
+    return W.partitionBy("user_id").orderBy("ts", "event_id")
+
+
+def _user_gap_us() -> Column:
+    """Microseconds since the same user's previous event; NULL on each
+    user's first event (and wherever ts is NULL)."""
+    us, w = epoch_us("ts"), _user_events()
+    return us - F.lag(us).over(w)
+
+
+def _sessionized(ev: DataFrame) -> DataFrame:
+    """``ev`` (user_id, ts, event_id, ...) plus ``session_id``: the
+    30-minute-gap sessionizer. A session starts at a user's first event
+    or after a gap over ``_GAP_US``; ``session_id`` is the running count
+    of starts, so it numbers the user's sessions 1, 2, ... A NULL gap (no
+    earlier timestamped event: NULL ts sorts first) starts a session.
+    Both windows share one shuffle on user_id."""
+    gap = _user_gap_us()
+    return ev.withColumn(
+        "new_session", F.when(gap.isNull() | (gap > _GAP_US), 1).otherwise(0)
+    ).withColumn(
+        "session_id",
+        F.sum("new_session").over(
+            _user_events().rowsBetween(W.unboundedPreceding, W.currentRow)
+        ),
+    )
+
+
 @register(
     "sessionize_events",
     oracle=f"""
@@ -459,18 +490,7 @@ _GAP_US = 30 * 60 * 1_000_000
     """,
 )
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events").select("user_id", "ts", "event_id")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    us = epoch_us("ts")
-    prev = F.lag(us).over(w)
-    t = ev.withColumn(
-        "new_session",
-        F.when(prev.isNull() | ((us - prev) > _GAP_US), 1).otherwise(0),
-    )
-    s = t.withColumn(
-        "session_id",
-        F.sum("new_session").over(w.rowsBetween(W.unboundedPreceding, W.currentRow)),
-    )
+    s = _sessionized(load(spark, sf_dir, "events").select("user_id", "ts", "event_id"))
     # Integer millisecond duration: micros-diff div 1000 is exact integer
     # math on both engines (divide-then-round on doubles was the one
     # non-integer step and hash-mismatched in round 1).
@@ -1722,6 +1742,31 @@ def copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _copurchase_support_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The undirected >=2-support co-purchase graph, PINNED: one (pa, pb)
+    row, pa < pb, per part pair bought together in at least two orders —
+    the edge list pagerank_copurchase, copurchase_triangles and
+    copurchase_degree_histogram read. One order-keyed self-join plus a
+    pair-keyed support agg, materialized once because each caller reads
+    the edges more than once: unpinned, every read re-mines the
+    self-join (AQE's exchange reuse does not catch it). spread() on the
+    projected scan: the same single-task-scan fan-out as copurchase_pairs,
+    a no-op at production split counts. ``release_checkpoints`` on the
+    caller's result frees the pin (it sees through derived frames)."""
+    li = spread(load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey"))
+    a = li.select("l_orderkey", F.col("l_partkey").alias("pa"))
+    b = li.select("l_orderkey", F.col("l_partkey").alias("pb"))
+    return (
+        a.join(b, "l_orderkey")
+        .filter(F.col("pa") < F.col("pb"))
+        .groupBy("pa", "pb")
+        .agg(F.count("*").alias("n"))
+        .filter(F.col("n") >= 2)
+        .select("pa", "pb")
+        .transform(_pin)
+    )
+
+
 # ---------------------------------------------------------------------------
 # RFM customer segmentation — recency/frequency/monetary quartiles assigned
 # by BROADCAST percentile boundaries, not a global ntile: an ntile needs a
@@ -2109,22 +2154,8 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     by tests/test_functions.py::test_pagerank_local_route."""
     from pyspark.sql.types import LongType, StructField, StructType
 
-    # spread() on the projected scan (r13 opt): same single-task-scan
-    # fan-out as copurchase_pairs — no-op at production split counts
-    li = spread(load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey"))
-    # >=2-support co-purchase pairs: a per-order self-join plus support
-    # aggregation, pinned once — the only shuffles the local route pays
-    a = li.select("l_orderkey", F.col("l_partkey").alias("pa"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("pb"))
-    pairs = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("pa") < F.col("pb"))
-        .groupBy("pa", "pb")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= 2)
-        .select("pa", "pb")
-        .transform(_pin)
-    )
+    # the pinned pairs are the only shuffles the local route pays
+    pairs = _copurchase_support_pairs(spark, sf_dir)
     schema = StructType(
         [
             StructField("part", pairs.schema["pa"].dataType, True),
@@ -2180,23 +2211,8 @@ def copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum-of-degree², never edges³, and the closing join is an equi-join on
     the full (pa, pb) pair, all hash-partitionable. At 100 TB the support
     filter is the knob that bounds the wedge set."""
-    # spread() on the projected scan (r13 opt): same single-task-scan
-    # fan-out as copurchase_pairs — no-op at production split counts
-    li = spread(load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey"))
-    a = li.select("l_orderkey", F.col("l_partkey").alias("pa"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("pb"))
-    pairs = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("pa") < F.col("pb"))
-        .groupBy("pa", "pb")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= 2)
-        .select("pa", "pb")
-        # three self-join branches below: materialize the (bounded,
-        # >=2-support) edge list once instead of re-mining the per-order
-        # self-join three times
-        .transform(_pin)
-    )
+    # three self-join branches below read the one pinned edge list
+    pairs = _copurchase_support_pairs(spark, sf_dir)
     e1 = pairs.select(F.col("pa").alias("part_a"), F.col("pb").alias("part_b"))
     e2 = pairs.select(F.col("pa").alias("part_b"), F.col("pb").alias("part_c"))
     e3 = pairs.select(F.col("pa").alias("part_a"), F.col("pb").alias("part_c"))
@@ -2246,18 +2262,8 @@ def session_dwell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     microseconds; avg is ONE division of two exact values (hash-stable).
     Same scale shape as sessionize_events: everything partitions by
     user_id, no global state."""
-    ev = load(spark, sf_dir, "events").select("user_id", "ts", "event_id")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    s = _sessionized(load(spark, sf_dir, "events").select("user_id", "ts", "event_id"))
     us = epoch_us("ts")
-    prev = F.lag(us).over(w)
-    t = ev.withColumn(
-        "new_session",
-        F.when(prev.isNull() | ((us - prev) > _GAP_US), 1).otherwise(0),
-    )
-    s = t.withColumn(
-        "session_id",
-        F.sum("new_session").over(w.rowsBetween(W.unboundedPreceding, W.currentRow)),
-    )
     sess = s.groupBy("user_id", "session_id").agg(
         F.count("*").alias("n_events"),
         (F.max(us) - F.min(us)).alias("dwell_us"),
@@ -2571,24 +2577,8 @@ def copurchase_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale-free-ness check that tells you whether PageRank/triangle passes
     face hub skew (a heavy tail here predicts hot keys in every
     graph-keyed shuffle downstream). Exact integers end to end."""
-    # spread() on the projected scan (r13 opt): same single-task-scan
-    # fan-out as copurchase_pairs — no-op at production split counts
-    li = spread(load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey"))
-    a = li.select("l_orderkey", F.col("l_partkey").alias("pa"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("pb"))
-    pairs = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("pa") < F.col("pb"))
-        .groupBy("pa", "pb")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= 2)
-        # two union branches below: materialize the (bounded, >=2-support)
-        # edge list once instead of re-mining the per-order self-join per
-        # branch (r14 — same fix as copurchase_triangles; the executed
-        # unpinned plan ran 5 parquet scans / two full mine branches,
-        # AQE's runtime exchange reuse notwithstanding)
-        .transform(_pin)
-    )
+    # two union branches below read the one pinned edge list
+    pairs = _copurchase_support_pairs(spark, sf_dir)
     deg = (
         pairs.select(F.col("pa").alias("node"))
         .unionAll(pairs.select("pb"))
@@ -2630,11 +2620,8 @@ def copurchase_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def interevent_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events")
-    us = epoch_us("ts")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    g = ev.select(
-        "event_type", (us - F.lag(us).over(w)).alias("gap_us")
+    g = load(spark, sf_dir, "events").select(
+        "event_type", _user_gap_us().alias("gap_us")
     ).where(F.col("gap_us").isNotNull())
     return g.groupBy("event_type").agg(
         F.count("*").alias("n_gaps"),
@@ -3563,11 +3550,8 @@ def daily_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def bot_likelihood_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events")
-    us = epoch_us("ts")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    g = ev.select(
-        "user_id", (us - F.lag(us).over(w)).alias("gap_us")
+    g = load(spark, sf_dir, "events").select(
+        "user_id", _user_gap_us().alias("gap_us")
     ).where(F.col("gap_us").isNotNull())
     n_sub = F.sum(F.when(F.col("gap_us") < 1000000, 1).otherwise(0))
     share = n_sub.cast("double") / F.count("*")
@@ -3776,25 +3760,7 @@ def priority_sequence_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def peak_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events")
-    us = epoch_us("ts")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag(us).over(w)
-    t = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(prev.isNull() | ((us - prev) > _GAP_US), 1)
-        .otherwise(0)
-        .alias("new_session"),
-    )
-    s = t.select(
-        "user_id",
-        "ts",
-        F.sum("new_session")
-        .over(w.rowsBetween(W.unboundedPreceding, 0))
-        .alias("session_id"),
-    )
+    s = _sessionized(load(spark, sf_dir, "events").select("user_id", "ts", "event_id"))
     sess = s.groupBy("user_id", "session_id").agg(
         F.date_trunc("minute", F.min("ts")).alias("m_start"),
         F.date_trunc("minute", F.max("ts")).alias("m_end"),

@@ -11,8 +11,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..engine.pin import pin as _pin
+from ..engine.pin import pin as _pin, release_checkpoints
 from ..functions import similarity as V
+from ..operators.kmeans import lloyd_codebook, lloyd_step, seed_codebook
 from . import load, register, spread
 
 _EMB_D = "embedding::DOUBLE[]"
@@ -242,28 +243,8 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k. The nprobe sweep at the sf10 fixture (r10, verdict item 6;
     script removed; measurements kept in SCALING.md): candidates and time
     scale with nprobe/K, recall with the cells covered."""
-    return ivf_topk_plan(spark, sf_dir)
-
-
-def ivf_topk_plan(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    nprobe: int = 2,
-    topk: int = 3,
-    k_cells: int = 16,
-) -> DataFrame:
-    """ann_ivf_topk's plan with the IVF knobs exposed (the registered
-    query pins nprobe=2 / topk=3 / K=16 — its oracle and audited plan
-    shape are unchanged by this refactor). nprobe is the accuracy/cost
-    dial: a probe scans ~nprobe/K of the corpus. k_cells sizes the
-    codebook (r11, verdict item 4: the 100 TB claim is exercised at a
-    production-shaped K=1024; script removed; measurements kept in
-    SCALING.md)."""
-    assign, probe_cells = ivf_index_frames(
-        spark, sf_dir, nprobe=nprobe, k_cells=k_cells
-    )
-    return ivf_probe_topk(assign, probe_cells, topk=topk)
+    assign, probe_cells = ivf_index_frames(spark, sf_dir, nprobe=2, k_cells=16)
+    return ivf_probe_topk(assign, probe_cells, topk=3)
 
 
 def ivf_probe_topk(
@@ -331,14 +312,7 @@ def ivf_index_frames(
         cents = [[float(x) for x in c] for c in centroids]
         ids = list(range(len(cents)))
     else:
-        cent_rows = sorted(
-            e.filter(F.col("vec_id") < k_cells)
-            .select("vec_id", "embedding")
-            .collect(),
-            key=lambda r: r.vec_id,
-        )
-        cents = [[float(x) for x in r.embedding] for r in cent_rows]
-        ids = [r.vec_id for r in cent_rows]
+        ids, cents = seed_codebook(e, k_cells)
     # three single-node nested literals (not 16×64 Literal columns — that
     # expression tree put multi-second analysis cost on the driver); norms
     # precomputed in Python (same sequential left-fold as the HOF dot).
@@ -484,46 +458,15 @@ _KM_D = V.EMB_DIM
 )
 def kmeans_refine_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One Lloyd iteration of k-means codebook refinement, hash-verified:
-    assignment uses operators/kmeans.nearest_cell (literal codebook,
-    sequential squared-L2 fold — bit-matching the oracle's list_reduce
-    replay), and the centroid update accumulates each dimension in
-    DECIMAL(28,12) so the mean is summation-order-free, then rounds once
-    (+0.0 folds any -0.0). The production loop (operators/kmeans.
-    kmeans_refine) keeps plain double avg — at scale nobody quantizes the
-    update — but THIS query pins the iteration's semantics cross-engine.
-    Output: per (cell, dim) member count and refined coordinate."""
-    from ..operators.kmeans import nearest_cell
-
+    ``operators.kmeans.lloyd_step`` over the seed codebook. Assignment is
+    the sequential squared-L2 fold (bit-matching the oracle's list_reduce
+    replay, ties to the lowest cell), and the centroid update accumulates
+    each dimension in DECIMAL(28,12) so the mean is summation-order-free,
+    then rounds once (+0.0 folds any -0.0). Output: per (cell, dim) member
+    count and refined coordinate."""
     e = load(spark, sf_dir, "embeddings")
-    cent_rows = sorted(
-        e.filter(F.col("vec_id") < _KM_K).select("vec_id", "embedding").collect(),
-        key=lambda r: r.vec_id,
-    )
-    cents = [[float(x) for x in r.embedding] for r in cent_rows]
-    staged = spread(e).select(
-        "vec_id", V.as_double(F.col("embedding")).alias("_v")
-    )
-    assigned = staged.withColumn("cell", nearest_cell(F.col("_v"), cents))
-    return (
-        # posexplode_outer: a plain posexplode gets an inferred
-        # size(_v) > 0 filter that re-inlines the as_double transform per
-        # row (plan-guard test_no_inferred_hof_generate_filters); vectors
-        # are never empty, so outer == inner
-        assigned.select("cell", F.posexplode_outer("_v").alias("dim", "x"))
-        .groupBy("cell", "dim")
-        .agg(
-            F.count("*").alias("n_members"),
-            (
-                F.round(
-                    F.sum(F.col("x").cast("decimal(28,12)")).cast("double")
-                    / F.count("*"),
-                    6,
-                )
-                + 0.0
-            ).alias("mean_q"),
-        )
-        .select("cell", "dim", "n_members", "mean_q")
-    )
+    _, cents = seed_codebook(e, _KM_K)
+    return lloyd_step(spread(e).select(F.col("embedding").alias("_v")), cents)
 
 
 def _lloyd_iter_sql(prev_cents: str, tag: str) -> str:
@@ -594,23 +537,21 @@ def kmeans_lloyd_3iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     places, -0.0 folded), so both engines hand bit-identical centroids
     into the next assignment pass and the whole 3-iteration trajectory —
     not just one step — is hash-verified. Same discipline as
-    pagerank_copurchase's fixed-3-iteration decimal-stable form; the
-    production loop (operators/kmeans.kmeans_refine) keeps plain double
-    means, which nobody quantizes at scale.
+    pagerank_copurchase's fixed-3-iteration decimal-stable form. Runs
+    ``operators.kmeans.lloyd_codebook`` for two iterations and
+    ``lloyd_step`` for the third, whose frame is the result.
 
-    Scale shape (the MLlib pattern): per iteration one corpus scan for
-    assignment (literal codebook, narrow map, no shuffle) + one
-    K x d-group aggregate whose K x d result refreshes the driver-side
-    codebook — the two collects here are bounded at K x d = {_KM_K} x
-    {_KM_D} rows each, never corpus-sized. Empty cells keep their
-    previous centroid on both engines (Spark: missing rows leave the
-    codebook entry untouched; oracle: coalesce against the prior cent).
+    Scale shape (the MLlib pattern): per iteration one corpus pass (the
+    fused assignment + partial-sum map) + one K x d-group aggregate whose
+    K x d result refreshes the driver-side codebook — the two collects
+    here are bounded at K x d = {_KM_K} x {_KM_D} rows each, never
+    corpus-sized. Empty cells keep their previous centroid on both
+    engines (Spark: missing rows leave the codebook entry untouched;
+    oracle: coalesce against the prior cent).
     Output: per (cell, dim) member count and refined coordinate after
     iteration 3."""
-    from ..operators.neardup import release_checkpoints
-
     e = load(spark, sf_dir, "embeddings")
-    cents = _seed_codebook(e)
+    _, cents = seed_codebook(e, _KM_K)
     # pin the staged vectors ONCE (r13 opt): the three iteration passes
     # otherwise re-run scan + spread each time. Only _v is pinned
     # (project-early — vec_id is unused here). r14: the pin keeps the
@@ -620,126 +561,16 @@ def kmeans_lloyd_3iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scores and decimal partials are unchanged bit-for-bit (pinned by
     # test_lloyd_fused_partials_bit_exact's float32 variant).
     staged = spread(e).select(F.col("embedding").alias("_v")).transform(_pin)
-    for it in range(3):
-        agg = _lloyd_step(staged, cents)
-        if it == 2:
-            # r14 (VERDICT item 4 "what's wrong"): pin the BOUNDED K×d
-            # final aggregate and release the corpus-scale staged pin
-            # HERE — a caller that discards the returned frame leaks at
-            # most K×d rows (freed by release_checkpoints like every
-            # eager query), never a corpus of staged vectors. Pinned by
-            # tests/test_kmeans.py::test_lloyd_query_releases_staged_pin.
-            out = agg.select("cell", "dim", "n_members", "mean_q").transform(
-                _pin
-            )
-            release_checkpoints(staged)
-            return out
-        cents = _apply_means(cents, agg.collect())  # bounded: K x d refresh
-    raise AssertionError("unreachable")
-
-
-def _seed_codebook(e: DataFrame, vec_col: str = "embedding") -> list[list[float]]:
-    """The deterministic seed codebook (``vec_id < _KM_K``, like
-    ann_ivf_topk) as driver-side doubles — bounded at K rows.
-    ``vec_col`` lets a caller seed from a staged frame's raw float
-    vector column (identical values: float(float32) is exact)."""
-    cent_rows = sorted(
-        e.filter(F.col("vec_id") < _KM_K).select("vec_id", vec_col).collect(),
-        key=lambda r: r.vec_id,
-    )
-    return [[float(x) for x in r[vec_col]] for r in cent_rows]
-
-
-def _lloyd_step(
-    staged_v: DataFrame, cents: list[list[float]], vec_col: str = "_v"
-) -> DataFrame:
-    """One quantized Lloyd iteration over staged (vec_id, _v) rows —
-    ONE fused Arrow map (r14, VERDICT item 1): bit-exact squared-L2
-    assignment AND the per-(cell, dim) count + DECIMAL(28,12) partial
-    sum happen inside lloyd_decimal_partials_arrow, so a pass ships at
-    most K×d tiny partial rows per partition through the shuffle instead
-    of n×d posexploded element rows, and the JVM decimal cast/sum per
-    element disappears (guide §2.3 "aggregate before you shuffle", §4.2).
-    The downstream agg is the UNCHANGED hash contract expression: decimal
-    sums are exact and order-free (sum over the DECIMAL(38,12) partials
-    carries the same type and value as sum over per-element
-    DECIMAL(28,12) casts), count(*) becomes sum of partial counts, and
-    round(cast(sum as double)/count, 6) + 0.0 is evaluated on equal
-    inputs — bit-identical output, pinned by
-    tests/test_similarity_arrow.py::test_lloyd_fused_partials_bit_exact.
-    r13 history: the assignment fold itself replaced an interpreted
-    zip_with/aggregate K-cell ranking (~100 µs/row) at ~1/15th the cost;
-    this round fuses the mean into the same pass."""
-    from ..functions.similarity_arrow import lloyd_decimal_partials_arrow
-
-    parts = lloyd_decimal_partials_arrow(
-        staged_v.select(vec_col), vec_col, cents
-    )
-    return parts.groupBy("cell", "dim").agg(
-        F.sum("n_part").alias("n_members"),
-        (
-            F.round(
-                F.sum("s_part").cast("double") / F.sum("n_part"),
-                6,
-            )
-            + 0.0
-        ).alias("mean_q"),
-    )
-
-
-def _apply_means(cents: list[list[float]], rows) -> list[list[float]]:
-    """Refresh the driver-side codebook from a collected K×d means frame;
-    cells/dims with no row keep their previous coordinate (the empty-cell
-    guard, same as the oracle's coalesce)."""
-    nxt = [list(c) for c in cents]
-    for r in rows:
-        nxt[r.cell][r.dim] = float(r.mean_q)
-    return nxt
-
-
-def quantized_lloyd_codebook(
-    spark: SparkSession,
-    sf_dir: str,
-    n_iter: int = 3,
-    staged: DataFrame | None = None,
-    vec_col: str = "_v",
-) -> list[list[float]]:
-    """The codebook AFTER ``n_iter`` quantized Lloyd iterations — the
-    exact kmeans_lloyd_3iter trajectory (seed = vec_id < _KM_K, decimal-
-    accumulated round-6 means, empty cells keep their centroid) collected
-    through the final update. Every collect is bounded at K×d; each
-    iteration is one corpus scan + one tiny-key agg (the MLlib pattern),
-    so the build cost at 100 TB is n_iter scans, amortized over every
-    probe the resulting IVF index serves.
-
-    ``staged`` (r14): a caller-owned pinned frame whose ``vec_col``
-    carries the raw vectors (any float width — the fused kernel's
-    astype widening is exact); the caller keeps ownership (seed collect
-    runs against it too, saving the extra corpus scan). Without it the
-    function builds, uses and releases its own float32 pin."""
-    from ..operators.neardup import release_checkpoints
-
-    own = staged is None
-    if own:
-        e = load(spark, sf_dir, "embeddings")
-        cents = _seed_codebook(e)
-        # pin once across the n_iter passes (r13 opt — see
-        # kmeans_lloyd_3iter; r14: raw float32, cast-in-kernel); the
-        # codebook is collected, nothing downstream references the pin,
-        # so its blocks are released HERE, not left for the caller
-        staged = spread(e).select(F.col("embedding").alias("_v")).transform(
-            _pin
-        )
-        vec_col = "_v"
-    else:
-        cents = _seed_codebook(staged, vec_col)
-    for _ in range(n_iter):
-        cents = _apply_means(
-            cents, _lloyd_step(staged, cents, vec_col).collect()
-        )
-    if own:
-        release_checkpoints(staged)
-    return cents
+    cents = lloyd_codebook(staged, cents, 2)
+    # r14 (VERDICT item 4 "what's wrong"): pin the BOUNDED K×d final
+    # aggregate and release the corpus-scale staged pin HERE — a caller
+    # that discards the returned frame leaks at most K×d rows (freed by
+    # release_checkpoints like every eager query), never a corpus of
+    # staged vectors. Pinned by
+    # tests/test_kmeans.py::test_lloyd_query_releases_staged_pin.
+    out = lloyd_step(staged, cents).transform(_pin)
+    release_checkpoints(staged)
+    return out
 
 
 @register(
@@ -816,17 +647,14 @@ def ann_ivf_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (guide §5 reuse). The bounded 60-row result is pinned and the corpus
     pin released before returning (same ownership contract as
     kmeans_lloyd_3iter)."""
-    from ..operators.neardup import release_checkpoints
-
     e = load(spark, sf_dir, "embeddings")
     ev = (
         V.staged(spread(e), "embedding", "_e")
         .select("vec_id", "_e_v", "_e_n")
         .transform(_pin)
     )
-    cents = quantized_lloyd_codebook(
-        spark, sf_dir, n_iter=3, staged=ev, vec_col="_e_v"
-    )
+    _, seed = seed_codebook(ev, _KM_K, "_e_v")
+    cents = lloyd_codebook(ev, seed, 3, "_e_v")
     assign, probe_cells = ivf_index_frames(
         spark, sf_dir, nprobe=2, k_cells=_KM_K, centroids=cents, staged_ev=ev
     )

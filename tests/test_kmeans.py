@@ -6,42 +6,43 @@ from pyspark.sql import functions as F
 
 from end_to_end_azure_data_engineering_spark.functions import similarity as V
 from end_to_end_azure_data_engineering_spark.operators.kmeans import (
-    kmeans_refine,
+    lloyd_codebook,
     nearest_cell,
-    sse,
+    nearest_cell_struct,
+    seed_codebook,
 )
 from end_to_end_azure_data_engineering_spark.queries import load
 
 SF = "/root/testdata/sf0.001"
 
 
-def _seed_centroids(spark, k=8):
-    rows = sorted(
-        load(spark, SF, "embeddings").filter(F.col("vec_id") < k).collect(),
-        key=lambda r: r.vec_id,
-    )
-    return [[float(x) for x in r.embedding] for r in rows]
+def _vectors(spark):
+    return load(spark, SF, "embeddings").select("vec_id", F.col("embedding").alias("_v"))
+
+
+def _sse(vectors, cents):
+    """Total within-cluster sum of squared distances (the Lloyd
+    objective), by the HOF reference fold."""
+    d2 = nearest_cell_struct(V.as_double(F.col("_v")), cents)["dist"]
+    return vectors.select(F.sum(d2).alias("s")).first()["s"]
 
 
 def test_lloyd_objective_non_increasing(spark):
-    e = load(spark, SF, "embeddings")
-    init = _seed_centroids(spark)
-    before = sse(e, "embedding", init)
-    refined = kmeans_refine(e, "embedding", init, n_iter=2)
-    after = sse(e, "embedding", refined)
+    v = _vectors(spark)
+    _, init = seed_codebook(v, 8, "_v")
+    before = _sse(v, init)
+    refined = lloyd_codebook(v, init, 2)
+    after = _sse(v, refined)
     assert after <= before * (1 + 1e-9)
     assert after < before  # seed sample is not a fixed point on this data
     assert len(refined) == len(init) and len(refined[0]) == len(init[0])
 
 
 def test_assignment_partitions_corpus(spark):
-    e = load(spark, SF, "embeddings")
-    refined = kmeans_refine(e, "embedding", _seed_centroids(spark), n_iter=1)
-    staged = e.select("vec_id", V.as_double(F.col("embedding")).alias("_v"))
-    cells = staged.select(
-        "vec_id", nearest_cell(F.col("_v"), refined).alias("cell")
-    )
-    n_total = e.count()
+    v = _vectors(spark)
+    refined = lloyd_codebook(v, seed_codebook(v, 8, "_v")[1], 1)
+    cells = v.select("vec_id", nearest_cell(V.as_double(F.col("_v")), refined).alias("cell"))
+    n_total = v.count()
     agg = cells.agg(
         F.count("*").alias("n"),
         F.min("cell").alias("lo"),
@@ -55,48 +56,35 @@ def test_empty_cells_keep_previous_centroid(spark):
     # two far-apart duplicate groups + 4 seeds: at least 2 seeds capture
     # nothing after the first assignment and must survive unchanged
     data = [([10.0, 0.0],), ([10.1, 0.0],), ([-10.0, 0.0],), ([-10.2, 0.0],)]
-    df = spark.createDataFrame(data, "embedding array<double>")
+    df = spark.createDataFrame(data, "_v array<double>")
     init = [[10.0, 0.0], [-10.0, 0.0], [500.0, 500.0], [-500.0, -500.0]]
-    refined = kmeans_refine(df, "embedding", init, n_iter=2)
+    refined = lloyd_codebook(df, init, 2)
     assert refined[2] == [500.0, 500.0]
     assert refined[3] == [-500.0, -500.0]
     # captured cells moved to their points' means
-    assert abs(refined[0][0] - 10.05) < 1e-9
-    assert abs(refined[1][0] - (-10.1)) < 1e-9
+    assert refined[0] == [10.05, 0.0]
+    assert refined[1] == [-10.1, 0.0]
 
 
 def test_lloyd_3iter_query_tracks_production_loop(spark):
-    """The oracle-gated kmeans_lloyd_3iter query quantizes the codebook
-    (DECIMAL mean, round 6) between iterations so DuckDB can replay the
-    trajectory; the production loop keeps raw doubles. The two must
-    describe the SAME clustering: identical member counts per cell after
-    3 iterations, and final centroids within quantization distance."""
+    """The oracle-gated kmeans_lloyd_3iter query is the one Lloyd loop:
+    its third step's means equal the codebook ``lloyd_codebook`` reaches
+    in 3 iterations exactly, and every vector is counted once."""
     from end_to_end_azure_data_engineering_spark.queries.similarity_ops import (
         _KM_K,
         kmeans_lloyd_3iter,
     )
 
-    e = load(spark, SF, "embeddings")
-    init = [
-        [float(x) for x in r.embedding]
-        for r in sorted(
-            e.filter(F.col("vec_id") < _KM_K).collect(), key=lambda r: r.vec_id
-        )
-    ]
-    refined = kmeans_refine(e, "embedding", init, n_iter=3)
+    v = _vectors(spark)
+    _, init = seed_codebook(v, _KM_K, "_v")
+    refined = lloyd_codebook(v, init, 3)
     q = kmeans_lloyd_3iter(spark, SF).collect()
-    by_cell_dim = {(r.cell, r.dim): r for r in q}
-    assert len(q) == _KM_K * len(init[0]) or len(q) < _KM_K * len(init[0])
-    for (cell, dim), r in by_cell_dim.items():
-        # quantization perturbs assignments only on exact near-ties,
-        # which this corpus does not contain: coordinates agree to well
-        # inside the round-6 grid
-        assert abs(refined[cell][dim] - r.mean_q) < 5e-6, (cell, dim)
+    assert 0 < len(q) <= _KM_K * len(init[0])
+    for r in q:
+        assert refined[r.cell][r.dim] == r.mean_q, (r.cell, r.dim)
     # counts: every vector assigned exactly once (sum over cells at any
     # one dim equals the corpus size)
-    n = e.count()
-    at_dim0 = sum(r.n_members for (c, d), r in by_cell_dim.items() if d == 0)
-    assert at_dim0 == n
+    assert sum(r.n_members for r in q if r.dim == 0) == v.count()
 
 
 def test_literal_codebook_bound_refused(spark):
@@ -107,9 +95,6 @@ def test_literal_codebook_bound_refused(spark):
     spark argument before the raise — None proves it)."""
     import pytest
 
-    from end_to_end_azure_data_engineering_spark.operators.kmeans import (
-        nearest_cell_struct,
-    )
     from end_to_end_azure_data_engineering_spark.queries.similarity_ops import (
         ivf_index_frames,
     )

@@ -379,10 +379,15 @@ _JOIN_RE = re.compile(r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)")
 # Queries that pin their heavy stage before the result: the stage's real
 # work must show in one of the query's own executions, or the fence has
 # gone blind again. The eigen Gram (r13) and the fused Lloyd iteration
-# (r14) are MAP-SIDE COMBINES — an Arrow map feeding a keyed aggregate,
-# with no join (a join or a posexplode'd per-element shuffle reappearing
-# there would be the regression); every other pinned stage is a join.
-MAP_COMBINE_STAGES = ("embedding_top_eigen_power", "kmeans_lloyd_3iter")
+# (r14; unpinned, it is the whole of kmeans_refine_cells) are MAP-SIDE
+# COMBINES — an Arrow map feeding a keyed aggregate, with no join (a join
+# or a posexplode'd per-element shuffle reappearing there would be the
+# regression); every other pinned stage is a join.
+MAP_COMBINE_STAGES = (
+    "embedding_top_eigen_power",
+    "kmeans_lloyd_3iter",
+    "kmeans_refine_cells",
+)
 JOIN_STAGES = (
     "dedup_minhash_lsh",
     "dedup_minhash_lsh_capped",
@@ -586,9 +591,8 @@ def test_persist_sites_balance_unpersist():
     from pathlib import Path
 
     pkg = Path(__file__).resolve().parents[1] / "end_to_end_azure_data_engineering_spark"
-    # _candidate_pairs_with_shingles returns a persisted frame its caller
-    # must release (docstring contract); the callers' own unpersists keep
-    # neardup.py balanced today, so no entry is currently needed.
+    # no package file calls persist() more often than unpersist() today,
+    # so no entry is currently needed
     allowed: dict[str, str] = {}
     offenders = []
     for f in pkg.rglob("*.py"):

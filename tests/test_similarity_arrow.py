@@ -1,128 +1,78 @@
-"""Arrow fast-path cosine top-k (functions/similarity_arrow.py) must agree
-with the expression-kernel query `ann_bruteforce_topk` — same neighbor sets,
-scores within float tolerance (numpy's pairwise accumulation differs from
-the expression fold in the last ulp, which is why this path backs no
-oracle)."""
+"""Arrow kernels (functions/similarity_arrow.py) back ORACLE-HASHED
+queries (kmeans_refine_cells, kmeans_lloyd_3iter, ann_ivf_topk,
+ann_ivf_refined_topk, embedding_top_eigen_power), so the contract is exact
+equality against the interpreted expression form they replace — scores,
+argmin, and ties."""
 
 from pyspark.sql import functions as F
 
-from end_to_end_azure_data_engineering_spark.functions.similarity_arrow import cosine_topk_arrow
 from end_to_end_azure_data_engineering_spark.queries import load
-from end_to_end_azure_data_engineering_spark.queries.similarity_ops import ann_bruteforce_topk
 
 SF = "/root/testdata/sf0.001"
 
 
-def test_arrow_topk_matches_expression_kernel(spark):
-    expr = {
-        (r.probe_id, r.rk): (r.vec_id, r.cosine)
-        for r in ann_bruteforce_topk(spark, SF).collect()
-    }
-
-    e = load(spark, SF, "embeddings")
-    probes = [
-        (r.vec_id, [float(x) for x in r.embedding])
-        for r in e.filter(F.col("vec_id") < 5).collect()
-    ]
-    arrow = {
-        (r.probe_id, r.rk): (r.vec_id, r.cos)
-        for r in cosine_topk_arrow(e, "embedding", "vec_id", probes, k=5).collect()
-    }
-
-    assert set(arrow) == set(expr)
-    for key, (vid_e, cos_e) in expr.items():
-        vid_a, cos_a = arrow[key]
-        # the expression query rounds to 6 places; numpy's full-precision
-        # score must agree within that quantum (plus a boundary ulp)
-        assert abs(cos_a - cos_e) < 1.5e-6
-        if vid_a != vid_e:
-            assert abs(cos_a - cos_e) < 1.5e-6  # a genuine near-tie swap
-
-
-def test_arrow_topk_excludes_self_and_bounds_k(spark):
-    e = load(spark, SF, "embeddings")
-    probes = [
-        (r.vec_id, [float(x) for x in r.embedding])
-        for r in e.filter(F.col("vec_id") < 3).collect()
-    ]
-    rows = cosine_topk_arrow(e, "embedding", "vec_id", probes, k=7).collect()
-    per_probe = {}
-    for r in rows:
-        assert r.vec_id != r.probe_id
-        per_probe.setdefault(r.probe_id, []).append(r.rk)
-    for pid, rks in per_probe.items():
-        assert sorted(rks) == list(range(1, len(rks) + 1))
-        assert len(rks) <= 7
-
-
-# ---------------------------------------------------------------------------
-# r13 optimization round: the BIT-EXACT assignment kernels. Unlike the
-# top-k path above, these back ORACLE-HASHED queries (kmeans_lloyd_3iter,
-# ann_ivf_topk, ann_ivf_refined_topk), so the contract is exact equality
-# against the interpreted expression fold — scores, argmin, and ties.
-# ---------------------------------------------------------------------------
-
-
-def test_assign_sq_l2_bit_exact_vs_hof(spark):
-    """Full-fixture cell AND distance equality against nearest_cell_struct:
-    the sequential-dim numpy accumulation must reproduce the zip_with/
-    aggregate fold bit-for-bit (same IEEE add order), not approximately.
-    The distance is re-derived here with the kernel's own fold (dim-by-dim
-    accumulation over the collected vectors) and compared to the struct's
-    raw double with EXACT equality (r13 ADVICE: the distance half of this
-    claim was previously untested)."""
-    import numpy as np
+def test_lloyd_fused_assignment_bit_exact_vs_hof(spark, monkeypatch):
+    """Per-vector cell equality against the HOF reference nearest_cell
+    over the full fixture: the fused kernel's own batch function, run on
+    one-row batches, must count each vector in the cell the interpreted
+    zip_with/aggregate fold picks — the sequential-dim numpy accumulation
+    reproduces that fold bit-for-bit (same IEEE add order), not
+    approximately."""
+    import pandas as pd
 
     from end_to_end_azure_data_engineering_spark.functions import similarity as V
     from end_to_end_azure_data_engineering_spark.functions.similarity_arrow import (
-        assign_sq_l2_arrow,
+        lloyd_decimal_partials_arrow,
     )
     from end_to_end_azure_data_engineering_spark.operators.kmeans import (
-        nearest_cell_struct,
-    )
-    from end_to_end_azure_data_engineering_spark.queries.similarity_ops import (
-        _seed_codebook,
+        nearest_cell,
+        seed_codebook,
     )
 
     e = load(spark, SF, "embeddings")
-    cents = _seed_codebook(e)
+    _, cents = seed_codebook(e, 16)
     staged = e.select("vec_id", V.as_double(F.col("embedding")).alias("_v"))
     hof = {
-        r.vec_id: (r.s.cell, r.s.dist)
+        r.vec_id: r.cell
         for r in staged.select(
-            "vec_id", nearest_cell_struct(F.col("_v"), cents).alias("s")
+            "vec_id", nearest_cell(F.col("_v"), cents).alias("cell")
         ).collect()
     }
-    got = {
-        r.vec_id: r.cell
-        for r in assign_sq_l2_arrow(staged, "_v", cents).collect()
-    }
-    assert set(got) == set(hof)
-    # re-run the kernel's exact fold over the same vectors and require the
-    # winning distance to equal the struct form's raw double BIT-FOR-BIT
-    C = np.asarray(cents, dtype=np.float64)
-    vecs = {r.vec_id: np.asarray(r._v, dtype=np.float64) for r in staged.collect()}
-    for vid, cell in got.items():
-        assert cell == hof[vid][0], (vid, cell, hof[vid])
-        x = vecs[vid]
-        acc = np.zeros(C.shape[0])
-        for j in range(C.shape[1]):
-            diff = x[j] - C[:, j]
-            acc += diff * diff
-        assert float(acc[cell]) == hof[vid][1], (vid, float(acc[cell]), hof[vid])
+    captured = []
+    cls = type(staged)
+    orig = cls.mapInPandas
+
+    def spy(self, func, schema, *a, **kw):
+        captured.append(func)
+        return orig(self, func, schema, *a, **kw)
+
+    monkeypatch.setattr(cls, "mapInPandas", spy)
+    lloyd_decimal_partials_arrow(staged.select("_v"), "_v", cents)
+    (run,) = captured
+    rows = staged.collect()
+    assert len(rows) == len(hof)
+    for r in rows:
+        (out,) = run(iter([pd.DataFrame({"_v": [r._v]})]))
+        assert set(out["cell"]) == {hof[r.vec_id]}, r.vec_id
 
 
-def test_assign_sq_l2_tie_breaks_to_lowest_cell(spark):
-    """Duplicate centroids force exact distance ties: both the struct
-    ordering and np.argmin must pick the LOWEST cell index."""
+def test_lloyd_fused_tie_breaks_to_lowest_cell(spark):
+    """Duplicate centroids force exact distance ties: the fused kernel,
+    like the struct(dist, cell) ordering, must count each vector in the
+    LOWEST tied cell."""
     from end_to_end_azure_data_engineering_spark.functions.similarity_arrow import (
-        assign_sq_l2_arrow,
+        lloyd_decimal_partials_arrow,
     )
 
     df = spark.createDataFrame([([1.0, 2.0],), ([5.0, 5.0],)], "v: array<double>")
     cents = [[5.0, 5.0], [1.0, 2.0], [1.0, 2.0], [5.0, 5.0]]
-    got = [r.cell for r in assign_sq_l2_arrow(df, "v", cents).collect()]
-    assert got == [1, 0]
+    got = {
+        (r.cell, r.dim): (r.n_part, float(r.s_part))
+        for r in lloyd_decimal_partials_arrow(df, "v", cents).collect()
+    }
+    assert got == {
+        (0, 0): (1, 5.0), (0, 1): (1, 5.0), (1, 0): (1, 1.0), (1, 1): (1, 2.0)
+    }
 
 
 def test_assign_cosine_cid_bit_exact_vs_hof(spark):
@@ -188,7 +138,6 @@ def test_assign_kernel_closures_are_self_contained(spark, monkeypatch):
 
     from end_to_end_azure_data_engineering_spark.functions.similarity_arrow import (
         assign_cosine_cid_arrow,
-        assign_sq_l2_arrow,
     )
 
     captured = []
@@ -201,9 +150,8 @@ def test_assign_kernel_closures_are_self_contained(spark, monkeypatch):
         return orig(self, func, schema, *a, **kw)
 
     monkeypatch.setattr(cls, "mapInPandas", spy)
-    assign_sq_l2_arrow(df, "v", [[0.0, 0.0]])
     assign_cosine_cid_arrow(df, "v", "n", [[1.0, 0.0]], [1.0], [0])
-    assert len(captured) == 2
+    assert len(captured) == 1
     # the decisive property: a clean interpreter WITHOUT the repo on its
     # path (the harness's worker environment) must unpickle and run the
     # closure — by-value functions still carry the module NAME as inert
@@ -238,14 +186,14 @@ def test_assign_kernel_closures_are_self_contained(spark, monkeypatch):
 
 
 def _old_lloyd_step(staged_v, cents):
-    """The r13 form of _lloyd_step (Arrow assignment + posexplode + JVM
-    decimal aggregate), rebuilt inline as the bit-equality reference for
-    the r14 fused kernel."""
-    from end_to_end_azure_data_engineering_spark.functions.similarity_arrow import (
-        assign_sq_l2_arrow,
+    """One Lloyd step in its interpreted form (the HOF assignment
+    operators/kmeans.nearest_cell + posexplode + JVM decimal aggregate):
+    the bit-equality reference for the fused kernel."""
+    from end_to_end_azure_data_engineering_spark.operators.kmeans import (
+        nearest_cell,
     )
 
-    assigned = assign_sq_l2_arrow(staged_v.select("_v"), "_v", cents)
+    assigned = staged_v.select("_v", nearest_cell(F.col("_v"), cents).alias("cell"))
     return (
         assigned.select("cell", F.posexplode_outer("_v").alias("dim", "x"))
         .groupBy("cell", "dim")
@@ -265,18 +213,21 @@ def _old_lloyd_step(staged_v, cents):
 
 def test_lloyd_fused_partials_bit_exact(spark):
     """r14 VERDICT item 1: the fused assignment+decimal-partials kernel,
-    aggregated downstream, must equal the r13 posexplode + JVM decimal
-    form BIT-FOR-BIT over the full fixture — counts as exact ints,
-    mean_q by float repr (round-trip exact), across several partitions
-    so cross-partition partial summation is exercised."""
+    aggregated downstream, must equal the interpreted HOF assignment +
+    posexplode + JVM decimal form BIT-FOR-BIT over the full fixture —
+    counts as exact ints, mean_q by float repr (round-trip exact), across
+    several partitions so cross-partition partial summation is exercised.
+    This is also the assignment check: a vector the fused fold placed in
+    another cell than the HOF fold would change both cells' counts and
+    sums."""
     from end_to_end_azure_data_engineering_spark.functions import similarity as V
-    from end_to_end_azure_data_engineering_spark.queries.similarity_ops import (
-        _lloyd_step,
-        _seed_codebook,
+    from end_to_end_azure_data_engineering_spark.operators.kmeans import (
+        lloyd_step,
+        seed_codebook,
     )
 
     e = load(spark, SF, "embeddings")
-    cents = _seed_codebook(e)
+    _, cents = seed_codebook(e, 16)
     staged = e.repartition(5).select(V.as_double(F.col("embedding")).alias("_v"))
     ref = {
         (r.cell, r.dim): (r.n_members, repr(r.mean_q))
@@ -284,7 +235,7 @@ def test_lloyd_fused_partials_bit_exact(spark):
     }
     got = {
         (r.cell, r.dim): (r.n_members, repr(r.mean_q))
-        for r in _lloyd_step(staged, cents).collect()
+        for r in lloyd_step(staged, cents).collect()
     }
     assert got == ref
     # r14 float32 pin: feeding the RAW float arrays must give the same
@@ -293,7 +244,7 @@ def test_lloyd_fused_partials_bit_exact(spark):
     raw = e.repartition(5).select(F.col("embedding").alias("_v"))
     got32 = {
         (r.cell, r.dim): (r.n_members, repr(r.mean_q))
-        for r in _lloyd_step(raw, cents).collect()
+        for r in lloyd_step(raw, cents).collect()
     }
     assert got32 == ref
 

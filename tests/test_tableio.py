@@ -288,25 +288,33 @@ def test_read_empty_table(spark, tmp_path):
 
 
 def test_read_audit_rows_written_by_arrow(spark, tmp_path):
-    """The audit table is created by a Spark-written empty file, which
-    sorts before the pyarrow-written rows, so its read is job-free. A
-    table whose first file is pyarrow-written carries no Spark schema in
-    that footer: its read falls back to Spark's inference, with the same
-    schema either way."""
+    """The audit table is written on the driver: creating it and inserting
+    rows submits no Spark job, and every file, the empty one included,
+    carries Spark's schema key, so the read is job-free whichever file
+    sorts first. A table whose first file is pyarrow-written without the
+    key falls back to Spark's inference, with the same schema either
+    way."""
     import datetime as dt
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from end_to_end_azure_data_engineering_spark.engine.clock import FixedClock
+    from end_to_end_azure_data_engineering_spark.engine.tableio import SPARK_SCHEMA_KEY
     from end_to_end_azure_data_engineering_spark.plans.audit import (
         NAMESPACE, TABLE, AuditLog,
     )
 
     wh = Warehouse(spark, str(tmp_path / "wh"))
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup() or [])
     audit = AuditLog(wh, FixedClock(dt.datetime(2024, 3, 1)))
     audit.start("erp", "orders")
     audit.start("erp", "customers")
+    assert set(tracker.getJobIdsForGroup() or []) == before
+    files = sorted(wh.data_dir(NAMESPACE, TABLE).glob("*.parquet"))
+    assert len(files) == 3
+    assert all(SPARK_SCHEMA_KEY in pq.read_metadata(f).metadata for f in files)
     got = _assert_read_fence(
         spark, lambda: wh.read(NAMESPACE, TABLE), wh.path(NAMESPACE, TABLE)
     )

@@ -11,9 +11,11 @@ plan fences in ``tests/test_plan_guards.py`` read both passes;
 
 As a script, prints the join strategies, exchange (shuffle) count,
 parquet pushdown evidence and window count per query, summed over its
-executions — plus a ``name:forced`` row for each gated query:
+executions — plus a ``name:forced`` row for each gated query. ``--plans``
+prints every executed plan (AQE final and initial) under its row: the
+way to look at what a query ran, at any commit.
 
-    python tools/plan_audit.py [sf_dir] [query ...]
+    python tools/plan_audit.py [--plans] [sf_dir] [query ...]
 """
 
 from __future__ import annotations
@@ -241,9 +243,24 @@ def _row(name: str, plans: list[str]) -> str:
     )
 
 
+def _report(name: str, plans: list[str], show_plans: bool) -> None:
+    print(_row(name, plans), flush=True)
+    if show_plans:
+        for i, plan in enumerate(plans, 1):
+            print(f"--- {name} execution {i}/{len(plans)} ---\n{plan}", flush=True)
+
+
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = sys.argv[2:]
+    import argparse
+
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument("queries", nargs="*", help="default: every registered query")
+    ap.add_argument(
+        "--plans", action="store_true",
+        help="also print each executed physical plan under its query's row",
+    )
+    args = ap.parse_args()
 
     import __spark_entry__ as ent
     from end_to_end_azure_data_engineering_spark.engine import get_spark
@@ -251,12 +268,12 @@ def main() -> int:
     spark = get_spark("plan_audit")
     spark.sparkContext.setLogLevel("ERROR")
     qs = ent.queries()
-    for name in only or list(qs):
-        print(_row(name, executed_plans(spark, qs[name], sf_dir)), flush=True)
+    for name in args.queries or list(qs):
+        _report(name, executed_plans(spark, qs[name], args.sf_dir), args.plans)
         if name in FORCED:
             with forced_route(name):
-                plans = executed_plans(spark, qs[name], sf_dir)
-            print(_row(f"{name}:forced", plans), flush=True)
+                plans = executed_plans(spark, qs[name], args.sf_dir)
+            _report(f"{name}:forced", plans, args.plans)
     return 0
 
 
