@@ -17,12 +17,11 @@ __version__ = "0.1.0"
 # Queries stay in `end_to_end_azure_data_engineering_spark.queries` (driver-facing registry); these are
 # the building blocks user pipelines compose directly.
 from .engine.session import get_spark, stop_spark  # noqa: E402
-from .engine.tableio import VersionedWarehouse, Warehouse  # noqa: E402
+from .engine.tableio import Warehouse  # noqa: E402
 
 __all__ = [
     "get_spark",
     "stop_spark",
     "Warehouse",
-    "VersionedWarehouse",
     "__version__",
 ]

@@ -51,18 +51,13 @@ __all__ = [
 ROW_OVERHEAD_BYTES = 32
 
 
-def pin(df: DataFrame, *, reliable: bool | None = None) -> DataFrame:
-    """Eagerly materialize ``df`` and return the pinned frame.
-
-    ``reliable=None`` (default) auto-detects: reliable ``checkpoint()``
-    when the SparkContext has a checkpoint dir configured, else
-    ``localCheckpoint()``. Explicit True/False forces the tier (True
-    requires a configured checkpoint dir, as Spark itself enforces)."""
-    if reliable is None:
-        reliable = (
-            df.sparkSession.sparkContext.getCheckpointDir() is not None
-        )
-    return df.checkpoint() if reliable else df.localCheckpoint()
+def pin(df: DataFrame) -> DataFrame:
+    """Eagerly materialize ``df`` and return the pinned frame: a reliable
+    ``checkpoint()`` when the SparkContext has a checkpoint dir
+    configured, else ``localCheckpoint()``."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint()
+    return df.localCheckpoint()
 
 
 def release_checkpoints(df: DataFrame) -> None:

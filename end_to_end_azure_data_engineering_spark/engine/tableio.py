@@ -2,9 +2,9 @@
 
 The reference stores silver/gold as external Delta tables
 (4_silver/silver_transactions.py:50-51). This build has no Delta jar, so
-tables are parquet directories under a warehouse root with
-write-new-then-swap semantics (atomic enough for single-writer pipelines;
-on Delta the same API maps to ACID commits — noted per method).
+every table is a versioned parquet directory under a warehouse root: an
+immutable ``_v<N>/`` per commit and a ``_CURRENT`` pointer (see
+``Warehouse``). On Delta the same API maps to ACID commits.
 
 Namespaces mirror the medallion: bronze/silver/gold/audit.
 """
@@ -62,286 +62,20 @@ def _footer_schema(root: Path) -> StructType | None:
 
 
 def _write_parquet(
-    df: DataFrame, path: Path, mode: str, partition_by: list[str] | None = None
+    df: DataFrame, vdir: Path, partition_by: list[str] | None = None
 ) -> None:
-    w = df.write.mode(mode)
+    """Write ``df`` into a claimed version directory. Mode append: an
+    overwrite would delete and recreate the claim, opening a window where
+    a competing writer could claim the same number."""
+    w = df.write.mode("append")
     if partition_by:
         w = w.partitionBy(*partition_by)
-    w.parquet(str(path))
-
-
-def _stage_file(directory: Path, name: str, write_fn) -> None:
-    """``write_fn(tmp)`` under a hidden dot-name, then an atomic rename to
-    ``name``: an interrupted write never leaves a footerless partial
-    visible."""
-    tmp = directory / f".{name}.tmp"
-    write_fn(tmp)
-    os.replace(tmp, directory / name)
+    w.parquet(str(vdir))
 
 
 class Warehouse:
-    def __init__(self, spark: SparkSession, root: str):
-        self.spark = spark
-        self.root = Path(root)
-        self.root.mkdir(parents=True, exist_ok=True)
-
-    def path(self, namespace: str, table: str) -> Path:
-        return self.root / namespace / table
-
-    @staticmethod
-    def _count_files(root: Path) -> int:
-        """Row count from parquet footers (recursive — covers hive
-        partition dirs): exact and driver-side, replacing the full Spark
-        count job every write used to pay just to report rows written.
-        Footer reads are metadata-only — no data pages touched."""
-        import pyarrow.parquet as pq
-
-        return sum(
-            pq.read_metadata(f).num_rows for f in root.rglob("*.parquet")
-        )
-
-    def exists(self, namespace: str, table: str) -> bool:
-        p = self.path(namespace, table)
-        return p.exists() and any(p.iterdir())
-
-    def data_dir(self, namespace: str, table: str) -> Path:
-        """Directory holding the table's LIVE data files (the table root
-        here; the published version directory on VersionedWarehouse).
-        Callers inspecting files (compaction counts, footer stats) must go
-        through this, never path()."""
-        return self.path(namespace, table)
-
-    def insert_file(self, namespace: str, table: str, name: str, write_fn) -> None:
-        """Driver-side single-file insert (the audit row write): stage via
-        ``write_fn(tmp_path)`` and rename into the live table (see
-        ``_stage_file``). VersionedWarehouse overrides this to publish the
-        file as a proper APPEND version instead."""
-        path = self.path(namespace, table)
-        path.mkdir(parents=True, exist_ok=True)
-        _stage_file(path, name, write_fn)
-
-    def read(self, namespace: str, table: str, merge_schema: bool = False) -> DataFrame:
-        """``merge_schema=True`` unions the schemas of every file (columns
-        added by later evolving appends surface as NULL on older rows) —
-        the read half of Delta's mergeSchema. Off by default: schema
-        merging lists every footer, which costs on very wide tables.
-
-        Without ``merge_schema`` the read runs no Spark job: the schema
-        Spark's inference would return comes from one parquet footer on
-        the driver (see ``_footer_schema``), as Delta takes it from its
-        log. Hive partition columns are still appended from the directory
-        names. A table whose footer holds no Spark schema falls back to
-        Spark's one-task inference job."""
-        return self._read_parquet(self.path(namespace, table), merge_schema)
-
-    def _read_parquet(self, root: Path, merge_schema: bool) -> DataFrame:
-        r = self.spark.read
-        if merge_schema:
-            r = r.option("mergeSchema", "true")
-        else:
-            schema = _footer_schema(root)
-            if schema is not None:
-                r = r.schema(schema)
-        return r.parquet(str(root))
-
-    def overwrite(
-        self,
-        df: DataFrame,
-        namespace: str,
-        table: str,
-        partition_by: list[str] | None = None,
-    ) -> int:
-        """Write-new-then-swap (Delta: single atomic overwrite commit).
-
-        Reads of the old data complete against already-open files; the swap
-        is a directory rename. Returns rows written.
-
-        ``partition_by`` lays the table out as hive-partitioned directories —
-        the SURVEY §4 upgrade that turns the reference's file-NAME pruning
-        (timestamped bronze globs) into real partition pruning: a filter on
-        the partition column becomes `PartitionFilters` at the scan and
-        non-matching directories are never listed.
-        """
-        final = self.path(namespace, table)
-        tmp = final.parent / f".{table}.tmp.{uuid.uuid4().hex[:8]}"
-        _write_parquet(df, tmp, "overwrite", partition_by)
-        n = self._count_files(tmp)
-        if final.exists():
-            shutil.rmtree(final)
-        tmp.rename(final)
-        return n
-
-    def overwrite_bucketed(
-        self,
-        df: DataFrame,
-        namespace: str,
-        table: str,
-        bucket_cols: list[str],
-        n_buckets: int,
-    ) -> str:
-        """Bucketed managed table (`<namespace>__<table>` in the session
-        catalog): rows are hash-bucketed and sorted on ``bucket_cols`` at
-        write time, so equi-joins/aggregations between tables bucketed on
-        the same key plan with NO Exchange — the shuffle is prepaid once at
-        load. This is the co-located-join layout for repeated big-big joins
-        (fact↔fact at 100 TB); Delta/Iceberg equivalents: bucket transform
-        partitioning. Returns the catalog table name.
-        """
-        name = f"{namespace}__{table}"
-        # a previous JVM may have left the managed location behind without a
-        # catalog entry (LOCATION_ALREADY_EXISTS on saveAsTable) — drop both
-        self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-        wh_dir = self.spark.conf.get("spark.sql.warehouse.dir", "")
-        if wh_dir.startswith("file:"):
-            wh_dir = wh_dir[5:]
-        orphan = Path(wh_dir) / name.lower() if wh_dir else None
-        if orphan and orphan.exists():
-            shutil.rmtree(orphan)
-        (
-            df.write.mode("overwrite")
-            .bucketBy(n_buckets, *bucket_cols)
-            .sortBy(*bucket_cols)
-            .format("parquet")
-            .saveAsTable(name)
-        )
-        return name
-
-    def read_bucketed(self, namespace: str, table: str) -> DataFrame:
-        return self.spark.table(f"{namespace}__{table}")
-
-    def compact(
-        self,
-        namespace: str,
-        table: str,
-        target_files: int,
-        cluster_by: list[str] | None = None,
-    ) -> int:
-        """Small-file compaction (the reference lists OPTIMIZE as future
-        work — README.md:65; SURVEY §4): rewrite the table into
-        ``target_files`` files, optionally range-clustered on ``cluster_by``
-        so parquet row-group min/max stats give data-skipping on those
-        columns (the poor man's Z-order for a single sort axis). Incremental
-        append loads (M2/M4) accrete one file per batch; compaction restores
-        scan efficiency. Returns the resulting file count.
-        """
-        df = self.read(namespace, table)
-        if cluster_by:
-            df = df.repartitionByRange(target_files, *cluster_by).sortWithinPartitions(
-                *cluster_by
-            )
-        else:
-            df = df.repartition(target_files)
-        self.overwrite(df, namespace, table)
-        return len(list(self.data_dir(namespace, table).glob("*.parquet")))
-
-    def overwrite_zordered(
-        self,
-        df: DataFrame,
-        namespace: str,
-        table: str,
-        x: str,
-        y: str,
-        target_files: int = 32,
-    ) -> int:
-        """Overwrite with Z-order clustering on two pre-reduced 16-bit
-        dimension columns (`OPTIMIZE ZORDER BY` on plain parquet): rows are
-        range-partitioned and sorted by the morton interleave of (x, y), so
-        each file's min/max footer stats are tight on BOTH columns and a
-        filter on EITHER skips most files — one sorted axis can only give
-        that for its leading column. ``x``/``y`` must already be in
-        0..65535 (modulo / bucketed rank / epoch-day); see
-        functions/zorder.py. Returns rows written."""
-        from ..functions.zorder import morton_key
-
-        clustered = (
-            df.withColumn("_z", morton_key(x, y))
-            .repartitionByRange(target_files, "_z")
-            .sortWithinPartitions("_z")
-            .drop("_z")
-        )
-        # repartitionByRange needs the key at plan time, so _z is computed,
-        # used for the exchange+sort, and dropped before the files land
-        return self.overwrite(clustered, namespace, table)
-
-    def append(
-        self,
-        df: DataFrame,
-        namespace: str,
-        table: str,
-        partition_by: list[str] | None = None,
-    ) -> None:
-        """Plain append (Delta: ACID append commit). ``partition_by`` appends
-        into hive-partition directories (new partition values create new
-        dirs; existing ones gain files)."""
-        _write_parquet(df, self.path(namespace, table), "append", partition_by)
-
-    def append_evolve(self, df: DataFrame, namespace: str, table: str) -> None:
-        """Schema-evolving append — the Delta ``mergeSchema`` write twin
-        (`4_silver` MERGEs rely on Delta's implicit evolution). New columns
-        are allowed (older rows read as NULL under ``read(...,
-        merge_schema=True)``); dropping columns is allowed (newer files
-        simply lack them); CHANGING an existing column's type is rejected
-        up front, because parquet footer-merge would otherwise fail at read
-        time with an opaque error far from the offending write."""
-        if self.exists(namespace, table):
-            current = {
-                f.name: f.dataType
-                for f in self.read(namespace, table, merge_schema=True).schema
-            }
-            # compare on simpleString: nested NULLABILITY differences
-            # (ArrayType.containsNull, StructField.nullable) are merge-
-            # compatible in parquet and must not block an append — strict
-            # DataType equality rejected array<int> vs array<int> whose
-            # only difference was containsNull
-            clashes = [
-                f"{f.name}: table {current[f.name].simpleString()} vs "
-                f"batch {f.dataType.simpleString()}"
-                for f in df.schema
-                if f.name in current
-                and f.dataType.simpleString() != current[f.name].simpleString()
-            ]
-            if clashes:
-                raise TypeError(
-                    f"append_evolve into {namespace}.{table} would change "
-                    f"column types: {'; '.join(clashes)}"
-                )
-        self.append(df, namespace, table)
-
-    def archive(
-        self,
-        namespace: str,
-        table: str,
-        stamp: str,
-        archive_namespace: str = "archive",
-    ) -> str | None:
-        """S14 — archive-copy+delete rotation before a full reload
-        (pl_sql_copy_bronze.json:148-277: the reference copies the prior
-        bronze file into an archive folder, then deletes it, before landing
-        the fresh full copy). Returns the archived table name, or None if
-        there was nothing to rotate. On object storage this is a cheap
-        server-side copy/rename; here it is one atomic directory rename, so
-        no file is copied (a VersionedWarehouse's hard-linked version files
-        stay shared)."""
-        if not self.exists(namespace, table):
-            return None
-        src = self.path(namespace, table)
-        archived = f"{table}_{stamp}"
-        dst = self.path(archive_namespace, archived)
-        dst.parent.mkdir(parents=True, exist_ok=True)
-        if dst.exists():
-            shutil.rmtree(dst)
-        os.replace(src, dst)
-        return archived
-
-    def drop(self, namespace: str, table: str) -> None:
-        p = self.path(namespace, table)
-        if p.exists():
-            shutil.rmtree(p)
-
-
-class VersionedWarehouse(Warehouse):
-    """MVCC on top of the parquet warehouse — the closest parquet-only
-    reproduction of the Delta semantics the reference relies on
+    """MVCC on parquet — the closest parquet-only reproduction of the
+    Delta semantics the reference relies on
     (4_silver/silver_transactions.py:50-51: ACID overwrite, readers never
     see partial writes, history retained).
 
@@ -382,10 +116,10 @@ class VersionedWarehouse(Warehouse):
     fails its first write instead of running unlocked.
 
     ``autovacuum_keep=N`` prunes to the newest N versions after every
-    publish (Delta's log/file retention, applied inline) — the right mode
-    for append-heavy tables like the audit log, where every driver-side
-    row insert is its own APPEND version. Off (None) by default: keep
-    full history for time travel."""
+    publish (Delta's log/file retention, applied inline). Off (None) by
+    default: every table keeps its full history for time travel until
+    ``vacuum`` or a per-table ``set_retention`` bounds it, as a Delta
+    table does until ``VACUUM``."""
 
     # Waiter patience for the append lock (held across a whole Spark
     # write) and the pointer lock (microseconds of driver-side work). A
@@ -397,11 +131,32 @@ class VersionedWarehouse(Warehouse):
     # _claim_keepalive's refresh interval (well inside PHANTOM_SWEEP_AFTER).
     LOCK_HEARTBEAT = 60.0
 
-    def __init__(self, spark, root, autovacuum_keep: int | None = None):
-        super().__init__(spark, root)
+    def __init__(self, spark: SparkSession, root: str, autovacuum_keep: int | None = None):
         if autovacuum_keep is not None and autovacuum_keep < 1:
             raise ValueError("autovacuum_keep must be >= 1 (or None)")
+        self.spark = spark
+        self.root = Path(root)
+        self.root.mkdir(parents=True, exist_ok=True)
         self.autovacuum_keep = autovacuum_keep
+
+    def path(self, namespace: str, table: str) -> Path:
+        """The table's base directory (versions, pointer, locks). Callers
+        inspecting data files go through ``data_dir``."""
+        return self.root / namespace / table
+
+    @staticmethod
+    def _count_files(root: Path) -> int:
+        """Row count from parquet footers (recursive — covers hive
+        partition dirs): exact and driver-side, replacing the full Spark
+        count job every write used to pay just to report rows written.
+        Footer reads are metadata-only — no data pages touched."""
+        import pyarrow.parquet as pq
+
+        return sum(
+            pq.read_metadata(f).num_rows for f in root.rglob("*.parquet")
+        )
+
+    # ---- retention --------------------------------------------------------
 
     def set_retention(self, namespace: str, table: str, keep: int | None) -> None:
         """Per-TABLE retention (Delta scopes logRetentionDuration per
@@ -409,8 +164,8 @@ class VersionedWarehouse(Warehouse):
         THIS table, overriding the warehouse-wide ``autovacuum_keep``.
         ``None`` means an EXPLICIT "keep full history" choice and is
         persisted as such (marker content ``none``) — deleting the marker
-        instead would let a later AuditLog init silently re-apply its
-        default and prune history the operator chose to keep (r4 advice).
+        instead would let a later ``default_retention`` silently re-apply
+        a default and prune history the operator chose to keep.
         Use :meth:`clear_retention` to drop the override and revert to the
         warehouse-wide policy. Bounding an append-heavy audit log must not
         cost every gold table its time-travel history."""
@@ -423,6 +178,14 @@ class VersionedWarehouse(Warehouse):
             if keep < 1:
                 raise ValueError("retention keep must be >= 1 (or None)")
             marker.write_text(str(keep))
+
+    def default_retention(self, namespace: str, table: str, keep: int) -> None:
+        """``set_retention(keep)`` unless the table already records a
+        retention choice (an explicit ``None`` included): the default an
+        append-heavy writer (the audit log, the streaming dedup sink)
+        gives its table without overriding the operator."""
+        if not (self.path(namespace, table) / ".retention").exists():
+            self.set_retention(namespace, table, keep)
 
     def clear_retention(self, namespace: str, table: str) -> None:
         """Remove the per-table override: the table reverts to the
@@ -440,7 +203,7 @@ class VersionedWarehouse(Warehouse):
             except ValueError:
                 # A damaged marker must not silently substitute a DIFFERENT
                 # retention policy (the fallback could vacuum history the
-                # operator configured to keep, with no signal — r4 advice).
+                # operator configured to keep, with no signal).
                 raise RuntimeError(
                     f"{namespace}.{table}: .retention marker is corrupt "
                     f"(content {raw!r}). Repair with set_retention() or "
@@ -448,42 +211,122 @@ class VersionedWarehouse(Warehouse):
                 ) from None
         return self.autovacuum_keep
 
+    # ---- reading ----------------------------------------------------------
+
     def _pointer(self, namespace: str, table: str) -> Path:
         return self.path(namespace, table) / "_CURRENT"
 
     def exists(self, namespace: str, table: str) -> bool:
-        """A versioned table exists when a version has been PUBLISHED —
-        directory presence alone (the base-class rule) would make a crashed
-        first commit's claim look like a readable table."""
-        return (
-            self._pointer(namespace, table).exists()
-            and self.current_version(namespace, table) is not None
-        )
-
-    def overwrite(
-        self,
-        df: DataFrame,
-        namespace: str,
-        table: str,
-        partition_by: list[str] | None = None,
-    ) -> int:
-        """Versioned overwrite = commit + publish. Overrides the base
-        swap-in-place write so EVERY mutation through a VersionedWarehouse
-        is a version (callers written against the plain Warehouse API —
-        the streaming sinks, the silver loaders — get MVCC snapshots,
-        time travel, and history for free when handed this class; without
-        this override their overwrites landed outside the version layout
-        and read() could not see them). Returns rows written."""
-        v = self.commit(df, namespace, table, op="OVERWRITE", partition_by=partition_by)
-        return self._count_files(self.path(namespace, table) / f"_v{v}")
+        """A table exists when a version has been PUBLISHED — directory
+        presence alone would make a crashed first commit's claim look
+        like a readable table."""
+        return self.current_version(namespace, table) is not None
 
     def data_dir(self, namespace: str, table: str) -> Path:
+        """Directory holding the table's LIVE data files: the published
+        version directory. Callers inspecting files (compaction counts,
+        footer stats) must go through this, never path()."""
         v = self.current_version(namespace, table)
         if v is None:
             raise FileNotFoundError(
                 f"{namespace}.{table} has no committed version"
             )
         return self.path(namespace, table) / f"_v{v}"
+
+    def read(
+        self,
+        namespace: str,
+        table: str,
+        version: int | None = None,
+        merge_schema: bool = False,
+    ) -> DataFrame:
+        """Read the published snapshot (or time-travel to ``version``).
+
+        ``merge_schema=True`` unions the schemas of every file (columns
+        added by later evolving appends surface as NULL on older rows) —
+        the read half of Delta's mergeSchema. Off by default: schema
+        merging lists every footer, which costs on very wide tables.
+
+        Without ``merge_schema`` the read runs no Spark job: the schema
+        Spark's inference would return comes from one parquet footer on
+        the driver (see ``_footer_schema``), as Delta takes it from its
+        log. Hive partition columns are still appended from the directory
+        names. A table whose footer holds no Spark schema falls back to
+        Spark's one-task inference job."""
+        v = version if version is not None else self.current_version(namespace, table)
+        if v is None:
+            raise FileNotFoundError(
+                f"{namespace}.{table} has no committed version"
+            )
+        vdir = self.path(namespace, table) / f"_v{v}"
+        if not vdir.exists():
+            raise FileNotFoundError(
+                f"{namespace}.{table} version {v} not found (vacuumed?)"
+            )
+        r = self.spark.read
+        if merge_schema:
+            r = r.option("mergeSchema", "true")
+        else:
+            schema = _footer_schema(vdir)
+            if schema is not None:
+                r = r.schema(schema)
+        return r.parquet(str(vdir))
+
+    def current_version(self, namespace: str, table: str) -> int | None:
+        ptr = self._pointer(namespace, table)
+        if not ptr.exists():
+            return None
+        raw = ptr.read_text().strip()
+        try:
+            return int(raw)
+        except ValueError:
+            # A torn/garbled pointer is table corruption, not a parse bug.
+            # Deliberately NOT falling back to max(versions()): the newest
+            # version directory may be a fully-written but never-published
+            # commit, and silently promoting it would publish data no
+            # commit ever acknowledged.
+            raise RuntimeError(
+                f"{namespace}.{table}: _CURRENT pointer is corrupt "
+                f"(content {raw!r}). Existing versions: "
+                f"{self.versions(namespace, table)}. Repair by writing the "
+                "last known-published version number to _CURRENT."
+            ) from None
+
+    def versions(self, namespace: str, table: str) -> list[int]:
+        base = self.path(namespace, table)
+        if not base.exists():
+            return []
+        return sorted(
+            int(p.name[2:]) for p in base.glob("_v*") if p.name[2:].isdigit()
+        )
+
+    def history(self, namespace: str, table: str) -> list[dict]:
+        """Delta ``DESCRIBE HISTORY`` parity: one entry per retained
+        version, newest first — operation label, parquet file count and
+        bytes (from the filesystem, not a log), and whether the version is
+        the published snapshot. Vacuumed versions disappear from history
+        exactly as Delta's do once their files are gone."""
+        cur = self.current_version(namespace, table)
+        out = []
+        for v in reversed(self.versions(namespace, table)):
+            if not self._is_committed(namespace, table, v):
+                continue  # crashed writer's claim (empty or half-linked):
+                # never a commit — not a history entry (vacuum sweeps it)
+            vdir = self.path(namespace, table) / f"_v{v}"
+            files = [f for f in vdir.rglob("*.parquet") if f.is_file()]
+            op_file = vdir / ".op"
+            out.append(
+                {
+                    "version": v,
+                    "operation": op_file.read_text() if op_file.exists() else "WRITE",
+                    "n_files": len(files),
+                    "bytes": sum(f.stat().st_size for f in files),
+                    "is_current": v == cur,
+                }
+            )
+        return out
+
+    # ---- the version commit -----------------------------------------------
 
     @contextmanager
     def _flock_lock(self, lock: Path, what: str, patience: float):
@@ -574,10 +417,10 @@ class VersionedWarehouse(Warehouse):
         stall minutes between file materializations) would age past that
         horizon too, and commit()/overwrite() writers don't hold the append
         lock, so a concurrent vacuum (autovacuum runs on every publish)
-        could rmtree the claim mid-write and corrupt the commit (r5
-        advice). A daemon thread os.utime's the claim every
-        LOCK_HEARTBEAT seconds; a crashed driver kills the thread with it,
-        the directory ages normally, and the sweep is legitimate."""
+        could rmtree the claim mid-write and corrupt the commit. A daemon
+        thread os.utime's the claim every LOCK_HEARTBEAT seconds; a
+        crashed driver kills the thread with it, the directory ages
+        normally, and the sweep is legitimate."""
         stop = threading.Event()
 
         def _beat() -> None:
@@ -596,27 +439,94 @@ class VersionedWarehouse(Warehouse):
     @staticmethod
     def _link_files(src: Path, vdir: Path, skip: str | None = None) -> None:
         """Hard-link every file of version directory ``src`` into the
-        claimed ``vdir``, keeping the tree (O(#files), zero bytes copied;
-        copies where the filesystem refuses links). Never links the
-        ``.op`` stamp: writing the new version's label through a shared
-        inode would rewrite the SOURCE version's history entry. ``skip``
-        is a relative partition path left out (the caller rewrites it)."""
-        for f in sorted(src.rglob("*")):
-            if f.name == ".op":
-                continue
-            rel = f.relative_to(src)
-            rp = str(rel)
-            if skip is not None and (rp == skip or rp.startswith(skip + "/")):
-                continue
-            dst = vdir / rel
-            if f.is_dir():
-                dst.mkdir(parents=True, exist_ok=True)
-            else:
-                dst.parent.mkdir(parents=True, exist_ok=True)
+        claimed ``vdir``, keeping the tree: one walk, one ``mkdir`` per
+        directory and one link per file, zero bytes copied (copies where
+        the filesystem refuses links). Never links the ``.op`` stamp:
+        writing the new version's label through a shared inode would
+        rewrite the SOURCE version's history entry. ``skip`` is a
+        relative partition directory left out (the caller rewrites it)."""
+        top, out = str(src), str(vdir)
+        for d, subdirs, files in os.walk(top):
+            rel = d[len(top):]  # "" at the top, else "/<relative dir>"
+            if rel:
+                os.mkdir(out + rel)
+            if skip is not None:
+                subdirs[:] = [s for s in subdirs if f"{rel}/{s}"[1:] != skip]
+            for name in files:
+                if name == ".op":
+                    continue
+                f, dst = f"{d}/{name}", f"{out}{rel}/{name}"
                 try:
                     os.link(f, dst)
                 except OSError:
                     shutil.copy2(f, dst)
+
+    def _claim_next(self, namespace: str, table: str) -> tuple[int, Path]:
+        """Atomically claim the next version number (mkdir is the claim)."""
+        base = self.path(namespace, table)
+        base.mkdir(parents=True, exist_ok=True)
+        for _ in range(64):
+            vs = self.versions(namespace, table)
+            nxt = (vs[-1] + 1) if vs else 0
+            vdir = base / f"_v{nxt}"
+            try:
+                vdir.mkdir()  # atomic claim
+                return nxt, vdir
+            except FileExistsError:
+                continue  # lost the race for nxt — re-list, take the next
+        raise RuntimeError(
+            f"could not claim a version for {namespace}.{table} after 64 "
+            "attempts — pathological writer contention"
+        )
+
+    @staticmethod
+    def _stamp(vdir: Path, op: str) -> None:
+        """Record the operation label inside the version directory (written
+        before publish, so a published version always carries its stamp).
+        The hidden dot-name keeps it out of Spark's parquet file listing."""
+        (vdir / ".op").write_text(op)
+
+    def _is_committed(self, namespace: str, table: str, version: int) -> bool:
+        """A version directory is a real commit iff it carries the .op
+        stamp (written only after its data write succeeded) or is the
+        published pointer target. A claim abandoned mid-write — including
+        one already half-filled by its link step — fails this test."""
+        vdir = self.path(namespace, table) / f"_v{version}"
+        return (vdir / ".op").exists() or self.current_version(
+            namespace, table
+        ) == version
+
+    def _publish(self, namespace: str, table: str, nxt: int) -> None:
+        """Monotonic pointer publish under the table's pointer lock.
+
+        Without the monotonicity check, a SLOW writer holding a lower
+        claimed version could overwrite a faster writer's already-published
+        higher pointer — silently un-publishing an acknowledged commit.
+        The lock serializes the read-compare-replace; it protects
+        microseconds of driver-side work, so contention is bounded. A
+        skipped publish is still a durable commit: the version directory
+        exists and time-travel reads it."""
+        base = self.path(namespace, table)
+        with self._flock_lock(
+            base / ".ptr.flock",
+            f"pointer lock for {namespace}.{table}",
+            self.PTR_LOCK_PATIENCE,
+        ):
+            cur = self.current_version(namespace, table)
+            if cur is not None and cur >= nxt:
+                return  # a newer commit already published — never go backwards
+            tmp = base / f".ptr.{uuid.uuid4().hex[:8]}"
+            # fsync before the rename: os.replace is atomic in the
+            # namespace, but without flushing the data blocks first a crash
+            # can publish a pointer file whose CONTENT never reached disk.
+            with open(tmp, "w") as f:
+                f.write(str(nxt))
+                f.flush()
+                os.fsync(f.fileno())
+            os.replace(tmp, self._pointer(namespace, table))
+        keep = self._retention(namespace, table)
+        if keep is not None:
+            self.vacuum(namespace, table, keep=keep)
 
     def _commit_version(
         self,
@@ -648,63 +558,7 @@ class VersionedWarehouse(Warehouse):
         cur = self.current_version(namespace, table)
         return None if cur is None else self.path(namespace, table) / f"_v{cur}"
 
-    def append(
-        self,
-        df: DataFrame,
-        namespace: str,
-        table: str,
-        partition_by: list[str] | None = None,
-    ) -> None:
-        """Versioned append: new version = prior snapshot (hard-linked
-        forward) + the batch's files — Delta's append commit. Readers on
-        the old version are untouched; the base swap-in-place append would
-        have written files read() can never see."""
-        with self._append_lock(namespace, table):
-            self._commit_version(
-                namespace, table, "APPEND",
-                lambda vdir: _write_parquet(df, vdir, "append", partition_by),
-                link_from=self._published_dir(namespace, table),
-            )
-
-    def insert_file(self, namespace: str, table: str, name: str, write_fn) -> None:
-        """Driver-side single-file insert as a versioned APPEND commit:
-        the snapshot linked forward plus the one staged file. Keeps the
-        audit row write free of Spark jobs while every row lands in a
-        readable published version."""
-        with self._append_lock(namespace, table):
-            self._commit_version(
-                namespace, table, "APPEND",
-                lambda vdir: _stage_file(vdir, name, write_fn),
-                link_from=self._published_dir(namespace, table),
-            )
-
-    def current_version(self, namespace: str, table: str) -> int | None:
-        ptr = self._pointer(namespace, table)
-        if not ptr.exists():
-            return None
-        raw = ptr.read_text().strip()
-        try:
-            return int(raw)
-        except ValueError:
-            # A torn/garbled pointer is table corruption, not a parse bug.
-            # Deliberately NOT falling back to max(versions()): the newest
-            # version directory may be a fully-written but never-published
-            # commit, and silently promoting it would publish data no
-            # commit ever acknowledged.
-            raise RuntimeError(
-                f"{namespace}.{table}: _CURRENT pointer is corrupt "
-                f"(content {raw!r}). Existing versions: "
-                f"{self.versions(namespace, table)}. Repair by writing the "
-                "last known-published version number to _CURRENT."
-            ) from None
-
-    def versions(self, namespace: str, table: str) -> list[int]:
-        base = self.path(namespace, table)
-        if not base.exists():
-            return []
-        return sorted(
-            int(p.name[2:]) for p in base.glob("_v*") if p.name[2:].isdigit()
-        )
+    # ---- writes -----------------------------------------------------------
 
     def commit(
         self,
@@ -723,31 +577,94 @@ class VersionedWarehouse(Warehouse):
         (Delta's commit-log contention, file-system edition). Snapshots are
         whole-table, so pointer publication is last-writer-wins; a crashed
         claim leaves an empty ``_vN`` that is never reused, never published,
-        and is swept by ``vacuum``. The write APPENDS into the claimed
-        empty directory (an overwrite would delete-and-recreate it, opening
-        a window where a competitor could re-claim the same number)."""
+        and is swept by ``vacuum``."""
         return self._commit_version(
             namespace, table, op,
-            lambda vdir: _write_parquet(df, vdir, "append", partition_by),
+            lambda vdir: _write_parquet(df, vdir, partition_by),
         )
 
-    def _claim_next(self, namespace: str, table: str) -> tuple[int, Path]:
-        """Atomically claim the next version number (mkdir is the claim)."""
-        base = self.path(namespace, table)
-        base.mkdir(parents=True, exist_ok=True)
-        for _ in range(64):
-            vs = self.versions(namespace, table)
-            nxt = (vs[-1] + 1) if vs else 0
-            vdir = base / f"_v{nxt}"
-            try:
-                vdir.mkdir()  # atomic claim
-                return nxt, vdir
-            except FileExistsError:
-                continue  # lost the race for nxt — re-list, take the next
-        raise RuntimeError(
-            f"could not claim a version for {namespace}.{table} after 64 "
-            "attempts — pathological writer contention"
-        )
+    def overwrite(
+        self,
+        df: DataFrame,
+        namespace: str,
+        table: str,
+        partition_by: list[str] | None = None,
+    ) -> int:
+        """Delta's atomic overwrite: one OVERWRITE commit. Readers of the
+        old snapshot keep reading its immutable version; a crash at any
+        point leaves the last published snapshot readable. Returns rows
+        written.
+
+        ``partition_by`` lays the table out as hive-partitioned directories —
+        the SURVEY §4 upgrade that turns the reference's file-NAME pruning
+        (timestamped bronze globs) into real partition pruning: a filter on
+        the partition column becomes `PartitionFilters` at the scan and
+        non-matching directories are never listed."""
+        v = self.commit(df, namespace, table, op="OVERWRITE", partition_by=partition_by)
+        return self._count_files(self.path(namespace, table) / f"_v{v}")
+
+    def append(
+        self,
+        df: DataFrame,
+        namespace: str,
+        table: str,
+        partition_by: list[str] | None = None,
+    ) -> None:
+        """Delta's append commit: new version = prior snapshot (hard-linked
+        forward) + the batch's files. Readers on the old version are
+        untouched. ``partition_by`` appends into hive-partition
+        directories (new partition values create new dirs; existing ones
+        gain files)."""
+        with self._append_lock(namespace, table):
+            self._commit_version(
+                namespace, table, "APPEND",
+                lambda vdir: _write_parquet(df, vdir, partition_by),
+                link_from=self._published_dir(namespace, table),
+            )
+
+    def insert_file(self, namespace: str, table: str, name: str, write_fn) -> None:
+        """Driver-side single-file insert (the audit row write) as an
+        APPEND commit: the snapshot linked forward plus the one file
+        ``write_fn(path)`` writes into the claim. No Spark job, and every
+        row lands in a readable published version."""
+        with self._append_lock(namespace, table):
+            self._commit_version(
+                namespace, table, "APPEND",
+                lambda vdir: write_fn(vdir / name),
+                link_from=self._published_dir(namespace, table),
+            )
+
+    def append_evolve(self, df: DataFrame, namespace: str, table: str) -> None:
+        """Schema-evolving append — the Delta ``mergeSchema`` write twin
+        (`4_silver` MERGEs rely on Delta's implicit evolution). New columns
+        are allowed (older rows read as NULL under ``read(...,
+        merge_schema=True)``); dropping columns is allowed (newer files
+        simply lack them); CHANGING an existing column's type is rejected
+        up front, because parquet footer-merge would otherwise fail at read
+        time with an opaque error far from the offending write."""
+        if self.exists(namespace, table):
+            current = {
+                f.name: f.dataType
+                for f in self.read(namespace, table, merge_schema=True).schema
+            }
+            # compare on simpleString: nested NULLABILITY differences
+            # (ArrayType.containsNull, StructField.nullable) are merge-
+            # compatible in parquet and must not block an append — strict
+            # DataType equality rejected array<int> vs array<int> whose
+            # only difference was containsNull
+            clashes = [
+                f"{f.name}: table {current[f.name].simpleString()} vs "
+                f"batch {f.dataType.simpleString()}"
+                for f in df.schema
+                if f.name in current
+                and f.dataType.simpleString() != current[f.name].simpleString()
+            ]
+            if clashes:
+                raise TypeError(
+                    f"append_evolve into {namespace}.{table} would change "
+                    f"column types: {'; '.join(clashes)}"
+                )
+        self.append(df, namespace, table)
 
     def restore(self, namespace: str, table: str, version: int) -> int:
         """Delta ``RESTORE TABLE ... TO VERSION AS OF v`` parity: publish a
@@ -782,102 +699,64 @@ class VersionedWarehouse(Warehouse):
             link_from=src,
         )
 
-    def _is_committed(self, namespace: str, table: str, version: int) -> bool:
-        """A version directory is a real commit iff it carries the .op
-        stamp (written only after its data write succeeded) or is the
-        published pointer target. A claim abandoned mid-write — including
-        one already half-filled by its link step — fails this test."""
-        vdir = self.path(namespace, table) / f"_v{version}"
-        return (vdir / ".op").exists() or self.current_version(
-            namespace, table
-        ) == version
+    def overwrite_zordered(
+        self,
+        df: DataFrame,
+        namespace: str,
+        table: str,
+        x: str,
+        y: str,
+        target_files: int = 32,
+    ) -> int:
+        """Overwrite with Z-order clustering on two pre-reduced 16-bit
+        dimension columns (`OPTIMIZE ZORDER BY` on plain parquet): rows are
+        range-partitioned and sorted by the morton interleave of (x, y), so
+        each file's min/max footer stats are tight on BOTH columns and a
+        filter on EITHER skips most files — one sorted axis can only give
+        that for its leading column. ``x``/``y`` must already be in
+        0..65535 (modulo / bucketed rank / epoch-day); see
+        functions/zorder.py. Returns rows written."""
+        from ..functions.zorder import morton_key
 
-    @staticmethod
-    def _stamp(vdir: Path, op: str) -> None:
-        """Record the operation label inside the version directory (written
-        before publish, so a published version always carries its stamp).
-        The hidden dot-name keeps it out of Spark's parquet file listing."""
-        (vdir / ".op").write_text(op)
+        clustered = (
+            df.withColumn("_z", morton_key(x, y))
+            .repartitionByRange(target_files, "_z")
+            .sortWithinPartitions("_z")
+            .drop("_z")
+        )
+        # repartitionByRange needs the key at plan time, so _z is computed,
+        # used for the exchange+sort, and dropped before the files land
+        return self.overwrite(clustered, namespace, table)
 
-    def history(self, namespace: str, table: str) -> list[dict]:
-        """Delta ``DESCRIBE HISTORY`` parity: one entry per retained
-        version, newest first — operation label, parquet file count and
-        bytes (from the filesystem, not a log), and whether the version is
-        the published snapshot. Vacuumed versions disappear from history
-        exactly as Delta's do once their files are gone."""
-        cur = self.current_version(namespace, table)
-        out = []
-        for v in reversed(self.versions(namespace, table)):
-            if not self._is_committed(namespace, table, v):
-                continue  # crashed writer's claim (empty or half-linked):
-                # never a commit — not a history entry (vacuum sweeps it)
-            vdir = self.path(namespace, table) / f"_v{v}"
-            files = [f for f in vdir.rglob("*.parquet") if f.is_file()]
-            op_file = vdir / ".op"
-            out.append(
-                {
-                    "version": v,
-                    "operation": op_file.read_text() if op_file.exists() else "WRITE",
-                    "n_files": len(files),
-                    "bytes": sum(f.stat().st_size for f in files),
-                    "is_current": v == cur,
-                }
-            )
-        return out
-
-    def _publish(self, namespace: str, table: str, nxt: int) -> None:
-        """Monotonic pointer publish under the table's pointer lock.
-
-        Without the monotonicity check, a SLOW writer holding a lower
-        claimed version could overwrite a faster writer's already-published
-        higher pointer — silently un-publishing an acknowledged commit
-        (reported in round-4 review). The lock serializes the
-        read-compare-replace; it protects microseconds of driver-side work,
-        so contention is bounded. A skipped publish is still a durable
-        commit: the version directory exists and time-travel reads it."""
-        base = self.path(namespace, table)
-        with self._flock_lock(
-            base / ".ptr.flock",
-            f"pointer lock for {namespace}.{table}",
-            self.PTR_LOCK_PATIENCE,
-        ):
-            cur = self.current_version(namespace, table)
-            if cur is not None and cur >= nxt:
-                return  # a newer commit already published — never go backwards
-            tmp = base / f".ptr.{uuid.uuid4().hex[:8]}"
-            # fsync before the rename: os.replace is atomic in the
-            # namespace, but without flushing the data blocks first a crash
-            # can publish a pointer file whose CONTENT never reached disk.
-            with open(tmp, "w") as f:
-                f.write(str(nxt))
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, self._pointer(namespace, table))
-        keep = self._retention(namespace, table)
-        if keep is not None:
-            self.vacuum(namespace, table, keep=keep)
-
-    def read(
+    def compact(
         self,
         namespace: str,
         table: str,
-        version: int | None = None,
-        merge_schema: bool = False,
-    ) -> DataFrame:
-        """Read the published snapshot (or time-travel to `version`).
-        ``merge_schema`` matches the base-class signature so inherited
-        callers (append_evolve) work polymorphically."""
-        v = version if version is not None else self.current_version(namespace, table)
-        if v is None:
-            raise FileNotFoundError(
-                f"{namespace}.{table} has no committed version"
-            )
-        vdir = self.path(namespace, table) / f"_v{v}"
-        if not vdir.exists():
-            raise FileNotFoundError(
-                f"{namespace}.{table} version {v} not found (vacuumed?)"
-            )
-        return self._read_parquet(vdir, merge_schema)
+        target_files: int,
+        cluster_by: list[str] | None = None,
+    ) -> int:
+        """Small-file compaction (the reference lists OPTIMIZE as future
+        work — README.md:65; SURVEY §4): rewrite the table into
+        ``target_files`` files, optionally range-clustered on ``cluster_by``
+        so parquet row-group min/max stats give data-skipping on those
+        columns (the poor man's Z-order for a single sort axis). Incremental
+        append loads (M2/M4) accrete one file per batch; compaction restores
+        scan efficiency.
+
+        One OVERWRITE commit under the append lock: an append publishing
+        between the snapshot read and the compacted commit would otherwise
+        be lost from the new version. Returns the resulting FILE count
+        (``compact_partition`` returns the committed version number)."""
+        with self._append_lock(namespace, table):
+            df = self.read(namespace, table)
+            if cluster_by:
+                df = df.repartitionByRange(target_files, *cluster_by).sortWithinPartitions(
+                    *cluster_by
+                )
+            else:
+                df = df.repartition(target_files)
+            self.overwrite(df, namespace, table)
+            return len(list(self.data_dir(namespace, table).glob("*.parquet")))
 
     def compact_partition(
         self,
@@ -898,12 +777,12 @@ class VersionedWarehouse(Warehouse):
         snapshot isolation and history keeps an ``OPTIMIZE`` entry.
         Returns the committed version number.
 
-        Serialized against concurrent appends via ``_append_lock`` (r6
-        advice): without it, an append publishing between this method's
-        snapshot read and its publish would be silently absent from the
-        compacted version (lost update) — for the dedup sink's signature
-        store that means duplicate signatures defeat the anti-join replay
-        guard and near-dup candidates vanish."""
+        Serialized against concurrent appends via ``_append_lock``:
+        without it, an append publishing between this method's snapshot
+        read and its publish would be silently absent from the compacted
+        version (lost update) — for the dedup sink's signature store that
+        means duplicate signatures defeat the anti-join replay guard and
+        near-dup candidates vanish."""
         with self._append_lock(namespace, table):
             src = self.data_dir(namespace, table)
             pdir = src / partition
@@ -924,35 +803,84 @@ class VersionedWarehouse(Warehouse):
                 df = df.drop(part.split("=", 1)[0])
             return self._commit_version(
                 namespace, table, f"OPTIMIZE {partition}",
-                lambda vdir: _write_parquet(df, vdir / partition, "append"),
+                lambda vdir: _write_parquet(df, vdir / partition),
                 link_from=src, skip=partition,
             )
 
-    def compact(
+    def overwrite_bucketed(
+        self,
+        df: DataFrame,
+        namespace: str,
+        table: str,
+        bucket_cols: list[str],
+        n_buckets: int,
+    ) -> str:
+        """Bucketed managed table (`<namespace>__<table>` in the session
+        catalog): rows are hash-bucketed and sorted on ``bucket_cols`` at
+        write time, so equi-joins/aggregations between tables bucketed on
+        the same key plan with NO Exchange — the shuffle is prepaid once at
+        load. This is the co-located-join layout for repeated big-big joins
+        (fact↔fact at 100 TB); Delta/Iceberg equivalents: bucket transform
+        partitioning. Returns the catalog table name.
+        """
+        name = f"{namespace}__{table}"
+        # a previous JVM may have left the managed location behind without a
+        # catalog entry (LOCATION_ALREADY_EXISTS on saveAsTable) — drop both
+        self.spark.sql(f"DROP TABLE IF EXISTS {name}")
+        wh_dir = self.spark.conf.get("spark.sql.warehouse.dir", "")
+        if wh_dir.startswith("file:"):
+            wh_dir = wh_dir[5:]
+        orphan = Path(wh_dir) / name.lower() if wh_dir else None
+        if orphan and orphan.exists():
+            shutil.rmtree(orphan)
+        (
+            df.write.mode("overwrite")
+            .bucketBy(n_buckets, *bucket_cols)
+            .sortBy(*bucket_cols)
+            .format("parquet")
+            .saveAsTable(name)
+        )
+        return name
+
+    def read_bucketed(self, namespace: str, table: str) -> DataFrame:
+        return self.spark.table(f"{namespace}__{table}")
+
+    def archive(
         self,
         namespace: str,
         table: str,
-        target_files: int,
-        cluster_by: list[str] | None = None,
-    ) -> int:
-        """Whole-table compaction under the append lock (r6 advice): the
-        base-class read→overwrite sequence races a concurrent link-forward
-        append exactly like ``compact_partition`` would — an append that
-        publishes between the snapshot read and the compacted OVERWRITE
-        commit is lost from the new version.
+        stamp: str,
+        archive_namespace: str = "archive",
+    ) -> str | None:
+        """S14 — archive-copy+delete rotation before a full reload
+        (pl_sql_copy_bronze.json:148-277: the reference copies the prior
+        bronze file into an archive folder, then deletes it, before landing
+        the fresh full copy). Returns the archived table name, or None if
+        there was nothing to rotate. On object storage this is a cheap
+        server-side copy/rename; here it is one atomic directory rename of
+        the whole table, history included, so no file is copied."""
+        if not self.exists(namespace, table):
+            return None
+        src = self.path(namespace, table)
+        archived = f"{table}_{stamp}"
+        dst = self.path(archive_namespace, archived)
+        dst.parent.mkdir(parents=True, exist_ok=True)
+        if dst.exists():
+            shutil.rmtree(dst)
+        os.replace(src, dst)
+        return archived
 
-        Returns the resulting FILE count (the base-class contract —
-        unlike ``compact_partition``, which returns the committed version
-        number); read ``current_version`` for the published version."""
-        with self._append_lock(namespace, table):
-            return super().compact(namespace, table, target_files, cluster_by)
+    def drop(self, namespace: str, table: str) -> None:
+        p = self.path(namespace, table)
+        if p.exists():
+            shutil.rmtree(p)
 
     # A claim directory younger than this is treated as a possibly-in-flight
     # write and never swept. LIVE writers keep their claim's mtime fresh for
     # the whole write via _claim_keepalive (every LOCK_HEARTBEAT seconds), so
     # a claim that HAS aged past this horizon belongs to a dead process. The
     # append lock cannot stand in for this: commit()/overwrite() writers hold
-    # no append lock at all (r5 advice).
+    # no append lock at all.
     PHANTOM_SWEEP_AFTER = 600.0
 
     def vacuum(self, namespace: str, table: str, keep: int = 2) -> list[int]:
@@ -962,10 +890,10 @@ class VersionedWarehouse(Warehouse):
         The keep-window is computed over committed versions only: a crashed
         writer's phantom claim (typically the highest number) must not
         occupy a newest-keep slot and silently cost one real committed
-        version its time-travel history (r4 advice). Phantoms are swept
-        too, but only once older than PHANTOM_SWEEP_AFTER — a young
-        unstamped directory may be a slow writer's still-in-flight commit,
-        and deleting it mid-write would corrupt that commit."""
+        version its time-travel history. Phantoms are swept too, but only
+        once older than PHANTOM_SWEEP_AFTER — a young unstamped directory
+        may be a slow writer's still-in-flight commit, and deleting it
+        mid-write would corrupt that commit."""
         vs = self.versions(namespace, table)
         cur = self.current_version(namespace, table)
         if keep <= 0:

@@ -31,7 +31,7 @@ def table_diff(
     old: DataFrame, new: DataFrame, key: str, compare_cols: list[str] | None = None
 ) -> DataFrame:
     """Change-data-feed between two table snapshots (Delta CDF parity for
-    the VersionedWarehouse: diff version N-1 against N instead of storing
+    the versioned Warehouse: diff version N-1 against N instead of storing
     per-commit change files). Returns new-side rows stamped `_change` ∈
     {insert, update} plus old-side rows for deleted keys stamped `delete`;
     unchanged rows are dropped. One full-outer equi-join on the key — at

@@ -16,7 +16,6 @@ manual quote-escaping; we write typed rows (an Arrow table under
 from __future__ import annotations
 
 import datetime as _dt
-import os
 import uuid
 from collections.abc import Iterator
 from contextlib import contextmanager
@@ -30,7 +29,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..engine.clock import Clock, SystemClock
-from ..engine.tableio import SPARK_SCHEMA_KEY, VersionedWarehouse, Warehouse
+from ..engine.tableio import SPARK_SCHEMA_KEY, Warehouse
 
 AUDIT_SCHEMA = T.StructType(
     [
@@ -85,23 +84,17 @@ class AuditLog:
             # the empty table is one zero-row file written on the driver:
             # no Spark job before the pipeline's first stage
             self._write(_ARROW_SCHEMA.empty_table())
-        # On an MVCC warehouse every row insert is its own APPEND version;
-        # bound the audit table's history inline (per-table retention, so
-        # gold time travel is untouched) unless the operator already chose
-        if hasattr(self.wh, "set_retention") and not (
-            self.wh.path(NAMESPACE, TABLE) / ".retention"
-        ).exists():
-            self.wh.set_retention(NAMESPACE, TABLE, 8)
+        # every row insert is its own APPEND version: bound the audit
+        # table's history inline (per-table retention, so gold time travel
+        # is untouched) unless the operator already chose
+        self.wh.default_retention(NAMESPACE, TABLE, 8)
 
     def _write(self, tbl: pa.Table) -> None:
-        """Write ``tbl`` as one parquet file on the driver (Arrow), through
-        the warehouse's file-insert hook: no Spark job, and a unique file
-        name per call, so parallel stages insert without a lock. The plain
-        warehouse stages the file under a dot-name and renames it into the
-        table; a VersionedWarehouse publishes it as an APPEND version. The
-        footer carries Spark's schema key, so a read takes its schema from
-        whichever file sorts first without a Spark job. A failed write
-        raises."""
+        """Write ``tbl`` as one parquet file on the driver (Arrow), published
+        as an APPEND version by the warehouse's ``insert_file``: no Spark
+        job, and a unique file name per call. The footer carries Spark's
+        schema key, so a read takes its schema from whichever file sorts
+        first without a Spark job. A failed write raises."""
         name = f"part-audit-{uuid.uuid4().hex}.parquet"
         self.wh.insert_file(
             NAMESPACE, TABLE, name, lambda tmp: pq.write_table(tbl, tmp)
@@ -198,50 +191,18 @@ class AuditLog:
 
     def compact(self, target_files: int = 8) -> int:
         """Fold the accumulated one-file-per-insert audit rows into
-        ``target_files`` files. Run periodically — the Arrow fast path
-        trades one tiny file per audit row for insert latency, and a
-        long-lived deployment should sweep the accretion.
+        ``target_files`` files, range-clustered on ``inserted_at``. Run
+        periodically — the Arrow fast path trades one tiny file per audit
+        row for insert latency, and a long-lived deployment should sweep
+        the accretion.
 
-        Concurrency-safe by construction: the file list is SNAPSHOTTED
-        first, the compacted output lands in the same directory under new
-        names, and then exactly the snapshotted sources are deleted —
-        inserts racing with the sweep are untouched. (A whole-directory
-        overwrite would silently delete rows inserted between its listing
-        and its rmtree — including SUCCESS rows carrying watermarks.)
-        Crash window: after output lands, before sources are deleted ⇒
-        duplicate audit rows, which the readers tolerate (watermark fetch
-        takes the latest row; duplicated telemetry rows are benign) — rows
-        are never lost. Returns the file count after the sweep.
-
-        On a VersionedWarehouse versions are immutable, so the sweep is
-        its ``compact``: one OVERWRITE version under the table's append
-        lock, which row inserts also hold, so none is lost."""
-        path = self.wh.data_dir(NAMESPACE, TABLE)
-        sources = sorted(str(f) for f in path.glob("*.parquet"))
-        if len(sources) <= target_files:
-            return len(sources)
-        if isinstance(self.wh, VersionedWarehouse):
-            return self.wh.compact(
-                NAMESPACE, TABLE, target_files, cluster_by=["inserted_at"]
-            )
-        compacted = (
-            self.wh.spark.read.parquet(*sources)
-            .repartitionByRange(target_files, "inserted_at")
-            .sortWithinPartitions("inserted_at")
-        )
-        import shutil
-
-        tmp = path.parent / f".{TABLE}.compact.{uuid.uuid4().hex[:8]}"
-        compacted.write.mode("overwrite").parquet(str(tmp))
-        for f in tmp.glob("*.parquet"):
-            os.replace(f, path / f"part-compacted-{uuid.uuid4().hex}.parquet")
-        for s in sources:
-            try:
-                os.remove(s)
-            except FileNotFoundError:
-                pass
-        shutil.rmtree(tmp, ignore_errors=True)
-        return len(list(path.glob("*.parquet")))
+        The sweep is the warehouse's ``compact``: one OVERWRITE version
+        under the table's append lock, which row inserts also hold, so no
+        row racing the sweep is lost. Returns the file count after it."""
+        n = len(list(self.wh.data_dir(NAMESPACE, TABLE).glob("*.parquet")))
+        if n <= target_files:
+            return n
+        return self.wh.compact(NAMESPACE, TABLE, target_files, cluster_by=["inserted_at"])
 
     def fetch_last_watermark(self, source_system: str, source_object: str) -> str:
         """O1/P6 — reference: 1_audit/fetch_logs.py:21-35. Empty string when

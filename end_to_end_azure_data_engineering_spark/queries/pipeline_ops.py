@@ -183,7 +183,7 @@ def incremental_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def change_data_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC between two snapshots (operators/appends.table_diff — the
-    VersionedWarehouse's Delta-CDF equivalent): orders plays version N-1
+    versioned Warehouse's Delta-CDF equivalent): orders plays version N-1
     and a mutated slice plays version N (keys dropped, keys added, every
     5th price bumped). Full-outer join on the key, null-safe change
     predicate, unchanged rows dropped. The +1.0 price mutation is exact in

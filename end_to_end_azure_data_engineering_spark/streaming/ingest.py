@@ -115,7 +115,7 @@ def _load_watermarks(existing: DataFrame) -> dict[str, int]:
     qid would classify A's replay as a fresh lineage and double-count it
     (r5 advice). The full map rides in the table as a ``_wm`` JSON-literal
     column so data and high-water marks publish in ONE atomic overwrite
-    swap — one string per row, map size = number of lineages ever seen.
+    commit — one string per row, map size = number of lineages ever seen.
     Tables written before ``_wm`` existed fall back to their single
     ``(_qid, _epoch)`` stamp."""
     cols = existing.columns
@@ -254,7 +254,7 @@ def scd2_stream_sink(
     """foreachBatch sink applying the batch SCD2 merge per micro-batch —
     the reference's M1 upgraded to streaming. Each batch is compacted to
     latest-per-key first (MERGE precondition), then merged; Delta in
-    production, parquet-swap here."""
+    production, a versioned parquet overwrite here."""
     clock = clock or SystemClock()
 
     def sink(batch: DataFrame, _epoch: int) -> None:
@@ -555,7 +555,7 @@ def dedup_stream_sink(
       is O(batch), not O(corpus). With ``sig_buckets=N`` the store is
       hive-partitioned on ``bucket = xxhash64(_id) % N`` and small-file
       control switches to PARTITION-LOCAL compaction
-      (VersionedWarehouse.compact_partition — the OPTIMIZE-WHERE form):
+      (Warehouse.compact_partition — the OPTIMIZE-WHERE form):
       only fragmented buckets rewrite, O(bucket) each, which is the
       layout a 100 TB continuously-appending store needs (the unbucketed
       whole-table compact rewrites the corpus per cycle).
@@ -582,13 +582,11 @@ def dedup_stream_sink(
         sign_corpus,
     )
 
-    if hasattr(wh, "set_retention"):
-        # MVCC warehouse: every epoch publishes a state version and a
-        # signature-append version — bound both tables' history inline or
-        # a continuous stream accretes one corpus-sized copy per epoch
-        for t in (sig_table, state_table):
-            if not (wh.path(namespace, t) / ".retention").exists():
-                wh.set_retention(namespace, t, 2)
+    # every epoch publishes a state version and a signature-append
+    # version: bound both tables' history inline or a continuous stream
+    # accretes one corpus-sized copy per epoch
+    for t in (sig_table, state_table):
+        wh.default_retention(namespace, t, 2)
 
     def sink(batch: DataFrame, epoch: int) -> None:
         guard = _standing_or_skip(wh, namespace, state_table, batch, epoch)
@@ -655,16 +653,16 @@ def dedup_stream_sink(
             wh.overwrite(sig_to_add, namespace, sig_table)
         # Small-file control: every append adds one file set, so after N
         # epochs the store is N-way fragmented and each batch's anti-join
-        # and band mine pay N file opens. Partitioned store + MVCC
-        # warehouse: rewrite only the fragmented BUCKETS (OPTIMIZE-WHERE;
-        # O(bucket) each, non-target files hard-linked). Otherwise:
-        # whole-table compact past the global threshold — amortized
-        # O(corpus / SIG_COMPACT_FILES) per epoch.
+        # and band mine pay N file opens. Partitioned store: rewrite only
+        # the fragmented BUCKETS (OPTIMIZE-WHERE; O(bucket) each,
+        # non-target files hard-linked). Otherwise: whole-table compact
+        # past the global threshold — amortized O(corpus /
+        # SIG_COMPACT_FILES) per epoch.
         try:
             ddir = wh.data_dir(namespace, sig_table)
         except (FileNotFoundError, OSError):
             ddir = None
-        if ddir is not None and sig_buckets and hasattr(wh, "compact_partition"):
+        if ddir is not None and sig_buckets:
             # re-resolve the data dir per bucket: each compact_partition
             # publishes a new version and autovacuum may delete the dir
             # this loop started from (stale paths then read as empty and

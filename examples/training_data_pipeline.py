@@ -99,10 +99,10 @@ def main() -> None:
     # foreachBatch dedup sink in three arrivals — the signature store and
     # component state accrete incrementally (batch-vs-corpus band mining,
     # never a full re-cluster), converging to the batch result above
-    from end_to_end_azure_data_engineering_spark.engine.tableio import VersionedWarehouse
+    from end_to_end_azure_data_engineering_spark.engine.tableio import Warehouse
     from end_to_end_azure_data_engineering_spark.streaming.ingest import dedup_stream_sink
 
-    wh = VersionedWarehouse(spark, tempfile.mkdtemp(prefix="stream_wh_"))
+    wh = Warehouse(spark, tempfile.mkdtemp(prefix="stream_wh_"))
     sink = dedup_stream_sink(wh, threshold=0.8)
     for i in range(3):
         sink(kept.filter(F.col("doc_id") % 3 == i).select("doc_id", "text"), i)

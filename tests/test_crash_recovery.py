@@ -3,7 +3,7 @@
 The cross-process lock tests prove mutual exclusion and crashed-holder
 release in isolation; this test kills whole writer processes at random
 points inside real commit loops and asserts the durability contract the
-MVCC design claims (engine/tableio.py::VersionedWarehouse docstring):
+MVCC design claims (engine/tableio.py::Warehouse docstring):
 
 1. every ACKNOWLEDGED insert (the writer printed its ack only after
    ``insert_file`` returned, i.e. after publish) is present in the
@@ -12,21 +12,25 @@ MVCC design claims (engine/tableio.py::VersionedWarehouse docstring):
 2. the published pointer always resolves to a COMMITTED version — a
    reader after any crash sees a complete snapshot, never a torn one;
 3. crashed claims (unstamped ``_vN`` directories, possibly half-filled
-   by ``_link_forward`` or holding a partial ``.tmp``) are invisible to
+   by ``_link_files`` or holding a partial file) are invisible to
    ``history`` and swept by ``vacuum`` once past the phantom horizon;
 4. a successor writer recovers unaided: the kernel released the dead
    writer's append lock (and, if the kill landed inside ``_publish``'s
    microsecond window, its pointer lock) with its process, so the
    successor commits normally at the default lock patience.
 
-No SparkSession: ``insert_file`` is the driver-side commit path
-(claim → link-forward → write → stamp → publish), pure filesystem, so
-children are cheap interpreters and the kill points land in real code.
+The insert tests need no SparkSession: ``insert_file`` is the
+driver-side commit path (claim → link-forward → write → stamp → publish),
+pure filesystem, so children are cheap interpreters and the kill points
+land in real code. The overwrite test kills a Spark writer, the
+pipeline's own write path.
 """
 
 from __future__ import annotations
 
+import os
 import random
+import select
 import signal
 import subprocess
 import sys
@@ -35,16 +39,18 @@ from pathlib import Path
 
 import pytest
 
+from end_to_end_azure_data_engineering_spark.engine.tableio import Warehouse
+
 REPO = str(Path(__file__).resolve().parents[1])
 
 _WRITER = """
 import sys
 from pathlib import Path
 sys.path.insert(0, sys.argv[1])
-from end_to_end_azure_data_engineering_spark.engine.tableio import VersionedWarehouse
+from end_to_end_azure_data_engineering_spark.engine.tableio import Warehouse
 
 root, tag, n = sys.argv[2], sys.argv[3], int(sys.argv[4])
-wh = VersionedWarehouse(None, root, autovacuum_keep=3)
+wh = Warehouse(None, root, autovacuum_keep=3)
 for i in range(n):
     payload = (tag + ":" + str(i) + "|") * 40
     name = "f_" + tag + "_" + str(i) + ".txt"
@@ -59,13 +65,33 @@ for i in range(n):
 _PTR_HOLDER = """
 import sys, time
 sys.path.insert(0, sys.argv[1])
-from end_to_end_azure_data_engineering_spark.engine.tableio import VersionedWarehouse
+from end_to_end_azure_data_engineering_spark.engine.tableio import Warehouse
 
-wh = VersionedWarehouse(None, sys.argv[2])
+wh = Warehouse(None, sys.argv[2])
 lk = wh._flock_lock(wh.path("silver", "t") / ".ptr.flock", "pointer lock", 5.0)
 lk.__enter__()
 print("HELD", flush=True)
 time.sleep(600)  # killed here, lock held
+"""
+
+
+# The pipeline's write path: a Spark ``overwrite`` of one table per
+# commit, every row of commit i carrying marker i.
+_OVERWRITER = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession, functions as F
+from end_to_end_azure_data_engineering_spark.engine.tableio import Warehouse
+
+spark = (SparkSession.builder.master("local[2]")
+    .config("spark.driver.memory", "512m")
+    .config("spark.ui.enabled", "false").getOrCreate())
+wh = Warehouse(spark, sys.argv[2])
+rows = int(sys.argv[3])
+for i in range(10_000):
+    df = spark.range(rows).withColumn("marker", F.lit(i)).repartition(4)
+    wh.overwrite(df, "silver", "t")
+    print("ACK", i, flush=True)
 """
 
 
@@ -88,10 +114,6 @@ def _acks(out: str) -> list[tuple[str, int]]:
 
 
 def test_sigkill_mid_commit_preserves_acknowledged_inserts(tmp_path):
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
-
     root = tmp_path / "crash_wh"
     rng = random.Random(8)
     acked: list[tuple[str, int]] = []
@@ -112,7 +134,7 @@ def test_sigkill_mid_commit_preserves_acknowledged_inserts(tmp_path):
     acked.extend(_acks(out))
     assert acked, "no insert ever acknowledged — kill timing too early"
 
-    wh = VersionedWarehouse(None, str(root))
+    wh = Warehouse(None, str(root))
     cur = wh.current_version("silver", "t")
     assert cur is not None
     assert wh._is_committed("silver", "t", cur)
@@ -143,15 +165,15 @@ def test_sigkill_mid_commit_preserves_acknowledged_inserts(tmp_path):
     assert not (set(uncommitted) & hist_versions)
 
     # 3: phantoms sweep once past the horizon (committed history intact)
-    orig = VersionedWarehouse.PHANTOM_SWEEP_AFTER
-    VersionedWarehouse.PHANTOM_SWEEP_AFTER = 0.0
+    orig = Warehouse.PHANTOM_SWEEP_AFTER
+    Warehouse.PHANTOM_SWEEP_AFTER = 0.0
     try:
         wh.vacuum("silver", "t", keep=10_000)
         left = wh.versions("silver", "t")
         assert cur in left
         assert all(wh._is_committed("silver", "t", v) for v in left), left
     finally:
-        VersionedWarehouse.PHANTOM_SWEEP_AFTER = orig
+        Warehouse.PHANTOM_SWEEP_AFTER = orig
 
 
 def test_sigkill_while_holding_pointer_lock_recovers(tmp_path):
@@ -160,12 +182,9 @@ def test_sigkill_while_holding_pointer_lock_recovers(tmp_path):
     next publisher publishes within seconds at the DEFAULT patience (the
     r8 bug this guards: one crashed publisher turned into TimeoutErrors
     for every publisher arriving after it)."""
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
 
     root = tmp_path / "ptr_wh"
-    wh = VersionedWarehouse(None, str(root))
+    wh = Warehouse(None, str(root))
     assert wh.PTR_LOCK_PATIENCE == 70.0  # default patience, not shrunk
     wh.insert_file("silver", "t", "seed.txt", lambda p: Path(p).write_text("x"))
     holder = subprocess.Popen(
@@ -203,9 +222,6 @@ def test_concurrent_writers_no_lost_appends(tmp_path):
     counter-based cross-process test proves lock exclusion; this proves
     the COMMIT protocol composes with it: claims, link-forward, publish
     monotonicity.)"""
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
 
     root = tmp_path / "mw_wh"
     k, n = 3, 40
@@ -217,7 +233,7 @@ def test_concurrent_writers_no_lost_appends(tmp_path):
         acked.extend(_acks(out))
     assert len(acked) == k * n
 
-    wh = VersionedWarehouse(None, str(root))
+    wh = Warehouse(None, str(root))
     cur = wh.current_version("silver", "t")
     vdir = root / "silver" / "t" / f"_v{cur}"
     missing = [
@@ -226,3 +242,38 @@ def test_concurrent_writers_no_lost_appends(tmp_path):
         if not (vdir / f"f_{tag}_{i}.txt").exists()
     ]
     assert not missing, f"lost appends under concurrency: {missing[:10]}"
+
+
+def test_sigkill_mid_overwrite_leaves_one_complete_snapshot(spark, tmp_path):
+    """A writer process (Python driver and its JVM) SIGKILLed while it
+    overwrites one table in a loop leaves exactly one complete snapshot:
+    every row read back carries the same marker, there are all of them,
+    and the marker is no older than the last acknowledged commit."""
+    root, rows = tmp_path / "ow_wh", 1000
+    err = tmp_path / "writer.err"  # a file: Spark's log must never block the writer
+    with open(err, "w") as err_f:
+        child = subprocess.Popen(
+            [sys.executable, "-c", _OVERWRITER, REPO, str(root), str(rows)],
+            stdout=subprocess.PIPE,
+            stderr=err_f,
+            text=True,
+            start_new_session=True,  # one process group: the JVM dies with it
+        )
+    try:
+        ready, _, _ = select.select([child.stdout], [], [], 300)
+        assert ready, "the writer acknowledged no commit within 300 s"
+        first = child.stdout.readline().split()
+        assert first == ["ACK", "0"], err.read_text()[-2000:]
+        # land the kill inside a later commit's Spark write or publish
+        time.sleep(random.Random(13).uniform(0.3, 1.5))
+    finally:
+        os.killpg(child.pid, signal.SIGKILL)
+    out, _ = child.communicate(timeout=60)
+    acked = [0] + [int(line.split()[1]) for line in out.splitlines() if line.startswith("ACK")]
+
+    wh = Warehouse(spark, str(root))
+    assert wh._is_committed("silver", "t", wh.current_version("silver", "t"))
+    got = wh.read("silver", "t").groupBy("marker").count().collect()
+    assert len(got) == 1, f"a torn snapshot mixes markers {sorted(r.marker for r in got)}"
+    assert got[0]["count"] == rows
+    assert got[0].marker >= max(acked)

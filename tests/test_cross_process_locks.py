@@ -5,7 +5,7 @@ released when the holder's last descriptor closes) are about separate OS
 processes — two drivers, or a driver and a maintenance job, sharing one
 warehouse root. These tests spawn real child interpreters (no Spark
 session needed: the lock protocol is pure filesystem, and
-``VersionedWarehouse(None, root)`` constructs without touching Spark).
+``Warehouse(None, root)`` constructs without touching Spark).
 
 1. Mutual exclusion: K children × R read-sleep-increment critical
    sections on a shared counter — any interleaving loses updates, so
@@ -29,17 +29,17 @@ from pathlib import Path
 
 import pytest
 
-from end_to_end_azure_data_engineering_spark.engine.tableio import VersionedWarehouse
+from end_to_end_azure_data_engineering_spark.engine.tableio import Warehouse
 
 REPO = str(Path(__file__).resolve().parents[1])
 
 _INCR_CHILD = """
 import os, sys, time
 sys.path.insert(0, sys.argv[1])
-from end_to_end_azure_data_engineering_spark.engine.tableio import VersionedWarehouse
+from end_to_end_azure_data_engineering_spark.engine.tableio import Warehouse
 
 root, n_iter = sys.argv[2], int(sys.argv[3])
-wh = VersionedWarehouse(None, root)
+wh = Warehouse(None, root)
 ctr = os.path.join(root, "counter.txt")
 for _ in range(n_iter):
     with wh._append_lock("silver", "t"):
@@ -52,9 +52,9 @@ for _ in range(n_iter):
 _CRASH_CHILD = """
 import os, sys
 sys.path.insert(0, sys.argv[1])
-from end_to_end_azure_data_engineering_spark.engine.tableio import VersionedWarehouse
+from end_to_end_azure_data_engineering_spark.engine.tableio import Warehouse
 
-wh = VersionedWarehouse(None, sys.argv[2])
+wh = Warehouse(None, sys.argv[2])
 lk = wh._append_lock("silver", "t")
 lk.__enter__()
 print("HELD", flush=True)
@@ -64,7 +64,7 @@ os._exit(1)  # crash while holding: no release
 
 def test_append_lock_mutual_exclusion_across_processes(tmp_path):
     root = tmp_path / "xproc_wh"
-    VersionedWarehouse(None, str(root))  # creates the root
+    Warehouse(None, str(root))  # creates the root
     (root / "counter.txt").write_text("0")
     k, r = 4, 5
     procs = [
@@ -99,7 +99,7 @@ def test_append_lock_crashed_flock_holder_releases_instantly(tmp_path):
     lockfile = root / "silver" / "t" / ".append.flock"
     assert lockfile.exists(), "flock lock file is persistent by design"
 
-    wh = VersionedWarehouse(None, str(root))
+    wh = Warehouse(None, str(root))
     t0 = time.monotonic()
     with wh._append_lock("silver", "t"):
         took = time.monotonic() - t0
@@ -110,7 +110,7 @@ def test_append_lock_crashed_flock_holder_releases_instantly(tmp_path):
 def test_flock_live_holder_times_out_waiter(tmp_path):
     """flock never breaks in on a LIVE holder — a waiter outlasting its
     patience raises, it does not acquire."""
-    wh = VersionedWarehouse(None, str(tmp_path))
+    wh = Warehouse(None, str(tmp_path))
     entered, release = threading.Event(), threading.Event()
 
     def hold() -> None:
@@ -139,7 +139,7 @@ def test_flock_queue_drain_resets_patience(tmp_path):
     — each hand-off touches the lock mtime and the waiter resets. Four
     0.3 s holders against a 0.5 s patience: the last waiter waits ~0.9 s
     total and must still acquire."""
-    wh = VersionedWarehouse(None, str(tmp_path))
+    wh = Warehouse(None, str(tmp_path))
     lock = wh.path("silver", "t")
     lock.mkdir(parents=True, exist_ok=True)
     lockfile = lock / ".append.flock"
@@ -178,7 +178,7 @@ def test_refused_flock_fails_fast_and_writes_nothing(tmp_path, monkeypatch):
         raise OSError(errno.ENOLCK, "No locks available")
 
     monkeypatch.setattr(fcntl, "flock", refuse)
-    wh = VersionedWarehouse(None, str(tmp_path))
+    wh = Warehouse(None, str(tmp_path))
     t0 = time.monotonic()
     with pytest.raises(OSError, match=r"silver\.t") as info:
         wh.insert_file("silver", "t", "a.txt", lambda p: Path(p).write_text("x"))

@@ -32,13 +32,6 @@ def test_pin_defaults_to_local_checkpoint(spark):
     assert "LogicalRDD" in df._jdf.queryExecution().analyzed().toString()
 
 
-def test_pin_reliable_requires_dir(spark):
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        pin(spark.range(3), reliable=True).count()
-
-
 def test_reliable_tier_upgrades_every_pin_site(tmp_path):
     """With a checkpoint dir set, pin() writes reliable checkpoints and a
     pinned operator pipeline (sharded rank with materialize + two-level,

@@ -163,13 +163,9 @@ def test_audit_insert_failure_raises(spark, tmp_path, monkeypatch):
 
 
 def test_audit_compact_on_versioned_warehouse(spark, tmp_path):
-    """On an MVCC warehouse the audit sweep is one OVERWRITE version that
-    keeps every row; a table already at the target is left alone."""
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
-
-    vwh = VersionedWarehouse(spark, str(tmp_path / "audit_vwh"))
+    """The audit sweep is one OVERWRITE version that keeps every row; a
+    table already at the target is left alone."""
+    vwh = Warehouse(spark, str(tmp_path / "audit_vwh"))
     audit = AuditLog(vwh, FixedClock(dt.datetime(2024, 3, 1)))
     for obj in ("a", "b", "c"):
         with audit.bracket("bank_a", obj) as run:
@@ -266,16 +262,11 @@ def test_per_bank_validation():
 
 
 def test_pipeline_runs_on_versioned_warehouse_with_time_travel(spark, tmp_path):
-    """The whole medallion pipeline runs unchanged against the MVCC engine
-    (VersionedWarehouse.overwrite = versioned commit): two runs produce
-    two gold versions, yesterday's fact table stays time-travelable, and
-    history records every publish — the Delta-ACID deployment story at the
-    Warehouse seam."""
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
-
-    vwh = VersionedWarehouse(spark, str(tmp_path / "vwh"))
+    """Every publish of the medallion pipeline is a versioned commit: two
+    runs produce two gold versions, yesterday's fact table stays
+    time-travelable, and history records every publish — the Delta-ACID
+    deployment story at the Warehouse seam."""
+    vwh = Warehouse(spark, str(tmp_path / "vwh"))
     run_pipeline(vwh, bronze_frames(spark), FixedClock(dt.datetime(2024, 2, 1, 12)))
     v_first = vwh.current_version("gold", "fact_transaction")
     n_first = vwh.read("gold", "fact_transaction").count()

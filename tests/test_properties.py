@@ -188,7 +188,7 @@ def test_scd2_snapshot_asof_reconstructs_every_prefix(spark, batches):
 
 
 # ---------------------------------------------------------------------------
-# VersionedWarehouse op-sequence property: any interleaving of commit /
+# Warehouse op-sequence property: any interleaving of commit /
 # append / restore / vacuum maintains the MVCC invariants — the published
 # snapshot always reads the modeled row count, every retained version
 # time-travels to its exact historical count, and history() lists exactly
@@ -209,10 +209,10 @@ _wh_op = st.one_of(
 @given(ops=st.lists(_wh_op, min_size=2, max_size=6))
 def test_versioned_warehouse_op_sequences_hold_invariants(spark, tmp_path_factory, ops):
     from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
+        Warehouse,
     )
 
-    vw = VersionedWarehouse(spark, str(tmp_path_factory.mktemp("prop_wh")))
+    vw = Warehouse(spark, str(tmp_path_factory.mktemp("prop_wh")))
     contents: dict[int, int] = {}  # retained committed version -> rows
     current = None
 

@@ -1,11 +1,11 @@
 """Storage fence: the warehouse's private members stay in the storage engine.
 
 Every write protocol of the warehouse (the version commit, its append and
-pointer locks, the file staging) lives in ``engine/tableio.py``. A module
-elsewhere that reaches for a ``_``-prefixed member of ``Warehouse`` or
-``VersionedWarehouse`` re-implements part of a protocol, and the next fix
-to it would have to land in two places. Tests are exempt: they probe the
-protocol's steps on purpose.
+pointer locks, the retention marker) lives in ``engine/tableio.py``. A
+module elsewhere that reaches for a ``_``-prefixed member of ``Warehouse``
+or for a table's ``.retention`` marker file re-implements part of a
+protocol, and the next fix to it would have to land in two places. Tests
+are exempt: they probe the protocol's steps on purpose.
 """
 
 from __future__ import annotations
@@ -15,11 +15,11 @@ from pathlib import Path
 
 PKG = Path(__file__).resolve().parents[1] / "end_to_end_azure_data_engineering_spark"
 TABLEIO = PKG / "engine" / "tableio.py"
-CLASSES = {"Warehouse", "VersionedWarehouse"}
+CLASSES = {"Warehouse"}
 
 
 def _private_members() -> set[str]:
-    """The ``_``-prefixed (non-dunder) names the two classes define:
+    """The ``_``-prefixed (non-dunder) names the warehouse class defines:
     methods, class attributes and ``self._x`` assignments."""
     names: set[str] = set()
     for cls in ast.parse(TABLEIO.read_text()).body:
@@ -57,3 +57,15 @@ def test_no_module_reaches_into_the_warehouse():
             if isinstance(node, ast.Attribute) and node.attr in members:
                 hits.append(f"{path.relative_to(PKG)}:{node.lineno} .{node.attr}")
     assert not hits, f"private warehouse members used outside tableio: {hits}"
+
+
+def test_retention_marker_stays_in_tableio():
+    """Only the warehouse reads or writes a table's retention marker;
+    callers bound history through ``Warehouse.default_retention``."""
+    hits = [
+        str(path.relative_to(PKG))
+        for path in sorted(PKG.rglob("*.py"))
+        if path != TABLEIO and ".retention" in path.read_text()
+    ]
+    assert ".retention" in TABLEIO.read_text()
+    assert not hits, f".retention marker used outside tableio: {hits}"

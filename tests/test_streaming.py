@@ -553,13 +553,10 @@ def test_dedup_sink_autocompacts_signature_store(spark, tmp_path, monkeypatch):
 def test_dedup_sink_partitioned_store_partition_local_compaction(
     spark, tmp_path, monkeypatch
 ):
-    """With sig_buckets set on an MVCC warehouse, the signature store is
-    hive-partitioned and small-file control is partition-local: fragmented
-    buckets compact via OPTIMIZE-WHERE, per-bucket file counts stay
-    bounded, and the dedup outcome equals one-shot batch dedup."""
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
+    """With sig_buckets set, the signature store is hive-partitioned and
+    small-file control is partition-local: fragmented buckets compact via
+    OPTIMIZE-WHERE, per-bucket file counts stay bounded, and the dedup
+    outcome equals one-shot batch dedup."""
     from end_to_end_azure_data_engineering_spark.operators.neardup import (
         dedup_corpus,
     )
@@ -570,7 +567,7 @@ def test_dedup_sink_partitioned_store_partition_local_compaction(
     docs = qload(spark, "/root/testdata/sf0.001", "documents").select(
         "doc_id", "text"
     )
-    wh = VersionedWarehouse(spark, str(tmp_path / "wh_part"))
+    wh = Warehouse(spark, str(tmp_path / "wh_part"))
     sink = ingest.dedup_stream_sink(wh, threshold=0.2, sig_buckets=4)
     n_batches = 6
     for i in range(n_batches):

@@ -32,7 +32,7 @@ def test_partitioned_write_prunes(spark, wh):
     n = wh.overwrite(ev, "bronze", "events_part", partition_by=["event_type"])
     assert n == 300
     # one directory per partition value on disk
-    dirs = {p.name for p in wh.path("bronze", "events_part").iterdir() if p.is_dir()}
+    dirs = {p.name for p in wh.data_dir("bronze", "events_part").iterdir() if p.is_dir()}
     assert dirs == {"event_type=click", "event_type=view", "event_type=purchase"}
 
     df = wh.read("bronze", "events_part").filter(F.col("event_type") == "click")
@@ -74,7 +74,7 @@ def test_compact_small_files(spark, wh):
     for i in range(12):  # 12 append batches -> many small files
         b = spark.createDataFrame([(i * 10 + j, float(j)) for j in range(10)], "id long, v double")
         wh.append(b.coalesce(1), "silver", "accreted")
-    n_before = len(list(wh.path("silver", "accreted").glob("*.parquet")))
+    n_before = len(list(wh.data_dir("silver", "accreted").glob("*.parquet")))
     assert n_before >= 12
     n_after = wh.compact("silver", "accreted", target_files=2, cluster_by=["id"])
     assert n_after <= 2
@@ -177,7 +177,7 @@ def test_zordered_write_skips_on_both_dims(spark, tmp_path):
 
     def file_ranges(table):
         out = []
-        for f in wh.path("gold", table).glob("*.parquet"):
+        for f in wh.data_dir("gold", table).glob("*.parquet"):
             md = pq.read_metadata(f)
             lo = {c: None for c in ("x", "y")}
             hi = {c: None for c in ("x", "y")}
@@ -258,7 +258,7 @@ def test_read_takes_schema_from_footer(spark, tmp_path):
     ).withColumn("ts", F.current_timestamp())
     wh.overwrite(df, "silver", "plain")
     got = _assert_read_fence(
-        spark, lambda: wh.read("silver", "plain"), wh.path("silver", "plain")
+        spark, lambda: wh.read("silver", "plain"), wh.data_dir("silver", "plain")
     )
     assert got.count() == 1
 
@@ -271,7 +271,7 @@ def test_read_partitioned_table_keeps_partition_columns(spark, tmp_path):
     )
     wh.overwrite(ev, "bronze", "events", partition_by=["event_type", "day"])
     got = _assert_read_fence(
-        spark, lambda: wh.read("bronze", "events"), wh.path("bronze", "events")
+        spark, lambda: wh.read("bronze", "events"), wh.data_dir("bronze", "events")
     )
     assert got.columns[-2:] == ["event_type", "day"]
     assert got.filter(F.col("day") == 1).count() == 4
@@ -282,7 +282,7 @@ def test_read_empty_table(spark, tmp_path):
     empty = spark.createDataFrame([], "id long, name string")
     assert wh.overwrite(empty, "silver", "empty") == 0
     got = _assert_read_fence(
-        spark, lambda: wh.read("silver", "empty"), wh.path("silver", "empty")
+        spark, lambda: wh.read("silver", "empty"), wh.data_dir("silver", "empty")
     )
     assert got.count() == 0
 
@@ -316,7 +316,7 @@ def test_read_audit_rows_written_by_arrow(spark, tmp_path):
     assert len(files) == 3
     assert all(SPARK_SCHEMA_KEY in pq.read_metadata(f).metadata for f in files)
     got = _assert_read_fence(
-        spark, lambda: wh.read(NAMESPACE, TABLE), wh.path(NAMESPACE, TABLE)
+        spark, lambda: wh.read(NAMESPACE, TABLE), wh.data_dir(NAMESPACE, TABLE)
     )
     assert got.count() == 2
 
@@ -328,18 +328,14 @@ def test_read_audit_rows_written_by_arrow(spark, tmp_path):
     got = _assert_read_fence(
         spark,
         lambda: wh.read(NAMESPACE, "arrow_only"),
-        wh.path(NAMESPACE, "arrow_only"),
+        wh.data_dir(NAMESPACE, "arrow_only"),
         job_free=False,
     )
     assert got.count() == 4
 
 
 def test_versioned_read_and_time_travel(spark, tmp_path):
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
-
-    vwh = VersionedWarehouse(spark, str(tmp_path / "vwh"))
+    vwh = Warehouse(spark, str(tmp_path / "vwh"))
     v0 = vwh.commit(
         spark.createDataFrame([(1, "a")], "id int not null, name string"),
         "silver", "t",

@@ -1,4 +1,4 @@
-"""VersionedWarehouse (engine/tableio.py): MVCC semantics on parquet —
+"""Warehouse (engine/tableio.py): MVCC semantics on parquet —
 atomic pointer commits, snapshot isolation for in-flight readers, time
 travel, vacuum retention. The parquet-only answer to the reference's Delta
 ACID layer (4_silver/silver_transactions.py:50-51)."""
@@ -8,12 +8,12 @@ import time
 
 import pytest
 
-from end_to_end_azure_data_engineering_spark.engine.tableio import VersionedWarehouse
+from end_to_end_azure_data_engineering_spark.engine.tableio import Warehouse
 
 
 @pytest.fixture()
 def vwh(spark, tmp_path):
-    return VersionedWarehouse(spark, str(tmp_path / "wh"))
+    return Warehouse(spark, str(tmp_path / "wh"))
 
 
 def _df(spark, *vals):
@@ -85,7 +85,7 @@ def test_missing_table_raises(spark, vwh):
 
 
 def test_change_feed_between_versions(spark, vwh):
-    """table_diff over two VersionedWarehouse snapshots is the Delta-CDF
+    """table_diff over two Warehouse snapshots is the Delta-CDF
     equivalent: inserts/updates/deletes classified, unchanged dropped."""
     from end_to_end_azure_data_engineering_spark.operators.appends import table_diff
 
@@ -148,11 +148,7 @@ def test_concurrent_commits_serialize_via_occ(spark, tmp_path):
     the published pointer must name one of them."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
-
-    vw = VersionedWarehouse(spark, str(tmp_path / "occ_wh"))
+    vw = Warehouse(spark, str(tmp_path / "occ_wh"))
 
     def committer(i: int) -> int:
         df = spark.range(10).selectExpr("id", f"{i} AS writer")
@@ -171,11 +167,8 @@ def test_concurrent_commits_serialize_via_occ(spark, tmp_path):
 def test_crashed_claim_is_skipped_and_vacuumed(spark, tmp_path):
     """An empty _vN left by a dead writer is never reused or published;
     vacuum sweeps it."""
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
 
-    vw = VersionedWarehouse(spark, str(tmp_path / "crash_wh"))
+    vw = Warehouse(spark, str(tmp_path / "crash_wh"))
     v0 = vw.commit(spark.range(5), "gold", "t")
     assert v0 == 0
     # simulate a writer that claimed _v1 then died LONG AGO (a young
@@ -196,11 +189,8 @@ def test_pointer_never_published_backwards(spark, tmp_path):
     faster writer's higher pointer (review finding): _publish is a no-op
     when the current pointer is already newer, and the lower version stays
     readable via time travel."""
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
 
-    vw = VersionedWarehouse(spark, str(tmp_path / "mono_wh"))
+    vw = Warehouse(spark, str(tmp_path / "mono_wh"))
     vw.commit(spark.range(3), "gold", "t")   # v0
     vw.commit(spark.range(4), "gold", "t")   # v1, pointer=1
     assert vw.current_version("gold", "t") == 1
@@ -292,11 +282,8 @@ def test_autovacuum_prunes_after_each_publish(spark, tmp_path):
     """autovacuum_keep=N keeps history bounded inline (Delta retention
     parity) — append-heavy tables like the audit log stay at N versions
     instead of one per inserted row."""
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
 
-    vw = VersionedWarehouse(spark, str(tmp_path / "av"), autovacuum_keep=2)
+    vw = Warehouse(spark, str(tmp_path / "av"), autovacuum_keep=2)
     for i in range(5):
         vw.append(spark.range(i, i + 1), "audit", "log")
     assert len(vw.versions("audit", "log")) == 2
@@ -327,11 +314,8 @@ def test_failed_insert_leaves_no_restorable_phantom(spark, vwh):
 def test_per_table_retention_spares_other_tables(spark, tmp_path):
     """set_retention scopes pruning to ONE table: bounding the audit log
     leaves gold time travel intact."""
-    from end_to_end_azure_data_engineering_spark.engine.tableio import (
-        VersionedWarehouse,
-    )
 
-    vw = VersionedWarehouse(spark, str(tmp_path / "ret"))
+    vw = Warehouse(spark, str(tmp_path / "ret"))
     vw.set_retention("audit", "log", 2)
     for i in range(4):
         vw.append(spark.range(1), "audit", "log")
@@ -377,7 +361,7 @@ def test_retention_none_is_persisted_operator_choice(spark, tmp_path):
     """r4 advice: set_retention(..., None) = explicit keep-full-history.
     It must survive a later default-applying init (AuditLog applies 8 only
     when NO marker exists) and override the warehouse-wide autovacuum."""
-    vw = VersionedWarehouse(spark, str(tmp_path / "rn"), autovacuum_keep=2)
+    vw = Warehouse(spark, str(tmp_path / "rn"), autovacuum_keep=2)
     vw.set_retention("audit", "log", None)
     assert (vw.path("audit", "log") / ".retention").exists()
     for _ in range(4):
@@ -405,7 +389,7 @@ def test_claim_keepalive_protects_inflight_write_from_sweep(spark, tmp_path):
     runs past PHANTOM_SWEEP_AFTER. The writer's _claim_keepalive thread
     refreshes the claim's mtime, so only a dead writer's claim ages into
     the sweepable window."""
-    vw = VersionedWarehouse(spark, str(tmp_path / "ka_wh"))
+    vw = Warehouse(spark, str(tmp_path / "ka_wh"))
     vw.commit(spark.range(3), "gold", "t")
     vw.commit(spark.range(4), "gold", "t")
     vw.LOCK_HEARTBEAT = 0.05  # instance override: beat fast for the test
@@ -434,7 +418,7 @@ def test_compact_partition_rewrites_only_target(spark, tmp_path):
     (same inodes — zero bytes copied), (c) preserve content exactly,
     (d) commit a new version with an OPTIMIZE history entry, and (e) leave
     the prior snapshot readable via time travel."""
-    vw = VersionedWarehouse(spark, str(tmp_path / "opt_wh"))
+    vw = Warehouse(spark, str(tmp_path / "opt_wh"))
     df = spark.range(2000).selectExpr("id", "id % 4 AS bucket")
     vw.commit(df, "silver", "t", partition_by=["bucket"])
     # fragment bucket=1 with three appends
@@ -480,7 +464,7 @@ def test_compaction_serializes_with_appends(spark, tmp_path):
     entry points block until release, then complete with nothing lost."""
     import threading
 
-    vw = VersionedWarehouse(spark, str(tmp_path / "cs_wh"))
+    vw = Warehouse(spark, str(tmp_path / "cs_wh"))
     vw.commit(
         spark.range(100).selectExpr("id", "id % 2 AS bucket"),
         "silver", "t", partition_by=["bucket"],
@@ -510,7 +494,7 @@ def test_compaction_serializes_with_appends(spark, tmp_path):
 
 
 def test_compact_partition_missing_partition_raises(spark, tmp_path):
-    vw = VersionedWarehouse(spark, str(tmp_path / "opt_wh2"))
+    vw = Warehouse(spark, str(tmp_path / "opt_wh2"))
     vw.commit(
         spark.range(10).selectExpr("id", "id % 2 AS bucket"),
         "silver", "t", partition_by=["bucket"],
